@@ -169,7 +169,7 @@ object Queries {
     *
     * Sizing rule at scale: state partitions follow peak STATE VOLUME
     * (rate × watermark horizon for joins; key cardinality for aggs) at
-    * ~500k state rows per partition — the Iterate.withLoopWidth rule
+    * ~500k state rows per partition — the Iterate.Loop.sized rule
     * applied to streams — not the batch suite's shuffle width. The
     * rule is ENCODED, not a constant: width = stateRowsEstimate/500k
     * (clamped to [1, 1024]). The default estimate (4M rows) is the

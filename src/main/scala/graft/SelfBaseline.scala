@@ -698,11 +698,12 @@ object SelfBaseline {
       val a = new GrbMatrix(syntheticGraph(spark, nEdges).df.cache(),
         nEdges / 8, nEdges / 8)
       val nnz = a.nvals
-      def modes(name: String, confKey: String)(run: => (Long, Long)): Unit = {
+      // a 1-byte broadcast budget forces every loop's sharded plan
+      def modes(name: String)(run: => (Long, Long)): Unit = {
         val (rB, bSec) = timed(run)
-        spark.conf.set(confKey, "false")
+        spark.conf.set("spark.graft.broadcast.maxBytes", "1")
         val (rS, sSec) = timed(run)
-        spark.conf.unset(confKey)
+        spark.conf.unset("spark.graft.broadcast.maxBytes")
         require(rB == rS, s"$name modes disagree: $rB vs $rS")
         println(f"""{"tier":"loopbcast","algo":"$name","edges":$nEdges,"nnz":$nnz,"n":${a.nrows},"bcast_sec":$bSec%.2f,"sharded_sec":$sSec%.2f,"ratio":${sSec / bSec}%.2f,"checksum":${rB._2}}""")
       }
@@ -712,13 +713,13 @@ object SelfBaseline {
           coalesce(sum(col("i") * col("v")), lit(0L))).collect()(0)
         (r.getLong(0), r.getLong(1))
       }
-      modes("lpa", "spark.graft.lpa.broadcast")(
+      modes("lpa")(
         sums(graft.algo.LabelProp.communities(a, 7).df))
-      modes("mis", "spark.graft.mis.broadcast")(
+      modes("mis")(
         sums(graft.algo.Mis.mis(a).df))
       // k = half the mean degree: a non-trivial core survives (k at the
       // mean degree peeled the synthetic graph to EMPTY)
-      modes("kcore", "spark.graft.kcore.broadcast")(
+      modes("kcore")(
         sums(graft.algo.KCore.kcore(a, 8L).df))
       a.df.unpersist(true)
     }
@@ -906,20 +907,16 @@ object SelfBaseline {
         val adj = raw.repartition(width, col("j")).cache()
         adj.count()
         spark.conf.set(key, width.toString)
-        var l = adj.select(col("i")).distinct()
-          .select(col("i"), col("i").cast("long").as("v"))
-          .freshCheckpoint(true)
-        var prev = graft.algo.Iterate.checkpointRdd(l)
+        graft.algo.Iterate.scope(spark, "itertail") { loop =>
+        var l = loop.checkpoint("labels", adj.select(col("i")).distinct()
+          .select(col("i"), col("i").cast("long").as("v")))
         reset()
         val tTotal0 = System.nanoTime()
         for (r <- 1 to 7) {
           val t0 = System.nanoTime()
           val stepped = graft.algo.LabelProp.round(adj, l)
           if (r % cadence == 0 || r == 7) {
-            val ck = stepped.freshCheckpoint(true)
-            prev.foreach(_.unpersist(false))
-            prev = graft.algo.Iterate.checkpointRdd(ck)
-            l = ck
+            l = loop.checkpoint("labels", stepped)
             val wall = (System.nanoTime() - t0) / 1e9
             println(f"""{"tier":"itertail","width":$width,"cadence":$cadence,"round":$r,"wall_s":$wall%.2f,${snap()}}""")
             reset()
@@ -928,9 +925,9 @@ object SelfBaseline {
         val totalWall = (System.nanoTime() - tTotal0) / 1e9
         val checksum = l.agg(sum(col("i") * col("v"))).collect()(0).getLong(0)
         val nLabels = l.count()
-        prev.foreach(_.unpersist(false))
         adj.unpersist(false)
         println(f"""{"tier":"itertail","width":$width,"cadence":$cadence,"total_s":$totalWall%.2f,"labels":$nLabels,"checksum":$checksum}""")
+        }
       }
       spark.conf.set(key, prevConf)
       spark.sparkContext.removeSparkListener(lst)

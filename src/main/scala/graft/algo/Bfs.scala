@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -16,12 +15,13 @@ import graft.core._
   * frontier), so the key set grows monotonically and values never
   * change — value stability ≡ "nvals stopped growing", and the
   * prev-vs-next compare is folded into each round's checkpoint job
-  * (Iterate.vectorLoopStable: one job + a limit-1 scan per round).
+  * (Iterate.Loop.frontier: one checkpoint job per round, the frontier
+  * size its probe).
   *
   * Scale shape: the adjacency is repartitioned ONCE on the contraction
   * key and cached, so every round's mxv reuses the exchange (the
   * FastSV pattern); per-round state is eagerly localCheckpoint'ed by
-  * Iterate.vectorLoop, keeping the plan O(one round). Work per round
+  * Iterate.Loop.frontier, keeping the plan O(one round). Work per round
   * is one equi-join frontier×adjacency + one hash agg — at 100 TB the
   * cost profile is rounds × (join on j + groupBy i), never n².
   */
@@ -37,7 +37,7 @@ object Bfs {
     * of the frontier slice (every value in it is k, so the product
     * offers exactly k+1), an anti-join against the visited set, and a
     * union into the result. The previous full-vector round
-    * (`f ⊕min A⊗f` under Iterate.vectorLoopStable) re-joined the
+    * (`f ⊕min A⊗f` under Iterate.Loop.stable) re-joined the
     * whole accumulated level vector every round; measured at the 20M-
     * nnz tier the frontier loop draws 13.9 s vs 46.7 s
     * (BASELINE_SELF round-10, via the identically-shaped SpCount).
@@ -48,43 +48,20 @@ object Bfs {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"bfs adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.spark
-    // traverse structure: weight 1 per edge makes min_plus's mult a
-    // pure hop count; co-partition by the contracted key once
-    val hop = new GrbMatrix(
-      a.df.select(col("i"), col("j"), lit(1L).as("v"))
-        .repartition(col("j")).cache(),
-      a.nrows, a.ncols)
-    var res: org.apache.spark.sql.DataFrame = spark.range(1)
-      .select(lit(source).as("i"), lit(0L).as("v")).freshCheckpoint(true)
-    var frontier = res
-    var prevRes = Iterate.checkpointRdd(res)
-    var prevNext: Option[org.apache.spark.rdd.RDD[_]] = None
-    var k = 0
-    var n = 1L
-    while (n > 0 && k < maxIter) {
-      k += 1
-      val cand = hop.mxv(new GrbVector(frontier, a.nrows), Ops.minPlus).df
-      // frontier size rides the checkpoint job as an observed metric
-      // (Iterate.checkpointWithProbe) — no per-round count job
-      val (next, probeRow) = Iterate.checkpointWithProbe(
-        cand.join(res.select(col("i")), Seq("i"), "left_anti"),
-        count(lit(1)).as("n"))
-      val nextRdd = Iterate.checkpointRdd(next)
-      n = probeRow.getLong(0)
-      if (n > 0) {
-        val nextRes = res.unionByName(next).freshCheckpoint(true)
-        prevRes.foreach(_.unpersist(false))
-        prevNext.foreach(_.unpersist(false))
-        prevRes = Iterate.checkpointRdd(nextRes)
-        prevNext = nextRdd
-        res = nextRes
-        frontier = next
-      } else {
-        nextRdd.foreach(_.unpersist(false))
-      }
+    Iterate.scope(spark, "Bfs") { loop =>
+      // traverse structure: weight 1 per edge makes min_plus's mult a
+      // pure hop count; co-partition by the contracted key once
+      val hop = new GrbMatrix(loop.cache(
+        a.df.select(col("i"), col("j"), lit(1L).as("v")).repartition(col("j"))),
+        a.nrows, a.ncols)
+      // every value in the depth-k frontier is k, so the product
+      // offers exactly k+1: the frontier rows ARE the result rows
+      new GrbVector(loop.frontier(spark.range(1)
+        .select(lit(source).as("i"), lit(0L).as("v")), Seq("i"), 1L, maxIter)(
+        seed = res => res,
+        expand = f => hop.mxv(new GrbVector(f, a.nrows), Ops.minPlus).df,
+        record = (next, _) => next), a.nrows)
     }
-    hop.df.unpersist(false)
-    new GrbVector(res, a.nrows)
   }
 
   /** Multi-source BFS — the MATRIX-frontier idiom (the GraphBLAS
@@ -108,47 +85,22 @@ object Bfs {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"msbfs adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.spark
-    val hop = new GrbMatrix(
-      a.df.select(col("i"), col("j"), lit(1L).as("v"))
-        .repartition(col("i")).cache(),
-      a.nrows, a.ncols)
     val srcRows = sources.distinct.map(s => (s, s, 0L))
-    var res: org.apache.spark.sql.DataFrame = spark
-      .createDataFrame(srcRows).toDF("s", "i", "d").freshCheckpoint(true)
-    var frontier = res.select(col("s"), col("i"))
-    var prevRes = Iterate.checkpointRdd(res)
-    var prevNext: Option[org.apache.spark.rdd.RDD[_]] = None
-    var k = 0L
-    var n = srcRows.size.toLong
-    while (n > 0 && k < maxIter) {
-      k += 1
-      // F·A: contract the frontier's vertex column against the
-      // adjacency's row key — every source's expansion in one product
-      val f = new GrbMatrix(
-        frontier.select(col("s").as("i"), col("i").as("j"), lit(1L).as("v")),
-        a.nrows, a.nrows)
-      val prod = f.mxm(hop, Ops.plusPair).df
-      val (next, probeRow) = Iterate.checkpointWithProbe(
-        prod.select(col("i").as("s"), col("j").as("i"))
-          .join(res.select(col("s"), col("i")), Seq("s", "i"), "left_anti"),
-        count(lit(1)).as("n"))
-      val nextRdd = Iterate.checkpointRdd(next)
-      n = probeRow.getLong(0)
-      if (n > 0) {
-        val nextRes = res.unionByName(
-          next.select(col("s"), col("i"), lit(k).as("d"))).freshCheckpoint(true)
-        prevRes.foreach(_.unpersist(false))
-        prevNext.foreach(_.unpersist(false))
-        prevRes = Iterate.checkpointRdd(nextRes)
-        prevNext = nextRdd
-        res = nextRes
-        frontier = next
-      } else {
-        nextRdd.foreach(_.unpersist(false))
-      }
+    Iterate.scope(spark, "MultiSourceBfs") { loop =>
+      val hop = new GrbMatrix(loop.cache(
+        a.df.select(col("i"), col("j"), lit(1L).as("v")).repartition(col("i"))),
+        a.nrows, a.ncols)
+      loop.frontier(spark.createDataFrame(srcRows).toDF("s", "i", "d"),
+        Seq("s", "i"), srcRows.size.toLong, maxIter)(
+        seed = res => res.select(col("s"), col("i")),
+        // F·A: contract the frontier's vertex column against the
+        // adjacency's row key — every source's expansion in one product
+        expand = f => new GrbMatrix(
+          f.select(col("s").as("i"), col("i").as("j"), lit(1L).as("v")),
+          a.nrows, a.nrows).mxm(hop, Ops.plusPair).df
+          .select(col("i").as("s"), col("j").as("i")),
+        record = (next, k) => next.select(col("s"), col("i"), lit(k).as("d")))
     }
-    hop.df.unpersist(false)
-    res
   }
 
   /** Single-source shortest paths over positive edge weights — the
@@ -158,7 +110,7 @@ object Bfs {
     * improve after first assignment (a longer-but-lighter path), so
     * convergence is VALUE stability, not nvals growth; the compare is
     * folded into each round's checkpoint as a change-flag column
-    * (Iterate.vectorLoopStable — no extra isequal join+action per
+    * (Iterate.Loop.stable — no extra isequal join+action per
     * round); rounds to fixpoint ≤ the max hop count of any shortest
     * path.
     *
@@ -169,13 +121,11 @@ object Bfs {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"sssp adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.spark
-    val A = new GrbMatrix(a.df.repartition(col("j")).cache(), a.nrows, a.ncols)
-    val init = GrbVector.fromDF(
-      spark.range(1).select(lit(source).as("i"), lit(0L).as("v")), a.nrows)
-    val out = Iterate.vectorLoopStable(init, maxIter) { (f, _) =>
-      f.ewiseAdd(A.mxv(f, Ops.minPlus), Ops.min)
+    Iterate.scope(spark, "Sssp") { loop =>
+      val A = new GrbMatrix(loop.cache(a.df.repartition(col("j"))), a.nrows, a.ncols)
+      val init = GrbVector.fromDF(
+        spark.range(1).select(lit(source).as("i"), lit(0L).as("v")), a.nrows)
+      loop.stable(init, maxIter)(f => f.ewiseAdd(A.mxv(f, Ops.minPlus), Ops.min))._1
     }
-    A.df.unpersist(false)
-    out
   }
 }

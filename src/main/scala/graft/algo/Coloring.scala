@@ -1,7 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -55,47 +53,43 @@ object Coloring {
     val raw = a.df.select(col("i"), col("j")).filter(col("i") =!= col("j"))
       .cache()
     val nnz = raw.count()
+    Iterate.scope(spark, "Coloring") { loop =>
+    val width = loop.sized(nnz)
     // Broadcast mode below the guard (the LPA/MIS §17o/§17p pattern):
     // vertex-sized frames broadcast into their joins, adjacency cached
     // by i — the actB/sel/colored joins and the nbmin aggregate then
     // plan exchange-free, and the thrice-referenced sel subtree dedups
     // through broadcast-exchange reuse instead of recomputing. Above
-    // Grb.BroadcastGuard the sharded plan is unchanged;
-    // spark.graft.coloring.broadcast=false forces it.
-    val bcast = a.nrows <= Grb.broadcastGuard(spark) &&
-      Grb.flag(spark, "spark.graft.coloring.broadcast", default = true)
-    def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    Iterate.withLoopWidth(spark, nnz) { width =>
-    val adj = raw.repartition(width, col(if (bcast) "i" else "j")).cache()
+    // Grb.BroadcastGuard the sharded plan is unchanged.
+    val bcast = loop.broadcasts(a.nrows)
+    val adj = loop.cache(raw.repartition(width, col(if (bcast) "i" else "j")))
     adj.count() // materialize before freeing the sizing pass's cache
     raw.unpersist(false)
     // single state frame: (n, color) with color NULL while active;
     // the active count rides each checkpoint job as an observed metric
-    // (Iterate.checkpointWithProbe) instead of a per-round count job
+    // (Loop.probe) instead of a per-round count job
     val activeProbe = count(when(col("color").isNull, 1)).as("active")
-    var (state, probe0) = Iterate.checkpointWithProbe(
+    var (state, probe0) = loop.probe("state",
       adj.select(col("i").as("n")).distinct()
         .withColumn("color", lit(null).cast("long")), activeProbe)
-    var prev = Iterate.checkpointRdd(state)
     var n = probe0.getLong(0)
-    var iter = 0
-    while (n > 0 && iter < maxIter) {
+    loop.rounds(maxIter)(n > 0) { r =>
       val act = state.filter(col("color").isNull).select(col("n"))
-      val actB = act.select(col("n").as("nb"), pkey(iter + 1, col("n")).as("bpk"))
+      val actB = act.select(col("n").as("nb"), pkey(r, col("n")).as("bpk"))
       // heads not pre-restricted to active: a leftsemi on i would
       // re-shuffle the adjacency every round (the cache is partitioned
       // on the join side's key — j sharded, i broadcast-mode — so the
       // actB join reuses it shuffle-free); inactive heads die in
       // sel's act join (the Mis lesson, 2.9x on the bench graph)
       val nbmin = adj
-        .join(hint(actB), col("j") === col("nb"))
+        .join(loop.hint(actB), col("j") === col("nb"))
         .groupBy(col("i")).agg(min(col("bpk")).as("mn"))
       val sel = act.join(nbmin, col("n") === col("i"), "left")
-        .filter(col("mn").isNull || pkey(iter + 1, col("n")) < col("mn"))
+        .filter(col("mn").isNull || pkey(r, col("n")) < col("mn"))
         .select(col("n"))
       // colors already taken by the selected vertices' neighbours
-      val used = hint(sel).join(adj, col("n") === col("i"))
-        .join(hint(state.filter(col("color").isNotNull)
+      val used = loop.hint(sel).join(adj, col("n") === col("i"))
+        .join(loop.hint(state.filter(col("color").isNotNull)
           .select(col("n").as("cn"), col("color"))), col("j") === col("cn"))
         .select(col("n"), col("color")).distinct()
       // mex: candidates {0} ∪ {used + 1}, minus used, min
@@ -105,21 +99,15 @@ object Coloring {
         used.select(col("n").as("un"), col("color").as("uc")),
         col("n") === col("un") && col("cc") === col("uc"), "left_anti")
         .groupBy("n").agg(min(col("cc")).as("color"))
-      val (nextState, probeRow) = Iterate.checkpointWithProbe(
+      val (nextState, probeRow) = loop.probe("state",
         state.join(newc.select(col("n").as("wn"), col("color").as("wc")),
           col("n") === col("wn"), "left")
           .select(col("n"), coalesce(col("color"), col("wc")).as("color")),
         activeProbe)
-      prev.foreach(_.unpersist(false))
-      prev = Iterate.checkpointRdd(nextState)
       state = nextState
       n = probeRow.getLong(0)
-      iter += 1
     }
-    adj.unpersist(false)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"graft.Coloring rounds=$iter")
     new GrbVector(state.select(col("n").as("i"), col("color").as("v")), a.nrows)
-    } // withLoopWidth
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import graft.core._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -30,12 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object FastSV {
 
-  /** see Iterate.checkpointRdd — frees superseded rounds' blocks,
-    * bounding loop storage at O(n) instead of O(rounds × n)
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    Iterate.checkpointRdd(df)
-
   /** @param a        symmetric adjacency matrix
     * @param nodes    optional vertex set (single column `i`). When
     *                 given, the parent vector is initialized sparsely
@@ -56,7 +49,7 @@ object FastSV {
     val n = a.nrows
     // co-partition the adjacency by the contraction key once (every
     // mxv reuses the exchange), at the loop width — block fan-out ×
-    // rounds is the fixed cost (Iterate.withLoopWidth scaladoc)
+    // rounds is the fixed cost (Iterate.Loop.sized scaladoc)
     // Respect a caller-owned cache: cache()+unpersist() on a plan the
     // caller already persisted would evict THEIR CacheManager entry
     // (unpersist is by-plan, not by-reference), cooling every later use.
@@ -64,6 +57,11 @@ object FastSV {
       a.df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val raw = if (callerCached) a.df else a.df.cache()
     val nnz = raw.count()
+    // the identity labeling: every vertex its own parent
+    val ident = nodes match {
+      case Some(ns) => ns.select(col("i"), col("i").as("v"))
+      case None => spark.range(n).select(col("id").as("i"), col("id").as("v"))
+    }
     // Driver-local fast path (LocalCC scaladoc): below the threshold
     // the loop's per-round fixed cost dwarfs the data — solve the
     // labeling on the driver from the just-cached blocks and
@@ -78,46 +76,26 @@ object FastSV {
       if (!callerCached) raw.unpersist(false)
       import spark.implicits._
       val labDf = LocalCC.labels(pairs).toSeq.toDF("i", "_lab")
-      val ident = nodes match {
-        case Some(ns) => ns.select(col("i"), col("i").as("v"))
-        case None => spark.range(n).select(col("id").as("i"), col("id").as("v"))
-      }
       return new GrbVector(
         ident.join(broadcast(labDf), Seq("i"), "left")
           .select(col("i"), coalesce(col("_lab"), col("v")).as("v")), n)
     }
-    Iterate.withLoopWidth(spark, nnz) { width =>
     // whole-stage codegen off for the loop body: the per-round plans
     // re-generate fused classes every round/rep (measured 30 s of JIT
-    // per fresh-context rep — see withLoopCodegenOff scaladoc);
+    // per fresh-context rep — see the Iterate.Loop codegen note);
     // volcano iterators with small cached projections run the same
     // few-MB exchanges at a fraction of the settle tax. Fresh-context
     // 31.9 -> 16.0 s on the q_cc_events graph, identical results.
-    Iterate.withLoopCodegenOff(spark) {
-    val A = new GrbMatrix(raw.repartition(width, col("j")).cache(), n, n)
+    Iterate.scope(spark, "FastSV", codegen = false) { loop =>
+    val width = loop.sized(nnz)
+    val A = new GrbMatrix(loop.cache(raw.repartition(width, col("j"))), n, n)
     A.df.count()
     if (!callerCached) raw.unpersist(false)
-    // f = gp = identity: every vertex its own parent
-    val ident = nodes match {
-      case Some(ns) => ns.select(col("i"), col("i").as("v"))
-      case None => spark.range(n).select(col("id").as("i"), col("id").as("v"))
-    }
+    // f = gp = identity
     var f = new GrbVector(ident, n)
     var gp = new GrbVector(ident, n)
     var change = true
-    var iter = 0
-    // loop observability: spark.graft.cc.logRounds=true prints each
-    // round's wall to stderr — at cluster scale the per-round cadence
-    // is the first thing an operator needs when a CC job runs long,
-    // and it is invisible from the outside (one SQL execution per
-    // round, no stage names). Off by default; costs one conf read.
-    val logRounds =
-      Grb.flag(spark, "spark.graft.cc.logRounds", default = false)
-    // previous round's checkpoint blocks (freed once superseded)
-    var prevF: Option[org.apache.spark.rdd.RDD[_]] = None
-    var prevCmp: Option[org.apache.spark.rdd.RDD[_]] = None
-    while (change && iter < maxIter) {
-      val roundT0 = if (logRounds) System.nanoTime() else 0L
+    loop.rounds(maxIter)(change) { _ =>
       // mngp = min_second(A @ gp): per-vertex min of neighbours' parents
       val mngp = A.mxv(gp, Ops.minSecond, broadcastVec = false)
       // f(min)[I=f-as-values] << mngp — fused hooking: scatter mngp
@@ -143,7 +121,7 @@ object FastSV {
       // iteration count. f1's checkpoint is lazy — materialized as a
       // side effect of the gather's eager checkpoint job (one fewer
       // job per round than two eager checkpoints).
-      f = new GrbVector(f1.freshCheckpoint(false), n)
+      f = new GrbVector(loop.checkpoint("f", f1, eager = false), n)
       // gp = f[f]: gather parent-of-parent through a distributed
       // index, comparing against the previous gp IN THE SAME JOB —
       // the notebook's gp-stability convergence test (mod =
@@ -155,33 +133,21 @@ object FastSV {
       val idx = f.df.select(col("i").as("pos"), col("v").cast("long").as("idx"))
       val gathered = f.extract(Ix.Dist(idx), sizeHint = n).df
       // the change count is observed during the checkpoint job itself
-      // (Iterate.checkpointWithProbe) — no per-round isEmpty action
-      // over the materialized blocks
-      val (cmp, probeRow) = Iterate.checkpointWithProbe(gathered
+      // (Loop.probe) — no per-round isEmpty action over the
+      // materialized blocks. Once it lands, the previous round's f/cmp
+      // blocks can never be referenced again and the loop frees them,
+      // bounding its storage at O(n) instead of O(rounds × n) — at
+      // cluster scale the difference between a steady-state footprint
+      // and an eviction cascade.
+      val (cmp, probeRow) = loop.probe("cmp", gathered
         .join(gp.df.select(col("i"), col("v").as("_ov")), Seq("i"), "left")
         .select(col("i"), col("v"),
           (col("_ov").isNull || col("v") =!= col("_ov")).as("_chg")),
         count(when(col("_chg"), 1)).as("chg"))
       gp = new GrbVector(cmp.select(col("i"), col("v")), n)
       change = probeRow.getLong(0) > 0
-      // this round's f/cmp are materialized and lineage-free; the
-      // previous round's blocks can never be referenced again. Freeing
-      // them here bounds the loop's storage at O(n) instead of
-      // O(rounds × n) — at cluster scale the difference between a
-      // steady-state footprint and an eviction cascade.
-      prevF.foreach(_.unpersist(false))
-      prevCmp.foreach(_.unpersist(false))
-      prevF = checkpointRdd(f.df)
-      prevCmp = checkpointRdd(cmp)
-      iter += 1
-      if (logRounds) System.err.println(
-        f"graft FastSV round $iter: ${(System.nanoTime() - roundT0) / 1e9}%.2f s, changed=$change")
     }
-    A.df.unpersist(false)
-    // the terminal compare frame is internal — only f is returned
-    prevCmp.foreach(_.unpersist(false))
     f
-    } // withLoopCodegenOff
-    } // withLoopWidth
+    }
   }
 }

@@ -18,7 +18,7 @@ import graft.core._
   * eigenvector of AᵀA/AAᵀ up to scale), in exact integer arithmetic:
   * score′ = (score · 10⁶) DIV max(score). Every round is integer,
   * the max is observed during the product's own checkpoint job
-  * (Iterate.checkpointWithProbe), and a fixed round count makes the
+  * (Iterate.Loop.probe), and a fixed round count makes the
   * whole run bit-for-bit SQL-replayable.
   *
   * Scale shape (round-15 surgery; the r14 profile showed 122 stages /
@@ -76,25 +76,25 @@ object Hits {
     // shuffle width sized for its per-round work instead of the
     // session's heaviest-single-aggregate width — 20 products × the
     // session's 128-wide block fan-out was pure fixed cost here
-    // (Iterate.withLoopWidth scaladoc: the ITERTAIL decomposition)
+    // (Iterate.Loop.sized scaladoc: the ITERTAIL decomposition)
     val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
     val nnz = raw.count()
+    Iterate.scope(spark, "Hits") { loop =>
+    val width = loop.sized(nnz)
     // zero-exchange product rounds below the guard; sharded CSR/CSC
-    // above it (see the scale-shape scaladoc). Escape hatch mirrors
-    // the lpa/mis/kcore/coloring/scc family.
-    val bcast = a.nrows <= Grb.broadcastGuard(spark) &&
-      Grb.flag(spark, "spark.graft.hits.broadcast", default = true)
-    Iterate.withLoopWidth(spark, nnz) { width =>
+    // above it (see the scale-shape scaladoc), like the
+    // lpa/mis/kcore/coloring/scc family.
+    val bcast = loop.broadcasts(a.nrows)
     // two cached orientations: by the product's OUTPUT key in
     // broadcast mode (broadcast join preserves the streamed side's
     // partitioning → the aggregate rides it exchange-free), by the
     // CONTRACTION key in sharded mode (the adjacency must not
     // re-shuffle; only the vector side exchanges).
     val adjVxm = new GrbMatrix(
-      raw.repartition(width, col(if (bcast) "j" else "i")).cache(),
+      loop.cache(raw.repartition(width, col(if (bcast) "j" else "i"))),
       a.nrows, a.ncols)
     val adjMxv = new GrbMatrix(
-      raw.repartition(width, col(if (bcast) "i" else "j")).cache(),
+      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
       a.nrows, a.ncols)
     adjVxm.df.count(); adjMxv.df.count() // materialize, then free the sizing cache
     raw.unpersist(false)
@@ -102,45 +102,30 @@ object Hits {
     // seeded from whichever orientation is partitioned by i so the
     // init distinct plans exchange-free in both modes
     val byI = if (bcast) adjMxv else adjVxm
-    var hub = new GrbVector(
-      org.apache.spark.sql.graft.FreshCheckpoint(
-        byI.df.select(col("i")).distinct()
-          .select(col("i"), lit(1L).as("v"))), a.nrows)
+    var hub = new GrbVector(loop.checkpoint("hub",
+      byI.df.select(col("i")).distinct()
+        .select(col("i"), lit(1L).as("v"))), a.nrows)
     var auth: GrbVector = null
     // checkpoint the RAW O(nnz) products; each normalize is a LAZY
     // projection over its checkpoint with the observed max as a
     // literal — no scalar subquery, no per-normalize broadcast build.
-    var prevA: Option[org.apache.spark.rdd.RDD[_]] = None
-    var prevH = Iterate.checkpointRdd(hub.df)
-    for (r <- 1 to rounds) {
-      val (aCk, aProbe) = Iterate.checkpointWithProbe(
+    // Each round's checkpoints supersede the previous round's (already
+    // read by this round's materializations); the LAST round's stay
+    // live — the returned frame reads them
+    loop.rounds(rounds)(true) { r =>
+      val (aCk, aProbe) = loop.probe("auth",
         hub.vxm(adjVxm, Ops.plusTimes, broadcastSelf = true).df,
         max(col("v")).as("mx"))
       val a1 = normalize(new GrbVector(aCk, a.nrows), scale, aProbe)
-      val (hCk, hProbe) = Iterate.checkpointWithProbe(
+      val (hCk, hProbe) = loop.probe("hub",
         adjMxv.mxv(a1, Ops.plusTimes).df, max(col("v")).as("mx"))
-      // previous rounds' blocks can never be referenced again (this
-      // round's raws are materialized); the LAST round's stay live —
-      // the returned frame reads them
-      if (r < rounds) {
-        prevA.foreach(_.unpersist(false))
-        prevH.foreach(_.unpersist(false))
-        prevA = Iterate.checkpointRdd(aCk)
-        prevH = Iterate.checkpointRdd(hCk)
-      }
       hub = normalize(new GrbVector(hCk, a.nrows), scale, hProbe)
       if (r == rounds) auth = a1
     }
-    // the second-to-last round's blocks (skipped above so the final
-    // round could still read them during its own materialization)
-    prevA.foreach(_.unpersist(false))
-    prevH.foreach(_.unpersist(false))
-    adjVxm.df.unpersist(false)
-    adjMxv.df.unpersist(false)
     hub.df.select(col("i"), col("v").as("_h"))
       .join(auth.df.select(col("i"), col("v").as("_a")), Seq("i"), "full_outer")
       .select(col("i"), coalesce(col("_h"), lit(0L)).as("hub_ppm"),
         coalesce(col("_a"), lit(0L)).as("auth_ppm"))
-    } // withLoopWidth
+    }
   }
 }

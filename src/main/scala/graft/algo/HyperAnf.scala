@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core._
@@ -46,35 +45,33 @@ object HyperAnf {
     val raw = a.df.select(col("i").as("v"), col("j").as("nbr")).cache()
     val nnz = raw.count()
     // rounds × block fan-out: run the register propagation at the
-    // loop width (Iterate.withLoopWidth scaladoc)
-    Iterate.withLoopWidth(a.df.sparkSession, nnz) { width =>
-    val adj = raw.repartition(width, col("nbr")).cache()
+    // loop width (Iterate.Loop.sized scaladoc)
+    Iterate.scope(a.df.sparkSession, "HyperAnf") { loop =>
+    val width = loop.sized(nnz)
+    val adj = loop.cache(raw.repartition(width, col("nbr")))
     adj.count()
     raw.unpersist(false)
-    var b = adj.select(col("v")).distinct()
+    var b = loop.checkpoint("b0", adj.select(col("v")).distinct()
       .groupBy("v")
       .agg(org.apache.spark.sql.graft.HllState(
-        Sketch.hash60(col("v"))).as("state"))
-      .freshCheckpoint(true)
+        Sketch.hash60(col("v"))).as("state")))
     val outs = scala.collection.mutable.ListBuffer[DataFrame]()
-    for (t <- 1 to rounds) {
-      val nb = adj
+    loop.rounds(rounds)(true) { t =>
+      // EVERY round's state stays live (its estimate rows read it
+      // until the caller drains the output) — rounds × V × 256 B,
+      // bounded and tiny relative to the per-round shuffle; a slot
+      // per round, so no round supersedes another
+      b = loop.checkpoint(s"b$t", adj
         .join(b.select(col("v").as("nbr"), col("state")), Seq("nbr"))
         .select(col("v"), col("state"))
         .unionByName(b)
         .groupBy("v")
-        .agg(org.apache.spark.sql.graft.HllMergeState(col("state")).as("state"))
-        .freshCheckpoint(true)
-      b = nb
-      // EVERY round's state stays live (its estimate rows read it
-      // until the caller drains the output) — rounds × V × 256 B,
-      // bounded and tiny relative to the per-round shuffle
+        .agg(org.apache.spark.sql.graft.HllMergeState(col("state")).as("state")))
       outs += b.select(col("v").as("i"), lit(t.toLong).as("t"),
         Sketch.estMilli(org.apache.spark.sql.graft.HllEstimate(col("state")))
           .as("ball_milli"))
     }
-    adj.unpersist(false)
     outs.reduce(_.unionByName(_))
-    } // withLoopWidth
+    }
   }
 }

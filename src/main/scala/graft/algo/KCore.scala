@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -17,7 +16,7 @@ import graft.core._
   * so convergence is "nvals stopped shrinking" — count equality IS
   * set equality (no value compare needed; the inverse of BFS's
   * monotone-growth rule, which is why this loop cannot reuse
-  * Iterate.vectorLoopStable).
+  * Iterate.Loop.stable).
   *
   * Scale shape: the adjacency is repartitioned ONCE on the contracted
   * key and cached (every round's mxv reuses the exchange — the
@@ -59,27 +58,24 @@ object KCore {
     // one pass to learn nnz (cached so the loop-width repartition below
     // does not recompute the upstream), then the whole loop runs at a
     // shuffle width sized for the loop's per-round work, not the
-    // session's heaviest-single-aggregate width (Iterate.withLoopWidth)
+    // session's heaviest-single-aggregate width (Iterate.Loop.sized)
     val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
     val nnz = raw.count()
-    // ZERO-EXCHANGE ROUNDS below the broadcast guard (the LPA §17o
-    // pattern): survivor-vector joins broadcast, adjacency cached by
-    // i — see coreDegree below. Above the guard the sharded j-cache
-    // plan is unchanged; spark.graft.kcore.broadcast=false forces it.
-    val bcast = a.nrows <= Grb.broadcastGuard(spark) &&
-      Grb.flag(spark, "spark.graft.kcore.broadcast", default = true)
-    def hint(df: org.apache.spark.sql.DataFrame) =
-      if (bcast) org.apache.spark.sql.functions.broadcast(df) else df
-    Iterate.withLoopWidth(spark, nnz) { width =>
     // Whole-stage codegen OFF for the loop (round-14, PERF_NOTES
     // §17g): same mechanism as FastSV — many rounds of few-MB
     // exchanges re-generate fused classes per round/rep and pay the
     // interpret-until-C2 settle every rep. ABBA at sf0.1 (3-rep
     // mins, mid window): kcore 8.26->6.42, lpa 8.88->7.15,
     // mis 8.09->5.28 — each below its healthy-window record.
-    Iterate.withLoopCodegenOff(spark) {
+    Iterate.scope(spark, "KCore", codegen = false) { loop =>
+    val width = loop.sized(nnz)
+    // ZERO-EXCHANGE ROUNDS below the broadcast guard (the LPA §17o
+    // pattern): survivor-vector joins broadcast, adjacency cached by
+    // i — see coreDegree below. Above the guard the sharded j-cache
+    // plan is unchanged.
+    val bcast = loop.broadcasts(a.nrows)
     var A = new GrbMatrix(
-      raw.repartition(width, col(if (bcast) "i" else "j")).cache(),
+      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
       a.nrows, a.ncols)
     A.df.count() // materialize before freeing the sizing pass's cache
     raw.unpersist(false)
@@ -91,13 +87,12 @@ object KCore {
     // aggregate and every checkpoint then plan exchange-free.
     def coreDegree(s: GrbVector): GrbVector =
       A.mxv(s, Ops.plusPair,
-        mask = Some(Mask.structural(hint(s.df))), broadcastVec = bcast)
+        mask = Some(Mask.structural(loop.hint(s.df))), broadcastVec = bcast)
     // survivor counts ride each checkpoint job as an observed metric
-    // (Iterate.checkpointWithProbe) instead of a per-round count job
-    val (s0, sProbe0) = Iterate.checkpointWithProbe(
+    // (Loop.probe) instead of a per-round count job
+    val (s0, sProbe0) = loop.probe("s",
       A.df.select(col("i"), lit(1L).as("v")).distinct(), count(lit(1)).as("n"))
     var s = new GrbVector(s0, a.nrows)
-    var prev = Iterate.checkpointRdd(s.df)
     var n = sProbe0.getLong(0)
     // survivor count at the last edge-set materialization: peels
     // front-load their shrink (measured on the bench graph: 63% of
@@ -111,7 +106,6 @@ object KCore {
     // worst; each costs one semi-join pass over the current set.
     var edgeBasisN = n
     var stable = false
-    var iter = 0
     // per-round data-cost meter for the measured shrink rule: Σ task
     // executor time over THE LOOP'S OWN jobs ÷ cores = the round's
     // data-proportional wall share; the remainder of the measured
@@ -150,21 +144,18 @@ object KCore {
         "graft k-core peel (shrink-rule metered)")
     }
     try {
-    while (!stable && iter < maxIter && n > 0) {
+    loop.rounds(maxIter)(!stable && n > 0) { _ =>
       val t0 = System.nanoTime()
       taskMs.set(0L)
-      val (nextDf, probeRow) = Iterate.checkpointWithProbe(
+      val (nextDf, probeRow) = loop.probe("s",
         coreDegree(s).selectOp(_ >= k).df
           .select(col("i"), lit(1L).as("v")), count(lit(1)).as("n"))
       val next = new GrbVector(nextDf, a.nrows)
       val n2 = probeRow.getLong(0)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       stable = n2 == n
-      prev.foreach(_.unpersist(false))
-      prev = Iterate.checkpointRdd(next.df)
       s = next
       n = n2
-      iter += 1
       val deadFrac = 1.0 - n2.toDouble / edgeBasisN
       val wantShrink =
         if (shrinkThreshold > 0) // legacy count rule
@@ -181,21 +172,17 @@ object KCore {
             .waitUntilEmpty(spark.sparkContext)
           val dataWall = taskMs.get().toDouble / cores
           val overheadWall = math.max(0.0, wallMs.toDouble - dataWall)
-          val fire = 5.0 * deadFrac * dataWall >= 2.0 * dataWall + overheadWall
-          if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-            System.err.println(f"graft.KCore round=$iter dead=$deadFrac%.2f " +
-              f"dataWall=${dataWall / 1000}%.2fs overheadWall=${overheadWall / 1000}%.2fs fire=$fire")
-          fire
+          5.0 * deadFrac * dataWall >= 2.0 * dataWall + overheadWall
         }
       if (!stable && n > 0 && wantShrink) {
         val shrunk = A.df
-          .join(hint(s.df.select(col("i").as("sa"))),
+          .join(loop.hint(s.df.select(col("i").as("sa"))),
             col("i") === col("sa"), "leftsemi")
-          .join(hint(s.df.select(col("i").as("sb"))),
+          .join(loop.hint(s.df.select(col("i").as("sb"))),
             col("j") === col("sb"), "leftsemi")
           .select(col("i"), col("j"), col("v"))
         val nextA = new GrbMatrix(
-          shrunk.repartition(width, col(if (bcast) "i" else "j")).cache(),
+          loop.cache(shrunk.repartition(width, col(if (bcast) "i" else "j"))),
           a.nrows, a.ncols)
         nextA.df.count() // materialize before dropping the old basis
         A.df.unpersist(false)
@@ -203,13 +190,7 @@ object KCore {
         edgeBasisN = n2
       }
     }
-    val out = new GrbVector(
-      coreDegree(s).df.freshCheckpoint(true), a.nrows)
-    prev.foreach(_.unpersist(false))
-    A.df.unpersist(false)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"graft.KCore rounds=$iter")
-    out
+    new GrbVector(loop.checkpoint("out", coreDegree(s).df), a.nrows)
     } finally {
       if (shrinkThreshold < 0) {
         // restore (not clear) the caller's thread-local job group
@@ -220,7 +201,6 @@ object KCore {
         spark.sparkContext.removeSparkListener(meter)
       }
     }
-    } // withLoopCodegenOff
-    } // withLoopWidth
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core._
@@ -34,20 +33,18 @@ object KTruss {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"ktruss adjacency must be square: ${a.nrows}x${a.ncols}")
     require(k >= 3L, s"ktruss needs k >= 3, got $k")
-    var (e: DataFrame, eProbe0) = Iterate.checkpointWithProbe(
+    Iterate.scope(a.df.sparkSession, "KTruss") { loop =>
+    var (e: DataFrame, eProbe0) = loop.probe("e",
       a.df.select(col("i"), col("j")).filter(col("i") =!= col("j")),
       count(lit(1)).as("n"))
-    var prev = Iterate.checkpointRdd(e)
     var n = eProbe0.getLong(0)
     // rounds × block fan-out is the fixed cost — run the peel at the
-    // loop width (Iterate.withLoopWidth); the support mxm's product
+    // loop width (Iterate.Loop.sized); the support mxm's product
     // rows stay bounded by wedge counts on the surviving edge set
-    Iterate.withLoopWidth(a.df.sparkSession, n) { _ =>
+    loop.sized(n)
     var sup: DataFrame = e.withColumn("v", lit(0L)).limit(0)
     var done = n == 0L
-    var iter = 0
-    while (!done && iter < maxIter) {
-      iter += 1
+    loop.rounds(maxIter)(!done) { _ =>
       val em = new GrbMatrix(e.withColumn("v", lit(1L)), a.nrows, a.ncols)
       val c = em.mxm(em, Ops.plusPair, mask = Some(Mask.structural(em.df)))
       // surviving-edge count rides the checkpoint job (observed
@@ -57,21 +54,16 @@ object KTruss {
       // (4.2 vs 2.7 s single-rep A/B) — the masked family is
       // deliberately Catalyst-chosen (mxm scaladoc), so the loop state
       // stays partitioning-free as in r14.
-      val (s, probeRow) = Iterate.checkpointWithProbeOpt(
-        c.df.filter(col("v") >= k - 2), false, count(lit(1)).as("n"))
-      val sRdd = Iterate.checkpointRdd(s)
+      val (s, probeRow) = loop.probe("e", c.df.filter(col("v") >= k - 2),
+        count(lit(1)).as("n"), keepPartitioning = false)
       val n2 = probeRow.getLong(0)
-      prev.foreach(_.unpersist(false))
-      prev = sRdd
       sup = s
       // kept ⊆ input edges, so equal count == equal set == fixpoint
       if (n2 == n) done = true
       else { n = n2; e = s.select(col("i"), col("j")) }
     }
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"graft.KTruss rounds=$iter")
     sup.filter(col("i") < col("j"))
       .select(col("i"), col("j"), col("v").as("sup"))
-    } // withLoopWidth
+    }
   }
 }

@@ -28,7 +28,7 @@ import graft.core._
   * and cached — the shared mxv pattern), a two-level hash aggregate
   * (vote counts, then arg-max via struct ordering: max (count, -label)
   * = most votes, then least label), with per-round state eagerly
-  * checkpointed and superseded blocks freed (Iterate.vectorLoop).
+  * checkpointed and superseded blocks freed (Iterate.Loop.stable).
   * Work per round is O(nnz) join + aggregate — the BFS/CC cost
   * profile; nothing quadratic, no windows over the vertex set.
   */
@@ -64,17 +64,16 @@ object LabelProp {
     // plan below is unchanged (adjacency by j, shuffled aggregates),
     // which is the right 100 TB shape: at n ≫ guard the per-round
     // bytes dominate and per-executor label replication would cost
-    // more than the exchanges it saves. spark.graft.lpa.broadcast
-    // (default true) is the escape hatch for the guard's gray zone.
-    val bcast = a.nrows <= Grb.broadcastGuard(spark) &&
-      Grb.flag(spark, "spark.graft.lpa.broadcast", default = true)
-    Iterate.withLoopWidth(spark, nnz) { width =>
-      // Whole-stage codegen OFF for the loop (round-14, PERF_NOTES
-      // §17g): same mechanism as FastSV — many rounds of few-MB
-      // exchanges re-generate fused classes per round/rep. ABBA at
-      // sf0.1 (3-rep mins, mid window): lpa 8.88->7.15 s.
-      Iterate.withLoopCodegenOff(spark) {
-      val adj = raw.repartition(width, col(if (bcast) "i" else "j")).cache()
+    // more than the exchanges it saves.
+    //
+    // Whole-stage codegen OFF for the loop (round-14, PERF_NOTES
+    // §17g): same mechanism as FastSV — many rounds of few-MB
+    // exchanges re-generate fused classes per round/rep. ABBA at
+    // sf0.1 (3-rep mins, mid window): lpa 8.88->7.15 s.
+    Iterate.scope(spark, "LabelProp", codegen = false) { loop =>
+      val width = loop.sized(nnz)
+      val bcast = loop.broadcasts(a.nrows)
+      val adj = loop.cache(raw.repartition(width, col(if (bcast) "i" else "j")))
       adj.count() // materialize before freeing the sizing pass's cache
       raw.unpersist(false)
       val init = new GrbVector(
@@ -86,17 +85,12 @@ object LabelProp {
       // `rounds` rounds — the SQL oracle's remaining rounds are
       // identities. Keys are round-stable (symmetric adjacency: every
       // vertex has a labelled neighbour), so the one-job cmp-frame
-      // loop (vectorLoopStable) applies; graphs that 2-cycle (the
+      // loop (Loop.stable) applies; graphs that 2-cycle (the
       // bipartite oscillation in the scaladoc) never stabilize and
       // still stop at the horizon.
-      val (out, used) = Iterate.vectorLoopStableCounted(init, rounds) {
-        (l, _) => new GrbVector(round(adj, l.df, bcast), a.nrows)
-      }
-      if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-        System.err.println(s"graft.LabelProp rounds=$used/$rounds")
-      adj.unpersist(false)
-      out
-      } // withLoopCodegenOff
+      loop.stable(init, rounds) { l =>
+        new GrbVector(round(adj, l.df, bcast), a.nrows)
+      }._1
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core._
@@ -61,31 +60,27 @@ object Mis {
     // per-round exchanges vanish. Above the guard the sharded plan
     // below is unchanged — at n ≫ guard per-executor replication of
     // the active set costs more than the vertex-sized exchanges it
-    // saves. spark.graft.mis.broadcast=false forces the sharded plan.
-    val bcast = a.nrows <= Grb.broadcastGuard(spark) &&
-      Grb.flag(spark, "spark.graft.mis.broadcast", default = true)
-    def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    Iterate.withLoopWidth(spark, nnz) { width =>
+    // saves.
+    //
     // Whole-stage codegen OFF for the loop (round-14, PERF_NOTES
     // §17g): same mechanism as FastSV — many rounds of few-MB
     // exchanges re-generate fused classes per round/rep and pay the
     // interpret-until-C2 settle every rep. ABBA at sf0.1 (3-rep
     // mins, mid window): kcore 8.26->6.42, lpa 8.88->7.15,
     // mis 8.09->5.28 — each below its healthy-window record.
-    Iterate.withLoopCodegenOff(spark) {
-    val adj = raw.repartition(width, col(if (bcast) "i" else "j")).cache()
+    Iterate.scope(spark, "Mis", codegen = false) { loop =>
+    val width = loop.sized(nnz)
+    val bcast = loop.broadcasts(a.nrows)
+    val adj = loop.cache(raw.repartition(width, col(if (bcast) "i" else "j")))
     adj.count() // materialize before freeing the sizing pass's cache
     raw.unpersist(false)
     // the active count rides each checkpoint job as an observed metric
-    // (Iterate.checkpointWithProbe) instead of a per-round count job
-    var (act, probe0) = Iterate.checkpointWithProbe(
+    // (Loop.probe) instead of a per-round count job
+    var (act, probe0) = loop.probe("act",
       adj.select(col("i").as("n")).distinct(), count(lit(1)).as("n"))
-    var mis: DataFrame = act.filter(lit(false)).freshCheckpoint(true)
-    var prevAct = Iterate.checkpointRdd(act)
-    var prevMis = Iterate.checkpointRdd(mis)
+    var mis: DataFrame = loop.checkpoint("mis", act.filter(lit(false)))
     var n = probe0.getLong(0)
-    var iter = 0
-    while (n > 0 && iter < maxIter) {
+    loop.rounds(maxIter)(n > 0) { _ =>
       val actB = act.select(col("n").as("nb"), pkey(col("n")).as("bpk"))
       // min active-neighbour priority per edge head. Heads are NOT
       // pre-restricted to active: a leftsemi on i would re-shuffle the
@@ -95,40 +90,28 @@ object Mis {
       // map-side-combined partials only); inactive heads' rows
       // die in sel's act join
       val nbmin = adj
-        .join(hint(actB), col("j") === col("nb"))
+        .join(loop.hint(actB), col("j") === col("nb"))
         .groupBy(col("i")).agg(min(col("bpk")).as("mn"))
       // eager-checkpoint the selection: nextAct and nextMis both hang
       // off it, and without the materialization each would recompute
       // the round's nbmin aggregate from scratch
-      val sel = act.join(nbmin, col("n") === col("i"), "left")
+      val sel = loop.checkpoint("sel", act.join(nbmin, col("n") === col("i"), "left")
         .filter(col("mn").isNull || pkey(col("n")) < col("mn"))
-        .select(col("n")).freshCheckpoint(true)
-      val selRdd = Iterate.checkpointRdd(sel)
+        .select(col("n")))
       // no distinct: left_anti below ignores duplicate right-side rows,
       // so deduplicating the neighbour set would be a wasted shuffle
       val newOut = adj
-        .join(hint(sel.select(col("n").as("s"))),
+        .join(loop.hint(sel.select(col("n").as("s"))),
           col("j") === col("s"), "leftsemi")
         .select(col("i").as("n"))
-      val (nextAct, probeRow) = Iterate.checkpointWithProbe(
-        act.join(hint(sel), Seq("n"), "left_anti")
-          .join(hint(newOut), Seq("n"), "left_anti"), count(lit(1)).as("n"))
-      val nextMis = mis.unionByName(sel).freshCheckpoint(true)
-      prevAct.foreach(_.unpersist(false))
-      prevMis.foreach(_.unpersist(false))
-      selRdd.foreach(_.unpersist(false))
-      prevAct = Iterate.checkpointRdd(nextAct)
-      prevMis = Iterate.checkpointRdd(nextMis)
+      val (nextAct, probeRow) = loop.probe("act",
+        act.join(loop.hint(sel), Seq("n"), "left_anti")
+          .join(loop.hint(newOut), Seq("n"), "left_anti"), count(lit(1)).as("n"))
+      mis = loop.checkpoint("mis", mis.unionByName(sel))
       act = nextAct
-      mis = nextMis
       n = probeRow.getLong(0)
-      iter += 1
     }
-    adj.unpersist(false)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"graft.Mis rounds=$iter")
     new GrbVector(mis.select(col("n").as("i"), lit(1L).as("v")), a.nrows)
-    } // withLoopCodegenOff
-    } // withLoopWidth
+    }
   }
 }

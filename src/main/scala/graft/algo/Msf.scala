@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core._
@@ -64,17 +63,16 @@ object Msf {
       .cache()
     val nnz = e.count()
     // Borůvka rounds × block fan-out — loop-width discipline
-    // (Iterate.withLoopWidth); the inner CC sizes itself (PregelCC's
-    // edge-RDD rule / FastSV's own withLoopWidth)
-    Iterate.withLoopWidth(spark, nnz) { _ =>
-    var labels = e.select(explode(array(col("a"), col("b"))).as("v")).distinct()
-      .select(col("v"), col("v").as("l")).freshCheckpoint(true)
-    var prevLab = Iterate.checkpointRdd(labels)
+    // (Iterate.Loop.sized); the inner CC sizes itself (PregelCC's
+    // edge-RDD rule / FastSV's own loop scope)
+    Iterate.scope(spark, "Msf") { loop =>
+    loop.sized(nnz)
+    var labels = loop.checkpoint("labels",
+      e.select(explode(array(col("a"), col("b"))).as("v")).distinct()
+        .select(col("v"), col("v").as("l")))
     var picked: List[DataFrame] = Nil
-    var r = 0
     var live = true
-    while (live && r < maxRounds) {
-      r += 1
+    loop.rounds(maxRounds)(live) { r =>
       val cross = e
         .join(labels.select(col("v").as("a"), col("l").as("la")), Seq("a"))
         .join(labels.select(col("v").as("b"), col("l").as("lb")), Seq("b"))
@@ -88,14 +86,12 @@ object Msf {
         .select(shiftright(col("pk"), ShiftW).as("w"),
           shiftright(col("pk"), ShiftA).bitwiseAND(lit(MaskId)).as("a"),
           col("pk").bitwiseAND(lit(MaskId)).as("b"))
-      // picked-edge count rides the checkpoint job (observed metric)
-      val (sel, selProbe) = Iterate.checkpointWithProbe(
+      // picked-edge count rides the checkpoint job (observed metric);
+      // a slot per round — picked selections are result rows
+      val (sel, selProbe) = loop.probe(s"picked$r",
         sel0, count(lit(1)).as("n"))
-      val selRdd = Iterate.checkpointRdd(sel)
-      if (selProbe.getLong(0) == 0L) {
-        selRdd.foreach(_.unpersist(false))
-        live = false
-      } else {
+      if (selProbe.getLong(0) == 0L) live = false
+      else {
         picked ::= sel
         // contract: CC over the label-space graph of the picked edges
         // (symmetrized — FastSV's min-label propagation needs both
@@ -107,24 +103,18 @@ object Msf {
         val le = le0.unionByName(le0.select(col("j").as("i"), col("i").as("j")))
           .withColumn("v", lit(1L))
         val lg = new GrbMatrix(le, n, n)
-        val cc =
-          if (innerPregel) PregelCC.connectedComponents(lg)
+        // the inner CC's result blocks are this loop's to free once
+        // the relabel below has read them
+        val cc = loop.hold("cc",
+          if (innerPregel) PregelCC.connectedComponents(lg).df
           else FastSV.connectedComponents(lg, nodes = Some(
-            le.select(col("i")).distinct()))
-        val nl = labels
-          .join(cc.df.select(col("i").as("l"), col("v").as("nl")), Seq("l"), "left")
-          .select(col("v"), coalesce(col("nl"), col("l")).as("l"))
-          .freshCheckpoint(true)
-        cc.df.unpersist(false)
-        prevLab.foreach(_.unpersist(false))
-        prevLab = Iterate.checkpointRdd(nl)
-        labels = nl
+            le.select(col("i")).distinct())).df)
+        labels = loop.checkpoint("labels", labels
+          .join(cc.select(col("i").as("l"), col("v").as("nl")), Seq("l"), "left")
+          .select(col("v"), coalesce(col("nl"), col("l")).as("l")))
       }
     }
     e.unpersist(false)
-    prevLab.foreach(_.unpersist(false))
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"graft.Msf rounds=$r")
     picked match {
       case Nil => spark.range(0)
         .select(col("id").as("a"), col("id").as("b"), col("id").as("w"))
@@ -132,6 +122,6 @@ object Msf {
         tail.foldLeft(head.select(col("a"), col("b"), col("w")))(
           (acc, s) => acc.unionByName(s.select(col("a"), col("b"), col("w"))))
     }
-    } // withLoopWidth
+    }
   }
 }

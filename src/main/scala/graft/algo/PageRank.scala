@@ -18,7 +18,7 @@ import graft.core._
   *
   * Scale shape: per round one mxv (equi-join on the co-partitioned
   * adjacency + hash agg) and three narrow column ops; state is
-  * checkpointed per round by Iterate.vectorLoop. Cost profile is
+  * checkpointed per round by Iterate.Loop.vectorRounds. Cost profile is
   * rounds × nnz, same as BFS/SSSP.
   */
 object PageRank {
@@ -43,11 +43,13 @@ object PageRank {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"pagerank adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
-    // loop-width discipline (Iterate.withLoopWidth scaladoc): 10
+    // loop-width discipline (Iterate.Loop.sized scaladoc): 10
     // rounds of mxv at the session's aggregate-sized width is mostly
     // block fan-out; size the loop by nnz instead
     val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
     val nnz = raw.count()
+    Iterate.scope(spark, "PageRank") { loop =>
+    val width = loop.sized(nnz)
     // ZERO-EXCHANGE ROUNDS below the broadcast guard (round-15; the
     // LPA §17o family reaches the value-iteration tier): the rank
     // vector broadcasts into the mxv join, so the join no longer
@@ -60,30 +62,26 @@ object PageRank {
     // unchanged: adjacency by j, only the O(n) rank vector rides the
     // two per-round exchanges — the right 100 TB shape, where
     // per-executor rank replication would dominate.
-    val bcast = a.nrows <= Grb.broadcastGuard(spark) &&
-      Grb.flag(spark, "spark.graft.pagerank.broadcast", default = true)
-    Iterate.withLoopWidth(spark, nnz) { width =>
+    val bcast = loop.broadcasts(a.nrows)
     val ones = new GrbMatrix(
-      raw.repartition(width, col(if (bcast) "i" else "j")).cache(),
+      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
       a.nrows, a.ncols)
-    val deg = new GrbVector(
-      Iterate.truncate(ones.reduceRowwise(Ops.plusMonoid).df).cache(), a.nrows)
+    val deg = new GrbVector(loop.cache(
+      loop.checkpoint("deg", ones.reduceRowwise(Ops.plusMonoid).df)), a.nrows)
     val nNodes = deg.nvals // 1-row driver action, reused every round
     raw.unpersist(false) // ones materialized by the deg pass above
     val base = (scale - scale * dampNum / dampDen) / nNodes
     val init = new GrbVector(
       deg.df.select(col("i"), lit(scale / nNodes).as("v")), a.nrows)
-    val out = Iterate.vectorLoop(init, rounds) { (r, _) =>
+    // fixed round count
+    loop.vectorRounds(init, rounds) { r =>
       val contrib = r.ewiseMult(deg, Ops.floordiv)
       ones.mxv(contrib, Ops.plusTimes, broadcastVec = bcast)
         .applyRight(Ops.times, lit(dampNum))
         .applyRight(Ops.floordiv, lit(dampDen))
         .applyRight(Ops.plus, lit(base))
-    } { (_, _) => false } // fixed round count
-    deg.df.unpersist(false)
-    ones.df.unpersist(false)
-    out
-    } // withLoopWidth
+    }
+    }
   }
 
   /** Personalized PageRank: the same integer fixed-point recurrence,
@@ -113,17 +111,17 @@ object PageRank {
     val spark = a.df.sparkSession
     val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
     val nnz = raw.count()
+    Iterate.scope(spark, "PersonalizedPageRank") { loop =>
+    val width = loop.sized(nnz)
     // broadcast mode mirrors [[ranks]] — and pays off even more here:
     // the PPR vector is SPARSE (round k's support is the k-hop ball),
     // so the per-round broadcast is a fraction of the vertex set
-    val bcast = a.nrows <= Grb.broadcastGuard(spark) &&
-      Grb.flag(spark, "spark.graft.pagerank.broadcast", default = true)
-    Iterate.withLoopWidth(spark, nnz) { width =>
+    val bcast = loop.broadcasts(a.nrows)
     val ones = new GrbMatrix(
-      raw.repartition(width, col(if (bcast) "i" else "j")).cache(),
+      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
       a.nrows, a.ncols)
-    val deg = new GrbVector(
-      Iterate.truncate(ones.reduceRowwise(Ops.plusMonoid).df).cache(), a.nrows)
+    val deg = new GrbVector(loop.cache(
+      loop.checkpoint("deg", ones.reduceRowwise(Ops.plusMonoid).df)), a.nrows)
     deg.nvals // materializes deg and with it ones
     raw.unpersist(false)
     val base = scale - scale * dampNum / dampDen
@@ -133,16 +131,14 @@ object PageRank {
       spark.range(1).select(lit(seed).as("i"), lit(scale).as("v")), a.nrows)
     val teleport = new GrbVector(
       spark.range(1).select(lit(seed).as("i"), lit(base).as("v")), a.nrows)
-    val out = Iterate.vectorLoop(init, rounds) { (r, _) =>
+    // fixed round count
+    loop.vectorRounds(init, rounds) { r =>
       val contrib = r.ewiseMult(deg, Ops.floordiv)
       ones.mxv(contrib, Ops.plusTimes, broadcastVec = bcast)
         .applyRight(Ops.times, lit(dampNum))
         .applyRight(Ops.floordiv, lit(dampDen))
         .ewiseAdd(teleport, Ops.plus)
-    } { (_, _) => false } // fixed round count
-    deg.df.unpersist(false)
-    ones.df.unpersist(false)
-    out
-    } // withLoopWidth
+    }
+    }
   }
 }

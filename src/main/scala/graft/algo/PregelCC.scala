@@ -148,7 +148,7 @@ object PregelCC {
     // result must not recompute from freed blocks
     val df = cc.vertices.map { case (id, label) => (id, label) }
       .toDF("i", "v").freshCheckpoint(true)
-    val keep = Iterate.checkpointRdd(df).map(_.id).toSet
+    val keep = Iterate.blocks(df).map(_.id).toSet
     sc.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!before.contains(id) && !keep.contains(id)) rdd.unpersist(false)
     }

@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -118,8 +117,9 @@ object RandomWalk {
     val edges = a.df.select(col("i").as("v"), col("j").as("nbr")).cache()
     val nnz = edges.count()
     // steps × block fan-out is the loop's fixed cost — rank build and
-    // move-joins run at the loop width (Iterate.withLoopWidth)
-    Iterate.withLoopWidth(a.df.sparkSession, nnz) { width =>
+    // move-joins run at the loop width (Iterate.Loop.sized)
+    Iterate.scope(a.df.sparkSession, "RandomWalk") { loop =>
+    val width = loop.sized(nnz)
     // degree needs no rank — computed from the raw edge list; used
     // only OUTSIDE the loop (build-time nbr attach + the init frame)
     val deg = edges.groupBy("v").agg(count(lit(1)).as("deg")).cache()
@@ -165,20 +165,19 @@ object RandomWalk {
             .join(coldDeg, Seq("nbr"), "left")
             .withColumn("nbrDeg", coalesce(col("nbrDeg"), lit(0L))))
       }
-    val indexed = attached
-      .repartition(width, col("v"), col("idx"))
-      .cache() // (v, nbr, idx, nbrDeg)
+    val indexed = loop.cache(attached
+      .repartition(width, col("v"), col("idx"))) // (v, nbr, idx, nbrDeg)
     indexed.count()
     rankedCache.foreach(_.unpersist(false))
     edges.unpersist(false)
-    var pos = deg
+    // every step's rows are OUTPUT — nothing is superseded, so each
+    // step checkpoints into its own slot and all stay live until the
+    // caller drops the result (unlike the fixpoint loops, which free
+    // old rounds)
+    var pos = loop.checkpoint("step0", deg
       .select(col("v").as("start"), lit(0L).as("step"),
-        col("v").as("cur"), col("deg").as("curDeg"))
-      .freshCheckpoint(true)
+        col("v").as("cur"), col("deg").as("curDeg")))
     deg.unpersist(false)
-    // every step's rows are OUTPUT — nothing is superseded, so the
-    // per-step checkpoints all stay live until the caller drops the
-    // result (unlike the fixpoint loops, which free old rounds)
     val parts = scala.collection.mutable.ListBuffer[DataFrame](pos)
     // Broadcast mode below the guard (round-15; the §17o family): the
     // walker frame (≤ one row per vertex) broadcasts into the move
@@ -187,26 +186,23 @@ object RandomWalk {
     // becomes a map-side join over the cached adjacency. Above the
     // guard the walker frame rides the one per-step exchange exactly
     // as before (broadcasting a 100 TB walker set is the wrong trade).
-    val bcast = a.nrows <= Grb.broadcastGuard(a.df.sparkSession) &&
-      Grb.flag(a.df.sparkSession, "spark.graft.walks.broadcast", default = true)
-    for (t <- 1 to steps) {
+    // The guard counts the broadcast frame's real width: `drawn`
+    // carries five longs, not the two Grb.BroadcastRowBytes assumes.
+    loop.broadcasts(a.nrows, rowBytes = Grb.BroadcastRowBytes * 5 / 2)
+    loop.rounds(steps)(true) { t =>
       val drawn = pos
         .withColumn("_ix", pmod(graft.pipeline.TextDedup.hash32(
           concat_ws("_", col("start"), col("cur"), lit(t))), col("curDeg")))
-      val drawnSide = if (bcast) broadcast(drawn) else drawn
-      val nxt = drawnSide
+      pos = loop.checkpoint(s"step$t", loop.hint(drawn)
         .join(indexed.select(col("v").as("cur"), col("idx").as("_ix"),
           col("nbr"), col("nbrDeg")), Seq("cur", "_ix"))
         .select(col("start"), lit(t.toLong).as("step"),
-          col("nbr").as("cur"), col("nbrDeg").as("curDeg"))
-        .freshCheckpoint(true)
-      parts += nxt
-      pos = nxt
+          col("nbr").as("cur"), col("nbrDeg").as("curDeg")))
+      parts += pos
     }
-    indexed.unpersist(false)
     parts.reduce(_.unionByName(_))
       .select(col("start"), col("step"), col("cur").as("vertex"))
-    } // withLoopWidth
+    }
   }
 
   /** The pre-verification skip-gram candidate join, BANDED on walk

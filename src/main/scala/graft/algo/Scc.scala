@@ -1,6 +1,5 @@
 package graft.algo
 
-import Iterate.FreshOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -59,9 +58,10 @@ object Scc {
       .filter(col("u") =!= col("v")).distinct().cache()
     val nnz = raw.count()
     // inner rounds × block fan-out is the loop's fixed cost — run the
-    // whole refinement at the loop width (Iterate.withLoopWidth)
-    Iterate.withLoopWidth(raw.sparkSession, nnz) { width =>
-    val edges = raw.repartition(width, col("v")).cache()
+    // whole refinement at the loop width (Iterate.Loop.sized)
+    Iterate.scope(raw.sparkSession, "Scc") { loop =>
+    val width = loop.sized(nnz)
+    val edges = loop.cache(raw.repartition(width, col("v")))
     edges.count()
     raw.unpersist(false)
     val nodes = edges.select(col("u").as("n"))
@@ -69,34 +69,25 @@ object Scc {
     // state: block key (bf, bb), finalized flag, scc label
     // every vertex starts not-done, so the initial remaining-count is
     // the plain row count, observed during the checkpoint job
-    var (st, stProbe0) = Iterate.checkpointWithProbe(
+    var (st, stProbe0) = loop.probe("st",
       nodes.select(col("n"), lit(0L).as("bf"), lit(0L).as("bb"),
         lit(false).as("done"), lit(null).cast(LongType).as("scc")),
       count(lit(1)).as("remaining"))
-    var stRdd = Iterate.checkpointRdd(st)
     var remaining = stProbe0.getLong(0)
     // Broadcast mode below the guard (the §17o-§17q family, keyed on
     // the ACTUAL vertex count just counted): label fragments broadcast
     // into the propagation joins so the edge set never re-clusters.
-    // spark.graft.scc.broadcast=false forces the sharded plan.
-    val bcast = remaining <= graft.core.Grb.broadcastGuard(raw.sparkSession) &&
-      graft.core.Grb.flag(raw.sparkSession, "spark.graft.scc.broadcast",
-        default = true)
-    def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    var outer = 0
-    var innerTotal = 0
-    while (remaining > 0 && outer < maxOuter) {
+    val bcast = loop.broadcasts(remaining)
+    loop.rounds(maxOuter)(remaining > 0) { _ =>
       val act = st.filter(!col("done")).select("n", "bf", "bb")
       // active edges: both endpoints live in the same unfinished block.
       // Finalized vertices' SCCs are complete, so their edges can never
       // matter again — the set only shrinks across outer rounds.
-      val ae = edges
-        .join(hint(act.select(col("n").as("u"), col("bf").as("ubf"), col("bb").as("ubb"))), Seq("u"))
-        .join(hint(act.select(col("n").as("v"), col("bf"), col("bb"))), Seq("v"))
+      val ae = loop.checkpoint("ae", edges
+        .join(loop.hint(act.select(col("n").as("u"), col("bf").as("ubf"), col("bb").as("ubb"))), Seq("u"))
+        .join(loop.hint(act.select(col("n").as("v"), col("bf"), col("bb"))), Seq("v"))
         .filter(col("ubf") === col("bf") && col("ubb") === col("bb"))
-        .select(col("u"), col("v"))
-        .freshCheckpoint(true)
-      val aeRdd = Iterate.checkpointRdd(ae)
+        .select(col("u"), col("v")))
       // Orientation handling per mode (round-14). BROADCAST mode: the
       // label fragments are hinted into both propagation joins, so the
       // checkpointed ae streams in place whatever its clustering — no
@@ -120,21 +111,19 @@ object Scc {
       val ubBase = if (bcast) ae else shardCaches(1)
       // inner: synchronous min-label rounds for f (over in-edges) and
       // b (over out-edges) simultaneously, to joint fixpoint
-      var fb = act.select(col("n"), col("n").as("f"), col("n").as("b"))
-        .freshCheckpoint(true)
-      var fbRdd = Iterate.checkpointRdd(fb)
+      var fb = loop.checkpoint("fb",
+        act.select(col("n"), col("n").as("f"), col("n").as("b")))
       var change = true
-      var inner = 0
-      while (change && inner < maxInner) {
-        val uf = ufBase.join(hint(fb.select(col("n").as("u"), col("f").as("fu"))), Seq("u"))
+      loop.rounds(maxInner)(change) { _ =>
+        val uf = ufBase.join(loop.hint(fb.select(col("n").as("u"), col("f").as("fu"))), Seq("u"))
           .groupBy(col("v").as("nf")).agg(min(col("fu")).as("mf"))
-        val ub = ubBase.join(hint(fb.select(col("n").as("v"), col("b").as("bv"))), Seq("v"))
+        val ub = ubBase.join(loop.hint(fb.select(col("n").as("v"), col("b").as("bv"))), Seq("v"))
           .groupBy(col("u").as("nb")).agg(min(col("bv")).as("mb"))
         // one checkpoint job per round carrying the change flag (the
-        // vectorLoopStable cmp-frame pattern, two values instead of
-        // one); the change count is observed during the checkpoint job
-        // itself (Iterate.checkpointWithProbe — no per-round isEmpty)
-        val (next, probeRow) = Iterate.checkpointWithProbe(fb
+        // Loop.stable cmp-frame pattern, two values instead of one);
+        // the change count is observed during the checkpoint job
+        // itself (Loop.probe — no per-round isEmpty)
+        val (next, probeRow) = loop.probe("fb", fb
           .join(uf, col("n") === col("nf"), "left")
           .join(ub, col("n") === col("nb"), "left")
           .select(col("n"),
@@ -144,15 +133,11 @@ object Scc {
               coalesce(col("mb"), col("b")) < col("b")).as("_chg")),
           count(when(col("_chg"), 1)).as("chg"))
         change = probeRow.getLong(0) > 0
-        fbRdd.foreach(_.unpersist(false))
-        fbRdd = Iterate.checkpointRdd(next)
         fb = next.select("n", "f", "b")
-        inner += 1
       }
-      innerTotal += inner
       // finalize f==b (guaranteed non-empty: each block's min vertex),
       // refine survivors' block to (f, b)
-      val (nextSt, stProbe) = Iterate.checkpointWithProbe(st
+      val (nextSt, stProbe) = loop.probe("st", st
         .join(fb.select(col("n"), col("f"), col("b")), Seq("n"), "left")
         .select(col("n"),
           coalesce(col("f"), col("bf")).as("bf"),
@@ -162,18 +147,10 @@ object Scc {
             .otherwise(when(col("f") === col("b"), col("f"))).as("scc")),
         count(when(!col("done"), 1)).as("remaining"))
       remaining = stProbe.getLong(0)
-      stRdd.foreach(_.unpersist(false))
-      fbRdd.foreach(_.unpersist(false))
       shardCaches.foreach(_.unpersist(false))
-      aeRdd.foreach(_.unpersist(false))
-      stRdd = Iterate.checkpointRdd(nextSt)
       st = nextSt
-      outer += 1
     }
-    edges.unpersist(false)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"graft.Scc outer=$outer innerTotal=$innerTotal")
     st.select(col("n"), col("scc"))
-    } // withLoopWidth
+    }
   }
 }

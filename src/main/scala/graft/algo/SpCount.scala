@@ -1,7 +1,6 @@
 package graft.algo
 
-import Iterate.FreshOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -41,50 +40,53 @@ object SpCount {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"spcount adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.spark
-    val hop = new GrbMatrix(
-      a.df.select(col("i"), col("j"), lit(1L).as("v"))
-        .repartition(col("j")).cache(), a.nrows, a.ncols)
-    var res: DataFrame = spark.range(1)
-      .select(lit(source).as("i"), lit(0L).as("d"), lit(1L).as("sigma"))
-      .freshCheckpoint(true)
-    var frontier: DataFrame = res.select(col("i"), col("sigma").as("v"))
-    var prevRes = Iterate.checkpointRdd(res)
-    var prevNext: Option[org.apache.spark.rdd.RDD[_]] = None
-    var k = 0L
-    var n = 1L
-    while (n > 0 && k < maxIter) {
-      k += 1
-      val f = new GrbVector(frontier, a.nrows)
-      // plus_times wave: every neighbour of a frontier vertex receives
-      // the sum of its frontier-neighbours' path counts
-      val cand = hop.mxv(f, Ops.plusTimes).df
-      // complement mask: only first-touch (= shortest-distance) counts
-      // survive; frontier size rides the checkpoint job as an observed
-      // metric (Iterate.checkpointWithProbe) — no per-round count job
-      val (next, probeRow) = Iterate.checkpointWithProbe(
-        cand.join(res.select(col("i")), Seq("i"), "left_anti"),
-        count(lit(1)).as("n"))
-      val nextRdd = Iterate.checkpointRdd(next)
-      n = probeRow.getLong(0)
-      if (n > 0) {
-        val nextRes = res.unionByName(
+    Iterate.scope(spark, "SpCount") { loop =>
+      val hop = new GrbMatrix(loop.cache(
+        a.df.select(col("i"), col("j"), lit(1L).as("v")).repartition(col("j"))),
+        a.nrows, a.ncols)
+      loop.frontier(spark.range(1)
+        .select(lit(source).as("i"), lit(0L).as("d"), lit(1L).as("sigma")),
+        Seq("i"), 1L, maxIter)(
+        seed = res => res.select(col("i"), col("sigma").as("v")),
+        // plus_times wave: every neighbour of a frontier vertex receives
+        // the sum of its frontier-neighbours' path counts; the
+        // complement mask keeps only first-touch (= shortest-distance)
+        // counts
+        expand = f => hop.mxv(new GrbVector(f, a.nrows), Ops.plusTimes).df,
+        record = (next, k) =>
           next.select(col("i"), lit(k).as("d"), col("v").as("sigma")))
-          .freshCheckpoint(true)
-        prevRes.foreach(_.unpersist(false))
-        prevNext.foreach(_.unpersist(false))
-        prevRes = Iterate.checkpointRdd(nextRes)
-        prevNext = nextRdd
-        res = nextRes
-        frontier = next.select(col("i"), col("v"))
-      } else {
-        nextRdd.foreach(_.unpersist(false))
-      }
     }
-    hop.df.unpersist(false)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"graft.SpCount rounds=$k")
-    res
   }
+
+  /** The backward dag accumulation shared by [[stress]],
+    * [[betweenness]] and [[landmarkBetweenness]]: dd starts at 0 on
+    * every reached vertex, and each of max-depth rounds sets
+    * dd(u) = Σ `term` over u's dag successors v (columns su, sv, dd of
+    * v), 0 where u has none — per round one equi-join + hash agg +
+    * left-join backfill, O(nnz_dag).
+    *
+    * @param fw  the forward wave (src keys, i, d, sigma)
+    * @param dag descending edges (src keys, u, v, …), cached on the
+    *            backward contraction key for the loop's lifetime
+    * @param src per-source key columns (Nil single-source, "s" batched)
+    * @return (src keys, i, dd)
+    */
+  private def accumulate(name: String, fw: DataFrame, dag: DataFrame,
+      src: Seq[String])(term: Column): DataFrame =
+    Iterate.scope(fw.sparkSession, name) { loop =>
+      val cached = loop.cache(dag.repartition((src :+ "v").map(col): _*))
+      val keys = src.map(col)
+      val maxd = fw.agg(max(col("d"))).collect()(0).getLong(0) // 1-row driver agg
+      var dd = loop.checkpoint("dd", fw.select(keys :+ col("i") :+ lit(0L).as("dd"): _*))
+      loop.rounds(maxd.toInt)(true) { _ =>
+        val up = cached.join(dd.select(keys :+ col("i").as("v") :+ col("dd"): _*), src :+ "v")
+          .groupBy(keys :+ col("u"): _*).agg(sum(term).as("dd2"))
+        dd = loop.checkpoint("dd", fw.select(keys :+ col("i"): _*)
+          .join(up.select(keys :+ col("u").as("i") :+ col("dd2"): _*), src :+ "i", "left")
+          .select(keys :+ col("i") :+ coalesce(col("dd2"), lit(0L)).as("dd"): _*))
+      }
+      dd
+    }
 
   /** Single-source STRESS centrality — the exact-integer two-phase
     * Brandes structure: the forward σ wave ([[counts]]) followed by a
@@ -117,25 +119,7 @@ object SpCount {
       .join(du, Seq("u")).join(dv, Seq("v"))
       .filter(col("dv") === col("du") + 1)
       .select(col("u"), col("v"))
-      .repartition(col("v")).cache()
-    val maxd = fw.agg(max(col("d"))).collect()(0).getLong(0) // 1-row driver agg
-    var dd: org.apache.spark.sql.DataFrame = fw
-      .select(col("i"), lit(0L).as("dd")).freshCheckpoint(true)
-    var prevDd = Iterate.checkpointRdd(dd)
-    var t = 0L
-    while (t < maxd) {
-      t += 1
-      val up = dag.join(dd.select(col("i").as("v"), col("dd")), Seq("v"))
-        .groupBy(col("u")).agg(sum(col("dd") + 1).as("dd2"))
-      val nextDd = fw.select(col("i"))
-        .join(up.select(col("u").as("i"), col("dd2")), Seq("i"), "left")
-        .select(col("i"), coalesce(col("dd2"), lit(0L)).as("dd"))
-        .freshCheckpoint(true)
-      prevDd.foreach(_.unpersist(false))
-      prevDd = Iterate.checkpointRdd(nextDd)
-      dd = nextDd
-    }
-    dag.unpersist(false)
+    val dd = accumulate("Stress", fw, dag, Nil)(col("dd") + 1)
     fw.join(dd, Seq("i"))
       .select(col("i"), col("d"), col("sigma"),
         (col("sigma") * col("dd")).as("stress"))
@@ -179,26 +163,8 @@ object SpCount {
       .join(su, Seq("u")).join(sv, Seq("v"))
       .filter(col("dv") === col("du") + 1)
       .select(col("u"), col("v"), col("su"), col("sv"))
-      .repartition(col("v")).cache()
-    val maxd = fw.agg(max(col("d"))).collect()(0).getLong(0) // 1-row driver agg
-    var dd: org.apache.spark.sql.DataFrame = fw
-      .select(col("i"), lit(0L).as("dd")).freshCheckpoint(true)
-    var prevDd = Iterate.checkpointRdd(dd)
-    var t = 0L
-    while (t < maxd) {
-      t += 1
-      val up = dag.join(dd.select(col("i").as("v"), col("dd")), Seq("v"))
-        .groupBy(col("u"))
-        .agg(sum(expr(s"(su * ($scale + dd)) DIV sv")).as("dd2"))
-      val nextDd = fw.select(col("i"))
-        .join(up.select(col("u").as("i"), col("dd2")), Seq("i"), "left")
-        .select(col("i"), coalesce(col("dd2"), lit(0L)).as("dd"))
-        .freshCheckpoint(true)
-      prevDd.foreach(_.unpersist(false))
-      prevDd = Iterate.checkpointRdd(nextDd)
-      dd = nextDd
-    }
-    dag.unpersist(false)
+    val dd = accumulate("Betweenness", fw, dag, Nil)(
+      expr(s"(su * ($scale + dd)) DIV sv"))
     fw.join(dd, Seq("i"))
       .select(col("i"), col("d"), col("sigma"), col("dd").as("btw_ppm"))
   }
@@ -217,46 +183,23 @@ object SpCount {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"landmark counts adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.spark
-    val hop = new GrbMatrix(
-      a.df.select(col("i"), col("j"), lit(1L).as("v"))
-        .repartition(col("i")).cache(), a.nrows, a.ncols)
     val srcRows = sources.distinct.map(s => (s, s, 0L, 1L))
-    var res: DataFrame = spark.createDataFrame(srcRows)
-      .toDF("s", "i", "d", "sigma").freshCheckpoint(true)
-    var frontier = res.select(col("s"), col("i"), col("sigma"))
-    var prevRes = Iterate.checkpointRdd(res)
-    var prevNext: Option[org.apache.spark.rdd.RDD[_]] = None
-    var k = 0L
-    var n = srcRows.size.toLong
-    while (n > 0 && k < maxIter) {
-      k += 1
-      // plus_times F·A: every landmark's neighbours receive the sum of
-      // their frontier-neighbours' path counts in ONE product
-      val f = new GrbMatrix(
-        frontier.select(col("s").as("i"), col("i").as("j"),
-          col("sigma").as("v")), a.nrows, a.nrows)
-      val prod = f.mxm(hop, Ops.plusTimes).df
-      val (next, probeRow) = Iterate.checkpointWithProbe(
-        prod.select(col("i").as("s"), col("j").as("i"), col("v"))
-          .join(res.select(col("s"), col("i")), Seq("s", "i"), "left_anti"),
-        count(lit(1)).as("n"))
-      val nextRdd = Iterate.checkpointRdd(next)
-      n = probeRow.getLong(0)
-      if (n > 0) {
-        val nextRes = res.unionByName(next.select(col("s"), col("i"),
-          lit(k).as("d"), col("v").as("sigma"))).freshCheckpoint(true)
-        prevRes.foreach(_.unpersist(false))
-        prevNext.foreach(_.unpersist(false))
-        prevRes = Iterate.checkpointRdd(nextRes)
-        prevNext = nextRdd
-        res = nextRes
-        frontier = next.select(col("s"), col("i"), col("v").as("sigma"))
-      } else {
-        nextRdd.foreach(_.unpersist(false))
-      }
+    Iterate.scope(spark, "LandmarkCounts") { loop =>
+      val hop = new GrbMatrix(loop.cache(
+        a.df.select(col("i"), col("j"), lit(1L).as("v")).repartition(col("i"))),
+        a.nrows, a.ncols)
+      loop.frontier(spark.createDataFrame(srcRows).toDF("s", "i", "d", "sigma"),
+        Seq("s", "i"), srcRows.size.toLong, maxIter)(
+        seed = res => res.select(col("s"), col("i"), col("sigma").as("v")),
+        // plus_times F·A: every landmark's neighbours receive the sum of
+        // their frontier-neighbours' path counts in ONE product
+        expand = f => new GrbMatrix(
+          f.select(col("s").as("i"), col("i").as("j"), col("v")),
+          a.nrows, a.nrows).mxm(hop, Ops.plusTimes).df
+          .select(col("i").as("s"), col("j").as("i"), col("v")),
+        record = (next, k) => next.select(col("s"), col("i"),
+          lit(k).as("d"), col("v").as("sigma")))
     }
-    hop.df.unpersist(false)
-    res
   }
 
   /** LANDMARK betweenness — the Brandes-Pich estimator, how
@@ -293,28 +236,8 @@ object SpCount {
       .join(su, Seq("u")).join(sv, Seq("s", "v"))
       .filter(col("dv") === col("du") + 1)
       .select(col("s"), col("u"), col("v"), col("su"), col("sv"))
-      .repartition(col("s"), col("v")).cache()
-    val maxd = fw.agg(max(col("d"))).collect()(0).getLong(0) // 1-row driver agg
-    var dd: DataFrame = fw.select(col("s"), col("i"), lit(0L).as("dd"))
-      .freshCheckpoint(true)
-    var prevDd = Iterate.checkpointRdd(dd)
-    var t = 0L
-    while (t < maxd) {
-      t += 1
-      val up = dag.join(
-        dd.select(col("s"), col("i").as("v"), col("dd")), Seq("s", "v"))
-        .groupBy(col("s"), col("u"))
-        .agg(sum(expr(s"(su * ($scale + dd)) DIV sv")).as("dd2"))
-      val nextDd = fw.select(col("s"), col("i"))
-        .join(up.select(col("s"), col("u").as("i"), col("dd2")),
-          Seq("s", "i"), "left")
-        .select(col("s"), col("i"), coalesce(col("dd2"), lit(0L)).as("dd"))
-        .freshCheckpoint(true)
-      prevDd.foreach(_.unpersist(false))
-      prevDd = Iterate.checkpointRdd(nextDd)
-      dd = nextDd
-    }
-    dag.unpersist(false)
+    val dd = accumulate("LandmarkBetweenness", fw, dag, Seq("s"))(
+      expr(s"(su * ($scale + dd)) DIV sv"))
     dd.filter(col("i") =!= col("s"))
       .groupBy(col("i")).agg(sum(col("dd")).as("btw_ppm"))
   }

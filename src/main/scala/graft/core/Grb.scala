@@ -1324,21 +1324,33 @@ object Grb {
     * magnitude above every bench-scale vertex set (≤ ~1M), so plans
     * at bench scale are unchanged. A 100 TB deployment sizes it from
     * its own executor memory: budget = fraction-of-heap the operator
-    * may pin per broadcast, guard rows = budget / 32.
+    * may pin per broadcast, guard rows = budget / 32. Frames wider
+    * than two longs pass their own `rowBytes` (RandomWalk's walker
+    * frame).
     */
-  def broadcastGuard(spark: SparkSession): Long = {
-    val budget = spark.conf.getOption("spark.graft.broadcast.maxBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ > 0)
-      .getOrElse(512L * 1024 * 1024)
-    math.max(1L, budget / BroadcastRowBytes)
+  def broadcastGuard(spark: SparkSession,
+      rowBytes: Long = BroadcastRowBytes): Long = {
+    val key = "spark.graft.broadcast.maxBytes"
+    val default = 512L * 1024 * 1024
+    // a malformed budget warns like Grb.flag: maxBytes=1 is how an
+    // operator forces the sharded plans, so a typo must not silently
+    // leave them broadcasting
+    val budget = spark.conf.getOption(key).fold(default) { raw =>
+      scala.util.Try(raw.trim.toLong).toOption.filter(_ > 0).getOrElse {
+        System.err.println(s"graft: ignoring unparsable conf $key='$raw' " +
+          s"(want a positive byte count); using default=$default")
+        default
+      }
+    }
+    math.max(1L, budget / rowBytes)
   }
 
   /** conf-gated plan toggle (the spark.graft.* escape-hatch family):
     * accepts true/false/1/0/on/off/yes/no (case-insensitive); an
-    * absent conf → the measured default; a MALFORMED value warns once
-    * to stderr and falls back to the default — silently honoring the
-    * default would invert the operator's intent for values like
-    * `packedAgg=of` (round-14 advice).
+    * absent conf → the measured default; a MALFORMED value warns to
+    * stderr on every read and falls back to the default — silently
+    * honoring the default would invert the operator's intent for
+    * values like `packedAgg=of` (round-14 advice).
     */
   private[graft] def flag(spark: SparkSession, key: String,
       default: Boolean): Boolean =

@@ -562,9 +562,9 @@ class FastSVSpec extends SparkSpec {
     val init = new GrbVector(
       adj.select(col("i")).distinct()
         .select(col("i"), col("i").cast("long").as("v")), 8L)
-    val (out, used) = graft.algo.Iterate.vectorLoopStableCounted(init, 50) {
-      (l, _) => new GrbVector(graft.algo.LabelProp.round(adj, l.df), 8L)
-    }
+    val (out, used) = graft.algo.Iterate.scope(spark, "LabelProp")(_.stable(init, 50) {
+      l => new GrbVector(graft.algo.LabelProp.round(adj, l.df), 8L)
+    })
     assert(used < 10, s"no early exit: ran $used/50 rounds")
     assert(labelsOf(out) == labelsOf(graft.algo.LabelProp.communities(a, 50)))
   }
@@ -578,9 +578,9 @@ class FastSVSpec extends SparkSpec {
     val init = new GrbVector(
       adj.select(col("i")).distinct()
         .select(col("i"), col("i").cast("long").as("v")), 2L)
-    val (_, used) = graft.algo.Iterate.vectorLoopStableCounted(init, 6) {
-      (l, _) => new GrbVector(graft.algo.LabelProp.round(adj, l.df), 2L)
-    }
+    val (_, used) = graft.algo.Iterate.scope(spark, "LabelProp")(_.stable(init, 6) {
+      l => new GrbVector(graft.algo.LabelProp.round(adj, l.df), 2L)
+    })
     assert(used == 6, s"oscillating graph exited early at $used")
     // odd horizon = swapped labels, even horizon = identity labels
     assert(labelsOf(graft.algo.LabelProp.communities(a, 7)) ==
@@ -622,7 +622,7 @@ class FastSVSpec extends SparkSpec {
 
   test("LPA equi-join mode (the above-guard 100TB path) matches broadcast mode") {
     // two triangles + a bridge; broadcast mode is the small-n default,
-    // the conf escape hatch forces the sharded equi-join plan the
+    // a 1-byte broadcast budget forces the sharded equi-join plan the
     // above-BroadcastGuard path takes — labels must be identical
     val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 4L), (4L, 5L),
       (3L, 5L), (2L, 3L))
@@ -630,11 +630,7 @@ class FastSVSpec extends SparkSpec {
     val a = GrbMatrix.fromValues(spark,
       sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 6L, 6L)
     val want = labelsOf(graft.algo.LabelProp.communities(a, 7))
-    val key = "spark.graft.lpa.broadcast"
-    try {
-      spark.conf.set(key, "false")
-      assert(labelsOf(graft.algo.LabelProp.communities(a, 7)) == want)
-    } finally spark.conf.unset(key)
+    assert(sharded(labelsOf(graft.algo.LabelProp.communities(a, 7))) == want)
   }
 
   test("MIS sharded mode (the above-guard 100TB path) matches broadcast mode") {
@@ -644,11 +640,7 @@ class FastSVSpec extends SparkSpec {
     val a = GrbMatrix.fromValues(spark,
       sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 7L, 7L)
     val want = labelsOf(graft.algo.Mis.mis(a))
-    val key = "spark.graft.mis.broadcast"
-    try {
-      spark.conf.set(key, "false")
-      assert(labelsOf(graft.algo.Mis.mis(a)) == want)
-    } finally spark.conf.unset(key)
+    assert(sharded(labelsOf(graft.algo.Mis.mis(a))) == want)
   }
 
   test("k-core sharded mode (the above-guard 100TB path) matches broadcast mode") {
@@ -660,11 +652,7 @@ class FastSVSpec extends SparkSpec {
       sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 6L, 6L)
     val want = labelsOf(graft.algo.KCore.kcore(a, 3L))
     assert(want.keySet == Set(0L, 1L, 2L, 3L))
-    val key = "spark.graft.kcore.broadcast"
-    try {
-      spark.conf.set(key, "false")
-      assert(labelsOf(graft.algo.KCore.kcore(a, 3L)) == want)
-    } finally spark.conf.unset(key)
+    assert(sharded(labelsOf(graft.algo.KCore.kcore(a, 3L))) == want)
   }
 
   test("coloring sharded mode (the above-guard 100TB path) matches broadcast mode") {
@@ -674,11 +662,27 @@ class FastSVSpec extends SparkSpec {
     val a = GrbMatrix.fromValues(spark,
       sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 6L, 6L)
     val want = labelsOf(graft.algo.Coloring.greedyColor(a))
-    val key = "spark.graft.coloring.broadcast"
-    try {
-      spark.conf.set(key, "false")
-      assert(labelsOf(graft.algo.Coloring.greedyColor(a)) == want)
-    } finally spark.conf.unset(key)
+    assert(sharded(labelsOf(graft.algo.Coloring.greedyColor(a))) == want)
+  }
+
+  test("HITS, PageRank, PPR and walks sharded mode (the above-guard 100TB path) matches broadcast mode") {
+    // two triangles + a bridge + a pendant: uneven degrees, so ranks,
+    // scores and walk draws all depend on the products being exact
+    val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 4L), (4L, 5L),
+      (3L, 5L), (2L, 3L), (5L, 6L))
+    val sym = edges ++ edges.map { case (a, b) => (b, a) }
+    val a = GrbMatrix.fromValues(spark,
+      sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 7L, 7L)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    def all(): Seq[Set[Seq[Any]]] = Seq(
+      rows(graft.algo.Hits.scores(a, rounds = 4)),
+      rows(graft.algo.PageRank.ranks(a, rounds = 4).df),
+      rows(graft.algo.PageRank.personalized(a, seed = 0L, rounds = 4).df),
+      rows(graft.algo.RandomWalk.walks(a, steps = 3)))
+    val want = all()
+    assert(want.forall(_.nonEmpty))
+    assert(sharded(all()) == want)
   }
 
   test("path graph needs shortcutting (worst case for hooking)") {
@@ -1085,29 +1089,27 @@ class FastSVJobCountSpec extends SparkSpec {
     val sym = edges ++ edges.map { case (a, b) => (b, a) }
     val triples: Seq[(Long, Long, Any)] = sym.map { case (a, b) => (a, b, 1L: Any) }
     val a = GrbMatrix.fromValues(spark, triples, GrbType.INT64, n.toLong, n.toLong)
+    // every loop job carries its round in the Iterate.RoundKey job
+    // property (FastSV:<round>); jobs outside the loop carry none
     @volatile var jobs = 0
+    @volatile var rounds = 0
+    val round = "FastSV:(\\d+)".r
     val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs += 1
+        Option(j.properties).flatMap(p => Option(p.getProperty(graft.algo.Iterate.RoundKey)))
+          .collect { case round(r) => r.toInt }.foreach(r => rounds = math.max(rounds, r))
+      }
     }
-    val errCapture = new java.io.ByteArrayOutputStream()
-    spark.conf.set("spark.graft.cc.logRounds", "true")
     spark.sparkContext.addSparkListener(l)
-    val oldErr = System.err
     val labels = try {
-      System.setErr(new java.io.PrintStream(errCapture))
       val v = graft.algo.FastSV.connectedComponents(a)
-      v.df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    } finally {
-      System.setErr(oldErr)
-      spark.sparkContext.removeSparkListener(l)
-      spark.conf.unset("spark.graft.cc.logRounds")
-    }
-    // listener events are async; the counter only needs job STARTS,
-    // which all fired before the final collect returned
-    val rounds = "round (\\d+)".r
-      .findAllMatchIn(errCapture.toString).map(_.group(1).toInt)
-      .maxOption.getOrElse(0)
+      val out = v.df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // listener events are async; drain the bus so every job start —
+      // all fired before the final collect returned — has been counted
+      org.apache.spark.sql.graft.ListenerQuiesce.waitUntilEmpty(spark.sparkContext)
+      out
+    } finally spark.sparkContext.removeSparkListener(l)
     assert(labels == (0 until n).map(i => i.toLong -> 0L).toMap,
       "path graph must collapse to a single component labeled 0")
     assert(rounds >= 3, s"path-32 must take several rounds (got $rounds)")

@@ -34,8 +34,24 @@ class ProbeAndGuardSpec extends SparkSpec {
     try {
       spark.conf.set(key, "1024")
       assert(Grb.broadcastGuard(spark) == 1024L / Grb.BroadcastRowBytes)
-      spark.conf.set(key, "not-a-number") // malformed → default budget
-      assert(Grb.broadcastGuard(spark) == 512L * 1024 * 1024 / Grb.BroadcastRowBytes)
+      // wider rows → proportionally fewer of them
+      assert(Grb.broadcastGuard(spark, rowBytes = 64L) == 1024L / 64L)
+      // the sharded-plan switch: a 1-byte budget is a 1-row guard
+      spark.conf.set(key, "1")
+      assert(Grb.broadcastGuard(spark) == 1L)
+      // malformed → default budget, and LOUD about it (like Grb.flag)
+      for (bad <- Seq("not-a-number", "0", "-5")) {
+        spark.conf.set(key, bad)
+        val err = new java.io.ByteArrayOutputStream()
+        val oldErr = System.err
+        val guard = try {
+          System.setErr(new java.io.PrintStream(err, true))
+          Grb.broadcastGuard(spark)
+        } finally System.setErr(oldErr)
+        assert(guard == 512L * 1024 * 1024 / Grb.BroadcastRowBytes, s"value '$bad'")
+        assert(err.toString.contains(s"ignoring unparsable conf $key='$bad'"),
+          s"no fallback warning for '$bad': '$err'")
+      }
     } finally spark.conf.unset(key)
   }
 
@@ -49,7 +65,23 @@ class ProbeAndGuardSpec extends SparkSpec {
     assert(probe.getLong(1) == 6L)
     // the checkpointed frame is the same data, lineage-free
     assert(out.count() == 100L)
-    assert(Iterate.checkpointRdd(out).nonEmpty)
+    assert(Iterate.blocks(out).nonEmpty)
+  }
+
+  test("checkpointWithProbe: a caller frame that already carries a " +
+      "graft_probe observation passes through a loop") {
+    // the probe's observation name is unique per call: a loop over a
+    // caller frame observed under the same name must neither clash
+    // with it (Spark rejects two definitions of one name) nor read
+    // the caller's metric as its own
+    val tri = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L))
+    val sym = (tri ++ tri.map(_.swap)).toDF("i", "j")
+      .withColumn("v", lit(1L))
+      .observe("graft_probe", count(lit(1)).as("rows"), max(col("i")).as("mx"))
+    val got = graft.algo.KTruss.ktruss(
+      graft.core.GrbMatrix.fromDF(sym, 4L, 4L), 3L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((0L, 1L, 1L), (1L, 2L, 1L), (0L, 2L, 1L)))
   }
 
   test("checkpointWithProbe: empty frame yields initial aggregate " +
@@ -84,13 +116,27 @@ class ProbeAndGuardSpec extends SparkSpec {
     // over the i-partitioned checkpoints — plans without a shuffle.
     // (The r14 shape carried 12 Exchanges in the gather frame alone:
     // plans/r15/q_hits_before.txt vs _after.txt.)
-    val e0 = spark.range(30).select(col("id").as("i"),
-      ((col("id") + 1L) % 30).as("j"), lit(1L).as("v"))
-    val df = graft.algo.Hits.scores(
-      graft.core.GrbMatrix.fromDF(e0, 30, 30), rounds = 2)
-    val shuffles = df.queryExecution.executedPlan.toString()
-      .linesIterator.count(_.contains("Exchange hashpartitioning"))
-    assert(shuffles == 0, s"expected zero shuffles in the HITS gather:\n$df")
+    // Pinned shuffle width and AQE coalescing: the gather joins two
+    // checkpoints whose hash partitionings come from AQE-coalesced
+    // shuffles, so host parallelism and advisory sizes must not be
+    // able to coalesce the two sides to different partition counts.
+    val pins = Seq("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB")
+    val before = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      pins.foreach { case (k, v) => spark.conf.set(k, v) }
+      val e0 = spark.range(30).select(col("id").as("i"),
+        ((col("id") + 1L) % 30).as("j"), lit(1L).as("v"))
+      val df = graft.algo.Hits.scores(
+        graft.core.GrbMatrix.fromDF(e0, 30, 30), rounds = 2)
+      val shuffles = df.queryExecution.executedPlan.toString()
+        .linesIterator.count(_.contains("Exchange hashpartitioning"))
+      assert(shuffles == 0, s"expected zero shuffles in the HITS gather:\n$df")
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("Grb.flag accepts 1/0/on/off/yes/no and falls back to the " +

@@ -86,11 +86,7 @@ class SccSpec extends SparkSpec {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 5L),
       (5L, 3L), (2L, 3L), (5L, 6L), (6L, 7L), (7L, 5L))
     val want = sccOf(edges)
-    val key = "spark.graft.scc.broadcast"
-    try {
-      spark.conf.set(key, "false")
-      assert(sccOf(edges) == want)
-    } finally spark.conf.unset(key)
+    assert(sharded(sccOf(edges)) == want)
   }
 
   test("SCC matches a driver-side Tarjan replay on random digraphs") {

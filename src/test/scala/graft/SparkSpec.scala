@@ -33,4 +33,13 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** run `body` with a 1-byte broadcast budget: the guard drops to one
+    * row, so every loop takes its sharded (above-guard, 100 TB) plan
+    */
+  def sharded[T](body: => T): T = {
+    val key = "spark.graft.broadcast.maxBytes"
+    spark.conf.set(key, "1")
+    try body finally spark.conf.unset(key)
+  }
 }
