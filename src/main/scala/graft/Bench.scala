@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.StageMeter
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: one JSON metric line on stdout (also written to
   * BENCH_SELF.json). Each query runs in a FRESH SparkContext — round-2
@@ -32,52 +34,35 @@ import java.nio.file.{Files, Paths}
   * draw-level aggregates (gc_total, psi_io_total, bw min/median).
   */
 object Bench {
-  /** Shuffle partitions = 4× cores, not 1×: measured on the A·A square
-    * (the suite's heaviest agg, ~640M product rows at sf0.1), 32
-    * partitions put ~20M rows in each task's aggregation hash — heap
-    * pressure, spill, GC churn: 42 s and degrading across reps; 128
-    * partitions keep per-task state comfortably in heap: 11 s, stable
-    * (PERF_NOTES §5). AQE's coalescePartitions (on by default) merges
-    * small stages back down, so light queries pay nothing for the
-    * higher initial number — exactly the sizing rule a 100 TB cluster
-    * run needs (partition count follows per-task STATE, not core
-    * count).
+  /** Untimed set-up shared by Bench, Profile and Plans: a warm-up read
+    * of every table in `sfDir`, then the query's `SparkEntry.prepares`.
+    * The warm-up covers executor init + parquet footer/scan setup for
+    * EVERY table (round-4 judging: warming only lineitem systematically
+    * taxed queries whose first table is events/documents/embeddings
+    * with footer reads in the timed region); a table it cannot read is
+    * left to fail its query. Returns the prepare's error and seconds
+    * (warm-up excluded). A failed prepare is LOUD: timing or planning
+    * the query against un-prepared state would mislead (ADVICE r14).
+    * Fatal errors (OOM, linkage) propagate.
     */
-  /** controlled-A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" lays
-    * arbitrary session confs over the bench defaults — the same
-    * mechanism SPARK_GRAFT_REPS/SPARK_GRAFT_CC_ENGINE provide for
-    * their specific knobs, generalized so a conf A/B (codegen,
-    * broadcast thresholds, AQE flags) needs no code change. Malformed
-    * entries are skipped; never set in a recorded draw.
-    */
-  private[graft] def extraConf: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(';'))
-      .map(_.split("=", 2)).collect { case Array(k, v) if k.nonEmpty => (k.trim, v.trim) }
-
-  private def mkSession(cpus: String): SparkSession = {
-    val base = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 4).toString))
-    .config("spark.local.dir", LocalDirs.sparkLocalDir)
-    .config("spark.ui.enabled", "false")
-    // C/numpy-style wrap-around + null semantics (GraphBLAS reference
-    // behavior); ANSI mode would throw on narrowing-cast overflow
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // TopKPairs (ANN top-k selection) is a TypedImperativeAggregate:
-    // ObjectHashAggregate's default sort-based fallback fires at 128
-    // groups per partition, silently re-sorting the scored slice. Its
-    // buffers are tiny (<=k 17-byte entries), so a high threshold
-    // keeps the hash path: 1M groups x ~50 B/group ~ 50 MB/partition
-    // worst case. Cluster deployments should carry this conf too.
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-    .config("spark.sql.session.timeZone", "UTC")
-    // graft SQL functions resolve in spark.sql(...) everywhere
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    // extras LAST so an A/B override beats the defaults above
-    extraConf.foldLeft(base)((b, kv) => b.config(kv._1, kv._2)).getOrCreate()
+  private[graft] def prepare(spark: SparkSession, sfDir: String,
+      name: String): (Option[String], Double) = {
+    Option(new java.io.File(sfDir).listFiles(
+      (_: java.io.File, n: String) => n.endsWith(".parquet")))
+      .getOrElse(Array.empty).foreach { f =>
+        try spark.read.parquet(f.getPath).count()
+        catch { case NonFatal(_) => } }
+    val t0 = System.nanoTime()
+    val err =
+      try { SparkEntry.prepares.get(name).foreach(_(spark, sfDir)); None }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[prepare] $name FAILED: $e")
+        Some(s"prepare failed: ${message(e)}") }
+    (err, (System.nanoTime() - t0) / 1e9)
   }
+
+  private def message(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
 
   /** cumulative JVM GC pause milliseconds across all collector beans */
   private def gcMillis: Long = {
@@ -141,11 +126,14 @@ object Bench {
     * slow (host bandwidth steal); cpu ≪ wall × healthy-parallelism →
     * threads waited (scheduler/IO). bwPost re-runs the copy probe
     * AFTER the timed region, bracketing each rep: pre healthy + post
-    * collapsed = the wave landed during the rep.
+    * collapsed = the wave landed during the rep. jobs/stages/tasks and
+    * the shuffle bytes are the [[StageMeter]]'s totals over the timed
+    * region.
     */
   private case class Rep(sec: Double, err: Option[String], gcSec: Double,
       psiSec: Map[String, Double], bwMBs: Double, cpuS: Double,
-      bwPostMBs: Double, prepS: Double)
+      bwPostMBs: Double, prepS: Double, jobs: Long, stages: Long,
+      tasks: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long)
 
   /** Healthy-window records per heavy query (best committed draw since
     * the round-11 plan era — the forced-shuffle SpGEMM rule and the
@@ -180,46 +168,31 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     /** one timed execution in a fresh context; negative = failure */
     def once(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Rep = {
-      val spark = mkSession(cpus)
-      spark.sparkContext.setLogLevel("WARN")
-      // untimed warm-up: executor init + parquet footer/scan setup for
-      // EVERY table in the sf dir (round-4 judging: warming only
-      // lineitem systematically taxed queries whose first table is
-      // events/documents/embeddings with footer reads in the timed region)
-      try {
-        val dir = new java.io.File(sfDir)
-        Option(dir.listFiles((_: java.io.File, n: String) => n.endsWith(".parquet")))
-          .getOrElse(Array.empty).foreach { f =>
-            try spark.read.parquet(f.getPath).count()
-            catch { case _: Throwable => } }
-      } catch { case _: Throwable => }
+      val spark = GraftSession()
       // untimed prepare (round-14): one-time persisted state a real
       // deployment pays at ingest — q_mxm_bucketed's bucketed tables —
       // is built here, OUTSIDE the rep timer. Idempotent: the first
       // rep of a sandbox session writes, later reps re-register the
       // existing files (catalog DDL only). prep seconds are recorded
       // file-only so the write cost stays visible, just not conflated
-      // with the operator under test.
-      val prepT0 = System.nanoTime()
-      try SparkEntry.prepares.get(name).foreach(_(spark, sfDir))
-      catch { case _: Throwable => }
-      val prepS = (System.nanoTime() - prepT0) / 1e9
+      // with the operator under test. A failed prepare is the rep's
+      // error: the query is not timed against state that was never built.
+      val (prepErr, prepS) = prepare(spark, sfDir, name)
       val bw = bwProbe()
       System.gc() // reclaim the probe's buffers before the timed region
       val gc0 = gcMillis
       val psi0 = psiTotals
       val cpu0 = cpuSec
+      val meter = new StageMeter(spark.sparkContext)
       val t0 = System.nanoTime()
-      val err: Option[String] =
+      val err: Option[String] = prepErr.orElse(
         try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable =>
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
+        catch { case e: Throwable => Some(message(e)) })
       val sec = (System.nanoTime() - t0) / 1e9
       val gcSec = (gcMillis - gc0) / 1e3
       val cpu1 = cpuSec
@@ -227,12 +200,15 @@ object Bench {
       val psi1 = psiTotals
       val psiSec = psi0.map { case (k, v0) =>
         k -> (psi1.getOrElse(k, v0) - v0) / 1e6 }
+      val m = meter.read()
       // post-rep bracket: run the probe again BEFORE stopping the
       // context so it samples the same window the rep just ran in
       val bwPost = bwProbe()
       spark.stop()
       System.gc() // settle heap before the next query's context starts
-      Rep(sec, err, gcSec, psiSec, bw, cpuS, bwPost, prepS)
+      Rep(sec, err, gcSec, psiSec, bw, cpuS, bwPost, prepS, m.jobs,
+        m.stages.size, m.total(_.tasks), m.total(_.shuffleReadBytes),
+        m.total(_.shuffleWriteBytes))
     }
     // deterministic alphabetical order: run-to-run comparability
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -349,10 +325,12 @@ object Bench {
     // variance, and round 6 proved the variance IS the story
     // (q_ewise_add swung 6× between rounds at min-of-2). File-only:
     // the stdout line must stay small enough for tail capture.
-    def repMap(f: Rep => Double): String =
+    def repArr(f: Rep => String): String =
       results.collect { case (k, _, None, _, reps) if reps.nonEmpty =>
-        jq(k) + ":" + reps.map(r => fmt(f(r))).mkString("[", ",", "]")
+        jq(k) + ":" + reps.map(f).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
+    def repMap(f: Rep => Double): String = repArr(r => fmt(f(r)))
+    def repCount(f: Rep => Long): String = repArr(f(_).toString)
     val spread = repMap(_.sec)
     val gcMap = repMap(_.gcSec)
     val psiCpu = repMap(_.psiSec.getOrElse("cpu", 0.0))
@@ -362,6 +340,11 @@ object Bench {
     val cpuMap = repMap(_.cpuS)
     val bwPostMap = repMap(_.bwPostMBs / 1.0)
     val prepMap = repMap(_.prepS)
+    val meterArrs = Seq[(String, Rep => Long)]("jobs" -> (_.jobs),
+      "stages" -> (_.stages), "tasks" -> (_.tasks),
+      "shuffle_read_bytes" -> (_.shuffleReadBytes),
+      "shuffle_write_bytes" -> (_.shuffleWriteBytes))
+      .map { case (k, f) => s""","$k":${repCount(f)}""" }.mkString
     // draw-level window aggregates for the stdout line
     val allReps = results.flatMap(_._5)
     val gcTotal = allReps.map(_.gcSec).sum
@@ -389,8 +372,8 @@ object Bench {
     // method: documents the min-of-reps change (round 5) so totals are
     // not compared apples-to-oranges against single-rep rounds 1-4
     val windowAgg = s""""gc_total":${fmt(gcTotal)},"psi_io_total":${fmt(psiIoTotal)},"bw_min_mbs":${fmt(bwMin)},"bw_med_mbs":${fmt(bwMed)},"window_class":${jq(windowClass)}"""
-    val mk = (qs: String, extra: String) =>
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$extra,$windowAgg,"failed":${failed.mkString("{", ",", "}")},"flaky":${flakyAll.mkString("{", ",", "}")},"method":"min-of-reps(3:heavy,2:headline,1:rest; a single-rep query at >=1s gets an adaptive 2nd rep since r13; since r15 escalation is UNIFORM: any row with best>=1s at cpu/s>=3 takes up to 2 extra reps while its two best reps disagree >25% OR (anchored rows) its best is >1.5x the committed healthy record, so per-rep ARRAY LENGTHS vary across draws - align on values, not rep index) since r5; spread/gc/psi_*/bw/cpu/bw_post/prep = per-rep arrays for every query since r13 (gc=JVM pause s, psi=PSI some-stall s over the timed region, bw/bw_post=MB/s fixed-work copy probe bracketing the rep, cpu=process CPU s over the timed region, prep=untimed per-rep preparation s since r14); window_class=bw_med banded healthy>=8000/mid>=4000/low; r1-r4 were single-rep","n":${results.size},"sf":"$sfDir"}"""
+    val mk = (qs: String, extra: String, note: String) =>
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$extra,$windowAgg,"failed":${failed.mkString("{", ",", "}")},"flaky":${flakyAll.mkString("{", ",", "}")},"method":"min-of-reps(3:heavy,2:headline,1:rest; a single-rep query at >=1s gets an adaptive 2nd rep since r13; since r15 escalation is UNIFORM: any row with best>=1s at cpu/s>=3 takes up to 2 extra reps while its two best reps disagree >25% OR (anchored rows) its best is >1.5x the committed healthy record, so per-rep ARRAY LENGTHS vary across draws - align on values, not rep index) since r5; spread/gc/psi_*/bw/cpu/bw_post/prep = per-rep arrays for every query since r13 (gc=JVM pause s, psi=PSI some-stall s over the timed region, bw/bw_post=MB/s fixed-work copy probe bracketing the rep, cpu=process CPU s over the timed region, prep=untimed per-rep preparation s since r14); window_class=bw_med banded healthy>=8000/mid>=4000/low; r1-r4 were single-rep$note","n":${results.size},"sf":"$sfDir"}"""
     // BENCH_SELF.json is the FULL-CATALOG record; a filtered probe run
     // (SPARK_GRAFT_ONLY) must never clobber it — probes land in
     // BENCH_probe.json instead (round-10 advice: a 1-query ABBA once
@@ -398,8 +381,12 @@ object Bench {
     val outFile = if (only.isDefined) "BENCH_probe.json" else "BENCH_SELF.json"
     Files.writeString(Paths.get("/root/repo", outFile),
       mk(qmap(results),
-        s""","spread":$spread,"gc":$gcMap,"psi_cpu":$psiCpu,"psi_io":$psiIo,"psi_mem":$psiMem,"bw_mbs":$bwMap,"cpu":$cpuMap,"bw_post_mbs":$bwPostMap,"prep":$prepMap""") + "\n")
-    println(mk(qmap(head), ""))
+        s""","spread":$spread,"gc":$gcMap,"psi_cpu":$psiCpu,"psi_io":$psiIo,"psi_mem":$psiMem,"bw_mbs":$bwMap,"cpu":$cpuMap,"bw_post_mbs":$bwPostMap,"prep":$prepMap$meterArrs""",
+        "; jobs/stages/tasks/shuffle_read_bytes/shuffle_write_bytes = per-rep " +
+          "arrays indexed like spread: the StageMeter's jobs started, stages " +
+          "completed, their tasks and shuffle bytes over the timed region " +
+          "(file-only; absent from older draws)") + "\n")
+    println(mk(qmap(head), "", ""))
   }
 
   /** representative subset printed on stdout: the expensive products /

@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan dumper for the optimization rounds' evidence files: builds each
-  * selected catalog query Bench-identically (same conf stack, same
-  * untimed prepare) and writes its `.explain("formatted")` output to
-  * `plans/<SPARK_GRAFT_PLAN_DIR>/<query>_<SPARK_GRAFT_PLAN_TAG>.txt`.
+  * selected catalog query Bench-identically (same [[GraftSession]], same
+  * untimed warm-up and prepare) and writes its `.explain("formatted")`
+  * output to `plans/<SPARK_GRAFT_PLAN_DIR>/<query>_<SPARK_GRAFT_PLAN_TAG>.txt`.
   *
   * `SPARK_GRAFT_ONLY=a,b,c` selects queries; `SPARK_GRAFT_EXTRA_CONF`
-  * (Bench's controlled-A/B hook) overlays session confs, so a
+  * (the session's controlled-A/B hook) overlays session confs, so a
   * before/after pair for a conf-gated plan change is two invocations
   * with the flag flipped — no code checkout needed. Loop queries whose
   * returned frame reads checkpointed RDDs show the final gather plan;
@@ -19,7 +18,6 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "after")
     // plans root resolves relative to the working directory (override
     // with SPARK_GRAFT_PLAN_ROOT) — the r14 dumper hardcoded
@@ -29,32 +27,14 @@ object Plans {
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "r15"))
     Files.createDirectories(outDir)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val base = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 4).toString))
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    val spark = Bench.extraConf.foldLeft(base)((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try {
-          // NonFatal only, and LOUD: a silently-swallowed prepare
-          // failure would dump a plan against un-prepared state and
-          // mislead a before/after comparison (ADVICE r14); fatal
-          // errors (OOM, linkage) propagate
-          try SparkEntry.prepares.get(name).foreach(_(spark, sfDir))
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(
-              s"[plans] $name prepare FAILED (plan may be wrong-shape): $e") }
+          // a failed prepare prints a FAILED line: this plan may be
+          // wrong-shape
+          Bench.prepare(spark, sfDir, name)
           val df = fn(spark, sfDir)
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.StageMeter
 
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable
 
 /** Per-stage listener profile of one catalog query — the diagnostic
   * harness behind PERF_NOTES' stage-attribution studies (the CC-engine
@@ -14,8 +12,8 @@ import scala.collection.mutable
   * committed main).
   *
   * Runs `SPARK_GRAFT_ONLY` (one query name) in a fresh context exactly
-  * the way Bench does (same session conf, same untimed warm-up +
-  * prepare), with a SparkListener recording per-stage wall, executor
+  * the way Bench does (same [[GraftSession]], same untimed warm-up +
+  * prepare), with the [[StageMeter]] recording per-stage wall, executor
   * CPU, task count, shuffle bytes, and GC — then prints a stage table
   * sorted by wall and appends one JSON line per stage to
   * PROFILE_<query>.jsonl so an inflated and a healthy run can be
@@ -30,32 +28,6 @@ import scala.collection.mutable
   */
 object Profile {
 
-  private case class StageRow(rep: Int, stageId: Int, name: String,
-      wallMs: Long, cpuMs: Long, gcMs: Long, tasks: Int,
-      shuffleReadMB: Double, shuffleWriteMB: Double, inputMB: Double)
-
-  private final class StageListener extends SparkListener {
-    val rows = mutable.ArrayBuffer.empty[StageRow]
-    @volatile var rep = 0
-    private val cpu = mutable.Map.empty[Int, Long]
-    private val gc = mutable.Map.empty[Int, Long]
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      Option(t.taskMetrics).foreach { m =>
-        cpu.updateWith(t.stageId)(v => Some(v.getOrElse(0L) + m.executorCpuTime / 1000000))
-        gc.updateWith(t.stageId)(v => Some(v.getOrElse(0L) + m.jvmGCTime))
-      }
-    }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
-      val i = s.stageInfo
-      val wall = (for {a <- i.completionTime; b <- i.submissionTime} yield a - b).getOrElse(0L)
-      rows += StageRow(rep, i.stageId, i.name.takeWhile(_ != '\n').take(120), wall,
-        cpu.getOrElse(i.stageId, 0L), gc.getOrElse(i.stageId, 0L), i.numTasks,
-        i.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6,
-        i.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6,
-        i.taskMetrics.inputMetrics.bytesRead / 1e6)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val name = sys.env.get("SPARK_GRAFT_ONLY").map(_.trim)
@@ -63,32 +35,8 @@ object Profile {
       .getOrElse(sys.error("SPARK_GRAFT_ONLY must name one catalog query"))
     val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption)
       .map(math.max(1, _)).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val base = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 4).toString))
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    // SPARK_GRAFT_EXTRA_CONF overlays (Bench's controlled-A/B hook)
-    val spark = Bench.extraConf.foldLeft(base)((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Bench-identical untimed warm-up + prepare
-    val dir = new java.io.File(sfDir)
-    Option(dir.listFiles((_: java.io.File, n: String) => n.endsWith(".parquet")))
-      .getOrElse(Array.empty).foreach { f =>
-        try spark.read.parquet(f.getPath).count()
-        catch { case _: Throwable => } }
-    try SparkEntry.prepares.get(name).foreach(_(spark, sfDir))
-    catch { case _: Throwable => }
-    val listener = new StageListener
-    spark.sparkContext.addSparkListener(listener)
+    val spark = GraftSession()
+    Bench.prepare(spark, sfDir, name)._1.foreach(e => sys.error(s"$name: $e"))
     val fn = SparkEntry.queries(name)
     // JIT discriminator: per-rep delta of the JVM's cumulative JIT
     // compilation time. A rep whose wall inflates alongside a large
@@ -99,41 +47,41 @@ object Profile {
       java.lang.management.ManagementFactory.getCompilationMXBean)
       .filter(_.isCompilationTimeMonitoringSupported)
       .map(_.getTotalCompilationTime).getOrElse(0L)
-    val walls = (1 to reps).map { rep =>
-      listener.rep = rep
+    val measured = (1 to reps).map { rep =>
       val j0 = jitMs
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val w = (System.nanoTime() - t0) / 1e9
+      val (w, m) = StageMeter.measure(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
       System.err.println(f"profile rep $rep: wall $w%.2f s, jit ${(jitMs - j0) / 1e3}%.2f s")
-      w
+      (w, m.stages.map(rep -> _))
     }
-    // drain listener-bus stragglers before reading rows (the bus is
-    // private[spark]; a short sleep after the last action is enough —
-    // stage-completed events land within ms of the job end)
-    Thread.sleep(1000)
-    spark.sparkContext.removeSparkListener(listener)
-    val rows = listener.rows.toSeq
+    val walls = measured.map(_._1)
+    val rows = measured.flatMap(_._2)
     println(f"\n== $name: reps ${walls.map(w => f"$w%.2f").mkString(" / ")} s ==")
     println(f"${"rep"}%3s ${"stage"}%6s ${"wall_s"}%8s ${"cpu_s"}%8s ${"gc_s"}%6s " +
       f"${"tasks"}%6s ${"shR_MB"}%8s ${"shW_MB"}%8s ${"in_MB"}%8s  name")
-    rows.sortBy(-_.wallMs).take(40).foreach { r =>
-      println(f"${r.rep}%3d ${r.stageId}%6d ${r.wallMs / 1e3}%8.2f ${r.cpuMs / 1e3}%8.2f " +
-        f"${r.gcMs / 1e3}%6.2f ${r.tasks}%6d ${r.shuffleReadMB}%8.1f " +
-        f"${r.shuffleWriteMB}%8.1f ${r.inputMB}%8.1f  ${r.name}")
+    def mb(bytes: Long): Double = bytes / 1e6
+    def label(st: StageMeter.Stage): String = st.name.take(120)
+    rows.sortBy(-_._2.wallMs).take(40).foreach { case (rep, st) =>
+      println(f"$rep%3d ${st.id}%6d ${st.wallMs / 1e3}%8.2f ${st.cpuMs / 1e3}%8.2f " +
+        f"${st.gcMs / 1e3}%6.2f ${st.tasks}%6d ${mb(st.shuffleReadBytes)}%8.1f " +
+        f"${mb(st.shuffleWriteBytes)}%8.1f ${mb(st.inputBytes)}%8.1f  ${label(st)}")
     }
-    val perRep = rows.groupBy(_.rep).toSeq.sortBy(_._1).map { case (rep, rs) =>
-      f"rep $rep: ${rs.size} stages, stage-wall sum ${rs.map(_.wallMs).sum / 1e3}%.2f s, " +
-        f"cpu sum ${rs.map(_.cpuMs).sum / 1e3}%.2f s"
+    val perRep = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (rep, rs) =>
+      val sts = rs.map(_._2)
+      f"rep $rep: ${sts.size} stages, stage-wall sum ${sts.map(_.wallMs).sum / 1e3}%.2f s, " +
+        f"cpu sum ${sts.map(_.cpuMs).sum / 1e3}%.2f s"
     }
     perRep.foreach(println)
     val out = Paths.get("/root/repo", s"PROFILE_$name.jsonl")
-    val json = rows.map { r =>
-      s"""{"rep":${r.rep},"stage":${r.stageId},"wall_ms":${r.wallMs},""" +
-        s""""cpu_ms":${r.cpuMs},"gc_ms":${r.gcMs},"tasks":${r.tasks},""" +
-        s""""shuffle_read_mb":${f"${r.shuffleReadMB}%.1f"},""" +
-        s""""shuffle_write_mb":${f"${r.shuffleWriteMB}%.1f"},""" +
-        s""""input_mb":${f"${r.inputMB}%.1f"},"name":"${r.name.replace("\"", "'")}"}"""
+    val json = rows.map { case (rep, st) =>
+      s"""{"rep":$rep,"stage":${st.id},"wall_ms":${st.wallMs},""" +
+        s""""cpu_ms":${st.cpuMs},"gc_ms":${st.gcMs},"tasks":${st.tasks},""" +
+        s""""shuffle_read_mb":${f"${mb(st.shuffleReadBytes)}%.1f"},""" +
+        s""""shuffle_write_mb":${f"${mb(st.shuffleWriteBytes)}%.1f"},""" +
+        s""""input_mb":${f"${mb(st.inputBytes)}%.1f"},"name":"${label(st).replace("\"", "'")}"}"""
     }.mkString("", "\n", "\n")
     Files.writeString(out, json)
     println(s"wrote ${rows.size} stage rows to $out")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StageMeter
 import graft.core._
 import graft.algo.{Bfs, FastSV, Hits, LinkPred, Msf, PageRank, PregelCC, SpCount}
 import graft.pipeline.{Similarity, TextDedup}
@@ -114,32 +115,15 @@ object SelfBaseline {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 4× cores: per-task agg state must fit heap — see Bench.mkSession
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 4).toString))
+    val spark = GraftSession(
       // single-JVM local mode: heavy stages monopolize the same threads
       // that serve executor heartbeats; at the 100M-edge tier the
       // default 10s heartbeat misses repeatedly and the executor gets
       // declared dead mid-job (observed: RpcEndpointNotFoundException
       // after ~28 min). A real cluster separates these JVMs; locally,
       // widen the windows.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      // TopKPairs (ANN top-k selection) is a TypedImperativeAggregate:
-      // ObjectHashAggregate's default sort-based fallback fires at 128
-      // groups per partition, silently re-sorting the scored slice. Its
-      // buffers are tiny (<=k 17-byte entries), so a high threshold
-      // keeps the hash path: 1M groups x ~50 B/group ~ 50 MB/partition
-      // worst case. Cluster deployments should carry this conf too.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.network.timeout" -> "600s")
     // pass `0` to skip the standard graph loop and run only the
     // env-gated tiers (BIGGRAPH / SKEW / PIPELINE10X / CC_BAKEOFF)
     val sizes = (if (args.nonEmpty) args.map(_.toLong).toSeq
@@ -670,18 +654,10 @@ object SelfBaseline {
         nEdges / 8, nEdges / 8)
       val nnz = a.nvals
       val rounds = 4
-      val written = new java.util.concurrent.atomic.AtomicLong(0L)
-      val lst = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          written.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      spark.sparkContext.addSparkListener(lst)
-      val (nRows, anfSec) = timed(graft.algo.HyperAnf.balls(a, rounds).count())
-      Thread.sleep(2000) // let the listener bus drain the last stages
-      spark.sparkContext.removeSparkListener(lst)
+      val ((nRows, anfSec), meter) = StageMeter.measure(spark.sparkContext)(
+        timed(graft.algo.HyperAnf.balls(a, rounds).count()))
       a.df.unpersist(true)
-      val perRound = written.get() / rounds
+      val perRound = meter.total(_.shuffleWriteBytes) / rounds
       val envelope = 256L * nnz
       println(f"""{"tier":"anf","edges":$nEdges,"nnz":$nnz,"rounds":$rounds,"anf_sec":$anfSec%.2f,"sec_per_round":${anfSec / rounds}%.2f,"rows":$nRows,"shuffle_bytes_per_round":$perRound,"envelope_bytes":$envelope,"bytes_vs_envelope":${perRound.toDouble / envelope}%.2f,"within_2x":${perRound <= 2 * envelope}}""")
     }
@@ -750,37 +726,16 @@ object SelfBaseline {
         .select(col("e.i"), col("e.j"), lit(1L).as("v"))
       val a = new GrbMatrix(bg.unionByName(spokes).cache(), n, n)
       val nnz = a.nvals
-      val durs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-      val stageMax = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-      val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val lst = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskInfo != null && te.taskInfo.successful) {
-            durs.add(te.taskInfo.duration)
-            // straggler attribution: per-stage max task duration
-            stageMax.merge(te.stageId, te.taskInfo.duration,
-              (x, y) => math.max(x, y))
-          }
-        override def onStageCompleted(
-            sc2: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          stageName.put(sc2.stageInfo.stageId,
-            sc2.stageInfo.name.takeWhile(_ != '\n').take(80))
-      }
-      spark.sparkContext.addSparkListener(lst)
-      val (nWalkRows, walkSec) = timed(
-        graft.algo.RandomWalk.walks(a, steps = 4).count())
-      Thread.sleep(2000)
-      spark.sparkContext.removeSparkListener(lst)
-      val ds = durs.toArray(Array.empty[java.lang.Long]).map(_.toLong).sorted
+      val ((nWalkRows, walkSec), meter) = StageMeter.measure(spark.sparkContext)(
+        timed(graft.algo.RandomWalk.walks(a, steps = 4).count()))
+      val ds = meter.stages.flatMap(_.taskMs).sorted
       val maxD = if (ds.nonEmpty) ds.last else 0L
       val p95 = if (ds.nonEmpty) ds((ds.length * 95) / 100 min (ds.length - 1)) else 0L
       // top-3 stages by their slowest task, printed to stderr for the
       // straggler hunt (which stage owns task_max_ms)
-      import scala.jdk.CollectionConverters._
-      stageMax.asScala.toSeq.sortBy(-_._2).take(3).foreach { case (sid, d) =>
-        System.err.println(s"hubwalk straggler: stage=$sid maxTaskMs=$d " +
-          s"name=${stageName.getOrDefault(sid, "?")}")
+      meter.stages.sortBy(-_.maxTaskMs).take(3).foreach { st =>
+        System.err.println(s"hubwalk straggler: stage=${st.id} maxTaskMs=${st.maxTaskMs} " +
+          s"name=${st.name.take(80)}")
       }
       // banded vs un-banded skip-gram candidate volume at L=80 on a
       // small start set (walk corpus cost dominates otherwise)
@@ -870,36 +825,11 @@ object SelfBaseline {
       val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
       val raw = edges.select(col("a").as("i"), col("b").as("j")).cache()
       val nnz = raw.count()
-      val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val swBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      val swTimeNs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val fetchMs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val nTasks = new java.util.concurrent.atomic.AtomicLong(0L)
-      val nJobs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val lst = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          nJobs.incrementAndGet()
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null) {
-            runMs.addAndGet(te.taskMetrics.executorRunTime)
-            gcMs.addAndGet(te.taskMetrics.jvmGCTime)
-            swBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-            swTimeNs.addAndGet(te.taskMetrics.shuffleWriteMetrics.writeTime)
-            fetchMs.addAndGet(te.taskMetrics.shuffleReadMetrics.fetchWaitTime)
-            nTasks.incrementAndGet()
-          }
-      }
-      spark.sparkContext.addSparkListener(lst)
+      val meter = new StageMeter(spark.sparkContext)
       val cores = math.max(1, spark.sparkContext.defaultParallelism)
-      def reset(): Unit = Seq(runMs, gcMs, swBytes, swTimeNs, fetchMs,
-        nTasks, nJobs).foreach(_.set(0L))
       def snap(): String = {
-        org.apache.spark.sql.graft.ListenerQuiesce
-          .waitUntilEmpty(spark.sparkContext)
-        f""""data_wall_s":${runMs.get() / 1000.0 / cores}%.2f,"gc_s":${gcMs.get() / 1000.0}%.2f,"shuffle_write_mb":${swBytes.get() / 1048576.0}%.1f,"shuffle_write_s":${swTimeNs.get() / 1e9}%.2f,"fetch_wait_s":${fetchMs.get() / 1000.0}%.2f,"tasks":${nTasks.get()},"jobs":${nJobs.get()}"""
+        val m = meter.read()
+        f""""data_wall_s":${m.total(_.runMs) / 1000.0 / cores}%.2f,"gc_s":${m.total(_.gcMs) / 1000.0}%.2f,"shuffle_write_mb":${m.total(_.shuffleWriteBytes) / 1048576.0}%.1f,"shuffle_write_s":${m.total(_.shuffleWriteNs) / 1e9}%.2f,"fetch_wait_s":${m.total(_.fetchWaitMs) / 1000.0}%.2f,"tasks":${m.total(_.tasks)},"jobs":${m.jobs}"""
       }
       val key = "spark.sql.shuffle.partitions"
       val prevConf = spark.conf.get(key)
@@ -910,7 +840,7 @@ object SelfBaseline {
         graft.algo.Iterate.scope(spark, "itertail") { loop =>
         var l = loop.checkpoint("labels", adj.select(col("i")).distinct()
           .select(col("i"), col("i").cast("long").as("v")))
-        reset()
+        meter.read() // rounds are metered from here
         val tTotal0 = System.nanoTime()
         for (r <- 1 to 7) {
           val t0 = System.nanoTime()
@@ -919,7 +849,6 @@ object SelfBaseline {
             l = loop.checkpoint("labels", stepped)
             val wall = (System.nanoTime() - t0) / 1e9
             println(f"""{"tier":"itertail","width":$width,"cadence":$cadence,"round":$r,"wall_s":$wall%.2f,${snap()}}""")
-            reset()
           } else l = stepped
         }
         val totalWall = (System.nanoTime() - tTotal0) / 1e9
@@ -930,7 +859,7 @@ object SelfBaseline {
         }
       }
       spark.conf.set(key, prevConf)
-      spark.sparkContext.removeSparkListener(lst)
+      meter.close()
       raw.unpersist(false)
     }
     spark.stop()

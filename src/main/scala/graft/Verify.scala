@@ -1,49 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      // graft SQL functions resolve in spark.sql(...) everywhere
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // C/numpy-style wrap-around + null semantics (GraphBLAS reference
-      // behavior); ANSI mode would throw on narrowing-cast overflow
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TopKPairs (ANN top-k selection) is a TypedImperativeAggregate:
-      // ObjectHashAggregate's default sort-based fallback fires at 128
-      // groups per partition, silently re-sorting the scored slice. Its
-      // buffers are tiny (<=k 17-byte entries), so a high threshold
-      // keeps the hash path: 1M groups x ~50 B/group ~ 50 MB/partition
-      // worst case. Cluster deployments should carry this conf too.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c — local targeted runs (the driver never
     // sets it, so driver runs always dump the full catalog)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // operators cache() shared intermediates; don't let 40 queries'
-      // caches accumulate in one session
-      spark.catalog.clearCache()
-    }
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -60,5 +30,32 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
+
+  /** Write each query's result to `<outDir>/<name>` as parquet. A query
+    * that throws is reported on stderr and the dump goes on; returns the
+    * names of the queries that threw, sorted. Fatal errors propagate.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] =
+    queries.toSeq.flatMap { case (name, fn) =>
+      val failed =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
+      // operators cache() shared intermediates; don't let 40 queries'
+      // caches accumulate in one session
+      spark.catalog.clearCache()
+      failed
+    }.sorted
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.graft.GraftFunctions
 
 /** SQL-surface registration of the custom Catalyst expressions:
   * the config route (`spark.sql.extensions = graft.GraftExtensions`,
-  * set on the shared TestSession builder — so every suite run IS a
-  * config-route integration test) and the runtime route
+  * set by GraftSession, which builds the shared TestSession — so every
+  * suite run IS a config-route integration test) and the runtime route
   * (`GraftFunctions.register` on a live session).
   */
 class GraftExtensionsSpec extends SparkSpec {

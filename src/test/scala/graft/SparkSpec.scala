@@ -4,28 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** shared local session for all specs */
+/** shared local session for all specs: the mains' conf stack at
+  * local[4], width 4 */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      // graft SQL functions resolve in spark.sql(...) everywhere
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // C/numpy-style wrap-around + null semantics (GraphBLAS reference
-      // behavior); ANSI mode would throw on narrowing-cast overflow
-      .config("spark.sql.ansi.enabled", "false")
+    val s = GraftSession.build(cpus = 4, width = 4, extras = Seq(
       // every spec graph is tiny: with the driver-local CC fast path
       // at its default threshold the suite would stop exercising the
       // DISTRIBUTED FastSV/Pregel loops entirely. Disabled here; the
       // local path gets its own cross-check tests (FastSVSpec) that
       // set the conf per-test and restore it.
-      .config("spark.graft.cc.localNnz", "0")
-      .getOrCreate()
+      "spark.graft.cc.localNnz" -> "0"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

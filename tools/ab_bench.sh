@@ -8,7 +8,7 @@
 # (forward pass then reverse pass) for the same reason.
 #
 # Output: one line per cell in $OUT (JSON from Bench + probe lines),
-# plus per-cell BENCH_SELF.json copies under /tmp/ab_cells/.
+# plus per-cell BENCH_probe.json copies under /tmp/ab_cells/.
 set -u
 cd /root/repo
 OUT=${1:-/tmp/ab_bench.log}
@@ -35,15 +35,14 @@ run_cell() {
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   SPARK_GRAFT_ONLY=$QUERIES \
   SPARK_GRAFT_REPS=3 \
-  SPARK_GRAFT_SHUFFLE=$shuffle \
+  SPARK_GRAFT_EXTRA_CONF="spark.sql.shuffle.partitions=$shuffle" \
   SPARK_GRAFT_LOCAL_DIR=$dir \
     sbt -batch "runMain graft.Bench" > /tmp/ab_cells/$cell.$pass.out 2>&1
   grep -h '"metric"' /tmp/ab_cells/$cell.$pass.out | tail -1 >> "$OUT"
-  cp BENCH_SELF.json /tmp/ab_cells/$cell.$pass.json
+  cp BENCH_probe.json /tmp/ab_cells/$cell.$pass.json
   python3 tools/mem_probe.py 8 >> "$OUT"
   # leave tmpfs clean between cells so occupancy can't compound
   rm -rf /dev/shm/graft-spark-$(id -un)/ab /tmp/graft-ab-disk/*
-  git checkout -q BENCH_SELF.json
 }
 
 : > "$OUT"
