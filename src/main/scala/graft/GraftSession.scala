@@ -72,7 +72,7 @@ object GraftSession {
 
   /** `k=v;k2=v2` → pairs; the value keeps any further `=`. An entry
     * without `=` or with an empty key warns on stderr (like
-    * `Grb.flag`) and is skipped; empty entries are skipped quietly.
+    * `Grb.longConf`) and is skipped; empty entries are skipped quietly.
     */
   private[graft] def parseConf(spec: String): Seq[(String, String)] =
     spec.split(';').toSeq.map(_.trim).filter(_.nonEmpty).flatMap { entry =>

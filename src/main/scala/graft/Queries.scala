@@ -66,10 +66,7 @@ object Queries {
     * stored row count: this product materializes ~17M cells, and 8
     * buckets put ~2.2M partial-aggregate entries in each of 8 tasks
     * (the same per-task-state bound Iterate.loopWidth sizes by); 32
-    * buckets hold ~540k. SPARK_GRAFT_MXM_BUCKETS is the controlled-
-    * ABBA override only; defensively parsed (r13 advice) — garbage or
-    * a non-positive value falls back to 32 instead of surfacing as a
-    * runtime repartition failure that reads like a query regression.
+    * buckets hold ~540k.
     */
   private def mxmBucketedOperands(s: SparkSession, dir: String): (GrbMatrix, GrbMatrix) = {
     val m = liMat(s, dir)
@@ -77,8 +74,7 @@ object Queries {
       pq(s, dir, "lineitem").select(col("l_partkey").as("i"),
         col("l_suppkey").as("j"), col("l_quantity").cast(LongType).as("v")),
       nrows = m.ncols, dupAgg = Some(c => sum(c)))
-    val buckets = sys.env.get("SPARK_GRAFT_MXM_BUCKETS")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(32)
+    val buckets = 32
     // dir tag keeps sf0.01 (Verify) and sf0.1 (bench) tables disjoint
     val tag = (scala.util.hashing.MurmurHash3.stringHash(dir) & 0x7fffffff)
       .toHexString
@@ -2018,12 +2014,7 @@ object Queries {
 
   val pipeline: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p_dedup_exact" -> ((s, dir) => TextDedup.exact(pq(s, dir, "documents"))),
-    // SPARK_GRAFT_MINHASH_MAXBUCKET: measurement-only hook for the
-    // guard-cost A/B (PERF_NOTES §6) — the driver never sets it, so
-    // the correctness gate always sees the library default
-    "p_dedup_minhash" -> ((s, dir) => TextDedup.nearDuplicates(pq(s, dir, "documents"),
-      maxBucket = sys.env.get("SPARK_GRAFT_MINHASH_MAXBUCKET").map(_.toInt)
-        .getOrElse(TextDedup.defaultMaxBucket))),
+    "p_dedup_minhash" -> ((s, dir) => TextDedup.nearDuplicates(pq(s, dir, "documents"))),
     "p_dedup_simhash" -> ((s, dir) => TextDedup.simhashNearDuplicates(pq(s, dir, "documents"))),
     // direct inverted-index n-gram Jaccard: the deterministic dedup
     // path (candidate-complete for pairs sharing any sub-cap shingle)

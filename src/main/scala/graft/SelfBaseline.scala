@@ -544,7 +544,8 @@ object SelfBaseline {
         val (ni, iSec) = (draws.collect { case ("ivf", (r, _)) => r }.head, best("ivf"))
         val pb = Similarity.TopKCost.bruteSec(nVecs, q)
         val pi = Similarity.TopKCost.ivfSec(nVecs, q, probes)
-        val autoPick = if (pb <= pi) "brute" else "ivf"
+        val autoPick =
+          if (Similarity.TopKCost.bruteWins(nVecs, q, probes)) "brute" else "ivf"
         val fasterIsAuto =
           if (bSec < iSec) autoPick == "brute" else autoPick == "ivf"
         f""""q$q":{"brute_sec":$bSec%.2f,"brute_rows":$nb,"ivf_sec":$iSec%.2f,"ivf_rows":$ni,"model_brute_sec":$pb%.2f,"model_ivf_sec":$pi%.2f,"auto_pick":"$autoPick","auto_is_faster":$fasterIsAuto}"""

@@ -412,21 +412,16 @@ object Iterate {
     * GraphX rounds follow the edge RDD's partition count)
     */
   def loopWidth(spark: SparkSession, workRows: Long): Int = {
-    // operator override for controlled width A/Bs and deployments
-    // whose executor/storage geometry contradicts the sizing rule —
-    // the same escape hatch every sizing heuristic in the repo keeps
-    scala.util.Try(spark.conf.get("spark.graft.loop.width").toInt)
-      .toOption.filter(_ >= 1).foreach(w => return w)
     val hi = math.min(math.max(
       spark.sparkContext.defaultParallelism.toLong,
       workRows / 500000L), 1000000L)
     // The floor (8) never widens a session that deliberately runs
-    // narrower (Verify at 4): clamp it at the configured session
-    // width, so the scaladoc guarantee holds by construction rather
-    // than by the coincidence that narrow sessions also have low
-    // defaultParallelism. Rows-scaled widening (workRows/150k) is NOT
-    // clamped — a big graph must still widen for the per-task-state
-    // bound even in a narrow session.
+    // narrower (the test session at 4): clamp it at the configured
+    // session width, so the scaladoc guarantee holds by construction
+    // rather than by the coincidence that narrow sessions also have
+    // low defaultParallelism. Rows-scaled widening (workRows/150k) is
+    // NOT clamped — a big graph must still widen for the
+    // per-task-state bound even in a narrow session.
     val sessionWidth = scala.util.Try(
       spark.conf.get("spark.sql.shuffle.partitions").toLong)
       .getOrElse(spark.sparkContext.defaultParallelism.toLong)

@@ -42,8 +42,11 @@ object LocalCC {
     */
   val DefaultNnz = 100000L
 
+  /** the conf's threshold; a malformed or negative value warns and
+    * keeps [[DefaultNnz]]
+    */
   def threshold(spark: SparkSession): Long =
-    scala.util.Try(spark.conf.get(ConfKey).toLong).getOrElse(DefaultNnz)
+    graft.core.Grb.longConf(spark, ConfKey, DefaultNnz, min = 0L)
 
   /** Min-label union-find over an edge array: every endpoint mapped to
     * the minimum vertex id of its component (the FastSV/PregelCC

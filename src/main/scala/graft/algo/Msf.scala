@@ -43,19 +43,10 @@ object Msf {
   /** @param edges canonical weighted edge list (a, b, w) with a < b
     *              and (a, b) unique — one row per undirected edge
     * @param n     vertex-id bound (labels live in [0, n))
-    * @param innerPregel contraction engine for the per-round label
-    *              graph. Pregel by default: the decisive 1M-edge ABBA
-    *              (PERF_NOTES §12e — Pregel 30.5-37.7 s vs FastSV
-    *              53.6-64.8 s, stable window) matches the engine-wide
-    *              CC bake-off; FastSV-inner only wins on tiny inputs
-    *              (26.1 vs 34.9 s at 200k edges) where the whole run
-    *              is seconds either way, so the scale-relevant engine
-    *              is the default
     * @return the minimum spanning forest as (a, b, w) rows — a subset
     *         of the input rows, V − #components of them
     */
-  def forest(edges: DataFrame, n: Long, maxRounds: Int = 25,
-      innerPregel: Boolean = true): DataFrame = {
+  def forest(edges: DataFrame, n: Long, maxRounds: Int = 25): DataFrame = {
     val spark = edges.sparkSession
     val e = edges.select(col("a"), col("b"), col("w"),
       (shiftleft(col("w"), ShiftW) + shiftleft(col("a"), ShiftA) + col("b"))
@@ -64,7 +55,7 @@ object Msf {
     val nnz = e.count()
     // Borůvka rounds × block fan-out — loop-width discipline
     // (Iterate.Loop.sized); the inner CC sizes itself (PregelCC's
-    // edge-RDD rule / FastSV's own loop scope)
+    // edge-RDD rule)
     Iterate.scope(spark, "Msf") { loop =>
     loop.sized(nnz)
     var labels = loop.checkpoint("labels",
@@ -94,8 +85,9 @@ object Msf {
       else {
         picked ::= sel
         // contract: CC over the label-space graph of the picked edges
-        // (symmetrized — FastSV's min-label propagation needs both
-        // directions; Pregel's Either-direction send tolerates both)
+        // on Pregel, the measured winner at scale (PERF_NOTES §12e:
+        // 1M edges, Pregel 30.5-37.7 s vs FastSV 53.6-64.8 s).
+        // Symmetrized; Pregel's Either-direction send tolerates both
         val le0 = sel
           .join(labels.select(col("v").as("a"), col("l").as("la")), Seq("a"))
           .join(labels.select(col("v").as("b"), col("l").as("lb")), Seq("b"))
@@ -105,10 +97,7 @@ object Msf {
         val lg = new GrbMatrix(le, n, n)
         // the inner CC's result blocks are this loop's to free once
         // the relabel below has read them
-        val cc = loop.hold("cc",
-          if (innerPregel) PregelCC.connectedComponents(lg).df
-          else FastSV.connectedComponents(lg, nodes = Some(
-            le.select(col("i")).distinct())).df)
+        val cc = loop.hold("cc", PregelCC.connectedComponents(lg).df)
         labels = loop.checkpoint("labels", labels
           .join(cc.select(col("i").as("l"), col("v").as("nl")), Seq("l"), "left")
           .select(col("v"), coalesce(col("nl"), col("l")).as("l")))

@@ -6,22 +6,26 @@ import org.apache.spark.graphx.{Edge, Graph, Pregel, EdgeDirection, EdgeTriplet,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** GraphX/Pregel bridge: run vertex-program algorithms over a
-  * GraphBLAS adjacency matrix (the COO frame IS an edge list).
+/** GraphX/Pregel bridge: connected components over a GraphBLAS
+  * adjacency matrix (the COO frame IS an edge list), with zero-copy
+  * interop between the engine's COO collections and GraphX's RDD world.
   *
-  * FastSV (the DataFrame loop) is the primary implementation; this
-  * bridge exists because some iterative algorithms are more natural as
-  * vertex programs, and it demonstrates zero-copy interop between the
-  * engine's COO collections and GraphX's RDD world.
+  * This is the whole-graph CC engine above [[LocalCC.threshold]]: it
+  * serves q_cc_events, q_cc_incremental, the dedup cluster rows and
+  * Borůvka's contraction ([[Msf]]). Its specialized iterative runtime
+  * (partition-stable RDDs, no per-round query planning) won the
+  * measured bake-offs against FastSV's DataFrame loop (PERF_NOTES §3,
+  * §12e); FastSV stays the engine of its own call sites.
   */
 object PregelCC {
 
-  /** session conf key: above-threshold CC engine — `pregel` (default,
-    * the GraphX bridge) or `dataframe` (FastSV's vectorized loop)
-    */
-  val EngineConf = "spark.graft.cc.engine"
+  /** the adjacency as a cached-friendly (src, dst) pair RDD */
+  private def pairRdd(a: GrbMatrix): org.apache.spark.rdd.RDD[(Long, Long)] =
+    a.df.select(col("i").cast(LongType), col("j").cast(LongType))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
 
-  /** adjacency matrix → GraphX graph (vertex attr = own id).
+  /** pair RDD (+ its already-computed count) → loop-width-partitioned
+    * GraphX graph (vertex attr = own id), materialized.
     *
     * Pregel's per-round shuffles follow the edge RDD's partition
     * count, which here would inherit the SQL plan's width (the
@@ -31,22 +35,6 @@ object PregelCC {
     * edges per task, floor 8, capped at the per-task-state bound)
     * so a 20-round Pregel run pays 20 × loop-width block fan-out,
     * not 20 × session width.
-    */
-  def toGraph(a: GrbMatrix): Graph[Long, Long] = {
-    val raw = pairRdd(a).cache()
-    val nnz = raw.count()
-    val g = fromPairs(a.spark, raw, nnz)
-    raw.unpersist(false)
-    g
-  }
-
-  /** the adjacency as a cached-friendly (src, dst) pair RDD */
-  private def pairRdd(a: GrbMatrix): org.apache.spark.rdd.RDD[(Long, Long)] =
-    a.df.select(col("i").cast(LongType), col("j").cast(LongType))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-
-  /** pair RDD (+ its already-computed count) → loop-width-partitioned
-    * GraphX graph, materialized
     */
   private def fromPairs(spark: org.apache.spark.sql.SparkSession,
       raw: org.apache.spark.rdd.RDD[(Long, Long)], nnz: Long): Graph[Long, Long] = {
@@ -75,10 +63,8 @@ object PregelCC {
     * plan that cannot be multiplied.
     */
   def connectedComponents(a: GrbMatrix): GrbVector = {
-    // squareness guarded uniformly across BOTH engines (r13 advice:
-    // the dataframe route used to throw inside FastSV on inputs the
-    // pregel route silently accepted) — an adjacency is square by
-    // definition; a non-square frame here is a caller bug
+    // an adjacency is square by definition; a non-square frame here
+    // is a caller bug, rejected on the local path too
     require(a.nrows == a.ncols,
       s"adjacency must be square (got ${a.nrows}x${a.ncols})")
     // GraphX persists RDDs we can't all reach by name (the
@@ -99,34 +85,6 @@ object PregelCC {
       val spark = a.spark
       import spark.implicits._
       return new GrbVector(LocalCC.labels(pairs).toSeq.toDF("i", "v"), a.nrows)
-    }
-    // Above-threshold engine selection (round-13 judging): the
-    // DataFrame loop (FastSV, with the full Iterate loop-width/
-    // checkpoint/storage discipline) is one conf away —
-    // `spark.graft.cc.engine=dataframe` (or the SPARK_GRAFT_CC_ENGINE
-    // env for bench A/Bs) routes whole-graph CC through it. The
-    // default stays the GraphX Pregel bridge on MEASURED evidence
-    // (PERF_NOTES §3 and the round-13 instrumented A/B): its
-    // specialized iterative runtime (partition-stable RDDs, no
-    // per-round query planning) wins on big low-diameter graphs.
-    // FastSV symmetrizes internally here because this bridge accepts
-    // either-direction edges (Pregel's sendMsg looks both ways).
-    val engine = scala.util.Try(a.spark.conf.get(EngineConf)).toOption
-      .orElse(sys.env.get("SPARK_GRAFT_CC_ENGINE")).getOrElse("pregel")
-    if (engine == "dataframe") {
-      raw.unpersist(false) // FastSV caches the COO frame itself
-      // dedup after the symmetrizing union (r13 advice): an already-
-      // symmetric adjacency — the common q_cc_events input — would
-      // otherwise carry every edge twice, doubling the cached COO and
-      // each round's mxv shuffle volume. min_second ignores v, so the
-      // structural (i, j) key is the right dedup key.
-      val sym = a.df.select(col("i"), col("j"), col("v"))
-        .unionByName(a.df.select(col("j").as("i"), col("i").as("j"), col("v")))
-        .dropDuplicates("i", "j")
-      val verts = a.df.select(col("i"))
-        .unionByName(a.df.select(col("j").as("i"))).distinct()
-      return FastSV.connectedComponents(
-        new GrbMatrix(sym, a.nrows, a.ncols), nodes = Some(verts))
     }
     // raw was persisted before the snapshot-sweep window opens, so the
     // sweep below never touches it; freed explicitly after the graph

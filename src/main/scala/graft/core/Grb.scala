@@ -880,16 +880,14 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     // round-trip: floor(_ij / nc) through a double would corrupt keys
     // past 2^53, which a 100 TB shape reaches. Same groups (the pack
     // is bijective on the index domain), same aggregate, same output
-    // schema; spark.graft.mxm.packedAgg=false restores the two-column
-    // aggregate for A/Bs. MASKED products stay on (i, j): the mask's
+    // schema. MASKED products stay on (i, j): the mask's
     // semi-join clusters the product stream by (i, j) and the final
     // aggregate reuses that exchange — packing there ADDED an
     // exchange (q_triangle 13 → 14, measured in the round-14 plan
     // probe) instead of narrowing one.
     val nc = other.ncols
     val packable = mask.isEmpty &&
-      nc > 0 && nrows > 0 && nrows <= Long.MaxValue / nc &&
-      Grb.flag(df.sparkSession, "spark.graft.mxm.packedAgg", default = true)
+      nc > 0 && nrows > 0 && nrows <= Long.MaxValue / nc
     val out =
       if (packable)
         prod.select((col("i") * nc + col("j")).as("_ij"), col("_p"))
@@ -1272,11 +1270,8 @@ object GrbMatrix {
     // the dup factor is large (lineitem's (i,j) dup factor is ~1.07;
     // a caller with heavily duplicated COO input should keep the
     // map-side dedup and not declare clusterBy).
-    // spark.graft.precluster=false ignores the declarations (A/B hook).
     val base =
-      if (clusterBy.nonEmpty &&
-          Grb.flag(df0.sparkSession, "spark.graft.precluster", default = true))
-        df0.repartition(clusterBy.map(col): _*)
+      if (clusterBy.nonEmpty) df0.repartition(clusterBy.map(col): _*)
       else df0
     val df = dupAgg match {
       case Some(agg) => base.groupBy("i", "j").agg(agg(col("v")).as("v"))
@@ -1330,39 +1325,26 @@ object Grb {
     */
   def broadcastGuard(spark: SparkSession,
       rowBytes: Long = BroadcastRowBytes): Long = {
-    val key = "spark.graft.broadcast.maxBytes"
-    val default = 512L * 1024 * 1024
-    // a malformed budget warns like Grb.flag: maxBytes=1 is how an
-    // operator forces the sharded plans, so a typo must not silently
-    // leave them broadcasting
-    val budget = spark.conf.getOption(key).fold(default) { raw =>
-      scala.util.Try(raw.trim.toLong).toOption.filter(_ > 0).getOrElse {
-        System.err.println(s"graft: ignoring unparsable conf $key='$raw' " +
-          s"(want a positive byte count); using default=$default")
-        default
-      }
-    }
+    // a malformed budget warns: maxBytes=1 is how an operator forces
+    // the sharded plans, so a typo must not silently leave them
+    // broadcasting
+    val budget = longConf(spark, "spark.graft.broadcast.maxBytes",
+      default = 512L * 1024 * 1024, min = 1L)
     math.max(1L, budget / rowBytes)
   }
 
-  /** conf-gated plan toggle (the spark.graft.* escape-hatch family):
-    * accepts true/false/1/0/on/off/yes/no (case-insensitive); an
-    * absent conf → the measured default; a MALFORMED value warns to
-    * stderr on every read and falls back to the default — silently
-    * honoring the default would invert the operator's intent for
-    * values like `packedAgg=of` (round-14 advice).
+  /** a whole-number session conf: absent → `default`; a value that
+    * does not parse or is below `min` warns on stderr (on every read)
+    * and falls back to `default`, so a typo never silently reverts a
+    * sizing conf
     */
-  private[graft] def flag(spark: SparkSession, key: String,
-      default: Boolean): Boolean =
-    spark.conf.getOption(key) match {
-      case None => default
-      case Some(raw) => raw.trim.toLowerCase match {
-        case "true" | "1" | "on" | "yes"  => true
-        case "false" | "0" | "off" | "no" => false
-        case other =>
-          System.err.println(s"graft: ignoring unparsable conf $key='$other' " +
-            s"(want true/false/1/0/on/off); using default=$default")
-          default
+  private[graft] def longConf(spark: SparkSession, key: String,
+      default: Long, min: Long): Long =
+    spark.conf.getOption(key).fold(default) { raw =>
+      scala.util.Try(raw.trim.toLong).toOption.filter(_ >= min).getOrElse {
+        System.err.println(s"graft: ignoring unparsable conf $key='$raw' " +
+          s"(want a whole number >= $min); using default=$default")
+        default
       }
     }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.expressions.Window
@@ -523,148 +523,54 @@ object Similarity {
     * term and crosses over wherever b·n > c₁·p·√n — callers with a
     * standing index should call [[ivfTopK]] directly.
     *
-    * PORTABILITY: the default constants are THIS box's (local[32],
-    * tmpfs shuffle). The structure travels; the shuffle/codegen cost
-    * ratio does not — on a cluster with different IO the modeled
-    * crossover can silently flip the engine the wrong way. Two
-    * escape hatches, both per-session:
-    *   - conf overrides ([[TopKCost.BruteKey]]/[[TopKCost.CandKey]]/
-    *     [[TopKCost.BuildKey]]) for a deployment that knows its
-    *     constants;
-    *   - [[TopKCost.selfCalibrate]], a one-shot measured draw on a
-    *     deterministic synthetic tier (~seconds) that derives the
-    *     constants from THIS engine's actual brute/IVF walls and
-    *     pins them into the session conf. Auto-triggered by setting
-    *     `spark.graft.ann.selfCalibrate=true` (first [[topK]] call
-    *     calibrates; later calls read the pinned confs).
+    * PORTABILITY: the constants are THIS box's (local[32], tmpfs
+    * shuffle). The structure travels; the shuffle/codegen cost ratio
+    * does not — on a cluster with different IO the modeled crossover
+    * can pick the slower engine. Re-derive the three constants there
+    * with the SelfBaseline SPARK_GRAFT_ANNX tier (it prints both
+    * engines' walls next to the model's pick); a caller that knows its
+    * engine calls [[bruteForceTopK]] or [[ivfTopK]] directly.
     */
   object TopKCost {
-    /** session-conf keys overriding the box-calibrated defaults */
-    val BruteKey = "spark.graft.ann.bruteSecPerRow"
-    val CandKey = "spark.graft.ann.ivfSecPerCandidate"
-    val BuildKey = "spark.graft.ann.ivfBuildSecPerN15"
-    /** opt-in one-shot calibration trigger (see scaladoc above) */
-    val SelfCalibrateKey = "spark.graft.ann.selfCalibrate"
-
     val bruteSecPerScoredRow: Double = 2.7e-8
     val ivfSecPerCandidateRow: Double = 5.7e-7
     val ivfBuildSecPerN15: Double = 4.4e-7
 
-    /** the three model constants as one value */
-    final case class Constants(bruteSecPerRow: Double,
-        ivfSecPerCandidate: Double, ivfBuildSecPerN15: Double)
-    val Defaults: Constants = Constants(
-      bruteSecPerScoredRow, ivfSecPerCandidateRow, ivfBuildSecPerN15)
-
-    /** constants for this session: conf overrides where set and valid
-      * (positive, finite), box-calibrated defaults otherwise
+    def bruteSec(n: Long, q: Long): Double =
+      bruteSecPerScoredRow * q.toDouble * n.toDouble
+    def ivfSec(n: Long, q: Long, probes: Int): Double =
+      ivfBuildSecPerN15 * math.pow(n.toDouble, 1.5) +
+        ivfSecPerCandidateRow * q.toDouble * probes * math.sqrt(n.toDouble)
+    /** the engine choice: brute force when its modeled cost is at or
+      * below IVF's. Ties go to brute: the exact engine is never the
+      * wrong answer at the boundary.
       */
-    def constants(spark: SparkSession): Constants = {
-      def rd(key: String, dflt: Double): Double =
-        spark.conf.getOption(key).flatMap(_.toDoubleOption)
-          .filter(v => v > 0 && java.lang.Double.isFinite(v))
-          .getOrElse(dflt)
-      Constants(rd(BruteKey, bruteSecPerScoredRow),
-        rd(CandKey, ivfSecPerCandidateRow),
-        rd(BuildKey, ivfBuildSecPerN15))
-    }
-
-    def bruteSec(n: Long, q: Long, c: Constants = Defaults): Double =
-      c.bruteSecPerRow * q.toDouble * n.toDouble
-    def ivfSec(n: Long, q: Long, probes: Int,
-        c: Constants = Defaults): Double =
-      c.ivfBuildSecPerN15 * math.pow(n.toDouble, 1.5) +
-        c.ivfSecPerCandidate * q.toDouble * probes * math.sqrt(n.toDouble)
+    def bruteWins(n: Long, q: Long, probes: Int): Boolean =
+      bruteSec(n, q) <= ivfSec(n, q, probes)
     /** the query count past which IVF wins at this corpus size, or -1
       * when brute wins at every q (n below the per-query floor)
       */
-    def crossoverQ(n: Long, probes: Int, c: Constants = Defaults): Long = {
-      val perQueryEdge = c.bruteSecPerRow * n.toDouble -
-        c.ivfSecPerCandidate * probes * math.sqrt(n.toDouble)
+    def crossoverQ(n: Long, probes: Int): Long = {
+      val perQueryEdge = bruteSecPerScoredRow * n.toDouble -
+        ivfSecPerCandidateRow * probes * math.sqrt(n.toDouble)
       if (perQueryEdge <= 0) -1L
       else math.ceil(
-        c.ivfBuildSecPerN15 * math.pow(n.toDouble, 1.5) / perQueryEdge).toLong
-    }
-
-    /** deterministic synthetic calibration corpus: embedding(id)[j] =
-      * (xxhash64(id, j) mod 2001 − 1000) / 1000 — no RNG state, same
-      * corpus on every engine/run
-      */
-    private[graft] def syntheticCorpus(spark: SparkSession, n: Long,
-        dims: Int): DataFrame =
-      spark.range(n).select(col("id").as("vec_id"),
-        expr(s"transform(sequence(0, ${dims - 1}), " +
-          "j -> cast((pmod(xxhash64(id, j), 2001) - 1000) / 1000.0 " +
-          "as float))").as("embedding"))
-
-    /** One-shot measured calibration (~seconds): time one brute draw
-      * (b from t/(q·n): no shuffle, so one point determines it) and
-      * two IVF draws at different query counts (the q-slope isolates
-      * c₁; the intercept less the candidate term isolates c₀), on a
-      * deterministic synthetic tier sized so each wall is dominated by
-      * the term it measures. Derived constants are pinned into the
-      * session conf, so calibration runs once per session; a
-      * degenerate draw (non-positive slope from scheduler noise)
-      * keeps that constant's default rather than poisoning the model.
-      */
-    def selfCalibrate(spark: SparkSession, n: Long = 30000L, dims: Int = 16,
-        bruteQ: Long = 1000L, ivfQLow: Long = 200L, ivfQHigh: Long = 3000L,
-        probes: Int = 2): Constants = {
-      val corpus = syntheticCorpus(spark, n, dims).cache()
-      corpus.count()
-      def time(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      // untimed warm-up: JIT + codegen for both paths
-      bruteForceTopK(corpus, 8L, 3).count()
-      val tBrute = time(bruteForceTopK(corpus, bruteQ, 5).count())
-      val t1 = time(ivfTopK(corpus, ivfQLow, 5, -1, probes).count())
-      val t2 = time(ivfTopK(corpus, ivfQHigh, 5, -1, probes).count())
-      corpus.unpersist(false)
-      val sqn = math.sqrt(n.toDouble)
-      def valid(v: Double): Option[Double] =
-        Some(v).filter(x => x > 0 && java.lang.Double.isFinite(x))
-      val b = valid(tBrute / (bruteQ.toDouble * n.toDouble))
-        .getOrElse(bruteSecPerScoredRow)
-      val c1 = valid((t2 - t1) / ((ivfQHigh - ivfQLow).toDouble * probes * sqn))
-        .getOrElse(ivfSecPerCandidateRow)
-      val c0 = valid(
-        (t1 - c1 * ivfQLow * probes * sqn) / math.pow(n.toDouble, 1.5))
-        .getOrElse(ivfBuildSecPerN15)
-      val out = Constants(b, c1, c0)
-      spark.conf.set(BruteKey, out.bruteSecPerRow.toString)
-      spark.conf.set(CandKey, out.ivfSecPerCandidate.toString)
-      spark.conf.set(BuildKey, out.ivfBuildSecPerN15.toString)
-      out
-    }
-
-    /** [[constants]] plus the one-shot auto-calibration trigger: when
-      * `spark.graft.ann.selfCalibrate=true` and no constant conf is
-      * pinned yet, run [[selfCalibrate]] first (which pins them)
-      */
-    private[pipeline] def resolvedConstants(spark: SparkSession): Constants = {
-      val wantCal = spark.conf.getOption(SelfCalibrateKey).contains("true")
-      val pinned = Seq(BruteKey, CandKey, BuildKey)
-        .exists(k => spark.conf.getOption(k).isDefined)
-      if (wantCal && !pinned) selfCalibrate(spark) else constants(spark)
+        ivfBuildSecPerN15 * math.pow(n.toDouble, 1.5) / perQueryEdge).toLong
     }
   }
 
   /** Top-k cosine search with the engine CHOSEN by the measured cost
-    * model ([[TopKCost]]): exact brute force when its modeled cost is
-    * at or below IVF's (always, below the ~10⁶-vector floor), IVF
-    * past the modeled crossover. One count job learns n — the same
-    * count the IVF path needs for its auto cell rule. Ties go to
-    * brute: the exact engine is never the wrong answer at the
-    * boundary.
+    * model ([[TopKCost.bruteWins]]): exact brute force when its
+    * modeled cost is at or below IVF's (always, below the ~10⁶-vector
+    * floor), IVF past the modeled crossover. One count job learns n —
+    * the same count the IVF path needs for its auto cell rule.
     */
   def topK(emb: DataFrame, nQueries: Long = 20L, k: Int = 5,
       probes: Int = 2, materialize: Boolean = true,
       lloydRounds: Int = 1): DataFrame = {
     val n = emb.count()
     val q = math.min(nQueries, n)
-    val c = TopKCost.resolvedConstants(emb.sparkSession)
-    if (TopKCost.bruteSec(n, q, c) <= TopKCost.ivfSec(n, q, probes, c))
+    if (TopKCost.bruteWins(n, q, probes))
       bruteForceTopK(emb, nQueries, k)
     else ivfTopK(emb, nQueries, k, -1, probes, materialize, lloydRounds)
   }

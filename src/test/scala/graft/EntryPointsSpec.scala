@@ -3,20 +3,23 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StageMeter
+import scala.jdk.CollectionConverters._
 
 /** The mains' shared pieces: the SPARK_GRAFT_EXTRA_CONF parser, Verify's
-  * failure report and the stage meter.
+  * failure report, the stage meter and the session-conf surface.
   */
 class EntryPointsSpec extends SparkSpec {
 
-  private def stderrOf[T](body: => T): (T, String) = {
-    val err = new java.io.ByteArrayOutputStream()
-    val oldErr = System.err
-    val r = try {
-      System.setErr(new java.io.PrintStream(err, true))
-      body
-    } finally System.setErr(oldErr)
-    (r, err.toString)
+  test("the engine reads exactly three spark.graft.* confs") {
+    // adding a knob is a visible edit here: each key needs a reason
+    // no fixed value can serve (README "Entry points")
+    val literal = "\"spark\\.graft\\.([A-Za-z0-9.]+)\"".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val keys = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(f => literal.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
+      .toSet
+    finally files.close()
+    assert(keys == Set("broadcast.maxBytes", "cc.localNnz", "uint64Mode"))
   }
 
   test("extra-conf parser: pairs, '=' inside a value, and a loud malformed entry") {

@@ -311,23 +311,17 @@ class FastSVSpec extends SparkSpec {
     assert(pregel == fastsv.view.filterKeys(k => k != 5L).toMap)
   }
 
-  test("cc.engine=dataframe routes the Pregel bridge through FastSV — identical labels on one-direction edges") {
+  test("Pregel bridge labels one-direction edges by component minimum") {
     // ONE-direction edge list (no symmetrization at the call site):
     // the bridge's contract accepts either direction (Pregel's sendMsg
-    // looks both ways), so the DataFrame route must symmetrize
-    // internally before handing FastSV the adjacency. The shared test
-    // session pins localNnz=0, so this exercises the DISTRIBUTED
-    // FastSV loop, not the driver-local path.
+    // looks both ways). The shared test session pins localNnz=0, so
+    // this exercises the distributed Pregel rounds, not the
+    // driver-local path.
     val oneWay = Seq((1L, 0L), (2L, 1L), (4L, 3L))
     val triples: Seq[(Long, Long, Any)] = oneWay.map { case (a, b) => (a, b, 1L: Any) }
     val a = GrbMatrix.fromValues(spark, triples, GrbType.INT64, 6L, 6L)
-    val viaPregel = labelsOf(graft.algo.PregelCC.connectedComponents(a))
-    try {
-      spark.conf.set(graft.algo.PregelCC.EngineConf, "dataframe")
-      val viaDataFrame = labelsOf(graft.algo.PregelCC.connectedComponents(a))
-      assert(viaDataFrame == viaPregel)
-      assert(viaDataFrame == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L))
-    } finally spark.conf.unset(graft.algo.PregelCC.EngineConf)
+    assert(labelsOf(graft.algo.PregelCC.connectedComponents(a)) ==
+      Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L))
   }
 
   test("driver-local CC fast path matches the distributed loops on random graphs") {
@@ -880,9 +874,7 @@ class FastSVSpec extends SparkSpec {
             if (ra != rb) { parent(ra) = rb; true } else false
           }.toSet
         val df = spark.createDataFrame(edges).toDF("a", "b", "w")
-        // alternate the inner contraction engine so BOTH stay covered
-        val got = graft.algo.Msf.forest(df, n.toLong,
-          innerPregel = trial % 2 == 0).collect()
+        val got = graft.algo.Msf.forest(df, n.toLong).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(got == want, s"trial $trial edges=$edges")
       }
@@ -1010,22 +1002,6 @@ class FastSVSpec extends SparkSpec {
       assert(loopWidth(spark, rows) <= hi, s"rows=$rows")
       assert(loopWidth(spark, rows) >= 1, s"rows=$rows")
     }
-  }
-
-  test("loop width conf override wins over the sizing rule; garbage is ignored") {
-    import graft.algo.Iterate.loopWidth
-    val key = "spark.graft.loop.width"
-    try {
-      // a valid override replaces the rule entirely, any workload size
-      spark.conf.set(key, "5")
-      assert(loopWidth(spark, 100000L) == 5)
-      assert(loopWidth(spark, 500000000L) == 5)
-      // non-positive and non-numeric values fall through to the rule
-      spark.conf.set(key, "0")
-      assert(loopWidth(spark, 100000L) == 4)
-      spark.conf.set(key, "wide")
-      assert(loopWidth(spark, 100000L) == 4)
-    } finally spark.conf.unset(key)
   }
 
   test("loop width floor is clamped at the session's shuffle width") {

@@ -1068,9 +1068,12 @@ class PipelineSpec extends SparkSpec {
     // the calibrated point: crossover near 4.5k queries at n=50k
     val c = TopKCost.crossoverQ(50000L, 2)
     assert(c > 3000L && c < 7000L, s"crossover $c")
-    // model picks on each side of it
-    assert(TopKCost.bruteSec(50000L, 892L) <= TopKCost.ivfSec(50000L, 892L, 2))
-    assert(TopKCost.bruteSec(50000L, 12500L) > TopKCost.ivfSec(50000L, 12500L, 2))
+    // the one engine decision picks on each side of it, at the
+    // calibrated points: q=892 → brute, q=12500 → IVF
+    assert(TopKCost.bruteWins(50000L, 892L, 2))
+    assert(!TopKCost.bruteWins(50000L, 12500L, 2))
+    // below the floor brute wins at every q
+    assert(TopKCost.bruteWins(1000L, 1000L, 2))
     // the auto path at bench shape (small q) returns the exact result
     val emb = spark.range(200).select(col("id").as("vec_id"),
       expr("transform(sequence(0, 7), d -> float((pmod(hash(id * 31 + d), 200) - 100) / 100.0))")
@@ -1080,59 +1083,6 @@ class PipelineSpec extends SparkSpec {
     val brute = graft.pipeline.Similarity.bruteForceTopK(emb, 5L, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(auto == brute)
-  }
-
-  test("topK cost constants: conf overrides respected, invalid values fall back, pick flips") {
-    import graft.pipeline.Similarity
-    import graft.pipeline.Similarity.TopKCost
-    val keys = Seq(TopKCost.BruteKey, TopKCost.CandKey, TopKCost.BuildKey)
-    try {
-      // defaults when nothing is set
-      assert(TopKCost.constants(spark) == TopKCost.Defaults)
-      // invalid overrides (non-numeric, non-positive) keep the default
-      spark.conf.set(TopKCost.BruteKey, "not-a-number")
-      spark.conf.set(TopKCost.CandKey, "-1.0")
-      assert(TopKCost.constants(spark) == TopKCost.Defaults)
-      // valid overrides flow into the model and flip the pick: a brute
-      // cost 10^6× the default makes IVF win even at tiny (n, q)
-      spark.conf.set(TopKCost.BruteKey, "2.7e-2")
-      spark.conf.set(TopKCost.CandKey, "5.7e-7")
-      val c = TopKCost.constants(spark)
-      assert(c.bruteSecPerRow == 2.7e-2 && c.ivfSecPerCandidate == 5.7e-7)
-      assert(TopKCost.bruteSec(200L, 5L, c) > TopKCost.ivfSec(200L, 5L, 2, c))
-      // ... and topK actually dispatches to IVF under those constants:
-      // the result equals the direct ivfTopK call, not the brute one
-      val emb = spark.range(200).select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 7), d -> float((pmod(hash(id * 31 + d), 200) - 100) / 100.0))")
-          .as("embedding"))
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val viaConf = rows(Similarity.topK(emb, 5L, 3))
-      assert(viaConf == rows(Similarity.ivfTopK(emb, 5L, 3)))
-    } finally keys.foreach(spark.conf.unset)
-  }
-
-  test("topK self-calibration: one measured draw pins positive constants into the conf") {
-    import graft.pipeline.Similarity.TopKCost
-    val keys = Seq(TopKCost.BruteKey, TopKCost.CandKey, TopKCost.BuildKey,
-      TopKCost.SelfCalibrateKey)
-    try {
-      // tiny tier keeps the suite fast; validity (positive finite or
-      // default fallback) is the contract, not constant accuracy
-      val c = TopKCost.selfCalibrate(spark, n = 2000L, dims = 8,
-        bruteQ = 100L, ivfQLow = 10L, ivfQHigh = 200L)
-      for (v <- Seq(c.bruteSecPerRow, c.ivfSecPerCandidate, c.ivfBuildSecPerN15))
-        assert(v > 0 && java.lang.Double.isFinite(v), s"bad constant $v in $c")
-      // calibration pinned the session conf: constants() now returns it
-      assert(TopKCost.constants(spark) == c)
-      // the auto trigger is one-shot: with constants already pinned,
-      // resolvedConstants must NOT re-calibrate (it would overwrite
-      // this sentinel override)
-      spark.conf.set(TopKCost.SelfCalibrateKey, "true")
-      spark.conf.set(TopKCost.BruteKey, "1.23e-5")
-      val resolved = TopKCost.constants(spark)
-      assert(resolved.bruteSecPerRow == 1.23e-5)
-    } finally keys.foreach(spark.conf.unset)
   }
 
   test("mix plan: equal share, ppm cap for under-represented sources") {

@@ -552,12 +552,6 @@ class PlanAuditSpec extends SparkSpec {
     // (i, j) with integer DIV/% — never a double round-trip
     val packedPlan = plan(a.mxm(b, Ops.plusTimes).df)
     assert(packedPlan.contains("_ij"), packedPlan.take(600))
-    // conf off → the two-column aggregate returns
-    spark.conf.set("spark.graft.mxm.packedAgg", "false")
-    try {
-      val off = plan(a.mxm(b, Ops.plusTimes).df)
-      assert(!off.contains("_ij"), off.take(600))
-    } finally spark.conf.unset("spark.graft.mxm.packedAgg")
     // a shape whose i*ncols+j cannot fit int64 falls back (the guard
     // is nrows <= Long.MaxValue / ncols)
     val wideB = new GrbMatrix(b.df, 5L, Long.MaxValue / 4L)
@@ -574,14 +568,19 @@ class PlanAuditSpec extends SparkSpec {
 
   test("packed and two-column product aggregates agree cell-for-cell") {
     val (a, b) = tinyPair
-    val packed = a.mxm(b, Ops.plusTimes).df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(t => (t._1, t._2))
-    spark.conf.set("spark.graft.mxm.packedAgg", "false")
-    try {
-      val old = a.mxm(b, Ops.plusTimes).df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(t => (t._1, t._2))
-      assert(packed.toSeq == old.toSeq)
-    } finally spark.conf.unset("spark.graft.mxm.packedAgg")
+    def cells(m: GrbMatrix) = m.df.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    // reference: plus-times over the collected operands, on the driver
+    val (ac, bc) = (cells(a), cells(b))
+    val want = (for {
+      ((i, k), x) <- ac.toSeq; ((k2, j), y) <- bc.toSeq if k == k2
+    } yield (i, j) -> x * y).groupMapReduce(_._1)(_._2)(_ + _)
+    assert(cells(a.mxm(b, Ops.plusTimes)) == want)
+    // the same operands at a width whose i*ncols+j overflows int64
+    // take the two-column aggregate
+    val wideB = new GrbMatrix(b.df, 5L, Long.MaxValue / 4L)
+    assert(!plan(a.mxm(wideB, Ops.plusTimes).df).contains("_ij"))
+    assert(cells(a.mxm(wideB, Ops.plusTimes)) == want)
   }
 
   test("joining AGAINST a bucketed table does not lift the guard") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Round-15 pins for the optimization round's harness/engine rules:
   * the prepares-hook domain guard (VERDICT r14 item 8), the byte-
   * derived broadcast guard (item 4), the checkpoint-probe contract
-  * (item 1), and the Grb.flag parse contract (ADVICE r14).
+  * (item 1), and the numeric conf parse contract (ADVICE r14).
   */
 class ProbeAndGuardSpec extends SparkSpec {
   import spark.implicits._
@@ -39,20 +39,37 @@ class ProbeAndGuardSpec extends SparkSpec {
       // the sharded-plan switch: a 1-byte budget is a 1-row guard
       spark.conf.set(key, "1")
       assert(Grb.broadcastGuard(spark) == 1L)
-      // malformed → default budget, and LOUD about it (like Grb.flag)
+      // malformed → default budget, and LOUD about it
       for (bad <- Seq("not-a-number", "0", "-5")) {
         spark.conf.set(key, bad)
-        val err = new java.io.ByteArrayOutputStream()
-        val oldErr = System.err
-        val guard = try {
-          System.setErr(new java.io.PrintStream(err, true))
-          Grb.broadcastGuard(spark)
-        } finally System.setErr(oldErr)
+        val (guard, err) = stderrOf(Grb.broadcastGuard(spark))
         assert(guard == 512L * 1024 * 1024 / Grb.BroadcastRowBytes, s"value '$bad'")
-        assert(err.toString.contains(s"ignoring unparsable conf $key='$bad'"),
+        assert(err.contains(s"ignoring unparsable conf $key='$bad'"),
           s"no fallback warning for '$bad': '$err'")
       }
     } finally spark.conf.unset(key)
+  }
+
+  test("cc.localNnz: malformed or negative values warn and keep the " +
+      "default; 0 disables; a valid value is honoured") {
+    import graft.algo.LocalCC
+    val key = LocalCC.ConfKey
+    val prev = spark.conf.getOption(key)
+    try {
+      for (bad <- Seq("not-a-number", "-5")) {
+        spark.conf.set(key, bad)
+        val (nnz, err) = stderrOf(LocalCC.threshold(spark))
+        assert(nnz == LocalCC.DefaultNnz, s"value '$bad'")
+        assert(err.contains(s"ignoring unparsable conf $key='$bad'"),
+          s"no fallback warning for '$bad': '$err'")
+      }
+      for ((v, want) <- Seq("0" -> 0L, "2500" -> 2500L)) {
+        spark.conf.set(key, v)
+        val (nnz, err) = stderrOf(LocalCC.threshold(spark))
+        assert(nnz == want, s"value '$v'")
+        assert(!err.contains(s"conf $key"), s"unexpected warning for '$v': '$err'")
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("checkpointWithProbe: probe aggregates are observed during the " +
@@ -137,23 +154,5 @@ class ProbeAndGuardSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("Grb.flag accepts 1/0/on/off/yes/no and falls back to the " +
-      "default on malformed values") {
-    val key = "spark.graft.test.flag"
-    try {
-      for ((v, want) <- Seq("true" -> true, "1" -> true, "on" -> true,
-          "YES" -> true, "false" -> false, "0" -> false, "Off" -> false,
-          "no" -> false)) {
-        spark.conf.set(key, v)
-        assert(Grb.flag(spark, key, default = !want) == want, s"value '$v'")
-      }
-      spark.conf.set(key, "certainly")
-      assert(Grb.flag(spark, key, default = true))
-      assert(!Grb.flag(spark, key, default = false))
-      spark.conf.unset(key)
-      assert(Grb.flag(spark, key, default = true))
-    } finally spark.conf.unset(key)
   }
 }

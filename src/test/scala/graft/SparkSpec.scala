@@ -31,4 +31,15 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(key, "1")
     try body finally spark.conf.unset(key)
   }
+
+  /** `body`'s value and what it printed to stderr */
+  def stderrOf[T](body: => T): (T, String) = {
+    val err = new java.io.ByteArrayOutputStream()
+    val oldErr = System.err
+    val out = try {
+      System.setErr(new java.io.PrintStream(err, true))
+      body
+    } finally System.setErr(oldErr)
+    (out, err.toString)
+  }
 }
