@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Plan dumper for the optimization rounds' evidence files: builds each
   * selected catalog query Bench-identically (same [[GraftSession]], same
@@ -28,23 +29,30 @@ object Plans {
     Files.createDirectories(outDir)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val spark = GraftSession()
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try {
-          // a failed prepare prints a FAILED line: this plan may be
-          // wrong-shape
-          Bench.prepare(spark, sfDir, name)
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(outDir.resolve(s"${name}_$tag.txt"), plan)
-          println(s"[plans] $name -> ${name}_$tag.txt")
-        } catch { case e: Throwable =>
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
-      }
+    val failed = dump(spark, sfDir, outDir, tag,
+      SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) })
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plans] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
+
+  /** Write each query's formatted plan to `<outDir>/<name>_<tag>.txt`;
+    * returns the names of the queries that threw or whose prepare
+    * failed, sorted (see [[Verify.eachQuery]]).
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: Path, tag: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] =
+    Verify.eachQuery(spark, "plans", queries) { (name, fn) =>
+      val (prepErr, _) = Bench.prepare(spark, sfDir, name)
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(outDir.resolve(s"${name}_$tag.txt"), plan)
+      println(s"[plans] $name -> ${name}_$tag.txt")
+      // a failed prepare may leave the plan wrong-shape: it is written,
+      // and the query counts as failed
+      prepErr.foreach(e => throw new IllegalStateException(e))
+    }
 }

@@ -37,25 +37,33 @@ object Verify {
     }
   }
 
-  /** Write each query's result to `<outDir>/<name>` as parquet. A query
-    * that throws is reported on stderr and the dump goes on; returns the
-    * names of the queries that threw, sorted. Fatal errors propagate.
+  /** Write each query's result to `<outDir>/<name>` as parquet; returns
+    * the names of the queries that threw (see [[eachQuery]]).
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] =
-    queries.toSeq.flatMap { case (name, fn) =>
+    eachQuery(spark, "verify", queries) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }
+
+  /** Run `body` for each query in name order. A query that throws is
+    * reported on stderr as `[<tag>] <name> failed: <message>` and the
+    * loop goes on; returns the names of the queries that threw, sorted.
+    * Fatal errors propagate.
+    */
+  private[graft] def eachQuery(spark: SparkSession, tag: String,
+      queries: Map[String, (SparkSession, String) => DataFrame])(
+      body: (String, (SparkSession, String) => DataFrame) => Unit): Seq[String] =
+    queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val failed =
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          None
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        try { body(name, fn); None }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[$tag] $name failed: ${e.getMessage}")
           Some(name)
         }
       // operators cache() shared intermediates; don't let 40 queries'
       // caches accumulate in one session
       spark.catalog.clearCache()
       failed
-    }.sorted
+    }
 }

@@ -160,9 +160,14 @@ object GrbScalar {
   }
 }
 
-/** 1-dim sparse vector: COO DataFrame[(i: Long, v: T)] + logical size.
-  * Reference: dask_grblas/vector.py:77-200. Absence = missing row,
-  * never NULL (SURVEY §1.4).
+/** What GrbVector and GrbMatrix share (reference dask_grblas/base.py
+  * `BaseType`): a COO DataFrame of key columns — Seq("i") for a vector,
+  * Seq("i", "j") for a matrix — plus the value column `v`, one dimension
+  * per key, and an optional declared dtype. Absence = missing row, never
+  * NULL (SURVEY §1.4). The element-wise, label, equality, extract/assign
+  * and write-path methods are written here once over the key columns; a
+  * subclass supplies its dimensions, its shape check and (through its
+  * companion) its constructor.
   *
   * `declared`: the GraphBLAS dtype when it cannot be re-derived from
   * the Spark schema — Spark has no unsigned types, so UINT8/16/32/64
@@ -171,15 +176,38 @@ object GrbScalar {
   * through structure-preserving ops; value-producing ops re-derive
   * from the (signed) schema — a documented deviation.
   */
-final class GrbVector(val df: DataFrame, val size: Long,
-    private[core] val declared: Option[GrbType] = None) {
-  import GrbVector.KEYS
+private[graft] abstract class GrbCollection[C <: GrbCollection[C]] {
+  /** COO frame: the key columns, then `v` */
+  val df: DataFrame
+  private[graft] val declared: Option[GrbType]
+  /** one dimension per key column */
+  private[graft] def dims: Seq[Long]
+  /** DimensionMismatch unless `other` has this collection's shape */
+  protected def requireSameShape(other: C, op: String): Unit
+  protected def companion: GrbCollectionCompanion[C]
+
+  private[core] def keys: Seq[String] = companion.KEYS
+
+  /** a result of this collection's kind, through the one labelled
+    * constructor ([[GrbCollectionCompanion.labelled]]); the dimensions
+    * default to this collection's
+    */
+  private[graft] def derive(out: DataFrame, declared: Option[GrbType],
+      dims: Seq[Long] = dims): C = companion.labelled(out, dims, declared)
+
+  /** the key columns followed by `v` as the value column */
+  private def keyed(v: Column): Seq[Column] = keys.map(col) :+ v.as("v")
+  /** the key columns and `v`, as they are */
+  private def coo: Seq[Column] = keys.map(col) :+ col("v")
+  /** the COO columns of `d`, with key column `key` computed by `c` */
+  private def rekeyed(d: DataFrame, key: String, c: Column): DataFrame =
+    d.select(keys.map(k => if (k == key) c.as(k) else col(k)) :+ col("v"): _*)
 
   def spark: SparkSession = df.sparkSession
   /** UINT64 semantics come from the owning session's conf, resolved
     * fresh at each op build — see [[Grb.Uint64ModeKey]]
     */
-  private implicit def u64m: Grb.U64Mode = Grb.u64Mode(df.sparkSession)
+  protected implicit def u64m: Grb.U64Mode = Grb.u64Mode(df.sparkSession)
   def dtype: GrbType =
     declared.getOrElse(GrbType.fromSpark(df.schema("v").dataType))
   lazy val nvals: Long = df.count()
@@ -187,33 +215,21 @@ final class GrbVector(val df: DataFrame, val size: Long,
     * `nvals` (no driver action until the scalar is consumed).
     */
   def nvalsScalar: GrbScalar =
-    new GrbScalar(df.agg(
-      org.apache.spark.sql.functions.count(lit(1)).cast(LongType).as("v")))
+    new GrbScalar(df.agg(count(lit(1)).cast(LongType).as("v")))
 
   /** reference base.py:112-136: deep copy w/ optional cast + mask.
     * DataFrames are immutable so the copy is free.
     */
-  def dup(dtype: GrbType = dtype, mask: Option[Mask] = None): GrbVector = {
-    val d0 = mask.fold(df)(_.filter(df, KEYS))
-    new GrbVector(d0.select(col("i"), Grb.castTo(col("v"), dtype).as("v")),
-      size, Some(dtype))
+  def dup(dtype: GrbType = dtype, mask: Option[Mask] = None): C = {
+    val d0 = mask.fold(df)(_.filter(df, keys))
+    derive(d0.select(keyed(Grb.castTo(col("v"), dtype)): _*), Some(dtype))
   }
 
-  def clear: GrbVector = GrbVector.empty(spark, dtype, size)
-
-  /** metadata-only when growing; filter when shrinking
-    * (vector.py:236-270)
-    */
-  def resize(newSize: Long): GrbVector =
-    new GrbVector(if (newSize >= size) df else df.filter(col("i") < newSize),
-      newSize, declared)
+  def clear: C = companion.emptyOf(spark, dtype, dims)
 
   // ---- element-wise apply (vector.py:430-442) ----
   private def keepType(preserve: Boolean, c: Column): Column =
     if (preserve) Grb.castTo(c, dtype) else c
-
-  private def carried(preserve: Boolean): Option[GrbType] =
-    if (preserve) declared else None
 
   /** declared label of an apply result: kept when the op preserves the
     * domain, or — with unsigned tracking in play — when the output's
@@ -221,28 +237,47 @@ final class GrbVector(val df: DataFrame, val size: Long,
     * rule promotedDeclared applies to ewise results, so
     * apply(plus, 1) on UINT64 keeps the label exactly like ewise_add)
     */
-  private def carriedOut(preserve: Boolean, out: DataFrame): Option[GrbType] =
+  protected def carriedOut(preserve: Boolean, out: DataFrame): Option[GrbType] =
     if (preserve) declared
     else if (declared.nonEmpty && Grb.reprMatches(out.schema("v").dataType, dtype)) declared
     else None
 
-  def apply(op: UnaryOp): GrbVector = {
-    val outDF = df.select(col("i"), keepType(op.preserve, op(col("v"))).as("v"))
-    val d = carriedOut(op.preserve, outDF)
-    new GrbVector(Grb.uintGuard(outDF, d), size, d)
+  /** declared dtype of a result combining this collection's values
+    * with `other`'s (ewise, outer, kronecker): the GraphBLAS-promoted
+    * type when the op preserves the domain, or — with unsigned tracking
+    * in play — when at least one operand was declared AND the output's
+    * physical type still carries the promoted store (e.g. UINT8+UINT8
+    * stays short; reprMatches — in wide mode any decimal counts,
+    * uintGuard then normalizes it back into the wrapped store).
+    */
+  protected def promotedDeclared(other: GrbCollection[_], preserve: Boolean,
+      outDF: DataFrame): Option[GrbType] = {
+    val promoted = GrbType.promote(dtype, other.dtype)
+    if (preserve) Some(promoted)
+    else if ((declared.nonEmpty || other.declared.nonEmpty) &&
+        Grb.reprMatches(outDF.schema("v").dataType, promoted)) Some(promoted)
+    else None
   }
-  def applyLeft(op: BinaryOp, left: Column): GrbVector = {
-    val outDF = df.select(col("i"),
-      keepType(op.preserve, Grb.binOp(op, left, col("v"), dtype)).as("v"))
-    val d = carriedOut(op.preserve, outDF)
-    new GrbVector(Grb.uintGuard(outDF, d), size, d)
+
+  /** the same rule for semiring products (mxm/mxv/vxm), keyed on the
+    * mult; positional semirings emit indices, so no value label
+    */
+  protected def srDeclared(other: GrbCollection[_], sr: Semiring,
+      out: DataFrame): Option[GrbType] =
+    if (sr.positional.nonEmpty) None else promotedDeclared(other, sr.mult.preserve, out)
+
+  /** `v` of `from` replaced by `v`, labelled by the apply rule */
+  private def applied(from: DataFrame, preserve: Boolean, v: Column): C = {
+    val outDF = from.select(keyed(keepType(preserve, v)): _*)
+    derive(outDF, carriedOut(preserve, outDF))
   }
-  def applyRight(op: BinaryOp, right: Column): GrbVector = {
-    val outDF = df.select(col("i"),
-      keepType(op.preserve, Grb.binOp(op, col("v"), right, dtype)).as("v"))
-    val d = carriedOut(op.preserve, outDF)
-    new GrbVector(Grb.uintGuard(outDF, d), size, d)
-  }
+
+  def apply(op: UnaryOp): C = applied(df, op.preserve, op(col("v")))
+  def applyLeft(op: BinaryOp, left: Column): C =
+    applied(df, op.preserve, Grb.binOp(op, left, col("v"), dtype))
+  def applyRight(op: BinaryOp, right: Column): C =
+    applied(df, op.preserve, Grb.binOp(op, col("v"), right, dtype))
+
   /** bind a LAZY scalar as the right operand (reference: lazy Scalar in
     * apply, tests/test_vector.py:269-369) — broadcast crossJoin with the
     * ≤1-row scalar frame, no driver materialization.
@@ -252,49 +287,31 @@ final class GrbVector(val df: DataFrame, val size: Long,
     * scalar yields an empty result instead (the crossJoin with a
     * 0-row frame).
     */
-  def applyRightScalar(op: BinaryOp, s: GrbScalar): GrbVector =
-    new GrbVector(df.crossJoin(broadcast(s.df.select(col("v").as("_sv"))))
-      .select(col("i"),
-        keepType(op.preserve, Grb.binOp(op, col("v"), col("_sv"), dtype)).as("v")), size)
-  def applyLeftScalar(op: BinaryOp, s: GrbScalar): GrbVector =
-    new GrbVector(df.crossJoin(broadcast(s.df.select(col("v").as("_sv"))))
-      .select(col("i"),
-        keepType(op.preserve, Grb.binOp(op, col("_sv"), col("v"), dtype)).as("v")), size)
-  /** positional op: value = index (unary.positioni etc.) */
-  def applyPositional: GrbVector = new GrbVector(df.select(col("i"), col("i").as("v")), size)
+  def applyRightScalar(op: BinaryOp, s: GrbScalar): C =
+    applied(withScalar(s), op.preserve, Grb.binOp(op, col("v"), col("_sv"), dtype))
+  def applyLeftScalar(op: BinaryOp, s: GrbScalar): C =
+    applied(withScalar(s), op.preserve, Grb.binOp(op, col("_sv"), col("v"), dtype))
+  private def withScalar(s: GrbScalar): DataFrame =
+    df.crossJoin(broadcast(s.df.select(col("v").as("_sv"))))
 
   /** GrB_select-alike extension (reference has none; masks play the
     * role — SURVEY §2.2): keep entries where predicate on value holds.
     */
-  def selectOp(pred: Column => Column): GrbVector =
-    new GrbVector(df.filter(pred(col("v"))), size, declared)
+  def selectOp(pred: Column => Column): C =
+    derive(df.filter(pred(col("v"))), declared)
 
   // ---- element-wise joins (SURVEY §2.4) ----
-  /** declared dtype of an ewise result: the GraphBLAS-promoted type
-    * when the op preserves the domain, or — with unsigned tracking in
-    * play — when the output's physical type already equals the
-    * promoted type's representation (e.g. UINT8+UINT8 stays short).
-    */
-  private def promotedDeclared(other: GrbVector, preserve: Boolean,
-      outDF: DataFrame): Option[GrbType] = {
-    val promoted = GrbType.promote(dtype, other.dtype)
-    if (preserve) Some(promoted)
-    else if ((declared.nonEmpty || other.declared.nonEmpty) &&
-        Grb.reprMatches(outDF.schema("v").dataType, promoted)) Some(promoted)
-    else None
-  }
+  /** the key columns plus `v` renamed to `name` */
+  private def valuesAs(d: DataFrame, name: String): DataFrame =
+    d.select(keys.map(col) :+ col("v").as(name): _*)
 
   /** intersection of structures (vector.py:365-368) */
-  def ewiseMult(other: GrbVector, op: BinaryOp): GrbVector = {
-    if (size != other.size) GraphblasException.dimensionMismatch(
-      s"ewise_mult sizes $size vs ${other.size}")
-    val b = other.df.select(col("i"), col("v").as("_bv"))
-    val promoted = GrbType.promote(dtype, other.dtype)
-    val out = Grb.binOp(op, col("v"), col("_bv"), promoted)
-    val outC = if (op.preserve) Grb.castTo(out, promoted) else out
-    val outDF = df.join(b, KEYS).select(col("i"), outC.as("v"))
+  def ewiseMult(other: C, op: BinaryOp): C = {
+    requireSameShape(other, "ewise_mult")
+    val outC = Grb.promotedOp(op, col("v"), col("_bv"), dtype, other.dtype)
+    val outDF = df.join(valuesAs(other.df, "_bv"), keys).select(keyed(outC): _*)
     val pd = promotedDeclared(other, op.preserve, outDF)
-    new GrbVector(Grb.uintGuard(outDF, pd), size, pd)
+    derive(outDF, pd)
   }
 
   /** union of structures; op where both present (vector.py:360-363).
@@ -308,29 +325,329 @@ final class GrbVector(val df: DataFrame, val size: Long,
     * always a bug — the one-sided pass-through silently changes the
     * op's meaning; refuse unless explicitly overridden.
     */
-  def ewiseAdd(other: GrbVector, op: BinaryOp,
-      requireMonoid: Boolean = true): GrbVector = {
+  def ewiseAdd(other: C, op: BinaryOp, requireMonoid: Boolean = true): C = {
     // message pins the reference's asserted phrasing: the suite catches
     // TypeError matching "require_monoid" (tests/from_grblas/test_matrix.py:289)
     require(!requireMonoid || Ops.isMonoidal(op),
       s"op '${op.name}' is not a Monoid and require_monoid=True " +
         "(pass requireMonoid = false to allow it)")
-    if (size != other.size) GraphblasException.dimensionMismatch(
-      s"ewise_add sizes $size vs ${other.size}")
-    val a = df.select(col("i"), col("v").as("_av"))
-    val b = other.df.select(col("i"), col("v").as("_bv"))
-    val joined = a.join(b, KEYS, "full_outer")
-    val promoted = GrbType.promote(dtype, other.dtype)
-    val out = Grb.binOp(op, col("_av"), col("_bv"), promoted)
-    val outC = if (op.preserve) Grb.castTo(out, promoted) else out
+    requireSameShape(other, "ewise_add")
+    val joined = valuesAs(df, "_av").join(valuesAs(other.df, "_bv"), keys, "full_outer")
+    val outC = Grb.promotedOp(op, col("_av"), col("_bv"), dtype, other.dtype)
     // analysis-only probe for the op's output type (no job is run)
     val outType = joined.select(outC.as("_t")).schema("_t").dataType
-    val outDF = joined.select(col("i"),
+    val outDF = joined.select(keyed(
       when(col("_av").isNotNull && col("_bv").isNotNull, outC)
-        .otherwise(coalesce(col("_av"), col("_bv")).cast(outType)).as("v"))
+        .otherwise(coalesce(col("_av"), col("_bv")).cast(outType))): _*)
     val pd = promotedDeclared(other, op.preserve, outDF)
-    new GrbVector(Grb.uintGuard(outDF, pd), size, pd)
+    derive(outDF, pd)
   }
+
+  // ---- reductions (SURVEY §2.6) ----
+  /** monoid fold of `v`, cast back into this dtype when the monoid
+    * preserves the domain
+    */
+  protected def aggPreserve(m: Monoid): Column = {
+    val agged = m.agg(col("v"))
+    if (m.preserve) Grb.castTo(agged, dtype) else agged
+  }
+
+  /** fold over every present value; EMPTY input → EMPTY scalar, not the
+    * monoid identity (expr.py:196-206; SURVEY §7.4 hard part 4) —
+    * the isNotNull filter implements that guard.
+    */
+  protected def foldAll(m: Monoid): GrbScalar = {
+    val d = if (m.preserve) declared else None
+    new GrbScalar(Grb.uintGuard(
+      df.agg(aggPreserve(m).as("v")).filter(col("v").isNotNull), d), d)
+  }
+
+  // ---- equality (base.py:35-92) ----
+  def isequal(other: C, checkDtype: Boolean = false): Boolean =
+    dims == other.dims && (!checkDtype || dtype == other.dtype) &&
+      isequalScalar(other).boolValue
+
+  /** isequal as a LAZY 1-row boolean scalar: same-structure,
+    * same-values full-outer comparison folded to a count of
+    * mismatches, with the metadata (shape/dtype) comparison baked in as
+    * a literal — lets equality participate in lazy pipelines and be
+    * driver-verified as a query.
+    */
+  def isequalScalar(other: C, checkDtype: Boolean = false): GrbScalar = {
+    val meta = dims == other.dims && (!checkDtype || dtype == other.dtype)
+    val mismatches = valuesAs(df, "_av").join(valuesAs(other.df, "_bv"), keys, "full_outer")
+      .filter(col("_av").isNull || col("_bv").isNull || col("_av") =!= col("_bv"))
+    new GrbScalar(mismatches.agg((count(lit(1)) === 0 && lit(meta)).as("v")))
+  }
+
+  def isclose(other: C, relTol: Double = 1e-7, absTol: Double = 0.0): Boolean =
+    dims == other.dims && iscloseScalar(other, relTol, absTol).boolValue
+
+  /** isclose as a LAZY 1-row boolean scalar — the tolerance sibling of
+    * isequalScalar (base.py:35-92): same structure and
+    * |a−b| ≤ atol + rtol·|b| per key, folded to one mismatch count.
+    * The predicate is IEEE-deterministic (fixed operand order), so an
+    * external engine reproduces the boolean bit-for-bit.
+    */
+  def iscloseScalar(other: C, relTol: Double = 1e-7, absTol: Double = 0.0): GrbScalar = {
+    val meta = dims == other.dims
+    def asDouble(d: DataFrame, name: String) =
+      d.select(keys.map(col) :+ col("v").cast(DoubleType).as(name): _*)
+    val mismatches = asDouble(df, "_av").join(asDouble(other.df, "_bv"), keys, "full_outer")
+      .filter(col("_av").isNull || col("_bv").isNull ||
+        abs(col("_av") - col("_bv")) > lit(absTol) + lit(relTol) * abs(col("_bv")))
+    new GrbScalar(mismatches.agg((count(lit(1)) === 0 && lit(meta)).as("v")))
+  }
+
+  /** merge an operation result into this collection under a descriptor —
+    * the `C(mask, accum, replace) << expr` write path.
+    */
+  def accept(result: C, desc: Desc): C =
+    derive(Merge(df, result.df, keys, desc), declared)
+
+  /** lineage checkpoint for iterative algorithms (base.py:345-346
+    * persist; SURVEY §3.4) — cache + localCheckpoint truncates the plan.
+    */
+  def persist(): C = derive(df.localCheckpoint(true), declared)
+
+  // ---- extract (SURVEY §2.3) ----
+  /** `C << A[ix_0, ix_1, …]`, one pass per key column: All passes
+    * through; At/Range are a filter + arithmetic reindex (no join — a
+    * `spark.range(10^11)` build side for a no-op was round-1's top
+    * scale hazard); Seqs/Dist pay an order- and duplicate-preserving
+    * gather join against the (pos, idx) mapping (replaces the
+    * reference's data×index chunk meshpoint/defrag machinery,
+    * expr.py:1108-1245). `sizeHints(k) >= 0` supplies a Dist axis's
+    * length so callers in loops (FastSV) skip a count() action per call.
+    */
+  protected def extractAxes(ixs: Seq[Ix], inputMask: Option[Mask],
+      sizeHints: Seq[Long]): C = {
+    val src = inputMask.fold(df)(_.filter(df, keys))
+    val (out, newDims) = keys.indices.foldLeft((src, Vector.empty[Long])) {
+      case ((d, ds), k) =>
+        val (key, dim) = (keys(k), dims(k))
+        Ix.normalize(ixs(k), dim) match {
+          case Ix.All => (d, ds :+ dim)
+          case norm @ (Ix.At(_) | Ix.Range(_, _, _)) =>
+            val pred = Ix.predicate(norm, col(key), dim).get
+            val pos = Ix.position(norm, col(key), dim).get
+            (rekeyed(d.filter(pred), key, pos), ds :+ Ix.length(norm, dim).get)
+          case norm =>
+            val idx = Ix.toDF(spark, norm, dim)
+            val len = Ix.length(norm, dim)
+              .getOrElse(if (sizeHints(k) >= 0) sizeHints(k) else idx.count())
+            val joined = d.join(idx.withColumnRenamed("idx", key), Seq(key))
+            (rekeyed(joined, key, col("pos")), ds :+ len)
+        }
+    }
+    derive(out, declared, newDims)
+  }
+
+  // ---- assign (SURVEY §2.7) ----
+  /** one axis of an assign region: `tag` (r = row axis, c = column
+    * axis) names its helper columns `_<tag>pos`, `_<tag><key>`, `_<tag>in`
+    */
+  private final class RegionAxis(val key: String, ix: Ix, val dim: Long, tag: String) {
+    val norm: Ix = Ix.normalize(ix, dim)
+    /** membership as a filter, when the index is expressible as one */
+    val pred: Option[Column] = Ix.predicate(norm, col(key), dim)
+    val pos = s"_${tag}pos"
+    val idxCol = s"_$tag$key"
+    val flag = s"_${tag}in"
+    /** (pos, idx) mapping; last-duplicate-wins on the global index:
+      * keep the value at max pos (expr.py:1463-1499 _uniquify) — only
+      * list/distributed indices can carry duplicates, so All/Range/At
+      * skip the dedup aggregate
+      */
+    lazy val idx: DataFrame = (norm match {
+      case Ix.All | Ix.Range(_, _, _) | Ix.At(_) => Ix.toDF(spark, norm, dim)
+      case _ => Ix.toDF(spark, norm, dim).groupBy("idx").agg(max("pos").as("pos"))
+    }).select(col("pos").as(pos), col("idx").as(idxCol))
+    /** rows of `d` whose key lies in this axis's index set */
+    def within(d: DataFrame): DataFrame = pred.map(p => d.filter(p)).getOrElse(
+      d.join(idx.select(col(idxCol).as(key)), Seq(key), "left_semi"))
+    /** move a region-shaped value's key onto the region: All =
+      * identity, Range = arithmetic reindex, otherwise a join
+      */
+    def place(d: DataFrame): DataFrame = norm match {
+      case Ix.All => d
+      case Ix.Range(a, _, s) => rekeyed(d, key, lit(a) + col(key) * lit(s))
+      case _ => rekeyed(d.join(idx.withColumnRenamed(pos, key), Seq(key)), key, col(idxCol))
+    }
+  }
+
+  /** C(mask, accum, replace)[ix_0, …] << obj  (GrB_assign) and
+    * C[ix_0, …](mask, accum, replace) << obj  (GxB_subassign, mask
+    * scoped to the region). One recipe (expr.py:1506-1785 collapsed):
+    *   1. Z_region = region-merge of newVals into C's region (accum)
+    *   2. Z        = outside ∪ Z_region
+    *   3. C'       = mask-merge(C, Z) — full-frame for assign,
+    *                 region-scoped for subassign.
+    * The region is the product of the axes' index sets. value: a scalar
+    * Column (broadcast to the region) or a region-shaped collection.
+    * Duplicate indices: LAST wins (expr.py:1463-1499 _uniquify).
+    */
+  protected def assignAxes(ixs: Seq[Ix], value: Either[Column, C], desc: Desc,
+      subassign: Boolean): C = {
+    val axes = keys.indices.map(k =>
+      new RegionAxis(keys(k), ixs(k), dims(k), Seq("r", "c")(k)))
+    val newVals: DataFrame = value match {
+      case Left(s) =>
+        // a scalar fill of a region is dense by definition; when a
+        // non-complemented mask is present only mask-covered keys can
+        // survive the merge, so enumerate those instead of the region
+        desc.mask match {
+          case Some(m) if !m.complement =>
+            axes.foldLeft(m.coveredKeys(keys))((d, a) => a.within(d)).select(keyed(s): _*)
+          case _ =>
+            axes.map(_.idx).reduce(_ crossJoin _)
+              .select(axes.map(a => col(a.idxCol).as(a.key)) :+ s.as("v"): _*)
+        }
+      case Right(c) =>
+        // grblas raises DimensionMismatch when the value's shape is
+        // not the region's shape — also what keeps the arithmetic
+        // reindex from writing outside the region
+        axes.zip(c.dims).foreach { case (a, d) =>
+          Ix.length(a.norm, a.dim).foreach(len =>
+            if (d != len) GraphblasException.dimensionMismatch(
+              s"assign value extent $d on ${a.key} vs region $len"))
+        }
+        axes.foldLeft(c.df)((d, a) => a.place(d)).select(coo: _*)
+    }
+    // region membership without a dense keys crossJoin: filter when the
+    // axis is predicate-expressible, left-join flags otherwise
+    var flagged = df
+    val in = axes.map(a => a.pred.getOrElse {
+      flagged = flagged.join(
+        a.idx.select(col(a.idxCol).as(a.key), lit(true).as(a.flag)), Seq(a.key), "left")
+      col(a.flag).isNotNull
+    }).reduce(_ && _)
+    val inside = flagged.filter(in).select(coo: _*)
+    val outside = flagged.filter(!in).select(coo: _*)
+    val out =
+      if (subassign) {
+        // mask/replace confined to the region (expr.py:1446-1452)
+        outside.unionByName(Merge(inside, newVals, keys, desc))
+      } else {
+        val zRegion = desc.accum.fold(newVals)(acc => Merge.outerAccum(inside, newVals, keys, acc))
+        // full-frame mask merge; accum already applied in step 1
+        // (replace deletes uncovered entries even OUTSIDE the region —
+        //  expr.py:1041-1057)
+        Merge(df, outside.unionByName(zRegion), keys, Desc(desc.mask, None, desc.replace))
+      }
+    derive(out, declared)
+  }
+}
+
+/** The GrbVector and GrbMatrix companions' builders (reference
+  * vector.py:100-160,448-504 and matrix.py:81-248), written once over
+  * the key columns; each companion keeps its own arity as thin forms.
+  * `kind` and `dimsName` word the reference-pinned messages.
+  */
+private[graft] abstract class GrbCollectionCompanion[C <: GrbCollection[C]](
+    val KEYS: Seq[String], kind: String, dimsName: String) {
+  /** the raw constructor */
+  protected def make(df: DataFrame, dims: Seq[Long], declared: Option[GrbType]): C
+
+  /** the one labelled constructor every derived result goes through:
+    * sets the declared dtype and applies [[Grb.uintGuard]] (a no-op in
+    * the default `wrap` mode)
+    */
+  private[graft] def labelled(df: DataFrame, dims: Seq[Long], declared: Option[GrbType]): C =
+    make(Grb.uintGuard(df, declared)(Grb.u64Mode(df.sparkSession)), dims, declared)
+
+  private def schema(dtype: GrbType)(implicit m: Grb.U64Mode): StructType =
+    StructType(KEYS.map(StructField(_, LongType, nullable = false)) :+
+      StructField("v", Grb.store(dtype), nullable = false))
+
+  private[core] def emptyOf(spark: SparkSession, dtype: GrbType, dims: Seq[Long]): C = {
+    implicit val m: Grb.U64Mode = Grb.u64Mode(spark)
+    labelled(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema(dtype)),
+      dims, Some(dtype))
+  }
+
+  /** build from (keys, value) entries with optional dup-resolution:
+    * dupAgg combines duplicate keys; absent → duplicates are an error.
+    * A negative dimension is inferred as 1+max(key).
+    */
+  protected def fromEntries(spark: SparkSession, entries: Seq[(Seq[Long], Any)],
+      dtype: GrbType, dims: Seq[Long], dupAgg: Option[Column => Column]): C = {
+    // reference-pinned phrasings (tests/from_grblas/test_vector.py:66,73,
+    // test_matrix.py:81,91)
+    if (entries.isEmpty && dims.exists(_ < 0)) throw new GraphblasException(
+      s"No indices provided. Unable to infer $dimsName.")
+    if (dupAgg.isEmpty && entries.map(_._1).distinct.size != entries.size)
+      throw new GraphblasException(
+        "Duplicate indices found, must provide `dup_op` BinaryOp")
+    implicit val m: Grb.U64Mode = Grb.u64Mode(spark)
+    val rows = entries.map { case (ix, v) =>
+      org.apache.spark.sql.Row.fromSeq(ix :+ Grb.hostValue(v, dtype)) }
+    val built = fromFrame(spark.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema(dtype)), dims, dupAgg)
+    labelled(built.df, built.dims, Some(dtype))
+  }
+
+  /** distributed construction from an existing COO DataFrame; see
+    * [[GrbMatrix.fromDF]] for the index contract and `clusterBy`
+    */
+  protected def fromFrame(df0: DataFrame, dims: Seq[Long],
+      dupAgg: Option[Column => Column], clusterBy: Seq[String] = Nil): C = {
+    val base =
+      if (clusterBy.nonEmpty) df0.repartition(clusterBy.map(col): _*)
+      else df0
+    val df = dupAgg match {
+      case Some(agg) => base.groupBy(KEYS.map(col): _*).agg(agg(col("v")).as("v"))
+      case None      => base.select(KEYS.map(col) :+ col("v"): _*)
+    }
+    val known =
+      if (dims.forall(_ >= 0)) dims
+      else {
+        val r = df.agg(max(col(KEYS.head)), KEYS.tail.map(k => max(col(k))): _*)
+          .collect().head
+        dims.indices.map(k => if (dims(k) >= 0) dims(k)
+          else Option(r.get(k)).map(_.asInstanceOf[Long] + 1L).getOrElse(0L))
+      }
+    labelled(df, known, None)
+  }
+
+  /** populate an existing, must-be-empty collection: OutputNotEmpty /
+    * IndexOutOfBound checks (vector.py:448-504, matrix.py:507-533)
+    */
+  protected def buildInto(target: C, entries: Seq[(Seq[Long], Any)],
+      dupAgg: Option[Column => Column]): C = {
+    if (target.nvals != 0L) GraphblasException.outputNotEmpty(kind)
+    if (!entries.forall(_._1.zip(target.dims).forall { case (x, d) => x >= 0 && x < d }))
+      GraphblasException.indexOutOfBound(
+        s"indices must be < shape ${target.dims.mkString("(", ", ", ")")}")
+    fromEntries(target.spark, entries, target.dtype, target.dims, dupAgg)
+  }
+}
+
+/** 1-dim sparse vector: COO DataFrame[(i: Long, v: T)] + logical size.
+  * Reference: dask_grblas/vector.py:77-200. The shared collection
+  * methods live on [[GrbCollection]].
+  */
+final class GrbVector(val df: DataFrame, val size: Long,
+    private[graft] val declared: Option[GrbType] = None)
+    extends GrbCollection[GrbVector] {
+  import GrbVector.KEYS
+
+  protected def companion: GrbVector.type = GrbVector
+  private[graft] def dims: Seq[Long] = Seq(size)
+  protected def requireSameShape(other: GrbVector, op: String): Unit =
+    if (size != other.size) GraphblasException.dimensionMismatch(
+      s"$op sizes $size vs ${other.size}")
+
+  /** metadata-only when growing; filter when shrinking
+    * (vector.py:236-270)
+    */
+  def resize(newSize: Long): GrbVector =
+    new GrbVector(if (newSize >= size) df else df.filter(col("i") < newSize),
+      newSize, declared)
+
+  /** positional op: value = index (unary.positioni etc.) */
+  def applyPositional: GrbVector = new GrbVector(df.select(col("i"), col("i").as("v")), size)
 
   // ---- products (SURVEY §2.5) ----
   /** row-vector × matrix (vector.py:423-428): join on this.i == A.i,
@@ -346,16 +663,13 @@ final class GrbVector(val df: DataFrame, val size: Long,
     // the contracted index (this vector's i)
     val mult = sr.positional match {
       case Some(pf) => pf(lit(0L), col("i"), col("j"))
-      case None =>
-        val promoted = GrbType.promote(dtype, a.dtype)
-        val p = Grb.binOp(sr.mult, col("_xv"), col("v"), promoted)
-        if (sr.mult.preserve) Grb.castTo(p, promoted) else p
+      case None => Grb.promotedOp(sr.mult, col("_xv"), col("v"), dtype, a.dtype)
     }
     val prod = a.df.join(self, KEYS).select(col("j").as("i"), mult.as("_p"))
     val agged = sr.add.agg(col("_p"))
     val aggC = if (sr.add.preserve) Grb.castToType(agged, prod.schema("_p").dataType) else agged
     val out = prod.groupBy("i").agg(aggC.as("v"))
-    val pd = Grb.srDeclared(dtype, declared, a.dtype, a.declared, sr, out)
+    val pd = srDeclared(a, sr, out)
     new GrbVector(Grb.uintGuard(out, pd), a.ncols, pd)
   }
 
@@ -370,26 +684,15 @@ final class GrbVector(val df: DataFrame, val size: Long,
   /** outer product (vector.py:394-421 stub) */
   def outer(other: GrbVector, op: BinaryOp): GrbMatrix = {
     val b = other.df.select(col("i").as("j"), col("v").as("_bv"))
-    val promoted = GrbType.promote(dtype, other.dtype)
-    val out = Grb.binOp(op, col("v"), col("_bv"), promoted)
-    val outC = if (op.preserve) Grb.castTo(out, promoted) else out
+    val outC = Grb.promotedOp(op, col("v"), col("_bv"), dtype, other.dtype)
     val outDF = df.crossJoin(b).select(col("i"), col("j"), outC.as("v"))
     val pd = promotedDeclared(other, op.preserve, outDF)
     new GrbMatrix(Grb.uintGuard(outDF, pd), size, other.size, pd)
   }
 
   // ---- reductions (SURVEY §2.6) ----
-  /** fold over present values; EMPTY input → EMPTY scalar, not the
-    * monoid identity (expr.py:196-206; SURVEY §7.4 hard part 4) —
-    * the isNotNull filter implements that guard.
-    */
-  def reduce(m: Monoid): GrbScalar = {
-    val agged = m.agg(col("v"))
-    val aggC = if (m.preserve) Grb.castTo(agged, dtype) else agged
-    new GrbScalar(Grb.uintGuard(
-      df.agg(aggC.as("v")).filter(col("v").isNotNull), carried(m.preserve)),
-      carried(m.preserve))
-  }
+  /** fold over present values, see [[GrbCollection.foldAll]] */
+  def reduce(m: Monoid): GrbScalar = foldAll(m)
 
   /** reduce with accum into an existing target Scalar (reference
     * expr.py:293-339 + _reduce_accum expr.py:1901-1915)
@@ -414,104 +717,17 @@ final class GrbVector(val df: DataFrame, val size: Long,
     new GrbScalar(df.join(broadcast(ix), col("i") === col("_ix")).select(col("v")))
   }
 
-  /** `w << v[index]`: order- and duplicate-preserving gather.
-    * All → identity; Range → filter + arithmetic reindex (no join; a
-    * `spark.range(10^11)` build side for a no-op was round-1's top
-    * scale hazard); At/Seqs/Dist → join against the (pos, idx) mapping
-    * (replaces the reference's data×index chunk meshpoint machinery,
-    * expr.py:1108-1245). `sizeHint` supplies the Dist index length so
-    * callers in loops (FastSV) skip a count() action per call.
+  /** `w << v[index]`: order- and duplicate-preserving gather (see
+    * [[GrbCollection.extractAxes]]). `sizeHint` supplies the Dist index
+    * length.
     */
-  def extract(ix: Ix, inputMask: Option[Mask] = None, sizeHint: Long = -1L): GrbVector = {
-    val src = inputMask.fold(df)(_.filter(df, KEYS))
-    Ix.normalize(ix, size) match {
-      case Ix.All => new GrbVector(src, size, declared)
-      case r @ Ix.Range(_, _, _) =>
-        val pred = Ix.predicate(r, col("i"), size).get
-        val pos = Ix.position(r, col("i"), size).get
-        new GrbVector(src.filter(pred).select(pos.as("i"), col("v")),
-          Ix.length(r, size).get, declared)
-      case norm =>
-        val idx = Ix.toDF(spark, norm, size)
-        val newSize = Ix.length(norm, size)
-          .getOrElse(if (sizeHint >= 0) sizeHint else idx.count())
-        val joined = src.join(idx.withColumnRenamed("idx", "i"), KEYS)
-          .select(col("pos").as("i"), col("v"))
-        new GrbVector(joined, newSize, declared)
-    }
-  }
+  def extract(ix: Ix, inputMask: Option[Mask] = None, sizeHint: Long = -1L): GrbVector =
+    extractAxes(Seq(ix), inputMask, Seq(sizeHint))
 
-  // ---- assign (SURVEY §2.7) ----
-  /** C(mask, accum, replace)[idx] << obj  (GrB_assign) and
-    * C[idx](mask, accum, replace) << obj  (GxB_subassign, mask scoped
-    * to the region). One recipe (expr.py:1506-1785 collapsed):
-    *   1. Z_region = region-merge of newVals into C's region (accum)
-    *   2. Z        = outside ∪ Z_region
-    *   3. C'       = mask-merge(C, Z) — full-frame for assign,
-    *                 region-scoped for subassign.
-    * Duplicate indices: LAST wins (expr.py:1463-1499 _uniquify).
-    */
+  /** `w[index] << value`, see [[GrbCollection.assignAxes]] */
   def assign(ix: Ix, value: Either[Column, GrbVector], desc: Desc = Desc.plain,
-      subassign: Boolean = false): GrbVector = {
-    val norm = Ix.normalize(ix, size)
-    val pred = Ix.predicate(norm, col("i"), size)
-    // last-duplicate-wins on the global index: keep value at max pos
-    // (expr.py:1463-1499 _uniquify); only list/distributed indices can
-    // carry duplicates — All/Range/At skip the dedup aggregate
-    lazy val idxU = norm match {
-      case Ix.All | Ix.Range(_, _, _) | Ix.At(_) => Ix.toDF(spark, norm, size)
-      case _ => Ix.toDF(spark, norm, size).groupBy("idx").agg(max(col("pos")).as("pos"))
-    }
-    lazy val regionKeys = idxU.select(col("idx").as("i"))
-    val newVals: DataFrame = value match {
-      case Left(s) =>
-        // a scalar fill of a region is dense by definition; when a
-        // non-complemented mask is present only mask-covered keys can
-        // survive the merge, so enumerate those instead of the region
-        val keysDF = desc.mask match {
-          case Some(m) if !m.complement =>
-            val mk = m.coveredKeys(KEYS)
-            pred.map(p => mk.filter(p))
-              .getOrElse(mk.join(regionKeys, KEYS, "left_semi"))
-          case _ => regionKeys
-        }
-        keysDF.select(col("i"), s.as("v"))
-      case Right(vec) =>
-        // grblas raises DimensionMismatch when the value's shape is
-        // not the region's shape — also what keeps the arithmetic
-        // reindex below from writing outside the region
-        Ix.length(norm, size).foreach(len =>
-          if (vec.size != len) GraphblasException.dimensionMismatch(
-            s"assign value size ${vec.size} vs region $len"))
-        norm match {
-          // All/Range: arithmetic reindex, no join
-          case Ix.All => vec.df
-          case Ix.Range(a, _, s) =>
-            vec.df.select((lit(a) + col("i") * lit(s)).as("i"), col("v"))
-          case _ =>
-            vec.df.join(idxU.withColumnRenamed("pos", "i"), KEYS)
-              .select(col("idx").as("i"), col("v"))
-        }
-    }
-    val inside = pred.map(df.filter).getOrElse(df.join(regionKeys, KEYS, "left_semi"))
-    val outside = pred.map(p => df.filter(!p)).getOrElse(df.join(regionKeys, KEYS, "left_anti"))
-    if (subassign) {
-      // mask/replace confined to the region (expr.py:1446-1452)
-      val zRegion = Merge(inside, newVals, KEYS, desc)
-      new GrbVector(outside.unionByName(zRegion), size)
-    } else {
-      val zRegion = desc.accum match {
-        case None      => newVals
-        case Some(acc) => Merge.outerAccum(inside, newVals, KEYS, acc)
-      }
-      val z = outside.unionByName(zRegion)
-      // full-frame mask merge; accum already applied in step 1
-      // (replace deletes uncovered entries even OUTSIDE the region —
-      //  expr.py:1041-1057)
-      val out = Merge(df, z, KEYS, Desc(desc.mask, None, desc.replace))
-      new GrbVector(out, size)
-    }
-  }
+      subassign: Boolean = false): GrbVector =
+    assignAxes(Seq(ix), value, desc, subassign)
 
   /** scatter-with-combine `lhs[indices] << rhs` where duplicate target
     * indices are REDUCED by dupOp (reference reduce_assign,
@@ -533,7 +749,7 @@ final class GrbVector(val df: DataFrame, val size: Long,
       case Some(acc) => Merge.outerAccum(inside, scattered, KEYS, acc)
     }
     val z = outside.unionByName(zRegion)
-    new GrbVector(Merge(df, z, KEYS, Desc(desc.mask, None, desc.replace)), size)
+    derive(Merge(df, z, KEYS, Desc(desc.mask, None, desc.replace)), declared)
   }
 
   def del(n: Long): GrbVector = {
@@ -550,158 +766,54 @@ final class GrbVector(val df: DataFrame, val size: Long,
     new GrbMatrix(df.select(col("i"), lit(0L).as("j"), col("v")),
       size, 1L, declared)
 
-  // ---- equality (base.py:35-92) ----
-  def isequal(other: GrbVector, checkDtype: Boolean = false): Boolean = {
-    if (size != other.size) return false
-    if (checkDtype && dtype != other.dtype) return false
-    isequalScalar(other).boolValue
-  }
-
-  /** isequal as a LAZY 1-row boolean scalar: same-structure,
-    * same-values full-outer comparison folded to a count of
-    * mismatches, with the metadata (size/dtype) comparison baked in as
-    * a literal — lets equality participate in lazy pipelines and be
-    * driver-verified as a query.
-    */
-  def isequalScalar(other: GrbVector, checkDtype: Boolean = false): GrbScalar = {
-    val meta = size == other.size && (!checkDtype || dtype == other.dtype)
-    val a = df.select(col("i"), col("v").as("_av"))
-    val b = other.df.select(col("i"), col("v").as("_bv"))
-    val mismatches = a.join(b, KEYS, "full_outer")
-      .filter(col("_av").isNull || col("_bv").isNull || col("_av") =!= col("_bv"))
-    new GrbScalar(mismatches.agg(
-      (org.apache.spark.sql.functions.count(lit(1)) === 0 && lit(meta)).as("v")))
-  }
-
-  def isclose(other: GrbVector, relTol: Double = 1e-7, absTol: Double = 0.0): Boolean =
-    size == other.size && iscloseScalar(other, relTol, absTol).boolValue
-
-  /** isclose as a LAZY 1-row boolean scalar — the tolerance sibling of
-    * isequalScalar (base.py:35-92): same structure and
-    * |a−b| ≤ atol + rtol·|b| per key, folded to one mismatch count.
-    * The predicate is IEEE-deterministic (fixed operand order), so an
-    * external engine reproduces the boolean bit-for-bit.
-    */
-  def iscloseScalar(other: GrbVector, relTol: Double = 1e-7, absTol: Double = 0.0): GrbScalar = {
-    val meta = size == other.size
-    val a = df.select(col("i"), col("v").cast(DoubleType).as("_av"))
-    val b = other.df.select(col("i"), col("v").cast(DoubleType).as("_bv"))
-    val mismatches = a.join(b, KEYS, "full_outer")
-      .filter(col("_av").isNull || col("_bv").isNull ||
-        abs(col("_av") - col("_bv")) > lit(absTol) + lit(relTol) * abs(col("_bv")))
-    new GrbScalar(mismatches.agg(
-      (org.apache.spark.sql.functions.count(lit(1)) === 0 && lit(meta)).as("v")))
-  }
-
-  /** merge an operation result into this collection under a descriptor —
-    * the `C(mask, accum, replace) << expr` write path.
-    */
-  def accept(result: GrbVector, desc: Desc): GrbVector =
-    new GrbVector(Merge(df, result.df, KEYS, desc), size, declared)
-
   /** globally ordered COO extraction (vector.py:506-548) */
   def toValues: Seq[(Long, Any)] =
     df.orderBy("i").collect().toSeq.map(r => (r.getLong(0), r.get(1)))
-
-  /** lineage checkpoint for iterative algorithms (base.py:345-346
-    * persist; SURVEY §3.4) — cache + localCheckpoint truncates the plan.
-    */
-  def persist(): GrbVector = new GrbVector(df.localCheckpoint(true), size, declared)
 
   def repartitionByIndex(n: Int): GrbVector =
     new GrbVector(df.repartitionByRange(n, col("i")), size, declared)
 }
 
-object GrbVector {
-  val KEYS: Seq[String] = Seq("i")
+object GrbVector extends GrbCollectionCompanion[GrbVector](Seq("i"), "vector", "size") {
+  protected def make(df: DataFrame, dims: Seq[Long], declared: Option[GrbType]): GrbVector =
+    new GrbVector(df, dims.head, declared)
 
-  def empty(spark: SparkSession, dtype: GrbType, size: Long): GrbVector = {
-    implicit val m: Grb.U64Mode = Grb.u64Mode(spark)
-    val schema = StructType(Seq(
-      StructField("i", LongType, nullable = false),
-      StructField("v", Grb.store(dtype), nullable = false)))
-    new GrbVector(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema),
-      size, Some(dtype))
-  }
+  def empty(spark: SparkSession, dtype: GrbType, size: Long): GrbVector =
+    emptyOf(spark, dtype, Seq(size))
 
-  /** build from (index, value) pairs with optional dup-resolution
-    * (vector.py:100-160): dupAgg combines duplicate indices; absent →
-    * duplicates are an error. size: explicit, or 1+max(i).
+  /** build from (index, value) pairs (vector.py:100-160); size:
+    * explicit, or 1+max(i)
     */
   def fromValues(spark: SparkSession, pairs: Seq[(Long, Any)], dtype: GrbType,
-      size: Long = -1L, dupAgg: Option[Column => Column] = None): GrbVector = {
-    // reference-pinned phrasings (tests/from_grblas/test_vector.py:66,73)
-    if (pairs.isEmpty && size < 0) throw new GraphblasException(
-      "No indices provided. Unable to infer size.")
-    if (dupAgg.isEmpty && pairs.map(_._1).distinct.size != pairs.size)
-      throw new GraphblasException(
-        "Duplicate indices found, must provide `dup_op` BinaryOp")
-    implicit val m: Grb.U64Mode = Grb.u64Mode(spark)
-    val schema = StructType(Seq(
-      StructField("i", LongType, nullable = false),
-      StructField("v", Grb.store(dtype), nullable = false)))
-    val rows = pairs.map { case (i, v) =>
-      org.apache.spark.sql.Row(i, Grb.hostValue(v, dtype)) }
-    val df0 = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
-    val built = fromDF(df0, size, dupAgg)
-    new GrbVector(built.df, built.size, Some(dtype))
-  }
+      size: Long = -1L, dupAgg: Option[Column => Column] = None): GrbVector =
+    fromEntries(spark, pairs.map { case (i, v) => (Seq(i), v) }, dtype, Seq(size), dupAgg)
 
-  /** distributed construction from an existing COO DataFrame */
   def fromDF(df0: DataFrame, size: Long = -1L,
-      dupAgg: Option[Column => Column] = None): GrbVector = {
-    val df = dupAgg match {
-      case Some(agg) => df0.groupBy("i").agg(agg(col("v")).as("v"))
-      case None      => df0.select(col("i"), col("v"))
-    }
-    val sz = if (size >= 0) size
-      else df.agg(max(col("i"))).collect().headOption
-        .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long] + 1L)).getOrElse(0L)
-    new GrbVector(df, sz)
-  }
+      dupAgg: Option[Column => Column] = None): GrbVector =
+    fromFrame(df0, Seq(size), dupAgg)
 
-  /** populate an existing, must-be-empty vector (vector.py:448-504):
-    * OutputNotEmpty / IndexOutOfBound checks.
-    */
   def build(target: GrbVector, pairs: Seq[(Long, Any)],
-      dupAgg: Option[Column => Column] = None): GrbVector = {
-    if (target.nvals != 0L) GraphblasException.outputNotEmpty("vector")
-    if (!pairs.forall(p => p._1 >= 0 && p._1 < target.size))
-      GraphblasException.indexOutOfBound(s"index must be < size ${target.size}")
-    fromValues(target.spark, pairs, target.dtype, target.size, dupAgg)
-  }
+      dupAgg: Option[Column => Column] = None): GrbVector =
+    buildInto(target, pairs.map { case (i, v) => (Seq(i), v) }, dupAgg)
 }
 
 /** 2-dim sparse matrix: COO DataFrame[(i, j, v)] + (nrows, ncols).
   * Reference: dask_grblas/matrix.py:43-248. Transpose is a zero-shuffle
-  * lazy projection (matrix.py:682-753 TransposedMatrix).
+  * lazy projection (matrix.py:682-753 TransposedMatrix). The shared
+  * collection methods live on [[GrbCollection]].
   */
 final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
-    private[core] val declared: Option[GrbType] = None) {
+    private[graft] val declared: Option[GrbType] = None)
+    extends GrbCollection[GrbMatrix] {
   import GrbMatrix.KEYS
 
-  def spark: SparkSession = df.sparkSession
-  /** UINT64 semantics come from the owning session's conf, resolved
-    * fresh at each op build — see [[Grb.Uint64ModeKey]]
-    */
-  private implicit def u64m: Grb.U64Mode = Grb.u64Mode(df.sparkSession)
-  def dtype: GrbType =
-    declared.getOrElse(GrbType.fromSpark(df.schema("v").dataType))
-  lazy val nvals: Long = df.count()
-  /** nvals as a LAZY 1-row scalar (no driver action until consumed) */
-  def nvalsScalar: GrbScalar =
-    new GrbScalar(df.agg(count(lit(1)).cast(LongType).as("v")))
+  protected def companion: GrbMatrix.type = GrbMatrix
+  private[graft] def dims: Seq[Long] = Seq(nrows, ncols)
+  protected def requireSameShape(other: GrbMatrix, op: String): Unit =
+    if (shape != other.shape) GraphblasException.dimensionMismatch(
+      s"$op shapes $shape vs ${other.shape}")
+
   def shape: (Long, Long) = (nrows, ncols)
-
-  def dup(dtype: GrbType = dtype, mask: Option[Mask] = None): GrbMatrix = {
-    val d0 = mask.fold(df)(_.filter(df, KEYS))
-    new GrbMatrix(d0.select(col("i"), col("j"), Grb.castTo(col("v"), dtype).as("v")),
-      nrows, ncols, Some(dtype))
-  }
-
-  def clear: GrbMatrix = GrbMatrix.empty(spark, dtype, nrows, ncols)
 
   def resize(newRows: Long, newCols: Long): GrbMatrix = {
     val d = if (newRows >= nrows && newCols >= ncols) df
@@ -716,90 +828,10 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     new GrbMatrix(df.select(col("j").as("i"), col("i").as("j"), col("v")),
       ncols, nrows, declared)
 
-  // ---- apply ----
-  private def keepType(preserve: Boolean, c: Column): Column =
-    if (preserve) Grb.castTo(c, dtype) else c
-
-  private def carried(preserve: Boolean): Option[GrbType] =
-    if (preserve) declared else None
-
-  /** see GrbVector.promotedDeclared */
-  private def promotedDeclared(other: GrbMatrix, preserve: Boolean,
-      outDF: DataFrame): Option[GrbType] = {
-    val promoted = GrbType.promote(dtype, other.dtype)
-    if (preserve) Some(promoted)
-    else if ((declared.nonEmpty || other.declared.nonEmpty) &&
-        Grb.reprMatches(outDF.schema("v").dataType, promoted)) Some(promoted)
-    else None
-  }
-
-  /** see GrbVector.carriedOut — the same label-retention rule */
-  private def carriedOut(preserve: Boolean, out: DataFrame): Option[GrbType] =
-    if (preserve) declared
-    else if (declared.nonEmpty && Grb.reprMatches(out.schema("v").dataType, dtype)) declared
-    else None
-
-  def apply(op: UnaryOp): GrbMatrix = {
-    val outDF = df.select(col("i"), col("j"),
-      keepType(op.preserve, op(col("v"))).as("v"))
-    val d = carriedOut(op.preserve, outDF)
-    new GrbMatrix(Grb.uintGuard(outDF, d), nrows, ncols, d)
-  }
-  def applyLeft(op: BinaryOp, left: Column): GrbMatrix = {
-    val outDF = df.select(col("i"), col("j"),
-      keepType(op.preserve, Grb.binOp(op, left, col("v"), dtype)).as("v"))
-    val d = carriedOut(op.preserve, outDF)
-    new GrbMatrix(Grb.uintGuard(outDF, d), nrows, ncols, d)
-  }
-  def applyRight(op: BinaryOp, right: Column): GrbMatrix = {
-    val outDF = df.select(col("i"), col("j"),
-      keepType(op.preserve, Grb.binOp(op, col("v"), right, dtype)).as("v"))
-    val d = carriedOut(op.preserve, outDF)
-    new GrbMatrix(Grb.uintGuard(outDF, d), nrows, ncols, d)
-  }
   /** positional: value = row index (positioni) or col index (positionj) */
   def applyPositional(rowIndex: Boolean): GrbMatrix =
     new GrbMatrix(df.select(col("i"), col("j"),
       (if (rowIndex) col("i") else col("j")).as("v")), nrows, ncols)
-
-  def selectOp(pred: Column => Column): GrbMatrix =
-    new GrbMatrix(df.filter(pred(col("v"))), nrows, ncols, declared)
-
-  // ---- ewise ----
-  def ewiseMult(other: GrbMatrix, op: BinaryOp): GrbMatrix = {
-    if (shape != other.shape) GraphblasException.dimensionMismatch(
-      s"ewise_mult shapes $shape vs ${other.shape}")
-    val b = other.df.select(col("i"), col("j"), col("v").as("_bv"))
-    val promoted = GrbType.promote(dtype, other.dtype)
-    val out = Grb.binOp(op, col("v"), col("_bv"), promoted)
-    val outC = if (op.preserve) Grb.castTo(out, promoted) else out
-    val outDF = df.join(b, KEYS).select(col("i"), col("j"), outC.as("v"))
-    val pd = promotedDeclared(other, op.preserve, outDF)
-    new GrbMatrix(Grb.uintGuard(outDF, pd), nrows, ncols, pd)
-  }
-
-  /** see GrbVector.ewiseAdd for the `requireMonoid` contract */
-  def ewiseAdd(other: GrbMatrix, op: BinaryOp,
-      requireMonoid: Boolean = true): GrbMatrix = {
-    require(!requireMonoid || Ops.isMonoidal(op),
-      s"op '${op.name}' is not a Monoid and require_monoid=True " +
-        "(pass requireMonoid = false to allow it)")
-    if (shape != other.shape) GraphblasException.dimensionMismatch(
-      s"ewise_add shapes $shape vs ${other.shape}")
-    val a = df.select(col("i"), col("j"), col("v").as("_av"))
-    val b = other.df.select(col("i"), col("j"), col("v").as("_bv"))
-    val joined = a.join(b, KEYS, "full_outer")
-    val promoted = GrbType.promote(dtype, other.dtype)
-    val out = Grb.binOp(op, col("_av"), col("_bv"), promoted)
-    val outC = if (op.preserve) Grb.castTo(out, promoted) else out
-    // analysis-only probe: pass-through cast to the op's output dtype
-    val outType = joined.select(outC.as("_t")).schema("_t").dataType
-    val outDF = joined.select(col("i"), col("j"),
-      when(col("_av").isNotNull && col("_bv").isNotNull, outC)
-        .otherwise(coalesce(col("_av"), col("_bv")).cast(outType)).as("v"))
-    val pd = promotedDeclared(other, op.preserve, outDF)
-    new GrbMatrix(Grb.uintGuard(outDF, pd), nrows, ncols, pd)
-  }
 
   // ---- products (SURVEY §2.5: the heart of the engine) ----
   /** C(i,k) = ⊕_j A(i,j) ⊗ B(j,k). One equi-join on the contracted
@@ -862,10 +894,7 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     val b = shuffled(other.df.select(col("i").as("_k"), col("j"), col("v").as("_bv")))
     val mult = sr.positional match {
       case Some(pf) => pf(col("i"), col("_k"), col("j"))
-      case None =>
-        val promoted = GrbType.promote(dtype, other.dtype)
-        val p = Grb.binOp(sr.mult, col("_av"), col("_bv"), promoted)
-        if (sr.mult.preserve) Grb.castTo(p, promoted) else p
+      case None => Grb.promotedOp(sr.mult, col("_av"), col("_bv"), dtype, other.dtype)
     }
     val prod0 = a.join(b, Seq("_k")).select(col("i"), col("j"), mult.as("_p"))
     val prod = mask.fold(prod0)(m => m.filter(prod0, KEYS))
@@ -894,7 +923,7 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
           .groupBy("_ij").agg(aggC.as("v"))
           .select(expr(s"_ij DIV ${nc}L").as("i"), (col("_ij") % nc).as("j"), col("v"))
       else prod.groupBy("i", "j").agg(aggC.as("v"))
-    val pd = Grb.srDeclared(dtype, declared, other.dtype, other.declared, sr, out)
+    val pd = srDeclared(other, sr, out)
     new GrbMatrix(Grb.uintGuard(out, pd), nrows, other.ncols, pd)
   }
 
@@ -927,17 +956,14 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     // positional mult: the column vector is n×1, so secondj ≡ 0
     val mult = sr.positional match {
       case Some(pf) => pf(col("i"), col("j"), lit(0L))
-      case None =>
-        val promoted = GrbType.promote(dtype, vec.dtype)
-        val p = Grb.binOp(sr.mult, col("v"), col("_xv"), promoted)
-        if (sr.mult.preserve) Grb.castTo(p, promoted) else p
+      case None => Grb.promotedOp(sr.mult, col("v"), col("_xv"), dtype, vec.dtype)
     }
     val prod0 = df.join(v, Seq("j")).select(col("i"), mult.as("_p"))
     val prod = mask.fold(prod0)(m => m.filter(prod0, GrbVector.KEYS))
     val agged = sr.add.agg(col("_p"))
     val aggC = if (sr.add.preserve) Grb.castToType(agged, prod0.schema("_p").dataType) else agged
     val out = prod.groupBy("i").agg(aggC.as("v"))
-    val pd = Grb.srDeclared(dtype, declared, vec.dtype, vec.declared, sr, out)
+    val pd = srDeclared(vec, sr, out)
     new GrbVector(Grb.uintGuard(out, pd), nrows, pd)
   }
 
@@ -947,9 +973,7 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     */
   def kronecker(other: GrbMatrix, op: BinaryOp): GrbMatrix = {
     val b = other.df.select(col("i").as("_bi"), col("j").as("_bj"), col("v").as("_bv"))
-    val promoted = GrbType.promote(dtype, other.dtype)
-    val out = Grb.binOp(op, col("v"), col("_bv"), promoted)
-    val outC = if (op.preserve) Grb.castTo(out, promoted) else out
+    val outC = Grb.promotedOp(op, col("v"), col("_bv"), dtype, other.dtype)
     val outDF = df.crossJoin(b).select(
       (col("i") * other.nrows + col("_bi")).as("i"),
       (col("j") * other.ncols + col("_bj")).as("j"),
@@ -963,10 +987,6 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     * reference's per-chunk reduce + ewise_add-of-partials combine
     * (expr.py:1844-1869).
     */
-  private def aggPreserve(m: Monoid): Column = {
-    val agged = m.agg(col("v"))
-    if (m.preserve) Grb.castTo(agged, dtype) else agged
-  }
   def reduceRowwise(m: Monoid): GrbVector = {
     val out = df.groupBy("i").agg(aggPreserve(m).as("v"))
     val pd = carriedOut(m.preserve, out)
@@ -978,10 +998,7 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     val pd = carriedOut(m.preserve, out)
     new GrbVector(Grb.uintGuard(out, pd), ncols, pd)
   }
-  def reduceScalar(m: Monoid): GrbScalar =
-    new GrbScalar(Grb.uintGuard(
-      df.agg(aggPreserve(m).as("v")).filter(col("v").isNotNull),
-      carried(m.preserve)), carried(m.preserve))
+  def reduceScalar(m: Monoid): GrbScalar = foldAll(m)
   def reduceScalarInto(target: GrbScalar, m: Monoid, accum: Option[BinaryOp]): GrbScalar =
     target.merge(reduceScalar(m), accum)
 
@@ -1006,37 +1023,15 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     new GrbVector(colV, nrows).extract(rowIx)
   }
 
-  /** submatrix extract C << A[rows, cols]. All axes pass through
-    * untouched; Range axes are a filter + arithmetic reindex; only
-    * At/Seqs/Dist axes pay a gather join (replaces expr.py:1108-1245's
-    * meshpoint/defrag machinery).
+  /** submatrix extract C << A[rows, cols], see
+    * [[GrbCollection.extractAxes]]
     */
-  def extract(rowIx: Ix, colIx: Ix, inputMask: Option[Mask] = None): GrbMatrix = {
-    val src = inputMask.fold(df)(_.filter(df, KEYS))
-    def axis(dfIn: DataFrame, ix: Ix, dim: Long, key: String): (DataFrame, Long) =
-      Ix.normalize(ix, dim) match {
-        case Ix.All => (dfIn, dim)
-        case norm @ (Ix.At(_) | Ix.Range(_, _, _)) =>
-          val pred = Ix.predicate(norm, col(key), dim).get
-          val pos = Ix.position(norm, col(key), dim).get
-          (dfIn.filter(pred).withColumn(key, pos), Ix.length(norm, dim).get)
-        case norm =>
-          val idx = Ix.toDF(spark, norm, dim)
-            .select(col("pos").as("_pos"), col("idx").as(key))
-          val joined = dfIn.join(idx, Seq(key))
-            .withColumn(key, col("_pos")).drop("_pos")
-          (joined, Ix.length(norm, dim).getOrElse(idx.count()))
-      }
-    val (d1, nr) = axis(src, rowIx, nrows, "i")
-    val (d2, nc) = axis(d1, colIx, ncols, "j")
-    new GrbMatrix(d2.select(col("i"), col("j"), col("v")), nr, nc, declared)
-  }
+  def extract(rowIx: Ix, colIx: Ix, inputMask: Option[Mask] = None): GrbMatrix =
+    extractAxes(Seq(rowIx, colIx), inputMask, Seq(-1L, -1L))
 
   // ---- assign (SURVEY §2.7) ----
-  /** submatrix assign; same staged recipe as GrbVector.assign.
-    * value: scalar Column (broadcast to the region), or GrbMatrix
-    * (region-shaped), or a GrbVector for row/col band assign via
-    * assignRow/assignCol.
+  /** submatrix assign, see [[GrbCollection.assignAxes]]; a GrbVector
+    * goes into a row/col band via assignRow/assignCol
     */
   def assign(rowIx: Ix, colIx: Ix, value: Either[Column, GrbMatrix],
       desc: Desc = Desc.plain, subassign: Boolean = false): GrbMatrix = {
@@ -1048,81 +1043,7 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
           "scalar assign to entire Matrix without a mask would densify")
       case _ =>
     }
-    val rNorm = Ix.normalize(rowIx, nrows)
-    val cNorm = Ix.normalize(colIx, ncols)
-    val rPred = Ix.predicate(rNorm, col("i"), nrows)
-    val cPred = Ix.predicate(cNorm, col("j"), ncols)
-    def uniq(norm: Ix, dim: Long): DataFrame = norm match {
-      // only list/distributed indices can carry duplicates
-      case Ix.All | Ix.Range(_, _, _) | Ix.At(_) => Ix.toDF(spark, norm, dim)
-      case _ => Ix.toDF(spark, norm, dim).groupBy("idx").agg(max("pos").as("pos"))
-    }
-    lazy val rIdx = uniq(rNorm, nrows).select(col("pos").as("_rpos"), col("idx").as("_ri"))
-    lazy val cIdx = uniq(cNorm, ncols).select(col("pos").as("_cpos"), col("idx").as("_cj"))
-    val newVals: DataFrame = value match {
-      case Left(s) =>
-        // scalar fill is dense over the region by definition; with a
-        // non-complemented mask only mask-covered keys survive the
-        // merge, so enumerate those instead of region × region
-        desc.mask match {
-          case Some(mk) if !mk.complement =>
-            val keys0 = mk.coveredKeys(KEYS)
-            val keys1 = rPred.map(p => keys0.filter(p))
-              .getOrElse(keys0.join(rIdx.select(col("_ri").as("i")), Seq("i"), "left_semi"))
-            val keys2 = cPred.map(p => keys1.filter(p))
-              .getOrElse(keys1.join(cIdx.select(col("_cj").as("j")), Seq("j"), "left_semi"))
-            keys2.select(col("i"), col("j"), s.as("v"))
-          case _ =>
-            rIdx.crossJoin(cIdx).select(col("_ri").as("i"), col("_cj").as("j"), s.as("v"))
-        }
-      case Right(m) =>
-        // grblas DimensionMismatch guard (also keeps the arithmetic
-        // reindex from writing outside the region)
-        Ix.length(rNorm, nrows).foreach(len =>
-          if (m.nrows != len) GraphblasException.dimensionMismatch(
-            s"assign value nrows ${m.nrows} vs region $len"))
-        Ix.length(cNorm, ncols).foreach(len =>
-          if (m.ncols != len) GraphblasException.dimensionMismatch(
-            s"assign value ncols ${m.ncols} vs region $len"))
-        // per-axis: All = identity, Range = arithmetic reindex, else join
-        def mapAxis(dfIn: DataFrame, norm: Ix, key: String,
-            idxDF: => DataFrame, posName: String, idxName: String): DataFrame = norm match {
-          case Ix.All => dfIn
-          case Ix.Range(a, _, s) =>
-            dfIn.withColumn(key, lit(a) + col(key) * lit(s))
-          case _ =>
-            dfIn.join(idxDF.withColumnRenamed(posName, key), Seq(key))
-              .withColumn(key, col(idxName)).drop(idxName)
-        }
-        val d1 = mapAxis(m.df, rNorm, "i", rIdx, "_rpos", "_ri")
-        mapAxis(d1, cNorm, "j", cIdx, "_cpos", "_cj").select(col("i"), col("j"), col("v"))
-    }
-    // region membership without a dense keys crossJoin: filter when the
-    // axis is predicate-expressible, left-join flags otherwise
-    var flagged = df
-    val rIn: Column = rPred.getOrElse {
-      flagged = flagged.join(
-        rIdx.select(col("_ri").as("i"), lit(true).as("_rin")), Seq("i"), "left")
-      col("_rin").isNotNull
-    }
-    val cIn: Column = cPred.getOrElse {
-      flagged = flagged.join(
-        cIdx.select(col("_cj").as("j"), lit(true).as("_cin")), Seq("j"), "left")
-      col("_cin").isNotNull
-    }
-    val inside = flagged.filter(rIn && cIn).select(col("i"), col("j"), col("v"))
-    val outside = flagged.filter(!(rIn && cIn)).select(col("i"), col("j"), col("v"))
-    if (subassign) {
-      val zRegion = Merge(inside, newVals, KEYS, desc)
-      new GrbMatrix(outside.unionByName(zRegion), nrows, ncols)
-    } else {
-      val zRegion = desc.accum match {
-        case None      => newVals
-        case Some(acc) => Merge.outerAccum(inside, newVals, KEYS, acc)
-      }
-      val z = outside.unionByName(zRegion)
-      new GrbMatrix(Merge(df, z, KEYS, Desc(desc.mask, None, desc.replace)), nrows, ncols)
-    }
+    assignAxes(Seq(rowIx, colIx), value, desc, subassign)
   }
 
   /** band assign: vector into row i0 (GrB_Row_assign,
@@ -1164,34 +1085,8 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
       len, declared)
   }
 
-  def isequal(other: GrbMatrix, checkDtype: Boolean = false): Boolean = {
-    if (shape != other.shape) return false
-    if (checkDtype && dtype != other.dtype) return false
-    val a = df.select(col("i"), col("j"), col("v").as("_av"))
-    val b = other.df.select(col("i"), col("j"), col("v").as("_bv"))
-    a.join(b, KEYS, "full_outer")
-      .filter(col("_av").isNull || col("_bv").isNull || col("_av") =!= col("_bv"))
-      .isEmpty
-  }
-
-  def isclose(other: GrbMatrix, relTol: Double = 1e-7, absTol: Double = 0.0): Boolean = {
-    if (shape != other.shape) return false
-    val a = df.select(col("i"), col("j"), col("v").cast(DoubleType).as("_av"))
-    val b = other.df.select(col("i"), col("j"), col("v").cast(DoubleType).as("_bv"))
-    a.join(b, KEYS, "full_outer")
-      .filter(col("_av").isNull || col("_bv").isNull ||
-        abs(col("_av") - col("_bv")) > lit(absTol) + lit(relTol) * abs(col("_bv")))
-      .isEmpty
-  }
-
-  def accept(result: GrbMatrix, desc: Desc): GrbMatrix =
-    new GrbMatrix(Merge(df, result.df, KEYS, desc), nrows, ncols, declared)
-
   def toValues: Seq[(Long, Long, Any)] =
     df.orderBy("i", "j").collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.get(2)))
-
-  def persist(): GrbMatrix =
-    new GrbMatrix(df.localCheckpoint(true), nrows, ncols, declared)
 
   /** co-partition by row key — lets downstream joins/aggregations on i
     * reuse the exchange (rechunk analogue, matrix.py:637-642)
@@ -1200,42 +1095,19 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     new GrbMatrix(df.repartitionByRange(n, col("i")), nrows, ncols, declared)
 }
 
-object GrbMatrix {
-  val KEYS: Seq[String] = Seq("i", "j")
+object GrbMatrix extends GrbCollectionCompanion[GrbMatrix](
+    Seq("i", "j"), "matrix", "nrows and ncols") {
+  protected def make(df: DataFrame, dims: Seq[Long], declared: Option[GrbType]): GrbMatrix =
+    new GrbMatrix(df, dims(0), dims(1), declared)
 
-  def empty(spark: SparkSession, dtype: GrbType, nrows: Long, ncols: Long): GrbMatrix = {
-    implicit val m: Grb.U64Mode = Grb.u64Mode(spark)
-    val schema = StructType(Seq(
-      StructField("i", LongType, nullable = false),
-      StructField("j", LongType, nullable = false),
-      StructField("v", Grb.store(dtype), nullable = false)))
-    new GrbMatrix(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema),
-      nrows, ncols, Some(dtype))
-  }
+  def empty(spark: SparkSession, dtype: GrbType, nrows: Long, ncols: Long): GrbMatrix =
+    emptyOf(spark, dtype, Seq(nrows, ncols))
 
   def fromValues(spark: SparkSession, triples: Seq[(Long, Long, Any)], dtype: GrbType,
       nrows: Long = -1L, ncols: Long = -1L,
-      dupAgg: Option[Column => Column] = None): GrbMatrix = {
-    // reference-pinned phrasings (tests/from_grblas/test_matrix.py:81,91)
-    if (triples.isEmpty && (nrows < 0 || ncols < 0)) throw new GraphblasException(
-      "No indices provided. Unable to infer nrows and ncols.")
-    if (dupAgg.isEmpty &&
-        triples.map(t => (t._1, t._2)).distinct.size != triples.size)
-      throw new GraphblasException(
-        "Duplicate indices found, must provide `dup_op` BinaryOp")
-    implicit val m: Grb.U64Mode = Grb.u64Mode(spark)
-    val schema = StructType(Seq(
-      StructField("i", LongType, nullable = false),
-      StructField("j", LongType, nullable = false),
-      StructField("v", Grb.store(dtype), nullable = false)))
-    val rows = triples.map { case (i, j, v) =>
-      org.apache.spark.sql.Row(i, j, Grb.hostValue(v, dtype)) }
-    val df0 = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
-    val built = fromDF(df0, nrows, ncols, dupAgg)
-    new GrbMatrix(built.df, built.nrows, built.ncols, Some(dtype))
-  }
+      dupAgg: Option[Column => Column] = None): GrbMatrix =
+    fromEntries(spark, triples.map { case (i, j, v) => (Seq(i, j), v) }, dtype,
+      Seq(nrows, ncols), dupAgg)
 
   /** Build from an existing COO DataFrame.
     *
@@ -1251,52 +1123,33 @@ object GrbMatrix {
     * it distinct). Callers deriving indexes from data (key offsets,
     * hashes) must size dims from the same derivation — every catalog
     * query does (dims come from max(key)+1 or the fixed encoding).
-    * When dims are INFERRED (the max(i)/max(j) pass below), the
-    * contract holds by construction for non-negative indexes.
+    * When dims are INFERRED (a max(i)/max(j) pass), the contract
+    * holds by construction for non-negative indexes.
+    *
+    * `clusterBy`: pre-cluster the raw COO on the column the CONSUMER
+    * will key on (guide §2.4: operations keyed the same way share one
+    * exchange): the dedup aggregate satisfies its distribution from
+    * this single exchange (subset rule — hash(j) clusters (i, j)), and
+    * the downstream contraction join / rowwise reduce then reuses the
+    * SAME partitioning instead of re-exchanging the deduped frame —
+    * q_mxm drops from 5 Exchanges to 3, mxv/rowwise-reduce from 2 to
+    * 1. Caller-declared, because only the caller knows the consumer's
+    * key. Trade-off, recorded: the RAW rows ride the one exchange
+    * instead of the dedup output riding a second one — a win unless
+    * the dup factor is large (lineitem's (i,j) dup factor is ~1.07;
+    * a caller with heavily duplicated COO input should keep the
+    * map-side dedup and not declare clusterBy).
     */
   def fromDF(df0: DataFrame, nrows: Long = -1L, ncols: Long = -1L,
       dupAgg: Option[Column => Column] = None,
-      clusterBy: Seq[String] = Nil): GrbMatrix = {
-    // Pre-cluster the raw COO on the column the CONSUMER will key on
-    // (guide §2.4: operations keyed the same way share one exchange):
-    // the dedup aggregate satisfies its distribution from this single
-    // exchange (subset rule — hash(j) clusters (i, j)), and the
-    // downstream contraction join / rowwise reduce then reuses the
-    // SAME partitioning instead of re-exchanging the deduped frame —
-    // q_mxm drops from 5 Exchanges to 3, mxv/rowwise-reduce from 2 to
-    // 1. Caller-declared, because only the caller knows the consumer's
-    // key. Trade-off, recorded: the RAW rows ride the one exchange
-    // instead of the dedup output riding a second one — a win unless
-    // the dup factor is large (lineitem's (i,j) dup factor is ~1.07;
-    // a caller with heavily duplicated COO input should keep the
-    // map-side dedup and not declare clusterBy).
-    val base =
-      if (clusterBy.nonEmpty) df0.repartition(clusterBy.map(col): _*)
-      else df0
-    val df = dupAgg match {
-      case Some(agg) => base.groupBy("i", "j").agg(agg(col("v")).as("v"))
-      case None      => base.select(col("i"), col("j"), col("v"))
-    }
-    val (nr, nc) =
-      if (nrows >= 0 && ncols >= 0) (nrows, ncols)
-      else {
-        val r = df.agg(max(col("i")).as("mi"), max(col("j")).as("mj")).collect().head
-        (if (nrows >= 0) nrows else Option(r.get(0)).map(_.asInstanceOf[Long] + 1).getOrElse(0L),
-         if (ncols >= 0) ncols else Option(r.get(1)).map(_.asInstanceOf[Long] + 1).getOrElse(0L))
-      }
-    new GrbMatrix(df, nr, nc)
-  }
+      clusterBy: Seq[String] = Nil): GrbMatrix =
+    fromFrame(df0, Seq(nrows, ncols), dupAgg, clusterBy)
 
   def build(target: GrbMatrix, triples: Seq[(Long, Long, Any)],
-      dupAgg: Option[Column => Column] = None): GrbMatrix = {
-    if (target.nvals != 0L) GraphblasException.outputNotEmpty("matrix")
-    if (!triples.forall(t => t._1 >= 0 && t._1 < target.nrows &&
-        t._2 >= 0 && t._2 < target.ncols))
-      GraphblasException.indexOutOfBound(
-        s"indices must be < shape (${target.nrows}, ${target.ncols})")
-    fromValues(target.spark, triples, target.dtype, target.nrows, target.ncols, dupAgg)
-  }
+      dupAgg: Option[Column => Column] = None): GrbMatrix =
+    buildInto(target, triples.map { case (i, j, v) => (Seq(i, j), v) }, dupAgg)
 }
+
 
 /** engine-wide tuning constants + the per-session UINT64 mode */
 object Grb {
@@ -1514,6 +1367,18 @@ object Grb {
     if (m.wide && promoted == GrbType.UINT64 && op.name == "times") mulMod64(a, b)
     else op(a, b)
 
+  /** `op(a, b)` for operands of dtypes `aType` and `bType`: dispatched
+    * in their GraphBLAS-promoted domain ([[binOp]]) and cast back into
+    * it when the op preserves the domain — the ewise, outer, kronecker
+    * and semiring-mult value column
+    */
+  private[core] def promotedOp(op: BinaryOp, a: Column, b: Column,
+      aType: GrbType, bType: GrbType)(implicit m: U64Mode): Column = {
+    val promoted = GrbType.promote(aType, bType)
+    val out = binOp(op, a, b, promoted)
+    if (op.preserve) castTo(out, promoted) else out
+  }
+
   /** accumulator dispatch keyed on the target's physical type (merges
     * fix the output domain from C's store, not a promoted dtype)
     */
@@ -1521,27 +1386,6 @@ object Grb {
       outType: DataType)(implicit m: U64Mode): Column =
     if (m.wide && outType == DecimalType(20, 0) && accum.name == "times") mulMod64(a, b)
     else accum(a, b)
-
-  /** declared-label rule for semiring products (mxm/mxv/vxm), the
-    * ewise `promotedDeclared` convention lifted to semirings:
-    * positional semirings emit indices (no value label); a
-    * preserve-mult labels the result with the promoted operand dtype;
-    * a non-preserve mult keeps the label only when at least one
-    * operand was declared AND the physical result still carries the
-    * promoted store (reprMatches — in wide mode any decimal counts,
-    * uintGuard then normalizes it back into the wrapped store)
-    */
-  private[core] def srDeclared(aDtype: GrbType, aDecl: Option[GrbType],
-      bDtype: GrbType, bDecl: Option[GrbType],
-      sr: Semiring, out: DataFrame)(implicit m: U64Mode): Option[GrbType] =
-    if (sr.positional.nonEmpty) None
-    else {
-      val promoted = GrbType.promote(aDtype, bDtype)
-      if (sr.mult.preserve) Some(promoted)
-      else if ((aDecl.nonEmpty || bDecl.nonEmpty) &&
-          reprMatches(out.schema("v").dataType, promoted)) Some(promoted)
-      else None
-    }
 
   /** normalize a host-provided value for the physical store: the
     * wide-UINT64 Decimal(20,0) schema needs BigDecimal rows, but

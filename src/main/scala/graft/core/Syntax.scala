@@ -25,11 +25,19 @@ object Syntax {
   }
 
   /** `C(mask, accum, replace)` output descriptor awaiting `<<` */
-  final class VectorUpdater(target: GrbVector, desc: Desc) {
-    def <<(result: GrbVector): GrbVector = target.accept(result, desc)
+  final class Updater[C <: GrbCollection[C]](target: GrbCollection[C], desc: Desc) {
+    def <<(result: C): C = target.accept(result, desc)
   }
-  final class MatrixUpdater(target: GrbMatrix, desc: Desc) {
-    def <<(result: GrbMatrix): GrbMatrix = target.accept(result, desc)
+
+  /** the updater forms, on vectors and matrices alike */
+  implicit final class UpdaterOps[C <: GrbCollection[C]](private val c: GrbCollection[C])
+      extends AnyVal {
+    // named `upd` (not `apply`): a class member named apply blocks
+    // implicit-extension apply resolution in Scala 2
+    def upd(mask: Mask): Updater[C] = new Updater(c, Desc(Some(mask)))
+    def upd(accum: BinaryOp): Updater[C] = new Updater(c, Desc(accum = Some(accum)))
+    def upd(mask: Mask, accum: BinaryOp, replace: Boolean = false): Updater[C] =
+      new Updater(c, Desc(Some(mask), Some(accum), replace))
   }
 
   implicit final class VectorOps(private val v: GrbVector) extends AnyVal {
@@ -37,20 +45,11 @@ object Syntax {
     def &(other: GrbVector): PendingIntersection = new PendingIntersection(v, other)
     /** vxm: row vector × matrix over a semiring */
     def %*%(arg: (GrbMatrix, Semiring)): GrbVector = v.vxm(arg._1, arg._2)
-    // named `upd` (not `apply`): a class member named apply blocks
-    // implicit-extension apply resolution in Scala 2
-    def upd(mask: Mask): VectorUpdater = new VectorUpdater(v, Desc(Some(mask)))
-    def upd(accum: BinaryOp): VectorUpdater = new VectorUpdater(v, Desc(accum = Some(accum)))
-    def upd(mask: Mask, accum: BinaryOp, replace: Boolean = false): VectorUpdater =
-      new VectorUpdater(v, Desc(Some(mask), Some(accum), replace))
   }
 
   implicit final class MatrixOps(private val m: GrbMatrix) extends AnyVal {
     /** mxm / mxv over a semiring */
     def %*%(arg: (GrbMatrix, Semiring)): GrbMatrix = m.mxm(arg._1, arg._2)
     def %*%(arg: (GrbVector, Semiring)): GrbVector = m.mxv(arg._1, arg._2)
-    def upd(mask: Mask): MatrixUpdater = new MatrixUpdater(m, Desc(Some(mask)))
-    def upd(mask: Mask, accum: BinaryOp, replace: Boolean = false): MatrixUpdater =
-      new MatrixUpdater(m, Desc(Some(mask), Some(accum), replace))
   }
 }

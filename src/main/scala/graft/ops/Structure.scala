@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
   * (dask_grblas/ss/_core.py:15-57 + the ~235 lines of chunk-boundary
   * kernels in vector.py:272-311,595-689 and matrix.py:314-414 — all of
   * which collapse to one projection/filter on a global-index COO frame).
+  * diag, tril and triu re-key or filter one input, so their results
+  * keep its declared dtype.
   */
 object Structure {
 
@@ -48,9 +50,9 @@ object Structure {
     val n = v.size + math.abs(k)
     val rowOff = if (k < 0) -k else 0L
     val colOff = if (k > 0) k else 0L
-    new GrbMatrix(
+    GrbMatrix.labelled(
       v.df.select((col("i") + lit(rowOff)).as("i"), (col("i") + lit(colOff)).as("j"), col("v")),
-      n, n)
+      Seq(n, n), v.declared)
   }
 
   /** matrix → k-th diagonal as a vector (ss.diag, ss/_core.py:36-57) */
@@ -58,18 +60,18 @@ object Structure {
     val len =
       if (k >= 0) math.max(0L, math.min(m.nrows, m.ncols - k))
       else math.max(0L, math.min(m.nrows + k, m.ncols))
-    new GrbVector(
+    GrbVector.labelled(
       m.df.filter(col("j") - col("i") === k)
         .select((if (k >= 0) col("i") else col("j")).as("i"), col("v")),
-      len)
+      Seq(len), m.declared)
   }
 
   /** lower/upper-triangle selects (GxB_select TRIL/TRIU analogues —
     * the reference's GraphBLAS spec target; pure filters)
     */
   def tril(m: GrbMatrix, k: Long = 0L): GrbMatrix =
-    new GrbMatrix(m.df.filter(col("j") - col("i") <= k), m.nrows, m.ncols)
+    m.derive(m.df.filter(col("j") - col("i") <= k), m.declared)
 
   def triu(m: GrbMatrix, k: Long = 0L): GrbMatrix =
-    new GrbMatrix(m.df.filter(col("j") - col("i") >= k), m.nrows, m.ncols)
+    m.derive(m.df.filter(col("j") - col("i") >= k), m.declared)
 }

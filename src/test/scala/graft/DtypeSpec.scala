@@ -112,6 +112,15 @@ class DtypeSpec extends SparkSpec {
     assert(overflowRaised(intercept[Exception](
       vc.applyRight(Ops.plus, org.apache.spark.sql.functions.lit(1L)).toValues)))
     assert(overflowRaised(intercept[Exception](vc.ewiseAdd(vc, Ops.plus).toValues)))
+    // the lazy-scalar apply and the accumulating write paths go through
+    // the same guard
+    val one = GrbScalar.fromValue(checked, 1L, GrbType.UINT64)
+    assert(overflowRaised(intercept[Exception](vc.applyRightScalar(Ops.plus, one).toValues)))
+    val ones = GrbVector.fromValues(checked, Seq((0L, 1L), (1L, 1L)), GrbType.UINT64, 2L)
+    assert(overflowRaised(intercept[Exception](
+      vc.accept(ones, Desc(accum = Some(Ops.plus))).toValues)))
+    assert(overflowRaised(intercept[Exception](
+      vc.assign(Ix.All, Right(ones), Desc(accum = Some(Ops.plus))).toValues)))
     // in-range UINT64 arithmetic is untouched by the guard
     val small = GrbVector.fromValues(checked,
       Seq((0L, 10L), (1L, 20L)), GrbType.UINT64, 2L)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.StageMeter
 import scala.jdk.CollectionConverters._
 
 /** The mains' shared pieces: the SPARK_GRAFT_EXTRA_CONF parser, Verify's
-  * failure report, the stage meter and the session-conf surface.
+  * and Plans' failure reports, the stage meter and the session-conf surface.
   */
 class EntryPointsSpec extends SparkSpec {
 
@@ -43,6 +43,14 @@ class EntryPointsSpec extends SparkSpec {
     assert(err.contains("[verify] q_bad failed: boom"), err)
     assert(spark.read.parquet(s"$out/q_ok").count() == 3)
     assert(spark.read.parquet(s"$out/q_ok2").count() == 2)
+    // Plans.dump: same contract, one plan file per query that planned
+    val plans = java.nio.file.Files.createTempDirectory("graft-plans")
+    val (planFailed, planErr) = stderrOf(Plans.dump(spark, "unused", plans, "t", queries))
+    assert(planFailed == Seq("q_bad"))
+    assert(planErr.contains("[plans] q_bad failed: boom"), planErr)
+    assert(java.nio.file.Files.exists(plans.resolve("q_ok_t.txt")))
+    assert(java.nio.file.Files.exists(plans.resolve("q_ok2_t.txt")))
+    assert(!java.nio.file.Files.exists(plans.resolve("q_bad_t.txt")))
   }
 
   test("stage meter: one read sees the action's jobs, stages, tasks and shuffle") {

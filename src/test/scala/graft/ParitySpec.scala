@@ -48,6 +48,24 @@ class ParitySpec extends SparkSpec {
     assert(m.dup().dtype == GrbType.UINT32)
     assert(m.transpose.dtype == GrbType.UINT32)
     assert(m.extract(Ix.All, Ix.Range(0L, 2L, 1L)).dtype == GrbType.UINT32)
+    // assign keeps the target's label, like accept does
+    val ones = GrbVector.fromValues(spark, Seq((0L, 1.toShort: Any), (1L, 1.toShort: Any)),
+      GrbType.UINT8, 2L)
+    assert(v.assign(Ix.Range(0L, 2L), Right(ones)).dtype == GrbType.UINT8)
+    assert(v.assign(Ix.Range(0L, 2L), Right(ones), subassign = true).dtype == GrbType.UINT8)
+    assert(v.assign(Ix.Seqs(Seq(1L, 3L)), Left(lit(9.toShort))).dtype == GrbType.UINT8)
+    val idx = GrbVector.fromValues(spark, Seq((0L, 2L: Any), (1L, 2L: Any)), GrbType.INT64, 2L)
+    assert(v.reduceAssign(idx, ones, c => org.apache.spark.sql.functions.sum(c)).dtype ==
+      GrbType.UINT8)
+    val mMask = Mask.structural(m.df)
+    assert(m.assign(Ix.All, Ix.All, Left(lit(4L)), Desc(Some(mMask))).dtype == GrbType.UINT32)
+    assert(m.assign(Ix.Range(0L, 1L), Ix.Range(0L, 1L), Right(m.extract(Ix.Range(0L, 1L),
+      Ix.Range(0L, 1L))), subassign = true).dtype == GrbType.UINT32)
+    // structure ops filter or re-key one input, so they keep its label
+    assert(graft.ops.Structure.tril(m).dtype == GrbType.UINT32)
+    assert(graft.ops.Structure.triu(m).dtype == GrbType.UINT32)
+    assert(graft.ops.Structure.diagVector(m).dtype == GrbType.UINT32)
+    assert(graft.ops.Structure.diagMatrix(v, 1L).dtype == GrbType.UINT8)
   }
 
   test("array skew-symmetric stores the STRICTLY lower triangle (io.py:41-70)") {
