@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session conf stack. Every entry point (Bench, Verify, Plans,
-  * Profile, SelfBaseline, the test session) builds its session here, so
+  * Profile, the test session) builds its session here, so
   * the GraphBLAS semantics — wrap-around arithmetic, UTC, the graft SQL
   * functions — hold the same way wherever the engine runs.
   */

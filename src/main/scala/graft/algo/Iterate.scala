@@ -148,12 +148,13 @@ object Iterate {
       * configured width).
       *
       * The round-10 rule floored width at cluster parallelism ("every
-      * core works"). The round-11 ITERTAIL decomposition (SelfBaseline,
-      * q_lpa loop on the sf0.1 graph, per-round listener split) showed
-      * that floor is wrong when per-round work is small: at width 32
-      * the rounds were ~80% fixed cost (Σ shuffle-file write/commit
-      * time 2.2-2.6 s per round for ~20 MB of data — map×reduce block
-      * fan-out — against a 0.15 s data wall), and narrowing to 16/8 cut
+      * core works"). The round-11 ITERTAIL decomposition (PERF_NOTES
+      * §14a: the q_lpa loop on the sf0.1 graph, per-round listener
+      * split) showed that floor is wrong when per-round work is
+      * small: at width 32 the rounds were ~80% fixed cost
+      * (Σ shuffle-file write/commit time 2.2-2.6 s per round for
+      * ~20 MB of data — map×reduce block fan-out — against a 0.15 s
+      * data wall), and narrowing to 16/8 cut
       * the loop total 7.6 → 4.1 s with identical results. Idle cores
       * cost nothing when a round's data wall is milliseconds; block
       * fan-out costs every round, and degraded-IO host windows multiply

@@ -69,7 +69,7 @@ object PregelCC {
       s"adjacency must be square (got ${a.nrows}x${a.ncols})")
     // GraphX persists RDDs we can't all reach by name (the
     // pre-mapVertices construction graph, Pregel's final message
-    // VertexRDD), so a long-lived session (SelfBaseline, notebooks)
+    // VertexRDD), so a long-lived session (a notebook, a service)
     // would pin blocks on every call. Snapshot the persistent-RDD set,
     // run, materialize the result, then release everything the call
     // created except the result's own checkpoint blocks. (Single

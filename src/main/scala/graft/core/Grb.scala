@@ -164,10 +164,10 @@ object GrbScalar {
   * `BaseType`): a COO DataFrame of key columns — Seq("i") for a vector,
   * Seq("i", "j") for a matrix — plus the value column `v`, one dimension
   * per key, and an optional declared dtype. Absence = missing row, never
-  * NULL (SURVEY §1.4). The element-wise, label, equality, extract/assign
-  * and write-path methods are written here once over the key columns; a
-  * subclass supplies its dimensions, its shape check and (through its
-  * companion) its constructor.
+  * NULL (SURVEY §1.4). The element-wise, label, equality, extract/assign,
+  * product and write-path methods are written here once over the key
+  * columns; a subclass supplies its dimensions, its shape check and
+  * (through its companion) its constructor.
   *
   * `declared`: the GraphBLAS dtype when it cannot be re-derived from
   * the Spark schema — Spark has no unsigned types, so UINT8/16/32/64
@@ -265,6 +265,81 @@ private[graft] abstract class GrbCollection[C <: GrbCollection[C]] {
   protected def srDeclared(other: GrbCollection[_], sr: Semiring,
       out: DataFrame): Option[GrbType] =
     if (sr.positional.nonEmpty) None else promotedDeclared(other, sr.mult.preserve, out)
+
+  // ---- semiring products (SURVEY §2.5) ----
+  /** column `from` as `to`; no alias when the name is unchanged */
+  private def renamed(from: String, to: String): Column =
+    if (from == to) col(from) else col(from).as(to)
+
+  /** `of` with its contracted key `on` renamed to `key`, `v` to `value` */
+  private final class Side(val of: GrbCollection[_], val on: String, key: String,
+      value: String) {
+    val outer: Seq[String] = of.keys.filterNot(_ == on)
+    val outerDims: Seq[Long] = of.keys.zip(of.dims).collect { case (k, d) if k != on => d }
+    /** an unchanged frame adds no projection */
+    val frame: DataFrame =
+      if (on == key && value == "v") of.df
+      else of.df.select(of.keys.map(k => if (k == on) renamed(k, key) else col(k)) :+
+        renamed("v", value): _*)
+    /** this side's outer key as a positional index; a vector's is 0 */
+    def index: Column = outer.headOption.map(col).getOrElse(lit(0L))
+  }
+
+  /** `this ⊕.⊗ other` over one contracted key: the one product recipe
+    * of mxm, mxv and vxm (the reference's `_matmul2`, expr.py:86-164).
+    *  1. Each side's contracted key `on` is renamed to the join key
+    *     `key`, and its `v` to its `values` column.
+    *  2. The product is the positional semiring's index triple (this
+    *     side's outer key, the contracted key, the other side's) or the
+    *     promoted mult of this side's value by the other's.
+    *  3. Equi-join on `key`; a mask filters the products on the
+    *     result's keys.
+    *  4. The add monoid folds each result key (Spark's two-phase hash
+    *     aggregate is the reference's block-tree reduction), cast back
+    *     to the product's type when it preserves the domain.
+    *  5. The outer keys, this side's first, are the result's keys,
+    *     labelled by [[srDeclared]].
+    * Placement: a vector side is the join's right side, broadcast when
+    * `broadcastVector` and its size passes [[Grb.broadcastGuard]]; two
+    * matrices take mxm's SpGEMM placement (merge hint, packed aggregate;
+    * see [[GrbMatrix.mxm]]).
+    */
+  private[core] def contract[R <: GrbCollection[R]](other: GrbCollection[_], sr: Semiring,
+      mask: Option[Mask], result: GrbCollectionCompanion[R], on: (String, String),
+      key: String, values: (String, String), broadcastVector: Boolean = false): R = {
+    val (a, b) = (new Side(this, on._1, key, values._1), new Side(other, on._2, key, values._2))
+    val mult = sr.positional match {
+      case Some(pf) => pf(a.index, col(key), b.index)
+      case None => Grb.promotedOp(sr.mult, col(values._1), col(values._2), dtype, other.dtype)
+    }
+    val (left, right) = Seq(a, b).partition(_.outer.nonEmpty) match {
+      case (Seq(m), Seq(vec)) =>
+        val guarded = broadcastVector && vec.of.dims.head <= Grb.broadcastGuard(df.sparkSession)
+        (m.frame, if (guarded) broadcast(vec.frame) else vec.frame)
+      case _ =>
+        // per-side opt-out: only bucketing ON THE CONTRACTED KEY earns it
+        val hinted = mask.isEmpty &&
+          !Grb.hasBucketedScanOn(a.of.df, a.on) && !Grb.hasBucketedScanOn(b.of.df, b.on)
+        def place(s: Side) = if (hinted) s.frame.hint("merge") else s.frame
+        (place(a), place(b))
+    }
+    val outKeys = (a.outer ++ b.outer).zip(result.KEYS).map { case (o, k) => renamed(o, k) }
+    val prod0 = left.join(right, Seq(key)).select(outKeys :+ mult.as("_p"): _*)
+    val prod = mask.fold(prod0)(m => m.filter(prod0, result.KEYS))
+    val agged = sr.add.agg(col("_p"))
+    val aggC = if (sr.add.preserve) Grb.castToType(agged, prod0.schema("_p").dataType) else agged
+    val dims = a.outerDims ++ b.outerDims
+    val out = dims match {
+      // two matrices, unmasked, shape within int64: mxm's packed key
+      case Seq(nr, nc) if mask.isEmpty && nc > 0 && nr > 0 && nr <= Long.MaxValue / nc =>
+        val Seq(ki, kj) = result.KEYS
+        prod.select((col(ki) * nc + col(kj)).as("_ij"), col("_p"))
+          .groupBy("_ij").agg(aggC.as("v"))
+          .select(expr(s"_ij DIV ${nc}L").as(ki), (col("_ij") % nc).as(kj), col("v"))
+      case _ => prod.groupBy(result.KEYS.head, result.KEYS.tail: _*).agg(aggC.as("v"))
+    }
+    result.labelled(out, dims, srDeclared(other, sr, out))
+  }
 
   /** `v` of `from` replaced by `v`, labelled by the apply rule */
   private def applied(from: DataFrame, preserve: Boolean, v: Column): C = {
@@ -651,26 +726,14 @@ final class GrbVector(val df: DataFrame, val size: Long,
 
   // ---- products (SURVEY §2.5) ----
   /** row-vector × matrix (vector.py:423-428): join on this.i == A.i,
-    * group by A.j. Semiring add monoid folds the contracted axis —
-    * Spark's two-phase hash agg is the reference's block-tree reduction.
+    * group by A.j (see [[GrbCollection.contract]]; the row vector is
+    * 1×n, so firsti ≡ 0)
     */
   def vxm(a: GrbMatrix, sr: Semiring, broadcastSelf: Boolean = false): GrbVector = {
     if (size != a.nrows) GraphblasException.dimensionMismatch(
       s"vxm size $size vs nrows ${a.nrows}")
-    val self0 = df.select(col("i"), col("v").as("_xv"))
-    val self = if (broadcastSelf && size <= Grb.broadcastGuard(df.sparkSession)) broadcast(self0) else self0
-    // positional mult: the row vector is 1×n, so firsti ≡ 0, firstj ≡
-    // the contracted index (this vector's i)
-    val mult = sr.positional match {
-      case Some(pf) => pf(lit(0L), col("i"), col("j"))
-      case None => Grb.promotedOp(sr.mult, col("_xv"), col("v"), dtype, a.dtype)
-    }
-    val prod = a.df.join(self, KEYS).select(col("j").as("i"), mult.as("_p"))
-    val agged = sr.add.agg(col("_p"))
-    val aggC = if (sr.add.preserve) Grb.castToType(agged, prod.schema("_p").dataType) else agged
-    val out = prod.groupBy("i").agg(aggC.as("v"))
-    val pd = srDeclared(a, sr, out)
-    new GrbVector(Grb.uintGuard(out, pd), a.ncols, pd)
+    contract(a, sr, None, GrbVector, on = ("i", "i"), key = "i", values = ("_xv", "v"),
+      broadcastVector = broadcastSelf)
   }
 
   /** dot product (vector.py:371-392 declares `inner` as a stub; cheap
@@ -686,8 +749,7 @@ final class GrbVector(val df: DataFrame, val size: Long,
     val b = other.df.select(col("i").as("j"), col("v").as("_bv"))
     val outC = Grb.promotedOp(op, col("v"), col("_bv"), dtype, other.dtype)
     val outDF = df.crossJoin(b).select(col("i"), col("j"), outC.as("v"))
-    val pd = promotedDeclared(other, op.preserve, outDF)
-    new GrbMatrix(Grb.uintGuard(outDF, pd), size, other.size, pd)
+    GrbMatrix.labelled(outDF, Seq(size, other.size), promotedDeclared(other, op.preserve, outDF))
   }
 
   // ---- reductions (SURVEY §2.6) ----
@@ -805,8 +867,6 @@ object GrbVector extends GrbCollectionCompanion[GrbVector](Seq("i"), "vector", "
 final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     private[graft] val declared: Option[GrbType] = None)
     extends GrbCollection[GrbMatrix] {
-  import GrbMatrix.KEYS
-
   protected def companion: GrbMatrix.type = GrbMatrix
   private[graft] def dims: Seq[Long] = Seq(nrows, ncols)
   protected def requireSameShape(other: GrbMatrix, op: String): Unit =
@@ -834,137 +894,61 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
       (if (rowIndex) col("i") else col("j")).as("v")), nrows, ncols)
 
   // ---- products (SURVEY §2.5: the heart of the engine) ----
-  /** C(i,k) = ⊕_j A(i,j) ⊗ B(j,k). One equi-join on the contracted
-    * dimension + hash aggregate (the reference's two hand-rolled
-    * matmul strategies, expr.py:43-164, collapse to this plan).
-    * Masked variant: the mask's key set is semi-joined against the
-    * products BEFORE aggregation, shrinking the shuffle — matches
-    * `_matmul2_masked` pushing the mask into block products
-    * (expr.py:147-160,1967-1971).
+  /** C(i,k) = ⊕_j A(i,j) ⊗ B(j,k), through [[GrbCollection.contract]]:
+    * the reference's two hand-rolled matmul strategies (expr.py:43-164)
+    * collapse to one equi-join + hash aggregate. A mask semi-joins the
+    * products BEFORE the aggregate, as `_matmul2_masked` pushes it into
+    * the block products (expr.py:147-160,1967-1971).
     *
-    * The join is HINTED merge (shuffled sort-merge) instead of
-    * letting Catalyst choose. Size heuristics see only the OPERANDS,
-    * never the product: a matrix side under the broadcast threshold
-    * gets a BroadcastHashJoin, which generates the entire product —
-    * Σ_k nnz_A(k)·nnz_B(k) rows, quadratic in column multiplicity —
-    * inside the other side's SCAN tasks (a handful of parquet
-    * splits), where the partial hash aggregate then builds per-task
-    * tables of near-output size. Measured on a 17.2M-cell product at
-    * 32 cores: unhinted/BHJ 20-35 s, GC-bound and unstable; hinted
-    * 4-7 s — product generation AND partial aggregation spread
-    * across the full shuffle width with per-task state bounded by
-    * the contraction key's partition share. This is 1-D SpGEMM by
-    * construction; no cluster can broadcast a real matrix operand
-    * anyway, so the bench-scale broadcast "win" is exactly the plan
-    * that would never survive 100 TB. merge over shuffle_hash
-    * (2.6-7 s, statistically tied): sort-merge spills gracefully on
-    * hub columns, and operands pre-bucketed on the contraction key
-    * (BucketedCoo, sorted at write) keep their exchange-free AND
-    * sort-free plan — a shuffle_hash hint re-shaped that to
-    * per-bucket hash builds and cost q_mxm_bucketed 2× (5.5 → 11-16 s
-    * fresh-context A/B).
-    *
-    * Two cases stay UNHINTED:
-    *  - MASKED products: the mask's semi-join filters the product
-    *    stream BEFORE the partial aggregate inside the same codegen
-    *    stage, so per-task aggregate state is bounded by nnz(mask) no
-    *    matter where the product is generated — the pathology cannot
-    *    arise, and the broadcast plan Catalyst picks for small
-    *    operands is genuinely better (hinting the masked family cost
-    *    q_clustering 1.2 → 4.6 s, q_ktruss 2.4 → 3.5 s: per-round
-    *    exchanges in tight loops for nothing).
-    *  - An operand read back from a BUCKETED table (BucketedCoo): its
-    *    clustering was paid once at write time and Catalyst already
-    *    plans the contraction exchange-free on that side; forcing
-    *    merge re-shaped that to per-bucket sorts and cost
-    *    q_mxm_bucketed ~1.7× (ABBA'd). A deployment that bucketed its
-    *    operands made exactly the placement decision the hint exists
-    *    to approximate — respect it.
+    * SpGEMM placement. The join is HINTED merge: size heuristics see
+    * the OPERANDS, never the product, and a broadcast matrix side makes
+    * all Σ_k nnz_A(k)·nnz_B(k) products inside the other side's few
+    * scan tasks, whose partial aggregates then hold near-output state
+    * (17.2M-cell product at 32 cores: unhinted 20-35 s, GC-bound;
+    * hinted 4-7 s). merge over shuffle_hash (tied at 2.6-7 s):
+    * sort-merge spills gracefully on hub columns, and a shuffle_hash
+    * hint cost q_mxm_bucketed 2×. Two cases stay UNHINTED:
+    *  - MASKED products: the mask bounds per-task aggregate state by
+    *    nnz(mask) wherever the products are made, and Catalyst's
+    *    broadcast plan is better (hinting cost q_clustering 1.2 → 4.6 s,
+    *    q_ktruss 2.4 → 3.5 s: per-round exchanges in tight loops);
+    *  - an operand read from a table BUCKETED on the contracted key
+    *    (BucketedCoo): its clustering was paid at write time, and the
+    *    hint re-shaped its exchange-free plan to per-bucket sorts
+    *    (q_mxm_bucketed ~1.7×, ABBA'd).
+    * Unmasked products whose shape fits int64 aggregate on ONE packed
+    * key i·ncols + j: the partial aggregate (it hashes every product
+    * row) keys on one 8-byte column, and the exchange carries 16-byte
+    * rows instead of 24. Unpack is exact integer DIV / % (a double
+    * floor corrupts keys past 2^53). Masked products stay on (i, j):
+    * the mask's semi-join already clusters the stream by (i, j), and
+    * packing there added an exchange (q_triangle 13 → 14).
     */
   def mxm(other: GrbMatrix, sr: Semiring, mask: Option[Mask] = None): GrbMatrix = {
     if (ncols != other.nrows) GraphblasException.dimensionMismatch(
       s"mxm ncols $ncols vs nrows ${other.nrows}")
-    // per-side, per-key opt-out: only bucketing ON THE CONTRACTION KEY
-    // (j for the left operand, i for the right) earns the exemption
-    val forceShuffle = mask.isEmpty &&
-      !Grb.hasBucketedScanOn(df, "j") && !Grb.hasBucketedScanOn(other.df, "i")
-    def shuffled(d: org.apache.spark.sql.DataFrame) =
-      if (forceShuffle) d.hint("merge") else d
-    val a = shuffled(df.select(col("i"), col("j").as("_k"), col("v").as("_av")))
-    val b = shuffled(other.df.select(col("i").as("_k"), col("j"), col("v").as("_bv")))
-    val mult = sr.positional match {
-      case Some(pf) => pf(col("i"), col("_k"), col("j"))
-      case None => Grb.promotedOp(sr.mult, col("_av"), col("_bv"), dtype, other.dtype)
-    }
-    val prod0 = a.join(b, Seq("_k")).select(col("i"), col("j"), mult.as("_p"))
-    val prod = mask.fold(prod0)(m => m.filter(prod0, KEYS))
-    val agged = sr.add.agg(col("_p"))
-    val aggC = if (sr.add.preserve) Grb.castToType(agged, prod0.schema("_p").dataType) else agged
-    // Packed-key product aggregate: (i, j) packs into ONE non-negative
-    // long i·ncols + j whenever the output shape fits int64, so the
-    // partial aggregate — the engine's hottest loop, it hashes every
-    // product row — keys on a single 8-byte column instead of two,
-    // and the product exchange carries 16-byte rows instead of 24.
-    // Unpack is exact integer arithmetic (DIV / %), never a double
-    // round-trip: floor(_ij / nc) through a double would corrupt keys
-    // past 2^53, which a 100 TB shape reaches. Same groups (the pack
-    // is bijective on the index domain), same aggregate, same output
-    // schema. MASKED products stay on (i, j): the mask's
-    // semi-join clusters the product stream by (i, j) and the final
-    // aggregate reuses that exchange — packing there ADDED an
-    // exchange (q_triangle 13 → 14, measured in the round-14 plan
-    // probe) instead of narrowing one.
-    val nc = other.ncols
-    val packable = mask.isEmpty &&
-      nc > 0 && nrows > 0 && nrows <= Long.MaxValue / nc
-    val out =
-      if (packable)
-        prod.select((col("i") * nc + col("j")).as("_ij"), col("_p"))
-          .groupBy("_ij").agg(aggC.as("v"))
-          .select(expr(s"_ij DIV ${nc}L").as("i"), (col("_ij") % nc).as("j"), col("v"))
-      else prod.groupBy("i", "j").agg(aggC.as("v"))
-    val pd = srDeclared(other, sr, out)
-    new GrbMatrix(Grb.uintGuard(out, pd), nrows, other.ncols, pd)
+    contract(other, sr, mask, GrbMatrix, on = ("j", "i"), key = "_k", values = ("_av", "_bv"))
   }
 
-  /** matrix × column vector (matrix.py:449-454). broadcastVec hints the
-    * planner to replicate the (typically small) vector to every
-    * partition — no shuffle of the matrix side. The hint is a FORCED
-    * broadcast, so it is suppressed when the vector's dimension says
-    * it could not possibly fit an executor (nnz ≤ size; beyond the
-    * guard AQE still converts to broadcast at runtime when actual
-    * stats allow).
+  /** matrix × column vector (matrix.py:449-454), through
+    * [[GrbCollection.contract]]. broadcastVec FORCES a broadcast of the
+    * vector, skipped when its size says it could not fit an executor
+    * (AQE may still broadcast at runtime).
     *
-    * Deliberate ASYMMETRY with mxm's forced-shuffle SpGEMM rule (do
-    * not "consistency-fix" the merge hint onto vector products): a
-    * matrix product's row count is Σ_k nnz_A(·,k)·nnz_B(k,·) —
-    * quadratic in the contraction key's multiplicity, invisible to
-    * operand-size heuristics — while a vector product generates AT
-    * MOST ONE row per matching matrix entry (the vector holds ≤ 1
-    * value per k), so the product stream is bounded by nnz(A) and the
-    * broadcast plan's per-task aggregate state is bounded by the
-    * task's own matrix rows. The blow-up the mxm hint guards against
-    * cannot arise here; vxm inherits the same bound by symmetry.
-    * Pinned in PlanAuditSpec ("mxv keeps the broadcast plan").
+    * No merge hint, unlike mxm (do not "consistency-fix" it): a vector
+    * holds ≤ 1 value per k, so its products number at most nnz(A) and
+    * the broadcast plan's per-task aggregate state is bounded by the
+    * task's own matrix rows — mxm's quadratic blow-up cannot arise;
+    * vxm has the same bound. Pinned in PlanAuditSpec ("mxv keeps the
+    * broadcast plan").
     */
   def mxv(vec: GrbVector, sr: Semiring, mask: Option[Mask] = None,
       broadcastVec: Boolean = true): GrbVector = {
     if (ncols != vec.size) GraphblasException.dimensionMismatch(
       s"mxv ncols $ncols vs size ${vec.size}")
-    val v0 = vec.df.select(col("i").as("j"), col("v").as("_xv"))
-    val v = if (broadcastVec && vec.size <= Grb.broadcastGuard(df.sparkSession)) broadcast(v0) else v0
-    // positional mult: the column vector is n×1, so secondj ≡ 0
-    val mult = sr.positional match {
-      case Some(pf) => pf(col("i"), col("j"), lit(0L))
-      case None => Grb.promotedOp(sr.mult, col("v"), col("_xv"), dtype, vec.dtype)
-    }
-    val prod0 = df.join(v, Seq("j")).select(col("i"), mult.as("_p"))
-    val prod = mask.fold(prod0)(m => m.filter(prod0, GrbVector.KEYS))
-    val agged = sr.add.agg(col("_p"))
-    val aggC = if (sr.add.preserve) Grb.castToType(agged, prod0.schema("_p").dataType) else agged
-    val out = prod.groupBy("i").agg(aggC.as("v"))
-    val pd = srDeclared(vec, sr, out)
-    new GrbVector(Grb.uintGuard(out, pd), nrows, pd)
+    // the column vector is n×1, so secondj ≡ 0
+    contract(vec, sr, mask, GrbVector, on = ("j", "i"), key = "j", values = ("v", "_xv"),
+      broadcastVector = broadcastVec)
   }
 
   /** Kronecker product — declared-but-unimplemented in the reference
@@ -978,8 +962,8 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
       (col("i") * other.nrows + col("_bi")).as("i"),
       (col("j") * other.ncols + col("_bj")).as("j"),
       outC.as("v"))
-    val pd = promotedDeclared(other, op.preserve, outDF)
-    new GrbMatrix(Grb.uintGuard(outDF, pd), nrows * other.nrows, ncols * other.ncols, pd)
+    derive(outDF, promotedDeclared(other, op.preserve, outDF),
+      Seq(nrows * other.nrows, ncols * other.ncols))
   }
 
   // ---- reductions (SURVEY §2.6) ----
@@ -989,14 +973,12 @@ final class GrbMatrix(val df: DataFrame, val nrows: Long, val ncols: Long,
     */
   def reduceRowwise(m: Monoid): GrbVector = {
     val out = df.groupBy("i").agg(aggPreserve(m).as("v"))
-    val pd = carriedOut(m.preserve, out)
-    new GrbVector(Grb.uintGuard(out, pd), nrows, pd)
+    GrbVector.labelled(out, Seq(nrows), carriedOut(m.preserve, out))
   }
   def reduceColumnwise(m: Monoid): GrbVector = {
     val out = df.groupBy("j").agg(aggPreserve(m).as("v"))
       .withColumnRenamed("j", "i")
-    val pd = carriedOut(m.preserve, out)
-    new GrbVector(Grb.uintGuard(out, pd), ncols, pd)
+    GrbVector.labelled(out, Seq(ncols), carriedOut(m.preserve, out))
   }
   def reduceScalar(m: Monoid): GrbScalar = foldAll(m)
   def reduceScalarInto(target: GrbScalar, m: Monoid, accum: Option[BinaryOp]): GrbScalar =

@@ -441,7 +441,7 @@ object Similarity {
     * once — no dedup shuffle); exact integer-cosine top-k ranks them.
     * Approximate by design: a true neighbour assigned to an unprobed
     * cell is missed — the recall/cost dial is `probes` (recall
-    * measured in the SelfBaseline IVF tier).
+    * recorded in BASELINE_SELF.md, round 9 "IVF search recall").
     *
     * Scale shape: centroids broadcast (k rows); assignment is the
     * map-side-truncating [[org.apache.spark.sql.graft.TopKPairs]]
@@ -526,10 +526,11 @@ object Similarity {
     * PORTABILITY: the constants are THIS box's (local[32], tmpfs
     * shuffle). The structure travels; the shuffle/codegen cost ratio
     * does not — on a cluster with different IO the modeled crossover
-    * can pick the slower engine. Re-derive the three constants there
-    * with the SelfBaseline SPARK_GRAFT_ANNX tier (it prints both
-    * engines' walls next to the model's pick); a caller that knows its
-    * engine calls [[bruteForceTopK]] or [[ivfTopK]] directly.
+    * can pick the slower engine. The constants were fitted to the
+    * brute and IVF walls recorded in BASELINE_SELF.md (round 12, ANNX;
+    * PERF_NOTES §13b); on other hardware, time both engines there and
+    * refit them. A caller that knows its engine calls
+    * [[bruteForceTopK]] or [[ivfTopK]] directly.
     */
   object TopKCost {
     val bruteSecPerScoredRow: Double = 2.7e-8
@@ -597,7 +598,7 @@ object Similarity {
     * ∝ Σ cell² like the LSH path, never all-pairs. Centroid ordering
     * is IEEE-deterministic (exact-integer dots, fixed op order,
     * centroid-id tie-break) so an external oracle reproduces the
-    * assignment bit-for-bit; the SelfBaseline SPARK_GRAFT_IVF tier
+    * assignment bit-for-bit; BASELINE_SELF.md (round 9, "IVF sizing")
     * records measured candidate volume vs k.
     */
   def ivfPairs(emb: DataFrame, simMilli: Int = 400, k: Int = -1,

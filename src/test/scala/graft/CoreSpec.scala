@@ -26,8 +26,15 @@ class CoreSpec extends SparkSpec {
   val aRows = Seq(3L, 0L, 3L, 5L, 6L, 0L, 6L, 1L, 6L, 2L, 4L, 1L)
   val aCols = Seq(0L, 1L, 2L, 2L, 2L, 3L, 3L, 4L, 4L, 5L, 5L, 6L)
   val aVals = Seq(3L, 2L, 3L, 1L, 5L, 3L, 7L, 8L, 3L, 1L, 7L, 4L)
+  val aCells: Seq[(Long, Long, Long)] =
+    aRows.lazyZip(aCols).lazyZip(aVals).map((i, j, x) => (i, j, x))
   def matA: GrbMatrix = GrbMatrix.fromValues(spark,
-    aRows.lazyZip(aCols).lazyZip(aVals).map((i, j, x) => (i, j, x: Any)).toSeq, INT64, 7, 7)
+    aCells.map { case (i, j, x) => (i, j, x: Any) }, INT64, 7, 7)
+
+  /** the positional semirings with their (i, k, j) index pick */
+  val positional: Seq[(Semiring, (Long, Long, Long) => Long)] = Seq(
+    Ops.minFirsti -> ((i, _, _) => i), Ops.minFirstj -> ((_, k, _) => k),
+    Ops.minSecondi -> ((_, k, _) => k), Ops.minSecondj -> ((_, _, j) => j))
 
   def vecOf(g: GrbVector): Map[Long, Any] =
     g.toValues.map { case (i, x) => i -> x }.toMap
@@ -221,6 +228,22 @@ class CoreSpec extends SparkSpec {
       Seq((0L, 4L, true: Any)), GrbType.BOOL, 7, 7).df)
     val cm = a.mxm(a, Ops.plusTimes, Some(m))
     assert(matOf(cm) == Map((0L, 4L) -> 16L))
+    // positional semirings bind (A's row, contracted k, B's col) on
+    // both aggregate paths (unmasked packs (i, j), masked keeps it);
+    // oracle on the driver over a 7×4 B. C(6,3) meets k = 2 and k = 4.
+    val bCells = Seq((0L, 1L, 5L), (1L, 0L, 2L), (2L, 3L, 4L), (3L, 2L, 1L),
+      (4L, 3L, 9L), (5L, 1L, 6L), (6L, 0L, 3L))
+    val b = GrbMatrix.fromValues(spark, bCells.map { case (i, j, x) => (i, j, x: Any) },
+      INT64, 7, 4)
+    val covered = Set((0L, 0L), (6L, 3L), (2L, 1L), (5L, 0L))
+    val pm = Mask.structural(GrbMatrix.fromValues(spark,
+      covered.toSeq.map { case (i, j) => (i, j, true: Any) }, BOOL, 7, 4).df)
+    for ((sr, f) <- positional) {
+      val want = (for ((i, k, _) <- aCells; (k2, j, _) <- bCells if k == k2)
+        yield (i, j) -> f(i, k, j)).groupMapReduce(_._1)(_._2)(math.min)
+      assert(matOf(a.mxm(b, sr)) == want, sr.name)
+      assert(matOf(a.mxm(b, sr, Some(pm))) == want.filter(e => covered(e._1)), sr.name)
+    }
   }
 
   test("mxv / vxm over min_plus (shortest-path step)") {
@@ -233,6 +256,28 @@ class CoreSpec extends SparkSpec {
     val yt = x.vxm(a, Ops.minPlus) // row-vector × A
     // rows 0 and 2 of A: row0: (1,2)→2,(3,3)→3 ; row2: (5,1)→2
     assert(vecOf(yt) == Map(1L -> 2L, 3L -> 3L, 5L -> 2L))
+    // positional and non-commutative semirings: the column vector is
+    // n×1 (secondj ≡ 0) and the right operand of mxv; the row vector
+    // is 1×n (firsti ≡ 0) and the left operand of vxm
+    val xs = Map(0L -> 0L, 2L -> 1L, 3L -> 5L, 5L -> -2L)
+    val x2 = GrbVector.fromValues(spark, xs.toSeq.map { case (i, x) => (i, x: Any) }, INT64, 7)
+    def minBy(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+      pairs.groupMapReduce(_._1)(_._2)(math.min)
+    for ((sr, f) <- positional) {
+      assert(vecOf(a.mxv(x2, sr)) ==
+        minBy(for ((i, j, _) <- aCells if xs.contains(j)) yield i -> f(i, j, 0L)), sr.name)
+      assert(vecOf(x2.vxm(a, sr)) ==
+        minBy(for ((i, j, _) <- aCells if xs.contains(i)) yield j -> f(0L, i, j)), sr.name)
+    }
+    val minMinus = Semiring("min_minus", Ops.minMonoid, Ops.minus)
+    assert(vecOf(a.mxv(x2, minMinus)) ==
+      minBy(for ((i, j, av) <- aCells; xv <- xs.get(j)) yield i -> (av - xv)))
+    assert(vecOf(x2.vxm(a, minMinus)) ==
+      minBy(for ((i, j, av) <- aCells; xv <- xs.get(i)) yield j -> (xv - av)))
+    assert(vecOf(a.mxv(x2, Ops.minFirst)) ==
+      minBy(for ((i, j, av) <- aCells if xs.contains(j)) yield i -> av))
+    assert(vecOf(x2.vxm(a, Ops.minFirst)) ==
+      minBy(for ((i, j, _) <- aCells; xv <- xs.get(i)) yield j -> xv))
   }
 
   test("reduce rowwise/columnwise/scalar on matrix") {

@@ -10,16 +10,27 @@ import scala.jdk.CollectionConverters._
   */
 class EntryPointsSpec extends SparkSpec {
 
-  test("the engine reads exactly three spark.graft.* confs") {
-    // adding a knob is a visible edit here: each key needs a reason
-    // no fixed value can serve (README "Entry points")
-    val literal = "\"spark\\.graft\\.([A-Za-z0-9.]+)\"".r
+  /** every match of `literal`'s first group across src/main/scala */
+  private def sourceLiterals(literal: scala.util.matching.Regex): Set[String] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val keys = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
       .flatMap(f => literal.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
       .toSet
     finally files.close()
-    assert(keys == Set("broadcast.maxBytes", "cc.localNnz", "uint64Mode"))
+  }
+
+  test("the engine reads exactly three spark.graft.* confs") {
+    // adding a knob is a visible edit here: each key needs a reason
+    // no fixed value can serve (README "Entry points")
+    assert(sourceLiterals("\"spark\\.graft\\.([A-Za-z0-9.]+)\"".r) ==
+      Set("broadcast.maxBytes", "cc.localNnz", "uint64Mode"))
+  }
+
+  test("the engine reads exactly eleven SPARK_* env vars") {
+    // the same rule for the environment (README "Entry points")
+    assert(sourceLiterals("\"(SPARK_[A-Z0-9_]+)".r) == Set("CPUS", "EXTRA_CONF",
+      "LOCAL_DIR", "ONLY", "PLAN_DIR", "PLAN_ROOT", "PLAN_TAG", "REPS", "SF_DIR",
+      "SHUFFLE_GB", "TABLE_GB").map("SPARK_GRAFT_" + _))
   }
 
   test("extra-conf parser: pairs, '=' inside a value, and a loud malformed entry") {
