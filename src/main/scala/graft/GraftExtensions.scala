@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** `spark.sql.extensions` entry point: set
   * `spark.sql.extensions = graft.GraftExtensions` on any session
   * builder (or `--conf` on spark-submit) and the graft SQL functions
-  * (`graft_quantized_dot`, `graft_topk`, `graft_hll` — see
+  * (the twelve `graft_*` functions — see
   * [[org.apache.spark.sql.graft.GraftFunctions]]) resolve in every
   * session built from that config, including `newSession()` forks.
   */

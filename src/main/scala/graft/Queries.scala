@@ -2165,7 +2165,8 @@ object Queries {
     // top-k search through the AUTO engine rule (Similarity.topK):
     // q=20 ≪ α·√n at every bench sf, so the rule resolves to the exact
     // brute-force engine and the brute oracle applies unchanged — the
-    // crossover itself is validated in the SPARK_GRAFT_ANNX tier
+    // crossover itself rests on the recorded brute/IVF draw
+    // (BASELINE_SELF round 12, PERF_NOTES §13b), as in TopKCost
     "p_ann_topk" -> ((s, dir) => Similarity.topK(pq(s, dir, "embeddings"))),
     "p_ann_lsh" -> ((s, dir) => Similarity.annPairs(pq(s, dir, "embeddings"))),
     // embedding-space near-dup dedup: LSH-verified cosine pairs ->

@@ -3,9 +3,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
@@ -30,86 +28,60 @@ import org.apache.spark.sql.types._
   *
   * Determinism contract: the k bit positions are the low 16 bits of
   * disjoint 8-hex-char md5 windows (graft.pipeline.Sketch
-  * .bloomPacked — same 16-bit-lane packing as the CMS), update/merge
+  * .bloomPacked — same 16-bit-lane packing as the CMS), add/merge
   * are bitwise OR — order-free and idempotent — so the filter is a
   * pure function of the input SET and the DuckDB oracle mirrors it as
   * `DISTINCT position` rows with membership = "all k positions
   * present".
   */
-object Bloom {
+object Bloom extends SketchMonoid[Array[Byte]]("bloom") {
   val Bits = 65536
   val Bytes: Int = Bits / 8 // 8 KiB serialized
   val Hashes = 4
+  def stateBytes: Int = Bytes
 
-  final class Buf {
-    val bits = new Array[Byte](Bytes)
-  }
+  def empty(): Array[Byte] = new Array[Byte](Bytes)
 
-  def setBits(buf: Buf, packed: Long): Unit = {
+  def add(bits: Array[Byte], packed: Long): Unit = {
     var i = 0
     while (i < Hashes) {
-      val pos = ((packed >>> (16 * i)) & 0xffffL).toInt
-      buf.bits(pos >>> 3) = (buf.bits(pos >>> 3) | (1 << (pos & 7))).toByte
+      val pos = lane(i, packed)
+      bits(pos >>> 3) = (bits(pos >>> 3) | (1 << (pos & 7))).toByte
       i += 1
     }
   }
 
-  def orInto(b1: Buf, b2: Array[Byte]): Unit = {
+  def merge(into: Array[Byte], other: Array[Byte]): Unit = {
     var i = 0
-    while (i < Bytes) { b1.bits(i) = (b1.bits(i) | b2(i)).toByte; i += 1 }
+    while (i < Bytes) { into(i) = (into(i) | other(i)).toByte; i += 1 }
   }
+
+  def toBytes(bits: Array[Byte]): Array[Byte] = bits
+  protected def decode(state: Array[Byte]): Array[Byte] = state.clone()
+
+  /** Membership of a well-formed state: true iff ALL k of the key's
+    * bits are set.
+    */
+  def maybe(bits: Array[Byte], packed: Long): Boolean = {
+    var all = true
+    var i = 0
+    while (all && i < Hashes) {
+      val pos = lane(i, packed)
+      all = (bits(pos >>> 3) & (1 << (pos & 7))) != 0
+      i += 1
+    }
+    all
+  }
+
+  @inline private def lane(i: Int, packed: Long): Int = ((packed >>> (16 * i)) & 0xffffL).toInt
 }
 
-/** Bloom-filter aggregate: eval returns the m-bit array (BinaryType)
-  * — persistable next to the ledger shard; roll up with
-  * [[BloomMergeState]], probe with [[BloomMaybe]].
+/** Bloom-filter aggregate: the m-bit array (BinaryType) — persistable
+  * next to the ledger shard; roll up with [[BloomMergeState]], probe
+  * with [[BloomMaybe]].
   */
-case class BloomState(
-    packedExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Bloom.Buf] with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(packedExpr)
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Bloom.Buf = new Bloom.Buf
-
-  override def update(buf: Bloom.Buf, input: InternalRow): Bloom.Buf = {
-    val p = packedExpr.eval(input)
-    if (p != null) Bloom.setBits(buf, p.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(b1: Bloom.Buf, b2: Bloom.Buf): Bloom.Buf = {
-    Bloom.orInto(b1, b2.bits); b1
-  }
-
-  override def eval(buf: Bloom.Buf): Any = buf.bits.clone()
-  override def serialize(buf: Bloom.Buf): Array[Byte] = buf.bits
-  override def deserialize(bytes: Array[Byte]): Bloom.Buf = {
-    require(bytes.length == Bloom.Bytes,
-      s"BloomState: expected a ${Bloom.Bytes}-byte state, got ${bytes.length}")
-    val buf = new Bloom.Buf
-    System.arraycopy(bytes, 0, buf.bits, 0, Bloom.Bytes)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomState =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomState =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BloomState =
-    copy(packedExpr = newChildren(0))
-}
-
 object BloomState {
-  def apply(packed: Column): Column =
-    ExpressionUtils.column(
-      BloomState(ExpressionUtils.expression(packed)).toAggregateExpression())
+  def apply(packed: Column): Column = Bloom.state(packed)
 }
 
 /** Union of persisted [[BloomState]] arrays: bitwise OR — associative,
@@ -117,102 +89,24 @@ object BloomState {
   * union bit-for-bit, and re-merging the same shard twice is harmless
   * (exactly the property an at-least-once ingest ledger needs).
   */
-case class BloomMergeState(
-    stateExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Bloom.Buf] with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(stateExpr)
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Bloom.Buf = new Bloom.Buf
-
-  override def update(buf: Bloom.Buf, input: InternalRow): Bloom.Buf = {
-    val s = stateExpr.eval(input)
-    if (s != null) {
-      val bytes = s.asInstanceOf[Array[Byte]]
-      require(bytes.length == Bloom.Bytes,
-        s"BloomMergeState: expected a ${Bloom.Bytes}-byte state, got ${bytes.length}")
-      Bloom.orInto(buf, bytes)
-    }
-    buf
-  }
-
-  override def merge(b1: Bloom.Buf, b2: Bloom.Buf): Bloom.Buf = {
-    Bloom.orInto(b1, b2.bits); b1
-  }
-
-  override def eval(buf: Bloom.Buf): Any = buf.bits.clone()
-  override def serialize(buf: Bloom.Buf): Array[Byte] = buf.bits
-  override def deserialize(bytes: Array[Byte]): Bloom.Buf = {
-    val buf = new Bloom.Buf
-    System.arraycopy(bytes, 0, buf.bits, 0, Bloom.Bytes)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomMergeState =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomMergeState =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BloomMergeState =
-    copy(stateExpr = newChildren(0))
-}
-
 object BloomMergeState {
-  def apply(state: Column): Column =
-    ExpressionUtils.column(
-      BloomMergeState(ExpressionUtils.expression(state)).toAggregateExpression())
+  def apply(state: Column): Column = Bloom.mergeStates(state)
 }
 
-/** Membership probe: true iff ALL k of the key's bits are set — the
-  * codegen four-bit-test that answers "maybe seen" against a
-  * broadcast filter state. Null on a malformed state.
+/** Membership probe ([[Bloom.maybe]]) — the four-bit test that answers
+  * "maybe seen" against a broadcast filter state. Null on a malformed
+  * state.
   */
 case class BloomMaybe(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
-
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = true
 
-  override def nullSafeEval(state: Any, packed: Any): Any = {
-    val bytes = state.asInstanceOf[Array[Byte]]
-    if (bytes.length != Bloom.Bytes) null
-    else {
-      val p = packed.asInstanceOf[Long]
-      var all = true
-      var i = 0
-      while (all && i < Bloom.Hashes) {
-        val pos = ((p >>> (16 * i)) & 0xffffL).toInt
-        all = (bytes(pos >>> 3) & (1 << (pos & 7))) != 0
-        i += 1
-      }
-      all
-    }
-  }
-
+  override def nullSafeEval(state: Any, packed: Any): Any =
+    Bloom.readOrNull(state)(Bloom.maybe(_, packed.asInstanceOf[Long]))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (st, pk) => {
-      val i = ctx.freshName("i")
-      val pos = ctx.freshName("pos")
-      val all = ctx.freshName("all")
-      s"""
-         |if ($st.length != ${Bloom.Bytes}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $all = true;
-         |  for (int $i = 0; $all && $i < ${Bloom.Hashes}; $i++) {
-         |    int $pos = (int) (($pk >>> (16 * $i)) & 0xffffL);
-         |    $all = ($st[$pos >>> 3] & (1 << ($pos & 7))) != 0;
-         |  }
-         |  ${ev.value} = $all;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (st, pk) => Bloom.readCode(ev, "maybe", st, pk))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomMaybe =

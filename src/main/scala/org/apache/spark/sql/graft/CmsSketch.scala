@@ -3,9 +3,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
@@ -13,7 +11,7 @@ import org.apache.spark.sql.types._
 /** Deterministic Count-Min sketch (depth d = 4, width w = 1024).
   *
   * Point-frequency telemetry at corpus scale: the buffer is a d×w
-  * grid of 64-bit counters (32 KiB serialized); `update` bumps one
+  * grid of 64-bit counters (32 KiB serialized); `add` bumps one
   * counter per row at the key's md5-derived column, `merge` is
   * elementwise SUM — associative and order-free, so the map-side
   * partial reduces ANY number of token occurrences to one 32 KiB
@@ -26,7 +24,7 @@ import org.apache.spark.sql.types._
   * Determinism contract (why this approximate sketch hash-matches
   * across engines): the d column indices come from disjoint 8-hex-char
   * windows of md5(key) mod w — identical in any engine — and both
-  * update and merge are integer sums, so the grid is a pure function
+  * add and merge are integer sums, so the grid is a pure function
   * of the input MULTISET. The estimate for a key is the MIN over its
   * d counters (classic CMS upper bound: over-counts only via
   * collisions, error ≤ e·N/w with prob 1−e^−d). The DuckDB oracle
@@ -39,90 +37,59 @@ import org.apache.spark.sql.types._
   * expressions outside the aggregate so the hot loop is two shifts
   * and an array bump per row.
   */
-object Cms {
+object Cms extends SketchMonoid[Array[Long]]("cms") {
   val Depth = 4
   val Width = 1024
   val Cells: Int = Depth * Width // 4096 longs, 32 KiB serialized
+  def stateBytes: Int = Cells * 8
 
-  final class Buf {
-    val counts = new Array[Long](Cells)
+  def empty(): Array[Long] = new Array[Long](Cells)
+
+  def add(counts: Array[Long], packed: Long): Unit = {
+    var r = 0
+    while (r < Depth) { counts(cell(r, packed)) += 1L; r += 1 }
   }
 
-  def serialize(buf: Buf): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(Cells * 8)
+  def merge(into: Array[Long], other: Array[Long]): Unit = {
     var i = 0
-    while (i < Cells) { bb.putLong(buf.counts(i)); i += 1 }
+    while (i < Cells) { into(i) += other(i); i += 1 }
+  }
+
+  /** the grid as big-endian longs, row-major */
+  def toBytes(counts: Array[Long]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(stateBytes)
+    bb.asLongBuffer().put(counts)
     bb.array()
   }
 
-  def deserialize(bytes: Array[Byte]): Buf = {
-    require(bytes.length == Cells * 8,
-      s"Cms: expected a ${Cells * 8}-byte state, got ${bytes.length}")
-    val buf = new Buf
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    var i = 0
-    while (i < Cells) { buf.counts(i) = bb.getLong(); i += 1 }
-    buf
+  protected def decode(state: Array[Byte]): Array[Long] = {
+    val counts = new Array[Long](Cells)
+    java.nio.ByteBuffer.wrap(state).asLongBuffer().get(counts)
+    counts
   }
 
-  def bump(buf: Buf, packed: Long): Unit = {
+  /** Point estimate of a well-formed state: the min over the key's d
+    * counters, read in place.
+    */
+  def estimate(state: Array[Byte], packed: Long): Long = {
+    val bb = java.nio.ByteBuffer.wrap(state)
+    var best = Long.MaxValue
     var r = 0
-    while (r < Depth) {
-      val pos = ((packed >>> (16 * r)) & 0xffffL).toInt
-      buf.counts(r * Width + (pos & (Width - 1))) += 1L
-      r += 1
-    }
+    while (r < Depth) { best = math.min(best, bb.getLong(cell(r, packed) * 8)); r += 1 }
+    best
   }
 
-  def mergeInto(b1: Buf, b2: Buf): Buf = {
-    var i = 0
-    while (i < Cells) { b1.counts(i) += b2.counts(i); i += 1 }
-    b1
-  }
+  /** grid index of row r's counter: the r-th 16-bit lane mod w */
+  @inline private def cell(r: Int, packed: Long): Int =
+    r * Width + (((packed >>> (16 * r)) & 0xffffL).toInt & (Width - 1))
 }
 
-/** Count-Min register aggregate: eval returns the d×w counter grid as
-  * a 32 KiB binary state — the PERSISTABLE form (write it next to the
-  * shard/day partition; roll up later with [[CmsMergeState]]).
+/** Count-Min aggregate: the d×w counter grid as a 32 KiB binary
+  * state — the PERSISTABLE form (write it next to the shard/day
+  * partition; roll up later with [[CmsMergeState]]).
   */
-case class CmsState(
-    packedExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Cms.Buf] with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(packedExpr)
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Cms.Buf = new Cms.Buf
-
-  override def update(buf: Cms.Buf, input: InternalRow): Cms.Buf = {
-    val p = packedExpr.eval(input)
-    if (p != null) Cms.bump(buf, p.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(b1: Cms.Buf, b2: Cms.Buf): Cms.Buf = Cms.mergeInto(b1, b2)
-
-  override def eval(buf: Cms.Buf): Any = Cms.serialize(buf)
-  override def serialize(buf: Cms.Buf): Array[Byte] = Cms.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): Cms.Buf = Cms.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsState =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsState =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CmsState =
-    copy(packedExpr = newChildren(0))
-}
-
 object CmsState {
-  def apply(packed: Column): Column =
-    ExpressionUtils.column(
-      CmsState(ExpressionUtils.expression(packed)).toAggregateExpression())
+  def apply(packed: Column): Column = Cms.state(packed)
 }
 
 /** Union of persisted [[CmsState]] grids: elementwise counter sum.
@@ -130,104 +97,24 @@ object CmsState {
   * merge(states of parts) == state of the union, bit-for-bit — the
   * rollup touches 32 KiB per input row, never the raw keys.
   */
-case class CmsMergeState(
-    stateExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Cms.Buf] with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(stateExpr)
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Cms.Buf = new Cms.Buf
-
-  override def update(buf: Cms.Buf, input: InternalRow): Cms.Buf = {
-    val s = stateExpr.eval(input)
-    if (s != null) Cms.mergeInto(buf, Cms.deserialize(s.asInstanceOf[Array[Byte]]))
-    buf
-  }
-
-  override def merge(b1: Cms.Buf, b2: Cms.Buf): Cms.Buf = Cms.mergeInto(b1, b2)
-
-  override def eval(buf: Cms.Buf): Any = Cms.serialize(buf)
-  override def serialize(buf: Cms.Buf): Array[Byte] = Cms.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): Cms.Buf = Cms.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsMergeState =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsMergeState =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CmsMergeState =
-    copy(stateExpr = newChildren(0))
-}
-
 object CmsMergeState {
-  def apply(state: Column): Column =
-    ExpressionUtils.column(
-      CmsMergeState(ExpressionUtils.expression(state)).toAggregateExpression())
+  def apply(state: Column): Column = Cms.mergeStates(state)
 }
 
-/** Point estimate from a persisted grid: min over the key's d
-  * counters — a scalar codegen expression, so a stored sketch answers
-  * watchlist probes without re-aggregating anything. Null on a
-  * malformed state (wrong length), like [[HllEstimate]].
+/** Point estimate ([[Cms.estimate]]) from a persisted grid, as a
+  * scalar expression, so a stored sketch answers watchlist probes
+  * without re-aggregating anything. Null on a malformed state.
   */
 case class CmsEstimate(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
-
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override def nullSafeEval(state: Any, packed: Any): Any = {
-    val bytes = state.asInstanceOf[Array[Byte]]
-    if (bytes.length != Cms.Cells * 8) null
-    else {
-      val p = packed.asInstanceOf[Long]
-      var best = Long.MaxValue
-      var r = 0
-      while (r < Cms.Depth) {
-        val pos = ((p >>> (16 * r)) & 0xffffL).toInt & (Cms.Width - 1)
-        val off = (r * Cms.Width + pos) * 8
-        var v = 0L
-        var i = 0
-        while (i < 8) { v = (v << 8) | (bytes(off + i) & 0xffL); i += 1 }
-        if (v < best) best = v
-        r += 1
-      }
-      best
-    }
-  }
-
+  override def nullSafeEval(state: Any, packed: Any): Any =
+    Cms.readOrNull(state)(Cms.estimate(_, packed.asInstanceOf[Long]))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (st, pk) => {
-      val r = ctx.freshName("r")
-      val i = ctx.freshName("i")
-      val pos = ctx.freshName("pos")
-      val off = ctx.freshName("off")
-      val v = ctx.freshName("v")
-      val best = ctx.freshName("best")
-      s"""
-         |if ($st.length != ${Cms.Cells * 8}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $best = Long.MAX_VALUE;
-         |  for (int $r = 0; $r < ${Cms.Depth}; $r++) {
-         |    int $pos = (int) (($pk >>> (16 * $r)) & 0xffffL) & ${Cms.Width - 1};
-         |    int $off = ($r * ${Cms.Width} + $pos) * 8;
-         |    long $v = 0L;
-         |    for (int $i = 0; $i < 8; $i++) {
-         |      $v = ($v << 8) | ($st[$off + $i] & 0xffL);
-         |    }
-         |    if ($v < $best) $best = $v;
-         |  }
-         |  ${ev.value} = $best;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (st, pk) => Cms.readCode(ev, "estimate", st, pk))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CmsEstimate =

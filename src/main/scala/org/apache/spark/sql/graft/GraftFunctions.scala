@@ -17,19 +17,17 @@ import org.apache.spark.sql.types.IntegerType
   *  - `graft_topk(ord, id, k)` — map-side-truncating top-k aggregate
   *    ([[TopKPairs]]); `k` must be an integer literal (it sizes the
   *    aggregation buffer at plan time);
-  *  - `graft_hll(hash)` — deterministic HLL register aggregate
-  *    ([[HllRegisters]]) over a 60-bit hash, returning `sum_scaled`;
-  *  - `graft_hll_state(hash)` / `graft_hll_merge(state)` /
-  *    `graft_hll_estimate(state)` — the persistable sketch-ledger
-  *    trio ([[HllState]]/[[HllMergeState]]/[[HllEstimate]]);
-  *  - `graft_cms_state(packed)` / `graft_cms_merge(state)` /
-  *    `graft_cms_estimate(state, packed)` — the Count-Min frequency
-  *    trio ([[CmsState]]/[[CmsMergeState]]/[[CmsEstimate]]) over the
-  *    packed 4×16-bit position vector;
-  *  - `graft_bloom_state(packed)` / `graft_bloom_merge(state)` /
-  *    `graft_bloom_maybe(state, packed)` — the Bloom set-membership
-  *    trio ([[BloomState]]/[[BloomMergeState]]/[[BloomMaybe]]), same
-  *    packing with positions mod 65536.
+  *  - `graft_<family>_state(key)` / `graft_<family>_merge(state)` for
+  *    each sketch monoid — [[Hll]] over a 60-bit hash, [[Cms]] over
+  *    the packed 4×16-bit position vector, [[Bloom]] over the same
+  *    packing with positions mod 65536 — built from the monoid as the
+  *    one [[SketchAggregate]] in its key or merge mode;
+  *  - the sketch reads `graft_hll_estimate(state)`,
+  *    `graft_cms_estimate(state, packed)` and
+  *    `graft_bloom_maybe(state, packed)` ([[HllEstimate]],
+  *    [[CmsEstimate]], [[BloomMaybe]]), and `graft_hll(hash)`, the
+  *    composite `graft_hll_estimate(graft_hll_state(hash))` that
+  *    returns `sum_scaled` ([[HllRegisters]]).
   *
   * Two attachment routes, same descriptors:
   *  - config: `spark.sql.extensions = graft.GraftExtensions` applies
@@ -43,63 +41,47 @@ object GraftFunctions {
 
   private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
-  private def arity(name: String, n: Int)(b: Seq[Expression] => Expression): FunctionBuilder =
-    args => if (args.length == n) b(args)
-      else fail(s"$name takes $n argument(s), got ${args.length}")
+  /** one descriptor: `usage` is the call shape `name(arg, ...)` */
+  private def fn(usage: String, cls: Class[_])(
+      b: Seq[Expression] => Expression): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = {
+    val name = usage.takeWhile(_ != '(')
+    val n = usage.count(_ == ',') + 1
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      args => if (args.length == n) b(args)
+        else fail(s"$usage takes $n argument(s), got ${args.length}"))
+  }
+
+  private val sketches = for {
+    m <- Seq(Hll, Cms, Bloom)
+    (call, merging) <- Seq("state(key)" -> false, "merge(state)" -> true)
+  } yield fn(s"graft_${m.family}_$call", classOf[SketchAggregate[_]])(
+    args => SketchAggregate(m, merging, args(0)))
 
   /** (identifier, info, builder) descriptors, the shape both
     * `SparkSessionExtensions.injectFunction` and
     * `FunctionRegistry.registerFunction` consume.
     */
   val all: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
-    (FunctionIdentifier("graft_quantized_dot"),
-      new ExpressionInfo(classOf[QuantizedDot].getName, "graft_quantized_dot"),
-      arity("graft_quantized_dot(a, b)", 2)(args => QuantizedDot(args(0), args(1)))),
-    (FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "graft_topk"),
-      arity("graft_topk(ord, id, k)", 3) { args =>
-        // k sizes the fixed aggregation buffer — it must be known at
-        // plan time, so only foldable integer expressions are accepted
-        val k = args(2) match {
-          case e if e.foldable && e.dataType == IntegerType =>
-            e.eval() match {
-              case i: java.lang.Integer => i.intValue()
-              case other => fail(s"graft_topk: k evaluated to $other, expected an integer literal")
-            }
-          case _ => fail("graft_topk: k must be an integer literal")
-        }
-        TopKPairs(args(0), args(1), k)
-      }),
-    (FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[HllRegisters].getName, "graft_hll"),
-      arity("graft_hll(hash)", 1)(args => HllRegisters(args(0)))),
-    (FunctionIdentifier("graft_hll_state"),
-      new ExpressionInfo(classOf[HllState].getName, "graft_hll_state"),
-      arity("graft_hll_state(hash)", 1)(args => HllState(args(0)))),
-    (FunctionIdentifier("graft_hll_merge"),
-      new ExpressionInfo(classOf[HllMergeState].getName, "graft_hll_merge"),
-      arity("graft_hll_merge(state)", 1)(args => HllMergeState(args(0)))),
-    (FunctionIdentifier("graft_hll_estimate"),
-      new ExpressionInfo(classOf[HllEstimate].getName, "graft_hll_estimate"),
-      arity("graft_hll_estimate(state)", 1)(args => HllEstimate(args(0)))),
-    (FunctionIdentifier("graft_cms_state"),
-      new ExpressionInfo(classOf[CmsState].getName, "graft_cms_state"),
-      arity("graft_cms_state(packed)", 1)(args => CmsState(args(0)))),
-    (FunctionIdentifier("graft_cms_merge"),
-      new ExpressionInfo(classOf[CmsMergeState].getName, "graft_cms_merge"),
-      arity("graft_cms_merge(state)", 1)(args => CmsMergeState(args(0)))),
-    (FunctionIdentifier("graft_cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "graft_cms_estimate"),
-      arity("graft_cms_estimate(state, packed)", 2)(args => CmsEstimate(args(0), args(1)))),
-    (FunctionIdentifier("graft_bloom_state"),
-      new ExpressionInfo(classOf[BloomState].getName, "graft_bloom_state"),
-      arity("graft_bloom_state(packed)", 1)(args => BloomState(args(0)))),
-    (FunctionIdentifier("graft_bloom_merge"),
-      new ExpressionInfo(classOf[BloomMergeState].getName, "graft_bloom_merge"),
-      arity("graft_bloom_merge(state)", 1)(args => BloomMergeState(args(0)))),
-    (FunctionIdentifier("graft_bloom_maybe"),
-      new ExpressionInfo(classOf[BloomMaybe].getName, "graft_bloom_maybe"),
-      arity("graft_bloom_maybe(state, packed)", 2)(args => BloomMaybe(args(0), args(1)))))
+    fn("graft_quantized_dot(a, b)", classOf[QuantizedDot])(args => QuantizedDot(args(0), args(1))),
+    fn("graft_topk(ord, id, k)", classOf[TopKPairs]) { args =>
+      // k sizes the fixed aggregation buffer — it must be known at
+      // plan time, so only foldable integer expressions are accepted
+      val k = args(2) match {
+        case e if e.foldable && e.dataType == IntegerType =>
+          e.eval() match {
+            case i: java.lang.Integer => i.intValue()
+            case other => fail(s"graft_topk: k evaluated to $other, expected an integer literal")
+          }
+        case _ => fail("graft_topk: k must be an integer literal")
+      }
+      TopKPairs(args(0), args(1), k)
+    },
+    fn("graft_hll(hash)", classOf[HllEstimate])(args =>
+      HllEstimate(SketchAggregate(Hll, merging = false, args(0)).toAggregateExpression())),
+    fn("graft_hll_estimate(state)", classOf[HllEstimate])(args => HllEstimate(args(0))),
+    fn("graft_cms_estimate(state, packed)", classOf[CmsEstimate])(args => CmsEstimate(args(0), args(1))),
+    fn("graft_bloom_maybe(state, packed)", classOf[BloomMaybe])(args => BloomMaybe(args(0), args(1)))
+  ) ++ sketches
 
   /** config-route hook: called by `graft.GraftExtensions` during
     * session build for every descriptor.

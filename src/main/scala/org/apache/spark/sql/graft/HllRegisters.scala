@@ -3,267 +3,113 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
-/** Deterministic HyperLogLog register aggregate over a 60-bit hash
-  * (m = 256 buckets, 52-bit rank field).
+/** Deterministic HyperLogLog registers over a 60-bit hash (m = 256
+  * buckets, 52-bit rank field), as a [[SketchMonoid]].
   *
-  * The buffer is a 256-byte register array; `merge` is elementwise
-  * max, so the map-side partial reduces ANY number of input rows to
-  * 256 bytes before the exchange — a distinct-count at 100 TB
-  * shuffles one register array per group per partition instead of
-  * every distinct key (the `COUNT(DISTINCT)` expand plan). Registers
-  * are a pure function of the input key set (md5-derived hash, max
-  * is order-free), so the result is bit-identical to a SQL mirror of
-  * the same register algebra in any engine — the aggregate stays
-  * oracle-checkable despite being approximate.
-  *
-  * eval returns `sum_scaled = Σ_b 2^(53 − reg[b])` as a BIGINT
-  * (empty bucket ⇒ reg 0 ⇒ 2^53; max 256·2^53 < 2^62): summing the
-  * HLL indicator in integer space sidesteps double summation-order
-  * nondeterminism. The caller turns it into the raw-HLL estimate —
-  * see graft.pipeline.Sketch.estMilli (the raw estimator is used at
-  * every range, no small-range linear-counting switch, so the value
-  * is deterministic and engine-portable by construction).
+  * The buffer and the persisted state are one 256-byte register
+  * array; merge is elementwise max, so the map-side partial reduces
+  * ANY number of input rows to 256 bytes before the exchange — a
+  * distinct-count at 100 TB shuffles one register array per group per
+  * partition instead of every distinct key (the `COUNT(DISTINCT)`
+  * expand plan). Registers are a pure function of the input key set
+  * (md5-derived hash, max is order-free), so the result is
+  * bit-identical to a SQL mirror of the same register algebra in any
+  * engine — the aggregate stays oracle-checkable despite being
+  * approximate.
   *
   * Hash layout (see Sketch.hash60): h ∈ [0, 2^60); bucket = top 8
   * bits (h >>> 52); rank field r = low 52 bits; rho = leading zeros
-  * of r within the 52-bit field + 1 = nlz64(r) − 11 (r = 0 ⇒ 53).
+  * of r within the 52-bit field + 1 = nlz64(r) − 11 (r = 0 ⇒ 53). So
+  * every register is in 0..53 (0 = empty bucket); a state with any
+  * other register is malformed.
   */
-final class HllBuf {
-  val regs = new Array[Byte](256)
-}
+object Hll extends SketchMonoid[Array[Byte]]("hll") {
+  def stateBytes: Int = 256
+  override protected def form = "a 256-byte register state with every register in 0..53"
 
-case class HllRegisters(
-    hashExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllBuf] with ExpectsInputTypes {
+  def empty(): Array[Byte] = new Array[Byte](256)
 
-  override def children: Seq[Expression] = Seq(hashExpr)
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-
-  override def createAggregationBuffer(): HllBuf = new HllBuf
-
-  override def update(buf: HllBuf, input: InternalRow): HllBuf = {
-    val h = hashExpr.eval(input)
-    if (h != null) {
-      val v = h.asInstanceOf[Long]
-      val bucket = (v >>> 52).toInt & 255
-      val r = v & ((1L << 52) - 1)
-      val rho = (java.lang.Long.numberOfLeadingZeros(r) - 11).toByte
-      if (rho > buf.regs(bucket)) buf.regs(bucket) = rho
-    }
-    buf
+  def add(regs: Array[Byte], h: Long): Unit = {
+    val bucket = (h >>> 52).toInt & 255
+    val rho = (java.lang.Long.numberOfLeadingZeros(h & ((1L << 52) - 1)) - 11).toByte
+    if (rho > regs(bucket)) regs(bucket) = rho
   }
 
-  override def merge(b1: HllBuf, b2: HllBuf): HllBuf = {
+  def merge(into: Array[Byte], other: Array[Byte]): Unit = {
     var i = 0
-    while (i < 256) {
-      if (b2.regs(i) > b1.regs(i)) b1.regs(i) = b2.regs(i)
-      i += 1
-    }
-    b1
+    while (i < 256) { if (other(i) > into(i)) into(i) = other(i); i += 1 }
   }
 
-  override def eval(buf: HllBuf): Any = {
+  def toBytes(regs: Array[Byte]): Array[Byte] = regs
+  protected def decode(state: Array[Byte]): Array[Byte] = state.clone()
+
+  override def wellFormed(state: Array[Byte]): Boolean = {
+    var ok = state.length == 256
+    var i = 0
+    while (ok && i < 256) { ok = state(i) >= 0 && state(i) <= 53; i += 1 }
+    ok
+  }
+
+  /** `sum_scaled = Σ_b 2^(53 − reg[b])` of a well-formed state, as a
+    * BIGINT (empty bucket ⇒ reg 0 ⇒ 2^53; max 256·2^53 < 2^62):
+    * summing the HLL indicator in integer space sidesteps double
+    * summation-order nondeterminism. The caller turns it into the
+    * raw-HLL estimate — see graft.pipeline.Sketch.estMilli (the raw
+    * estimator is used at every range, no small-range linear-counting
+    * switch, so the value is deterministic and engine-portable by
+    * construction).
+    */
+  def estimate(regs: Array[Byte]): Long = {
     var sum = 0L
     var i = 0
-    while (i < 256) { sum += 1L << (53 - buf.regs(i)); i += 1 }
+    while (i < 256) { sum += 1L << (53 - regs(i)); i += 1 }
     sum
   }
-
-  override def serialize(buf: HllBuf): Array[Byte] = buf.regs
-
-  override def deserialize(bytes: Array[Byte]): HllBuf = {
-    val buf = new HllBuf
-    System.arraycopy(bytes, 0, buf.regs, 0, 256)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllRegisters =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllRegisters =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HllRegisters =
-    copy(hashExpr = newChildren(0))
 }
 
-object HllRegisters {
-  /** Column-level entry point: `sum_scaled` over the group's hashes. */
-  def apply(hash: Column): Column =
-    ExpressionUtils.column(
-      HllRegisters(ExpressionUtils.expression(hash)).toAggregateExpression())
-}
-
-/** Same register aggregation as [[HllRegisters]], but eval returns the
-  * 256-byte register array itself (BinaryType) — the PERSISTABLE form.
-  * Sketch states written per window/shard/day can be unioned later by
-  * [[HllMergeState]] without rescanning the raw keys; register max is
-  * associative and order-free, so
-  * merge(states of parts) == state of the union, bit-for-bit.
+/** `sum_scaled` over the group's hashes: [[HllEstimate]] of
+  * [[HllState]] (SQL `graft_hll`).
   */
-case class HllState(
-    hashExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllBuf] with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(hashExpr)
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): HllBuf = new HllBuf
-
-  override def update(buf: HllBuf, input: InternalRow): HllBuf = {
-    val h = hashExpr.eval(input)
-    if (h != null) {
-      val v = h.asInstanceOf[Long]
-      val bucket = (v >>> 52).toInt & 255
-      val r = v & ((1L << 52) - 1)
-      val rho = (java.lang.Long.numberOfLeadingZeros(r) - 11).toByte
-      if (rho > buf.regs(bucket)) buf.regs(bucket) = rho
-    }
-    buf
-  }
-
-  override def merge(b1: HllBuf, b2: HllBuf): HllBuf = {
-    var i = 0
-    while (i < 256) { if (b2.regs(i) > b1.regs(i)) b1.regs(i) = b2.regs(i); i += 1 }
-    b1
-  }
-
-  override def eval(buf: HllBuf): Any = buf.regs.clone()
-  override def serialize(buf: HllBuf): Array[Byte] = buf.regs
-  override def deserialize(bytes: Array[Byte]): HllBuf = {
-    val buf = new HllBuf
-    System.arraycopy(bytes, 0, buf.regs, 0, 256)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllState =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllState =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HllState =
-    copy(hashExpr = newChildren(0))
+object HllRegisters {
+  def apply(hash: Column): Column = HllEstimate(HllState(hash))
 }
 
+/** The group's register array itself (BinaryType) — the PERSISTABLE
+  * form. States written per window/shard/day union later with
+  * [[HllMergeState]] without rescanning the raw keys.
+  */
 object HllState {
-  def apply(hash: Column): Column =
-    ExpressionUtils.column(
-      HllState(ExpressionUtils.expression(hash)).toAggregateExpression())
+  def apply(hash: Column): Column = Hll.state(hash)
 }
 
 /** Union of persisted [[HllState]] register arrays: elementwise max.
   * The rollup aggregate of the sketch-ledger workflow — daily states
   * merge into weekly/all-time states (and states from different
   * shards into a global one) touching 256 bytes per input row, never
-  * the raw keys. Returns the merged state (BinaryType); estimate with
+  * the raw keys. Returns the merged state; estimate with
   * [[HllEstimate]].
   */
-case class HllMergeState(
-    stateExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllBuf] with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(stateExpr)
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): HllBuf = new HllBuf
-
-  override def update(buf: HllBuf, input: InternalRow): HllBuf = {
-    val s = stateExpr.eval(input)
-    if (s != null) {
-      val bytes = s.asInstanceOf[Array[Byte]]
-      require(bytes.length == 256,
-        s"HllMergeState: expected a 256-byte register state, got ${bytes.length}")
-      var i = 0
-      while (i < 256) { if (bytes(i) > buf.regs(i)) buf.regs(i) = bytes(i); i += 1 }
-    }
-    buf
-  }
-
-  override def merge(b1: HllBuf, b2: HllBuf): HllBuf = {
-    var i = 0
-    while (i < 256) { if (b2.regs(i) > b1.regs(i)) b1.regs(i) = b2.regs(i); i += 1 }
-    b1
-  }
-
-  override def eval(buf: HllBuf): Any = buf.regs.clone()
-  override def serialize(buf: HllBuf): Array[Byte] = buf.regs
-  override def deserialize(bytes: Array[Byte]): HllBuf = {
-    val buf = new HllBuf
-    System.arraycopy(bytes, 0, buf.regs, 0, 256)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeState =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeState =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HllMergeState =
-    copy(stateExpr = newChildren(0))
-}
-
 object HllMergeState {
-  def apply(state: Column): Column =
-    ExpressionUtils.column(
-      HllMergeState(ExpressionUtils.expression(state)).toAggregateExpression())
+  def apply(state: Column): Column = Hll.mergeStates(state)
 }
 
-/** `sum_scaled` from a persisted register state: Σ_b 2^(53 − reg[b])
-  * — the [[HllRegisters]] eval as a scalar codegen expression, so a
-  * stored sketch estimates without re-aggregating anything.
+/** `sum_scaled` ([[Hll.estimate]]) from a persisted register state,
+  * as a scalar expression, so a stored sketch estimates without
+  * re-aggregating anything. Null on a malformed state.
   */
-case class HllEstimate(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
+case class HllEstimate(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    if (bytes.length != 256) null
-    else {
-      var sum = 0L
-      var i = 0
-      while (i < 256) { sum += 1L << (53 - bytes(i)); i += 1 }
-      sum
-    }
-  }
-
+  override def nullSafeEval(state: Any): Any = Hll.readOrNull(state)(Hll.estimate)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      s"""
-         |if ($c.length != 256) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $sum = 0L;
-         |  for (int $i = 0; $i < 256; $i++) {
-         |    $sum += 1L << (53 - $c[$i]);
-         |  }
-         |  ${ev.value} = $sum;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, st => Hll.readCode(ev, "estimate", st))
 
   override protected def withNewChildInternal(newChild: Expression): HllEstimate =
     copy(child = newChild)

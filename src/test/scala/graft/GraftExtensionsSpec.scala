@@ -63,6 +63,47 @@ class GraftExtensionsSpec extends SparkSpec {
       viaCol.map(r => (r.getLong(0), r.getLong(1))).toSeq)
   }
 
+  test("the SQL surface is exactly the twelve graft_* functions") {
+    assert(GraftFunctions.all.map(_._1.funcName).toSet == Set(
+      "graft_quantized_dot", "graft_topk", "graft_hll",
+      "graft_hll_state", "graft_hll_merge", "graft_hll_estimate",
+      "graft_cms_state", "graft_cms_merge", "graft_cms_estimate",
+      "graft_bloom_state", "graft_bloom_merge", "graft_bloom_maybe"))
+    assert(GraftFunctions.all.size == 12)
+  }
+
+  test("sketch states and the Bloom probe in SQL match the Column API") {
+    import org.apache.spark.sql.graft.{BloomMaybe, BloomState, CmsState, HllState}
+    import pipeline.Sketch
+    import spark.implicits._
+    val df = (1 to 500).map(i => (i % 3L, s"k${i % 97}")).toDF("g", "k")
+      .select(col("g"), Sketch.hash60(col("k")).as("h"),
+        Sketch.cmsPacked(col("k")).as("c"), Sketch.bloomPacked(col("k")).as("b"))
+    df.createOrReplaceTempView("sketch_in")
+    val viaSql = spark.sql(
+      """SELECT g, graft_hll_state(h), graft_cms_state(c), graft_bloom_state(b)
+        |FROM sketch_in GROUP BY g ORDER BY g""".stripMargin).collect()
+    val viaCol = df.groupBy("g")
+      .agg(HllState(col("h")), CmsState(col("c")), BloomState(col("b")))
+      .orderBy("g").collect()
+    def bytes(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => r.getLong(0) +: (1 to 3).map(i => r.getAs[Array[Byte]](i).toSeq))
+    assert(bytes(viaSql).toSeq == bytes(viaCol).toSeq)
+    // probe each group's filter with a member key and an absent one
+    spark.sql("SELECT g, graft_bloom_state(b) AS s FROM sketch_in GROUP BY g")
+      .createOrReplaceTempView("bloom_in")
+    val probes = Seq("k1", "absent").toDF("k").select(Sketch.bloomPacked(col("k")).as("p"))
+    probes.createOrReplaceTempView("bloom_probe")
+    val maybeSql = spark.sql(
+      "SELECT g, p, graft_bloom_maybe(s, p) FROM bloom_in CROSS JOIN bloom_probe ORDER BY g, p")
+      .collect().map(_.toString)
+    val maybeCol = spark.table("bloom_in").crossJoin(probes)
+      .select(col("g"), col("p"), BloomMaybe(col("s"), col("p"))).orderBy("g", "p")
+      .collect().map(_.toString)
+    assert(maybeSql.toSeq == maybeCol.toSeq)
+    assert(maybeSql.count(_.endsWith(",true]")) >= 3) // k1 is in every group
+  }
+
   test("runtime route: register restores a dropped function") {
     val fork = spark.newSession()
     val reg = fork.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -217,4 +217,38 @@ class SketchSpec extends SparkSpec {
     assert(plan.contains("ObjectHashAggregate"), plan)
     assert(plan.contains("partial_"), plan)
   }
+
+  test("malformed states: every family's merge rejects them, every read is null") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.graft._
+    val spark2 = spark
+    import spark2.implicits._
+    // (family, state bytes, merge, read, the read of a well-formed
+    // empty state, malformed states)
+    val families: Seq[(String, Int, Column => Column, Column => Column, Any, Seq[Array[Byte]])] = Seq(
+      ("hll", 256, HllMergeState(_), HllEstimate(_), 256L << 53,
+        Seq(new Array[Byte](255), Array.fill[Byte](256)(-1), Array.fill[Byte](256)(54))),
+      ("cms", Cms.Cells * 8, CmsMergeState(_), CmsEstimate(_, lit(5L)), 0L,
+        Seq(new Array[Byte](Cms.Cells * 8 - 8))),
+      ("bloom", Bloom.Bytes, BloomMergeState(_), BloomMaybe(_, lit(5L)), false,
+        Seq(new Array[Byte](Bloom.Bytes + 1))))
+    families.foreach { case (family, bytes, merge, read, emptyRead, bad) =>
+      val good = new Array[Byte](bytes)
+      val df = (good +: bad).zipWithIndex.toDF("s", "i")
+      // interpreted (local relation folded by the optimizer) and
+      // generated (after an exchange) reads agree: null iff malformed
+      for (in <- Seq(df, df.repartition(2))) {
+        val got = in.select(col("i"), read(col("s"))).collect().map(r => r.getInt(0) -> r.get(1)).toMap
+        assert(got == ((0 -> emptyRead) +: bad.indices.map(i => (i + 1) -> null)).toMap, family)
+      }
+      bad.foreach { b =>
+        val e = intercept[Exception] {
+          Seq(good, b).toDF("s").agg(merge(col("s"))).collect()
+        }
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(t => t != null && t.contains(s"graft_$family") && t.contains("expected")),
+          s"$family: ${e.getMessage}")
+      }
+    }
+  }
 }
