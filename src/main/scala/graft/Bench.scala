@@ -377,9 +377,11 @@ object Bench {
     // BENCH_SELF.json is the FULL-CATALOG record; a filtered probe run
     // (SPARK_GRAFT_ONLY) must never clobber it — probes land in
     // BENCH_probe.json instead (round-10 advice: a 1-query ABBA once
-    // overwrote the 149-query record)
+    // overwrote the 149-query record). Both resolve against the working
+    // directory — the checkout root under `sbt run` — so runs from two
+    // checkouts each write their own record.
     val outFile = if (only.isDefined) "BENCH_probe.json" else "BENCH_SELF.json"
-    Files.writeString(Paths.get("/root/repo", outFile),
+    Files.writeString(Paths.get(outFile),
       mk(qmap(results),
         s""","spread":$spread,"gc":$gcMap,"psi_cpu":$psiCpu,"psi_io":$psiIo,"psi_mem":$psiMem,"bw_mbs":$bwMap,"cpu":$cpuMap,"bw_post_mbs":$bwPostMap,"prep":$prepMap$meterArrs""",
         "; jobs/stages/tasks/shuffle_read_bytes/shuffle_write_bytes = per-rep " +

@@ -15,8 +15,8 @@ import java.nio.file.{Files, Paths}
   * the way Bench does (same [[GraftSession]], same untimed warm-up +
   * prepare), with the [[StageMeter]] recording per-stage wall, executor
   * CPU, task count, shuffle bytes, and GC — then prints a stage table
-  * sorted by wall and appends one JSON line per stage to
-  * PROFILE_<query>.jsonl so an inflated and a healthy run can be
+  * sorted by wall and writes one JSON line per stage to
+  * PROFILE_<query>.jsonl in the working directory so an inflated and a healthy run can be
   * diffed stage-by-stage.
   *
   * Wall-clock attribution uses stage submission→completion spans;
@@ -75,7 +75,7 @@ object Profile {
         f"cpu sum ${sts.map(_.cpuMs).sum / 1e3}%.2f s"
     }
     perRep.foreach(println)
-    val out = Paths.get("/root/repo", s"PROFILE_$name.jsonl")
+    val out = Paths.get(s"PROFILE_$name.jsonl")
     val json = rows.map { case (rep, st) =>
       s"""{"rep":$rep,"stage":${st.id},"wall_ms":${st.wallMs},""" +
         s""""cpu_ms":${st.cpuMs},"gc_ms":${st.gcMs},"tasks":${st.tasks},""" +

@@ -2250,7 +2250,7 @@ object Queries {
     // drained with Trigger.AvailableNow. Complete mode emits every
     // window, so the result is batch-equivalent and oracle-checkable.
     "p_stream_window" -> ((s, dir) => {
-      val src = EventsStream.readEventsStream(s, stagedEventsDir(dir))
+      val src = DocsStream.readDocsStream(s, stagedEventsDir(dir))
       drainToMemory(s, EventsStream.hourlyByType(src), "complete",
         "graft_stream_win").select(
         unix_timestamp(col("h")).as("h_epoch"), col("event_type"),
@@ -2263,7 +2263,7 @@ object Queries {
     // Spark rejects outright); complete-mode drain is batch-equivalent
     // so the same register-algebra oracle applies per window
     "p_stream_hll" -> ((s, dir) => {
-      val src = EventsStream.readEventsStream(s, stagedEventsDir(dir))
+      val src = DocsStream.readDocsStream(s, stagedEventsDir(dir))
       drainToMemory(s, EventsStream.hourlyDistinctUsers(src), "complete",
         "graft_stream_hll").select(
         unix_timestamp(col("h")).as("h_epoch"), col("event_type"),
@@ -2275,7 +2275,7 @@ object Queries {
     // emits one final per-user row, batch-equivalent and
     // oracle-checkable (shares p_sessionize's oracle shape)
     "p_stream_sessions" -> ((s, dir) => {
-      val src = EventsStream.readEventsStream(s, stagedEventsDir(dir))
+      val src = DocsStream.readDocsStream(s, stagedEventsDir(dir))
       drainToMemory(s, EventsStream.sessionize(src, expireIdleState = false)
         .toDF(), "update", "graft_stream_sess").select(col("userId").as("user_id"),
         col("nEvents").as("n_events"), col("nSessions").as("n_sessions"))
@@ -2328,7 +2328,7 @@ object Queries {
     // complete-mode drain makes it batch-equivalent for the oracle
     "p_stream_enrich" -> ((s, dir) => {
       val tiers = EventsStream.activityTiers(pq(s, dir, "events"))
-      val src = EventsStream.readEventsStream(s, stagedEventsDir(dir))
+      val src = DocsStream.readDocsStream(s, stagedEventsDir(dir))
       drainToMemory(s, EventsStream.enrichedTierTotals(src, tiers),
         "complete", "graft_stream_enrich")
     }),
@@ -2341,8 +2341,8 @@ object Queries {
       val staged = stagedEventsDir(dir)
       EventsStream.attributionCounts(drainToMemory(s,
         EventsStream.attributedPairs(
-          EventsStream.readEventsStream(s, staged),
-          EventsStream.readEventsStream(s, staged)),
+          DocsStream.readDocsStream(s, staged),
+          DocsStream.readDocsStream(s, staged)),
         "append", "graft_stream_join"))
     }),
 
@@ -2352,7 +2352,7 @@ object Queries {
     // drained reach rolls up to the batch counts on the sink side —
     // shares p_funnel's oracle
     "p_stream_funnel" -> ((s, dir) => {
-      val src = EventsStream.readEventsStream(s, stagedEventsDir(dir))
+      val src = DocsStream.readDocsStream(s, stagedEventsDir(dir))
       EventsStream.funnelCounts(drainToMemory(s,
         EventsStream.funnelStages(src).toDF(), "update",
         "graft_stream_funnel"))

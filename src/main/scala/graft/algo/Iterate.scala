@@ -19,7 +19,9 @@ import org.apache.spark.sql.graft.FreshCheckpoint
   * [[Loop]] it hands the body owns the loop's lifecycle — shuffle
   * width, codegen, the broadcast-vs-sharded decision, checkpoint
   * blocks (freed when superseded and on exit), caches, and the
-  * per-round job marker.
+  * per-round job marker. The one-shot pipeline operators that cache
+  * shared intermediates (`graft.pipeline` dedup and ANN) run in one
+  * too, for its caches alone.
   */
 object Iterate {
 
@@ -57,6 +59,12 @@ object Iterate {
     * and every checkpoint block it holds is freed EXCEPT those the
     * returned value reads (a DataFrame, GrbVector, GrbMatrix, or a
     * tuple of them).
+    *
+    * One-shot pipeline operators (dedup, ANN, `Curate`) use the same
+    * scope for their caches alone: they register shared intermediates
+    * with [[Loop.cache]] and return `result.localCheckpoint(true)` (the
+    * standard checkpoint: a terminal result keeps its statistics), so
+    * the result reads no cache. Their jobs carry the `<Op>:0` marker.
     *
     * @param name    the loop's name in the [[RoundKey]] marker
     * @param codegen whole-stage codegen for the loop's jobs; off only

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.algo.Iterate
 
 /** The end-to-end corpus curation verdict — the composition every
   * training-data pipeline actually ships: one frame per document with
@@ -40,37 +41,38 @@ import org.apache.spark.sql.functions._
   */
 object Curate {
 
-  def curationVerdict(docs: DataFrame, benchMod: Long = 50L): DataFrame = {
-    val q = TextStats.qualityFilter(docs)
-      .select(col("doc_id"), col("keep").as("q_keep"))
-    val ex = docs.select(col("doc_id"), md5(col("text")).as("h"))
-      .join(TextDedup.exact(docs), Seq("h"))
-      .select(col("doc_id"),
-        when(col("doc_id") =!= col("keep_id"), 1L).otherwise(0L).as("flag_exact_dup"))
-    val sh = TextDedup.explodedShingles(docs).cache()
-    val nd = TextDedup.nearDuplicatesOnShingles(sh)
-      .select(col("b").as("doc_id")).distinct()
-      .withColumn("_nd", lit(1L))
-    val cont = TextDedup.contaminationOnShingles(
-        sh.filter(col("doc_id") % benchMod =!= 0),
-        sh.filter(col("doc_id") % benchMod === 0))
-      .select(col("train_id").as("doc_id")).distinct()
-      .withColumn("_ct", lit(1L))
-    sh.unpersist(false) // nd/cont are materialized (localCheckpoint)
-    docs.select(col("doc_id"),
-        when(col("doc_id") % benchMod === 0, 1L).otherwise(0L).as("is_bench"))
-      .join(q, Seq("doc_id"))
-      .join(ex, Seq("doc_id"))
-      .join(nd, Seq("doc_id"), "left")
-      .join(cont, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("is_bench"),
-        (lit(1L) - col("q_keep")).as("flag_quality"),
-        col("flag_exact_dup"),
-        coalesce(col("_nd"), lit(0L)).as("flag_near_dup"),
-        coalesce(col("_ct"), lit(0L)).as("flag_contaminated"))
-      .withColumn("keep",
-        (col("is_bench") === 0L && col("flag_quality") === 0L &&
-          col("flag_exact_dup") === 0L && col("flag_near_dup") === 0L &&
-          col("flag_contaminated") === 0L).cast("long"))
-  }
+  def curationVerdict(docs: DataFrame, benchMod: Long = 50L): DataFrame =
+    Iterate.scope(docs.sparkSession, "Curate") { s =>
+      val q = TextStats.qualityFilter(docs)
+        .select(col("doc_id"), col("keep").as("q_keep"))
+      val ex = docs.select(col("doc_id"), md5(col("text")).as("h"))
+        .join(TextDedup.exact(docs), Seq("h"))
+        .select(col("doc_id"),
+          when(col("doc_id") =!= col("keep_id"), 1L).otherwise(0L).as("flag_exact_dup"))
+      // released when the scope closes: nd/cont are checkpointed
+      val sh = s.cache(TextDedup.explodedShingles(docs))
+      val nd = TextDedup.nearDuplicatesOnShingles(sh)
+        .select(col("b").as("doc_id")).distinct()
+        .withColumn("_nd", lit(1L))
+      val cont = TextDedup.contaminationOnShingles(
+          sh.filter(col("doc_id") % benchMod =!= 0),
+          sh.filter(col("doc_id") % benchMod === 0))
+        .select(col("train_id").as("doc_id")).distinct()
+        .withColumn("_ct", lit(1L))
+      docs.select(col("doc_id"),
+          when(col("doc_id") % benchMod === 0, 1L).otherwise(0L).as("is_bench"))
+        .join(q, Seq("doc_id"))
+        .join(ex, Seq("doc_id"))
+        .join(nd, Seq("doc_id"), "left")
+        .join(cont, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("is_bench"),
+          (lit(1L) - col("q_keep")).as("flag_quality"),
+          col("flag_exact_dup"),
+          coalesce(col("_nd"), lit(0L)).as("flag_near_dup"),
+          coalesce(col("_ct"), lit(0L)).as("flag_contaminated"))
+        .withColumn("keep",
+          (col("is_bench") === 0L && col("flag_quality") === 0L &&
+            col("flag_exact_dup") === 0L && col("flag_near_dup") === 0L &&
+            col("flag_contaminated") === 0L).cast("long"))
+    }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.expressions.Window
+import graft.algo.Iterate
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -17,6 +18,11 @@ import org.apache.spark.sql.expressions.Window
   * (floor(x*1000)) so dot products are exact 64-bit integers; cosine
   * values then come out bit-identical in any IEEE engine, making the
   * results oracle-checkable in DuckDB.
+  *
+  * Lifecycle: an operator that caches a shared intermediate runs in
+  * an [[graft.algo.Iterate.scope]] and returns a checkpointed frame
+  * (`localCheckpoint`). Its caches are dropped when the call returns
+  * or throws, so repeated calls in a long-lived session leak nothing.
   */
 object Similarity {
 
@@ -136,58 +142,45 @@ object Similarity {
     */
   def annPairs(emb: DataFrame, simMilli: Int = 400, bands: Int = 4,
       rowsPerBand: Int = 4, dims: Int = -1,
-      materialize: Boolean = true, maxBucket: Int = -1): DataFrame = {
-    val d =
-      if (dims > 0) dims
-      else emb.select(size(col("embedding"))).head(1)
-        .headOption.map(_.getInt(0)).getOrElse(64)
-    // signatures are consumed by both sides of the self-join — cache
-    // one computation of (quantize + bands×rows hyperplane dots); the
-    // candidate join shuffles only ids, vectors re-attached afterwards.
-    // Caches only on the eager path (released before returning); the
-    // lazy path stays uncached so nothing leaks.
-    val base0 = quantized(emb)
-    val base = if (materialize) base0.cache() else base0
-    // collapse guard (default AUTO — see scaladoc): buckets past the
-    // cap are dropped from candidate generation before the quadratic
-    // self-join. Bucket size is a window count over the SAME
-    // (band, sig) partitioning the candidate join shuffles on — one
-    // pass, no stats side-plan recomputing the hyperplane dots. The
-    // AUTO cap needs the corpus total: a 1-row count aggregate
-    // broadcast onto every row (not a per-band window, which would
-    // buffer a whole band partition — n rows — per task at scale).
-    val bs0 = bandSignaturesFromQuantized(base, bands, rowsPerBand, d)
-      .select("band", "sig", "vec_id")
-    val guarded = if (maxBucket == 0) bs0 else {
-      val withN = bs0.withColumn("_n",
-        count(lit(1)).over(Window.partitionBy("band", "sig")))
-      if (maxBucket > 0) withN.filter(col("_n") <= maxBucket).drop("_n")
-      else withN.crossJoin(broadcast(emb.agg(count(lit(1)).as("_t"))))
-        .filter(col("_n") <= greatest(lit(1000L), col("_t") / 4))
-        .drop("_n", "_t")
+      maxBucket: Int = -1): DataFrame =
+    Iterate.scope(emb.sparkSession, "AnnPairs") { s =>
+      val d =
+        if (dims > 0) dims
+        else emb.select(size(col("embedding"))).head(1)
+          .headOption.map(_.getInt(0)).getOrElse(64)
+      // signatures are consumed by both sides of the self-join — cache
+      // one computation of (quantize + bands×rows hyperplane dots); the
+      // candidate join shuffles only ids, vectors re-attached afterwards
+      val base = s.cache(quantized(emb))
+      // collapse guard (default AUTO — see scaladoc): buckets past the
+      // cap are dropped from candidate generation before the quadratic
+      // self-join. Bucket size is a window count over the SAME
+      // (band, sig) partitioning the candidate join shuffles on — one
+      // pass, no stats side-plan recomputing the hyperplane dots. The
+      // AUTO cap needs the corpus total: a 1-row count aggregate
+      // broadcast onto every row (not a per-band window, which would
+      // buffer a whole band partition — n rows — per task at scale).
+      val bs0 = bandSignaturesFromQuantized(base, bands, rowsPerBand, d)
+        .select("band", "sig", "vec_id")
+      val guarded = if (maxBucket == 0) bs0 else {
+        val withN = bs0.withColumn("_n",
+          count(lit(1)).over(Window.partitionBy("band", "sig")))
+        if (maxBucket > 0) withN.filter(col("_n") <= maxBucket).drop("_n")
+        else withN.crossJoin(broadcast(emb.agg(count(lit(1)).as("_t"))))
+          .filter(col("_n") <= greatest(lit(1000L), col("_t") / 4))
+          .drop("_n", "_t")
+      }
+      // the POST-guard band frame feeds both sides of the candidate
+      // self-join — cache it so the hyperplane dots AND the guard
+      // window run once, not per join side (PERF_NOTES §6: caching
+      // pre-window left the window executing once per consumer)
+      val bs = s.cache(guarded)
+      val cand = bs.select(col("band"), col("sig"), col("vec_id").as("a"))
+        .join(bs.select(col("band"), col("sig"), col("vec_id").as("b")), Seq("band", "sig"))
+        .filter(col("a") < col("b"))
+        .select("a", "b").dropDuplicates("a", "b")
+      verifiedPairs(base, cand, simMilli).localCheckpoint(true)
     }
-    // the POST-guard band frame feeds both sides of the candidate
-    // self-join — cache it (eager path) so the hyperplane dots AND the
-    // guard window run once, not per join side (PERF_NOTES §6: caching
-    // pre-window left the window executing once per consumer)
-    val bs = if (materialize) guarded.cache() else guarded
-    val cand = bs.select(col("band"), col("sig"), col("vec_id").as("a"))
-      .join(bs.select(col("band"), col("sig"), col("vec_id").as("b")), Seq("band", "sig"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").dropDuplicates("a", "b")
-    val result = verifiedPairs(base, cand, simMilli)
-    // materialize (default): eager localCheckpoint lets the caches be
-    // released before returning — no leaked blocks in a long session.
-    // materialize = false keeps the lazy plan (inspection/composition);
-    // the caller then owns cache cleanup.
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      bs.unpersist(false)
-      base.unpersist(false)
-      out
-    }
-  }
 
   /** exact-cosine verification of candidate pairs: re-attach the
     * quantized vectors, keep pairs at/above the milli-threshold.
@@ -235,8 +228,8 @@ object Similarity {
     */
   def nearDupPairs(emb: DataFrame, simMilli: Int = 400,
       bands: Int = 4, rowsPerBand: Int = 4, dims: Int = -1,
-      materialize: Boolean = true, maxBucket: Int = -1): DataFrame =
-    annPairs(emb, simMilli, bands, rowsPerBand, dims, materialize, maxBucket)
+      maxBucket: Int = -1): DataFrame =
+    annPairs(emb, simMilli, bands, rowsPerBand, dims, maxBucket)
       .select("a", "b")
       .unionByName(exactPairs(emb))
       .distinct()
@@ -267,9 +260,8 @@ object Similarity {
     */
   def embeddingNearDuplicates(emb: DataFrame, simMilli: Int = 400,
       bands: Int = 4, rowsPerBand: Int = 4, dims: Int = -1,
-      materialize: Boolean = true, maxBucket: Int = -1): DataFrame =
-    nearDupPairs(emb, simMilli, bands, rowsPerBand, dims, materialize,
-      maxBucket)
+      maxBucket: Int = -1): DataFrame =
+    nearDupPairs(emb, simMilli, bands, rowsPerBand, dims, maxBucket)
       .groupBy(col("b").as("vec_id"))
       .agg(min(col("a")).as("dup_of"), count(lit(1)).as("n_dups"))
 
@@ -397,25 +389,20 @@ object Similarity {
     * rounds × (broadcast + scan + O(n) shuffle), never a pairing.
     * k is the caller's budget knob (SemDeDup-scale: k ≈ n/1000).
     */
-  def embedClusters(emb: DataFrame, k: Int = 16, lloydRounds: Int = 2,
-      materialize: Boolean = true): DataFrame = {
-    val base0 = quantized(emb)
-    val base = if (materialize) base0.cache() else base0
-    val cents = ivfCentroids(base, k, lloydRounds)
-    val scored = base.crossJoin(broadcast(cents))
-      .withColumn("csim", cosineQ(dotQ(col("q"), col("cq")), col("n2"), col("cn2")))
-    val result = scored.groupBy("vec_id")
-      .agg(org.apache.spark.sql.graft.TopKPairs(col("csim"), col("cid"), 1).as("top"))
-      .select(col("vec_id"), explode(col("top")).as("t"))
-      .select(col("vec_id"), col("t").getField("id").as("cid"),
-        floor(col("t").getField("ord") * 1000).cast(LongType).as("promille"))
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      base.unpersist(false)
-      out
+  def embedClusters(emb: DataFrame, k: Int = 16,
+      lloydRounds: Int = 2): DataFrame =
+    Iterate.scope(emb.sparkSession, "EmbedClusters") { s =>
+      val base = s.cache(quantized(emb))
+      val cents = ivfCentroids(base, k, lloydRounds)
+      val scored = base.crossJoin(broadcast(cents))
+        .withColumn("csim", cosineQ(dotQ(col("q"), col("cq")), col("n2"), col("cn2")))
+      scored.groupBy("vec_id")
+        .agg(org.apache.spark.sql.graft.TopKPairs(col("csim"), col("cid"), 1).as("top"))
+        .select(col("vec_id"), explode(col("top")).as("t"))
+        .select(col("vec_id"), col("t").getField("id").as("cid"),
+          floor(col("t").getField("ord") * 1000).cast(LongType).as("promille"))
+        .localCheckpoint(true)
     }
-  }
 
   /** IVF candidate pairs: vectors sharing any of their `probes`
     * closest cells (multi-probe catches boundary pairs). DISTINCT
@@ -455,36 +442,31 @@ object Similarity {
     * fewer than k rows when its probed cells hold fewer candidates.
     */
   def ivfTopK(emb: DataFrame, nQueries: Long = 20L, k: Int = 5,
-      kCells: Int = -1, probes: Int = 2, materialize: Boolean = true,
-      lloydRounds: Int = 1): DataFrame = {
-    val base0 = quantized(emb)
-    val base = if (materialize) base0.cache() else base0
-    val kEff =
-      if (kCells > 0) kCells
-      else math.max(8L, math.sqrt(base.count().toDouble).toLong).toInt
-    val cents = ivfCentroids(base, kEff, lloydRounds)
-    val corpusCells = nearestCells(base, cents, probes = 1)
-    val queryCells = nearestCells(base.filter(col("vec_id") < nQueries), cents, probes)
-    val cand = queryCells.select(col("vec_id").as("qid"), col("cid"))
-      .join(corpusCells.select(col("cid"), col("vec_id").as("nid")), Seq("cid"))
-      .filter(col("qid") =!= col("nid"))
-      .select("qid", "nid")
-    val scored = cand
-      .join(base.select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2")), Seq("qid"))
-      .join(base.select(col("vec_id").as("nid"), col("q").as("nq"), col("n2").as("nn2")), Seq("nid"))
-      .withColumn("sim", cosineQ(dotQ(col("qq"), col("nq")), col("qn2"), col("nn2")))
-    val result = scored.groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKPairs(col("sim"), col("nid"), k).as("top"))
-      .select(col("qid").as("q"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("q"), col("t").getField("id").as("n"),
-        (col("pos") + 1).cast(LongType).as("rank"))
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      base.unpersist(false)
-      out
+      kCells: Int = -1, probes: Int = 2,
+      lloydRounds: Int = 1): DataFrame =
+    Iterate.scope(emb.sparkSession, "IvfTopK") { s =>
+      val base = s.cache(quantized(emb))
+      val kEff =
+        if (kCells > 0) kCells
+        else math.max(8L, math.sqrt(base.count().toDouble).toLong).toInt
+      val cents = ivfCentroids(base, kEff, lloydRounds)
+      val corpusCells = nearestCells(base, cents, probes = 1)
+      val queryCells = nearestCells(base.filter(col("vec_id") < nQueries), cents, probes)
+      val cand = queryCells.select(col("vec_id").as("qid"), col("cid"))
+        .join(corpusCells.select(col("cid"), col("vec_id").as("nid")), Seq("cid"))
+        .filter(col("qid") =!= col("nid"))
+        .select("qid", "nid")
+      val scored = cand
+        .join(base.select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2")), Seq("qid"))
+        .join(base.select(col("vec_id").as("nid"), col("q").as("nq"), col("n2").as("nn2")), Seq("nid"))
+        .withColumn("sim", cosineQ(dotQ(col("qq"), col("nq")), col("qn2"), col("nn2")))
+      scored.groupBy("qid")
+        .agg(org.apache.spark.sql.graft.TopKPairs(col("sim"), col("nid"), k).as("top"))
+        .select(col("qid").as("q"), posexplode(col("top")).as(Seq("pos", "t")))
+        .select(col("q"), col("t").getField("id").as("n"),
+          (col("pos") + 1).cast(LongType).as("rank"))
+        .localCheckpoint(true)
     }
-  }
 
   /** Measured cost model behind [[topK]]'s engine choice. Structure
     * (the portable part — constants are box-calibrated):
@@ -567,13 +549,12 @@ object Similarity {
     * the same count the IVF path needs for its auto cell rule.
     */
   def topK(emb: DataFrame, nQueries: Long = 20L, k: Int = 5,
-      probes: Int = 2, materialize: Boolean = true,
-      lloydRounds: Int = 1): DataFrame = {
+      probes: Int = 2, lloydRounds: Int = 1): DataFrame = {
     val n = emb.count()
     val q = math.min(nQueries, n)
     if (TopKCost.bruteWins(n, q, probes))
       bruteForceTopK(emb, nQueries, k)
-    else ivfTopK(emb, nQueries, k, -1, probes, materialize, lloydRounds)
+    else ivfTopK(emb, nQueries, k, -1, probes, lloydRounds)
   }
 
   /** IVF (inverted-file) ANN pairs — the clustering-flavored scale
@@ -602,22 +583,15 @@ object Similarity {
     * records measured candidate volume vs k.
     */
   def ivfPairs(emb: DataFrame, simMilli: Int = 400, k: Int = -1,
-      probes: Int = 2, materialize: Boolean = true,
-      lloydRounds: Int = 1): DataFrame = {
-    val base0 = quantized(emb)
-    val base = if (materialize) base0.cache() else base0
-    val kEff =
-      if (k > 0) k
-      else math.max(8L, math.sqrt(base.count().toDouble).toLong).toInt
-    val cand = ivfCandidates(base, kEff, probes, lloydRounds)
-    val result = verifiedPairs(base, cand, simMilli)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      base.unpersist(false)
-      out
+      probes: Int = 2, lloydRounds: Int = 1): DataFrame =
+    Iterate.scope(emb.sparkSession, "IvfPairs") { s =>
+      val base = s.cache(quantized(emb))
+      val kEff =
+        if (k > 0) k
+        else math.max(8L, math.sqrt(base.count().toDouble).toLong).toInt
+      val cand = ivfCandidates(base, kEff, probes, lloydRounds)
+      verifiedPairs(base, cand, simMilli).localCheckpoint(true)
     }
-  }
 
   /** k-NN GRAPH construction — EVERY vector's k nearest neighbours
     * (IVF-probed candidates, exact-integer-cosine verified, the
@@ -639,10 +613,8 @@ object Similarity {
     *         mutual = 1 iff a is also among b's top k
     */
   def knnGraph(emb: DataFrame, k: Int = 3, kCells: Int = -1,
-      probes: Int = 2, materialize: Boolean = true,
-      lloydRounds: Int = 1): DataFrame = {
-    val nn = ivfTopK(emb, Long.MaxValue, k, kCells, probes, materialize,
-      lloydRounds)
+      probes: Int = 2, lloydRounds: Int = 1): DataFrame = {
+    val nn = ivfTopK(emb, Long.MaxValue, k, kCells, probes, lloydRounds)
     val rev = nn.select(col("n").as("q"), col("q").as("n"), lit(1L).as("_m"))
     nn.join(rev, Seq("q", "n"), "left")
       .select(col("q").as("a"), col("n").as("b"), col("rank"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.expressions.Window
+import graft.algo.Iterate
 
 /** Document deduplication for large-scale training-data pipelines.
   *
@@ -17,6 +18,11 @@ import org.apache.spark.sql.expressions.Window
   * across engines) and every similarity threshold is evaluated as an
   * integer cross-multiplication, so a SQL oracle (DuckDB) reproduces
   * results bit-for-bit.
+  *
+  * Lifecycle: an operator that caches a shared intermediate runs in
+  * an [[graft.algo.Iterate.scope]] and returns a checkpointed frame
+  * (`localCheckpoint`). Its caches are dropped when the call returns
+  * or throws, so repeated calls in a long-lived session leak nothing.
   */
 object TextDedup {
 
@@ -207,17 +213,16 @@ object TextDedup {
     * SAME (band, sig) partitioning the candidate join shuffles on
     * anyway — zero extra passes over the signature pipeline.
     * (Expressing the guard as a stats-aggregate + anti-join re-planned
-    * the whole minhash pipeline once more per join side on the lazy
-    * path — plan-audited in round 6.) The window buffers one bucket
-    * per task — linear in bucket size.
+    * the whole minhash pipeline once more per join side — plan-audited
+    * in round 6.) The window buffers one bucket per task — linear in
+    * bucket size.
     */
   /** bucket-annotate a bands frame: one window pass adds the bucket
     * size and min member. The annotated frame feeds THREE consumers
-    * (both join sides + the hub star), so eager callers should cache
-    * the annotated frame, not the raw bands — measured in the Bench
-    * harness at sf0.1, caching pre-window left the window executing
-    * three times and cost ~3.5 s of the guard's ~3.5 s overhead
-    * (PERF_NOTES §6).
+    * (both join sides + the hub star), so callers cache the annotated
+    * frame, not the raw bands — measured in the Bench harness at
+    * sf0.1, caching pre-window left the window executing three times
+    * and cost ~3.5 s of the guard's ~3.5 s overhead (PERF_NOTES §6).
     */
   private def annotateBuckets(bs0: DataFrame): DataFrame = {
     val w = Window.partitionBy("band", "sig")
@@ -269,63 +274,39 @@ object TextDedup {
   /** near-duplicate pairs: LSH candidates verified by exact shingle
     * Jaccard >= num/den (integer cross-multiplied — no float compare).
     * Output: (a, b, inter, uni).
-    *
-    * `materialize` (default): the result is computed eagerly
-    * (localCheckpoint) so the cached shared intermediate can be
-    * released before returning — repeated calls in a long-lived
-    * session leak nothing. Pass `materialize = false` for the fully
-    * lazy UNCACHED plan (plan inspection / composition; shared
-    * intermediates recompute if it is ever executed) — nothing is
-    * left behind to clean up on either path.
     */
   def nearDuplicates(docs: DataFrame, bands: Int = 4,
-      num: Int = 7, den: Int = 10, materialize: Boolean = true,
-      maxBucket: Int = defaultMaxBucket): DataFrame = {
-    // the exploded shingle set feeds signature building AND the
-    // verification joins — one explode, cached (eager path only:
-    // a cache on the lazy path would outlive the call = a leak).
-    val sh0 = explodedShingles(docs)
-    val sh = if (materialize) sh0.cache() else sh0
-    val result = nearDuplicatesOnShingles(sh, bands, num, den,
-      materialize, maxBucket)
-    if (materialize) sh.unpersist(false)
-    result
-  }
+      num: Int = 7, den: Int = 10,
+      maxBucket: Int = defaultMaxBucket): DataFrame =
+    Iterate.scope(docs.sparkSession, "NearDuplicates") { s =>
+      // the exploded shingle set feeds signature building AND the
+      // verification joins — one explode, cached
+      nearDuplicatesOnShingles(s.cache(explodedShingles(docs)), bands,
+        num, den, maxBucket)
+    }
 
   /** [[nearDuplicates]] over a CALLER-MANAGED exploded-shingle frame —
     * the composition hook for pipelines that already pay the explode
     * (Curate shares ONE cached shingle frame across its near-dup and
     * contamination stages instead of exploding the corpus per stage).
-    * The caller owns `sh`'s caching/lifetime; the eager path here
-    * still returns a lineage-free frame and releases only its OWN
-    * internal cache (the bucket-annotated bands).
+    * The caller owns `sh`'s caching/lifetime; this returns a
+    * checkpointed frame and releases only its OWN internal cache (the
+    * bucket-annotated bands).
     */
   private[pipeline] def nearDuplicatesOnShingles(sh: DataFrame,
       bands: Int = 4, num: Int = 7, den: Int = 10,
-      materialize: Boolean = true,
-      maxBucket: Int = defaultMaxBucket): DataFrame = {
-    // the bands frame feeds the guard's bucket stats AND the candidate
-    // join, so it is cached — the minhash signature agg (the dominant
-    // cost) runs once, not twice.
-    val bs0 = bandsFromShingles(sh, bands)
-    // eager path caches the bucket-ANNOTATED bands (window already
-    // applied): its three consumers then share one window execution —
-    // see annotateBuckets
-    val (bs, cands) =
-      if (maxBucket <= 0) (bs0, candidatesFromBands(bs0, maxBucket))
-      else {
-        val bsA0 = annotateBuckets(bs0)
-        val bsA = if (materialize) bsA0.cache() else bsA0
-        (bsA, candidatesFromAnnotated(bsA, maxBucket))
-      }
-    val result = verifyJaccard(sh, cands, num, den)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      if (maxBucket > 0) bs.unpersist(false)
-      out
+      maxBucket: Int = defaultMaxBucket): DataFrame =
+    Iterate.scope(sh.sparkSession, "NearDuplicates") { s =>
+      // the bands frame feeds the guard's bucket stats AND the candidate
+      // join; caching the bucket-ANNOTATED bands (window already
+      // applied) runs the minhash signature agg (the dominant cost) and
+      // the window once for all three consumers — see annotateBuckets
+      val bs0 = bandsFromShingles(sh, bands)
+      val cands =
+        if (maxBucket <= 0) candidatesFromBands(bs0, maxBucket)
+        else candidatesFromAnnotated(s.cache(annotateBuckets(bs0)), maxBucket)
+      verifyJaccard(sh, cands, num, den).localCheckpoint(true)
     }
-  }
 
   /** exact-Jaccard verification of candidate pairs against the full
     * shingle sets: inter via two joins on the exploded shingles,
@@ -369,57 +350,51 @@ object TextDedup {
     * per-doc index cost wins.
     */
   def jaccardNearDuplicates(docs: DataFrame, num: Int = 7, den: Int = 10,
-      materialize: Boolean = true,
-      maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {
-    val sh0 = explodedShingles(docs)
-    val sh = if (materialize) sh0.cache() else sh0
-    val withDf = sh.withColumn("_df",
-      count(lit(1)).over(Window.partitionBy("sh")))
-    val capped =
-      if (maxShingleDf <= 0) sh
-      else withDf.filter(col("_df") <= maxShingleDf).drop("_df")
-    // the candidate equi-join emits one row per SUB-CAP SHINGLE
-    // CO-OCCURRENCE of a pair — which IS that pair's sub-cap
-    // intersection, enumerated. So inter needs no verify joins back
-    // to the shingle sets: one hash aggregate over the join output
-    // counts the sub-cap part (and replaces the old dropDuplicates —
-    // the groupBy is the dedup), and only the OVER-CAP shingles (a
-    // handful of distinct boilerplate keys; they still count toward
-    // inter/union per the contract above) are re-joined per pair.
-    // Round-13 A/B at sf0.1: the old pair×full-shingle-set verify
-    // built ~29M rows for 1.13M candidates → 25 survivors.
-    val co = capped.select(col("sh"), col("doc_id").as("a"))
-      .join(capped.select(col("sh"), col("doc_id").as("b")), Seq("sh"))
-      .filter(col("a") < col("b"))
-    val interSub = co.groupBy("a", "b").agg(count(lit(1)).as("_isub"))
-    val inter =
-      if (maxShingleDf <= 0)
-        interSub.select(col("a"), col("b"), col("_isub").as("inter"))
-      else {
-        val over = withDf.filter(col("_df") > maxShingleDf)
-          .select(col("doc_id"), col("sh"))
-        val interOver = interSub.select(col("a"), col("b"))
-          .join(over.select(col("doc_id").as("a"), col("sh")), Seq("a"))
-          .join(over.select(col("doc_id").as("b"), col("sh")), Seq("b", "sh"))
-          .groupBy("a", "b").agg(count(lit(1)).as("_iover"))
-        interSub.join(interOver, Seq("a", "b"), "left")
-          .select(col("a"), col("b"),
-            (col("_isub") + coalesce(col("_iover"), lit(0L))).as("inter"))
-      }
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val result = inter
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
-      .select(col("a"), col("b"), col("inter"),
-        (col("na") + col("nb") - col("inter")).as("uni"))
-      .filter(col("inter") * den >= col("uni") * num)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      sh.unpersist(false)
-      out
+      maxShingleDf: Int = defaultMaxShingleDf): DataFrame =
+    Iterate.scope(docs.sparkSession, "JaccardNearDuplicates") { s =>
+      val sh = s.cache(explodedShingles(docs))
+      val withDf = sh.withColumn("_df",
+        count(lit(1)).over(Window.partitionBy("sh")))
+      val capped =
+        if (maxShingleDf <= 0) sh
+        else withDf.filter(col("_df") <= maxShingleDf).drop("_df")
+      // the candidate equi-join emits one row per SUB-CAP SHINGLE
+      // CO-OCCURRENCE of a pair — which IS that pair's sub-cap
+      // intersection, enumerated. So inter needs no verify joins back
+      // to the shingle sets: one hash aggregate over the join output
+      // counts the sub-cap part (and replaces the old dropDuplicates —
+      // the groupBy is the dedup), and only the OVER-CAP shingles (a
+      // handful of distinct boilerplate keys; they still count toward
+      // inter/union per the contract above) are re-joined per pair.
+      // Round-13 A/B at sf0.1: the old pair×full-shingle-set verify
+      // built ~29M rows for 1.13M candidates → 25 survivors.
+      val co = capped.select(col("sh"), col("doc_id").as("a"))
+        .join(capped.select(col("sh"), col("doc_id").as("b")), Seq("sh"))
+        .filter(col("a") < col("b"))
+      val interSub = co.groupBy("a", "b").agg(count(lit(1)).as("_isub"))
+      val inter =
+        if (maxShingleDf <= 0)
+          interSub.select(col("a"), col("b"), col("_isub").as("inter"))
+        else {
+          val over = withDf.filter(col("_df") > maxShingleDf)
+            .select(col("doc_id"), col("sh"))
+          val interOver = interSub.select(col("a"), col("b"))
+            .join(over.select(col("doc_id").as("a"), col("sh")), Seq("a"))
+            .join(over.select(col("doc_id").as("b"), col("sh")), Seq("b", "sh"))
+            .groupBy("a", "b").agg(count(lit(1)).as("_iover"))
+          interSub.join(interOver, Seq("a", "b"), "left")
+            .select(col("a"), col("b"),
+              (col("_isub") + coalesce(col("_iover"), lit(0L))).as("inter"))
+        }
+      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      inter
+        .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
+        .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
+        .select(col("a"), col("b"), col("inter"),
+          (col("na") + col("nb") - col("inter")).as("uni"))
+        .filter(col("inter") * den >= col("uni") * num)
+        .localCheckpoint(true)
     }
-  }
 
   /** cross-corpus contamination check (train/test overlap): a DIRECT
     * shingle equi-join between the corpora, verified by n-gram
@@ -440,19 +415,12 @@ object TextDedup {
     * Output (bench_id, train_id, inter, nb).
     */
   def contamination(train: DataFrame, bench: DataFrame,
-      num: Int = 7, den: Int = 10, materialize: Boolean = true,
-      maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {
-    // caches only on the eager path (released before returning); the
-    // lazy path stays uncached so nothing leaks — see nearDuplicates.
-    val shT0 = explodedShingles(train)
-    val shTr = if (materialize) shT0.cache() else shT0
-    val shB0 = explodedShingles(bench)
-    val shB = if (materialize) shB0.cache() else shB0
-    val result = contaminationOnShingles(shTr, shB, num, den,
-      materialize, maxShingleDf)
-    if (materialize) { shTr.unpersist(false); shB.unpersist(false) }
-    result
-  }
+      num: Int = 7, den: Int = 10,
+      maxShingleDf: Int = defaultMaxShingleDf): DataFrame =
+    Iterate.scope(train.sparkSession, "Contamination") { s =>
+      contaminationOnShingles(s.cache(explodedShingles(train)),
+        s.cache(explodedShingles(bench)), num, den, maxShingleDf)
+    }
 
   /** [[contamination]] over CALLER-MANAGED exploded-shingle frames —
     * the Curate composition hook (one corpus explode shared across
@@ -463,7 +431,6 @@ object TextDedup {
     */
   private[pipeline] def contaminationOnShingles(shTr: DataFrame,
       shB: DataFrame, num: Int = 7, den: Int = 10,
-      materialize: Boolean = true,
       maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {
     val shT = if (maxShingleDf <= 0) shTr else
       shTr.withColumn("_df", count(lit(1)).over(Window.partitionBy("sh")))
@@ -472,11 +439,11 @@ object TextDedup {
     val inter = shB.select(col("doc_id").as("bench_id"), col("sh"))
       .join(shT.select(col("doc_id").as("train_id"), col("sh")), Seq("sh"))
       .groupBy("bench_id", "train_id").agg(count(lit(1)).as("inter"))
-    val result = inter
+    inter
       .join(nb.select(col("doc_id").as("bench_id"), col("nb")), Seq("bench_id"))
       .filter(col("inter") * den >= col("nb") * num)
       .select("bench_id", "train_id", "inter", "nb")
-    if (!materialize) result else result.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** SimHash width in bits. 60 = 15 md5 hex chars per token — the
@@ -617,30 +584,23 @@ object TextDedup {
     * appearing in 10⁹ docs contributes 10⁹ join rows (its honest
     * occurrence count), not 10¹⁸ pairs.
     */
-  def dupNgramStats(docs: DataFrame, materialize: Boolean = true): DataFrame = {
-    // the exploded shingle set feeds the df aggregate AND the join
-    // side — without a cache the tokenize+shingle construction (the
-    // dominant cost: string building over the whole corpus) runs
-    // twice in one plan (no exchange to reuse: the agg side combines
-    // map-side first). Eager path caches it once and returns a
-    // lineage-free result (the nearDuplicates discipline); lazy path
-    // stays uncached for plan inspection.
-    val sh0 = explodedShingles(docs)           // distinct per doc by construction
-    val sh = if (materialize) sh0.cache() else sh0
-    val df = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val result = sh.join(df, Seq("sh"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_dup"))
-      .select(col("doc_id"), col("n_shingles"), col("n_dup"),
-        floor(lit(100.0) * col("n_dup") / col("n_shingles")).cast(LongType).as("dup_pct"))
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      sh.unpersist(false)
-      out
+  def dupNgramStats(docs: DataFrame): DataFrame =
+    Iterate.scope(docs.sparkSession, "DupNgramStats") { s =>
+      // the exploded shingle set feeds the df aggregate AND the join
+      // side — without a cache the tokenize+shingle construction (the
+      // dominant cost: string building over the whole corpus) runs
+      // twice in one plan (no exchange to reuse: the agg side combines
+      // map-side first)
+      val sh = s.cache(explodedShingles(docs)) // distinct per doc by construction
+      val df = sh.groupBy("sh").agg(count(lit(1)).as("df"))
+      sh.join(df, Seq("sh"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_shingles"),
+          sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_dup"))
+        .select(col("doc_id"), col("n_shingles"), col("n_dup"),
+          floor(lit(100.0) * col("n_dup") / col("n_shingles")).cast(LongType).as("dup_pct"))
+        .localCheckpoint(true)
     }
-  }
 
   /** positional k-shingles (doc_id, p, sh): one row per shingle
     * OCCURRENCE with its 0-based token position — unlike

@@ -117,7 +117,8 @@ object DocsStream {
     graft.pipeline.TextDedup.explodedShingles(bench)
       .select(col("sh"), col("doc_id").as("bench_id"))
 
-  /** file-source stream over a documents parquet directory */
+  /** file-source stream over a parquet directory (documents, events,
+    * …), with the schema of the files already there */
   def readDocsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema(spark.read.parquet(dir).schema)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
@@ -236,10 +236,4 @@ object EventsStream {
     drained.groupBy("user_id")
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("view_id")).as("n_views_attributed"))
-
-  /** convenience: file-source stream over an events parquet directory */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .parquet(dir)
 }

@@ -33,6 +33,18 @@ class EntryPointsSpec extends SparkSpec {
       "SHUFFLE_GB", "TABLE_GB").map("SPARK_GRAFT_" + _))
   }
 
+  test("no string literal names a checkout by absolute path") {
+    // records (BENCH_SELF.json, PROFILE_<q>.jsonl, plan dumps) resolve
+    // against the working directory, so a run writes into the checkout
+    // it was started from, never into another one
+    val here = java.nio.file.Paths.get("").toAbsolutePath
+    val checkouts = sourceLiterals("\"(/[^\"]*)\"".r).filter { lit =>
+      val p = java.nio.file.Paths.get(lit)
+      p == here || java.nio.file.Files.exists(p.resolve(".git"))
+    }
+    assert(checkouts.isEmpty, checkouts)
+  }
+
   test("extra-conf parser: pairs, '=' inside a value, and a loud malformed entry") {
     val (confs, err) = stderrOf(GraftSession.parseConf(
       " spark.sql.shuffle.partitions = 8 ;k=v=w;;no-equals-sign;=orphan"))

@@ -415,6 +415,34 @@ class PipelineSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b) => b == 3L || b == 4L || a == 3L || a == 4L })
   }
 
+  test("a job that throws leaves the session's cache as it found it") {
+    // one row fails mid-job, after the operator has cached its shared
+    // intermediates: the scope must drop them on the failure path
+    def cached = (org.apache.spark.sql.graft.CacheEntries(spark),
+      spark.sparkContext.getPersistentRDDs.keySet)
+    // (a range, not a local Seq: the optimizer folds projections over
+    // local rows, which would throw before any cache is taken)
+    val bad = raise_error(lit("planted bad row"))
+    val ids = spark.range(0, 8, 1, 2)
+    val docs = ids.select(col("id").as("doc_id"), concat_ws(" ",
+        (1 to 12).map(i => when(col("id") === i, "x").otherwise(s"t$i")): _*)
+        .as("text"))
+      .withColumn("text", when(col("doc_id") === 5L, bad).otherwise(col("text")))
+    val vecs = ids.select(col("id").as("vec_id"),
+        array(lit(1f), col("id").cast("float")).as("embedding"))
+      .withColumn("embedding",
+        when(col("vec_id") === 5L, bad).otherwise(col("embedding")))
+    Seq[(String, () => Any)](
+      "nearDuplicates" -> (() => TextDedup.nearDuplicates(docs)),
+      "annPairs" -> (() => Similarity.annPairs(vecs, dims = 2))).foreach {
+      case (name, op) =>
+        val before = cached
+        val e = intercept[Exception](op())
+        assert(e.getMessage.contains("planted bad row"), s"$name: ${e.getMessage}")
+        assert(cached == before, s"$name left caches behind")
+    }
+  }
+
   test("hot-bucket cap collapses boilerplate clusters to an O(B) hub star") {
     // 30 identical boilerplate docs (one LSH bucket of 30 → 435 pairs)
     // plus one genuine near-dup pair in a small bucket
@@ -657,10 +685,10 @@ class PipelineSpec extends SparkSpec {
     val ab = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ab.contains((0L, 1L)))
     assert(!ab.exists { case (a, b) => a == 2L || b == 2L })
-    // and no plan node is a cartesian product (lazy plan — the
-    // materialized default checkpoints and would hide the joins)
-    val plan = Similarity.annPairs(vecs, 900, 4, 2, dims = 8,
-      materialize = false).queryExecution.executedPlan.toString
+    // and no plan node is a cartesian product (the plan that ran — the
+    // returned checkpoint's own plan would hide the joins)
+    val plan = executedPlans(Similarity.annPairs(vecs, 900, 4, 2,
+      dims = 8)).mkString("\n")
     assert(!plan.contains("CartesianProduct"))
   }
 
@@ -835,8 +863,7 @@ class PipelineSpec extends SparkSpec {
     val ab = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ab.contains((0L, 1L)))
     assert(!ab.exists { case (a, b) => a == 2L || b == 2L })
-    val plan = Similarity.ivfPairs(vecs, 900, 2, 2, materialize = false)
-      .queryExecution.executedPlan.toString
+    val plan = executedPlans(Similarity.ivfPairs(vecs, 900, 2, 2)).mkString("\n")
     // the k-row centroid crossJoin is an intentional broadcast; the
     // CANDIDATE join must be the cell-key equi-join (no n x n product)
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"))
@@ -863,8 +890,8 @@ class PipelineSpec extends SparkSpec {
     // candidate generation goes through the cell equi-join, not a
     // queries x corpus product (the broadcast exchanges are the k-row
     // centroid table and the small query side — never the corpus)
-    val plan = Similarity.ivfTopK(emb, nQueries = 6L, k = 3, kCells = 3,
-      probes = 1, materialize = false).queryExecution.executedPlan.toString
+    val plan = executedPlans(Similarity.ivfTopK(emb, nQueries = 6L, k = 3,
+      kCells = 3, probes = 1)).mkString("\n")
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("Window"))
   }

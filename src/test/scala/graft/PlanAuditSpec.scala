@@ -13,6 +13,10 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** the executed plans of every action `body` ran (a checkpointing
+    * operator runs its plan when called) */
+  private def ran(body: => Any): String = executedPlans(body).mkString("\n")
+
   private lazy val vec = GrbVector.fromValues(spark,
     (0L until 100L).map(i => (i, i: Any)), GrbType.INT64, 1000000000000L)
 
@@ -88,10 +92,10 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan(TextDedup.simhashNearDuplicates(docs)).contains("CartesianProduct"))
     val vecs = spark.createDataFrame(Seq(
       (0L, Array(1f, 0f)), (1L, Array(0f, 1f)))).toDF("vec_id", "embedding")
-    assert(!plan(Similarity.annPairs(vecs, dims = 2, materialize = false))
+    assert(!ran(Similarity.annPairs(vecs, dims = 2))
       .contains("CartesianProduct"))
     // contamination: shingle equi-join across corpora, never bench×train
-    assert(!plan(TextDedup.contamination(docs, docs, materialize = false))
+    assert(!ran(TextDedup.contamination(docs, docs))
       .contains("CartesianProduct"))
   }
 
@@ -104,7 +108,7 @@ class PlanAuditSpec extends SparkSpec {
       "quality filter must prune unused document columns")
     assert(!pq.contains("CartesianProduct"))
     // dup-ngram fraction: df equi-join on the shingle, no pairing
-    val pd = plan(TextDedup.dupNgramStats(docs, materialize = false))
+    val pd = ran(TextDedup.dupNgramStats(docs))
     assert(!pd.contains("CartesianProduct"))
     assert(!pd.contains("lang"), "dup-ngram scan must prune to doc_id/text")
     // mix plan: the only cross join is the broadcast 1-row count attach
@@ -159,8 +163,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!ppii.contains("Exchange"), s"PII scan should plan shuffle-free:\n$ppii")
     // k-means: centroids broadcast each round, no cartesian materialization
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val pkm = plan(Similarity.embedClusters(emb, k = 4, lloydRounds = 1,
-      materialize = false))
+    val pkm = ran(Similarity.embedClusters(emb, k = 4, lloydRounds = 1))
     assert(pkm.contains("BroadcastExchange"), "k-means centroids should broadcast")
     // one MIS round: equi-joins + min aggregate, never cartesian
     val adj = docs.sparkSession.range(100)

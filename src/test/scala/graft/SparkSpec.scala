@@ -1,8 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.ListenerQuiesce
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** shared local session for all specs: the mains' conf stack at
   * local[4], width 4 */
@@ -30,6 +34,27 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val key = "spark.graft.broadcast.maxBytes"
     spark.conf.set(key, "1")
     try body finally spark.conf.unset(key)
+  }
+
+  /** the executed plans of the SQL actions `body` ran, in completion
+    * order. Operators that return checkpointed frames run their plan
+    * inside `localCheckpoint`, an action like `collect`, so this is
+    * the plan that actually ran.
+    */
+  def executedPlans(body: => Any): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events are async: drain the bus before reading
+      ListenerQuiesce.waitUntilEmpty(spark.sparkContext)
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
   }
 
   /** `body`'s value and what it printed to stderr */

@@ -10,7 +10,7 @@
 # Output: one line per cell in $OUT (JSON from Bench + probe lines),
 # plus per-cell BENCH_probe.json copies under /tmp/ab_cells/.
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."  # the checkout this script belongs to
 OUT=${1:-/tmp/ab_bench.log}
 QUERIES=q_cc_events,q_ewise_add,p_dedup_minhash
 mkdir -p /tmp/ab_cells /tmp/graft-ab-disk
