@@ -50,11 +50,10 @@ object Coloring {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"coloring adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
-    val raw = a.df.select(col("i"), col("j")).filter(col("i") =!= col("j"))
-      .cache()
-    val nnz = raw.count()
     Iterate.scope(spark, "Coloring") { loop =>
-    val width = loop.sized(nnz)
+    val (raw, nnz) = loop.edges(
+      a.df.select(col("i"), col("j")).filter(col("i") =!= col("j")))
+    loop.sized(nnz)
     // Broadcast mode below the guard (the LPA/MIS §17o/§17p pattern):
     // vertex-sized frames broadcast into their joins, adjacency cached
     // by i — the actB/sel/colored joins and the nbmin aggregate then
@@ -62,9 +61,7 @@ object Coloring {
     // through broadcast-exchange reuse instead of recomputing. Above
     // Grb.BroadcastGuard the sharded plan is unchanged.
     val bcast = loop.broadcasts(a.nrows)
-    val adj = loop.cache(raw.repartition(width, col(if (bcast) "i" else "j")))
-    adj.count() // materialize before freeing the sizing pass's cache
-    raw.unpersist(false)
+    val adj = loop.partition("adj", raw, if (bcast) "i" else "j")
     // single state frame: (n, color) with color NULL while active;
     // the active count rides each checkpoint job as an observed metric
     // (Loop.probe) instead of a per-round count job

@@ -47,16 +47,14 @@ object FastSV {
     require(a.nrows == a.ncols, "adjacency must be square")
     val spark = a.spark
     val n = a.nrows
-    // co-partition the adjacency by the contraction key once (every
-    // mxv reuses the exchange), at the loop width — block fan-out ×
-    // rounds is the fixed cost (Iterate.Loop.sized scaladoc)
-    // Respect a caller-owned cache: cache()+unpersist() on a plan the
-    // caller already persisted would evict THEIR CacheManager entry
-    // (unpersist is by-plan, not by-reference), cooling every later use.
-    val callerCached =
-      a.df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val raw = if (callerCached) a.df else a.df.cache()
-    val nnz = raw.count()
+    // whole-stage codegen off for the loop body: the per-round plans
+    // re-generate fused classes every round/rep (measured 30 s of JIT
+    // per fresh-context rep — see the Iterate.Loop codegen note);
+    // volcano iterators with small cached projections run the same
+    // few-MB exchanges at a fraction of the settle tax. Fresh-context
+    // 31.9 -> 16.0 s on the q_cc_events graph, identical results.
+    Iterate.scope(spark, "FastSV", codegen = false) { loop =>
+    val (raw, nnz) = loop.edges(a.df)
     // the identity labeling: every vertex its own parent
     val ident = nodes match {
       case Some(ns) => ns.select(col("i"), col("i").as("v"))
@@ -73,24 +71,17 @@ object FastSV {
     if (nnz <= localThr && nnz > 0) {
       val pairs = raw.select(col("i").cast("long"), col("j").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (!callerCached) raw.unpersist(false)
       import spark.implicits._
       val labDf = LocalCC.labels(pairs).toSeq.toDF("i", "_lab")
-      return new GrbVector(
+      new GrbVector(
         ident.join(broadcast(labDf), Seq("i"), "left")
           .select(col("i"), coalesce(col("_lab"), col("v")).as("v")), n)
-    }
-    // whole-stage codegen off for the loop body: the per-round plans
-    // re-generate fused classes every round/rep (measured 30 s of JIT
-    // per fresh-context rep — see the Iterate.Loop codegen note);
-    // volcano iterators with small cached projections run the same
-    // few-MB exchanges at a fraction of the settle tax. Fresh-context
-    // 31.9 -> 16.0 s on the q_cc_events graph, identical results.
-    Iterate.scope(spark, "FastSV", codegen = false) { loop =>
-    val width = loop.sized(nnz)
-    val A = new GrbMatrix(loop.cache(raw.repartition(width, col("j"))), n, n)
-    A.df.count()
-    if (!callerCached) raw.unpersist(false)
+    } else {
+    // co-partition the adjacency by the contraction key once (every
+    // mxv reuses the exchange), at the loop width — block fan-out ×
+    // rounds is the fixed cost (Iterate.Loop.sized scaladoc)
+    loop.sized(nnz)
+    val A = new GrbMatrix(loop.partition("adj", raw, "j"), n, n)
     // f = gp = identity
     var f = new GrbVector(ident, n)
     var gp = new GrbVector(ident, n)
@@ -139,15 +130,12 @@ object FastSV {
       // bounding its storage at O(n) instead of O(rounds × n) — at
       // cluster scale the difference between a steady-state footprint
       // and an eviction cascade.
-      val (cmp, probeRow) = loop.probe("cmp", gathered
-        .join(gp.df.select(col("i"), col("v").as("_ov")), Seq("i"), "left")
-        .select(col("i"), col("v"),
-          (col("_ov").isNull || col("v") =!= col("_ov")).as("_chg")),
-        count(when(col("_chg"), 1)).as("chg"))
-      gp = new GrbVector(cmp.select(col("i"), col("v")), n)
-      change = probeRow.getLong(0) > 0
+      val (cmp, chg) = loop.changed("cmp", gathered, gp.df)
+      gp = new GrbVector(cmp, n)
+      change = chg > 0
     }
     f
+    }
     }
   }
 }

@@ -72,15 +72,14 @@ object Hits {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"hits adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
+    Iterate.scope(spark, "Hits") { loop =>
     // one pass to learn nnz, then the whole 10-round loop runs at a
     // shuffle width sized for its per-round work instead of the
     // session's heaviest-single-aggregate width — 20 products × the
     // session's 128-wide block fan-out was pure fixed cost here
     // (Iterate.Loop.sized scaladoc: the ITERTAIL decomposition)
-    val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
-    val nnz = raw.count()
-    Iterate.scope(spark, "Hits") { loop =>
-    val width = loop.sized(nnz)
+    val (raw, nnz) = loop.edges(a.df.select(col("i"), col("j"), lit(1L).as("v")))
+    loop.sized(nnz)
     // zero-exchange product rounds below the guard; sharded CSR/CSC
     // above it (see the scale-shape scaladoc), like the
     // lpa/mis/kcore/coloring/scc family.
@@ -90,14 +89,9 @@ object Hits {
     // partitioning → the aggregate rides it exchange-free), by the
     // CONTRACTION key in sharded mode (the adjacency must not
     // re-shuffle; only the vector side exchanges).
-    val adjVxm = new GrbMatrix(
-      loop.cache(raw.repartition(width, col(if (bcast) "j" else "i"))),
-      a.nrows, a.ncols)
-    val adjMxv = new GrbMatrix(
-      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
-      a.nrows, a.ncols)
-    adjVxm.df.count(); adjMxv.df.count() // materialize, then free the sizing cache
-    raw.unpersist(false)
+    val Seq(adjVxm, adjMxv) = loop.partitions("adj", raw,
+      Seq(if (bcast) "j" else "i"), Seq(if (bcast) "i" else "j"))
+      .map(new GrbMatrix(_, a.nrows, a.ncols))
     // hub support = vertices with out-edges, starting mass 1 each;
     // seeded from whichever orientation is partitioned by i so the
     // init distinct plans exchange-free in both modes

@@ -42,15 +42,12 @@ object HyperAnf {
   def balls(a: GrbMatrix, rounds: Int = 4): DataFrame = {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"anf adjacency must be square: ${a.nrows}x${a.ncols}")
-    val raw = a.df.select(col("i").as("v"), col("j").as("nbr")).cache()
-    val nnz = raw.count()
     // rounds × block fan-out: run the register propagation at the
     // loop width (Iterate.Loop.sized scaladoc)
     Iterate.scope(a.df.sparkSession, "HyperAnf") { loop =>
-    val width = loop.sized(nnz)
-    val adj = loop.cache(raw.repartition(width, col("nbr")))
-    adj.count()
-    raw.unpersist(false)
+    val (raw, nnz) = loop.edges(a.df.select(col("i").as("v"), col("j").as("nbr")))
+    loop.sized(nnz)
+    val adj = loop.partition("adj", raw, "nbr")
     var b = loop.checkpoint("b0", adj.select(col("v")).distinct()
       .groupBy("v")
       .agg(org.apache.spark.sql.graft.HllState(

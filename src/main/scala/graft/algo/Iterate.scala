@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
+import org.apache.spark.storage.StorageLevel
 
 /** Iteration harness for algorithm loops (SURVEY §7.1) — the Spark
   * analogue of the reference notebook's persist() checkpointing
@@ -18,10 +19,12 @@ import org.apache.spark.sql.graft.FreshCheckpoint
   * Every loop in `graft.algo` runs inside one [[Iterate.scope]]: the
   * [[Loop]] it hands the body owns the loop's lifecycle — shuffle
   * width, codegen, the broadcast-vs-sharded decision, checkpoint
-  * blocks (freed when superseded and on exit), caches, and the
-  * per-round job marker. The one-shot pipeline operators that cache
-  * shared intermediates (`graft.pipeline` dedup and ANN) run in one
-  * too, for its caches alone.
+  * blocks (freed when superseded and on exit), the loop's adjacency
+  * caches (the sizing pass's cache and each partitioned adjacency,
+  * freed when superseded and on exit — also when the loop throws),
+  * and the per-round job marker. The one-shot pipeline operators that
+  * cache shared intermediates (`graft.pipeline` dedup and ANN) run in
+  * one too, for its caches alone.
   */
 object Iterate {
 
@@ -54,11 +57,16 @@ object Iterate {
   val RoundKey = "graft.loop"
 
   /** Run one algorithm loop. `body` gets the [[Loop]] that owns the
-    * loop's session overrides and checkpoint blocks; on exit (normal
-    * or not) the overrides are restored, the loop's caches dropped,
-    * and every checkpoint block it holds is freed EXCEPT those the
-    * returned value reads (a DataFrame, GrbVector, GrbMatrix, or a
-    * tuple of them).
+    * loop's session overrides, adjacency caches and checkpoint blocks;
+    * on exit (normal or not) the overrides are restored, the loop's
+    * caches dropped, and every checkpoint block it holds is freed
+    * EXCEPT those the returned value reads (a DataFrame, GrbVector,
+    * GrbMatrix, or a tuple of them).
+    *
+    * A vertex loop's setup is one recipe: [[Loop.edges]] caches and
+    * counts the edge frame, [[Loop.sized]] sizes the loop by that
+    * count, and [[Loop.partition]] caches the adjacency repartitioned
+    * at the loop width, materializes it, and drops the sizing cache.
     *
     * One-shot pipeline operators (dedup, ANN, `Curate`) use the same
     * scope for their caches alone: they register shared intermediates
@@ -67,8 +75,10 @@ object Iterate {
     * the result reads no cache. Their jobs carry the `<Op>:0` marker.
     *
     * @param name    the loop's name in the [[RoundKey]] marker
-    * @param codegen whole-stage codegen for the loop's jobs; off only
-    *                for the loops [[Loop]]'s codegen note measured
+    * @param codegen whole-stage codegen for the loop's jobs from
+    *                [[Loop.sized]] on (the sizing count runs under the
+    *                caller's setting); off only for the loops [[Loop]]'s
+    *                codegen note measured
     */
   def scope[T](spark: SparkSession, name: String, codegen: Boolean = true)(
       body: Loop => T): T = {
@@ -123,13 +133,14 @@ object Iterate {
     // until the next eager materialization (which must read them)
     private val slots = scala.collection.mutable.LinkedHashMap[String, Seq[RDD[_]]]()
     private val pending = scala.collection.mutable.LinkedHashMap[String, DataFrame]()
-    private val caches = scala.collection.mutable.ListBuffer[DataFrame]()
+    // the caches this loop took, by slot (the checkpoint discipline)
+    private val cached = scala.collection.mutable.LinkedHashMap[String, Seq[DataFrame]]()
+    private var anon = 0 // slots of the caches taken without one
     private val callerRound = sc.getLocalProperty(RoundKey)
     private var path = List.empty[Int] // enclosing rounds, innermost first
     private var bcast = false
 
     mark()
-    if (!codegen) set("spark.sql.codegen.wholeStage", "false")
 
     private def set(key: String, value: String): Unit = {
       if (!saved.contains(key)) saved(key) = spark.conf.get(key)
@@ -192,6 +203,7 @@ object Iterate {
     def sized(workRows: Long): Int = {
       val width = loopWidth(spark, workRows)
       set("spark.sql.shuffle.partitions", width.toString)
+      if (!codegen) set("spark.sql.codegen.wholeStage", "false")
       width
     }
 
@@ -210,8 +222,57 @@ object Iterate {
     /** `broadcast(df)` in broadcast mode, `df` in sharded mode */
     def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
 
+    /** `df.cache()` unless its plan is cached already (unpersist is by
+      * plan: dropping it would evict the caller's entry) — the frames
+      * this loop now owns
+      */
+    private def take(dfs: Seq[DataFrame]): Seq[DataFrame] =
+      dfs.filter(_.storageLevel == StorageLevel.NONE).map(_.cache())
+
+    private val Sizing = "\u0000sizing"
+
+    /** The loop's edge frame: `df` cached (the sizing count and the
+      * partition pass both read it) and counted. Returns (`df`, its
+      * row count); [[partition]] drops the cache.
+      */
+    def edges(df: DataFrame): (DataFrame, Long) =
+      (cache(Sizing, df), df.count())
+
+    /** `df` cached into `slot`, freeing what the slot held */
+    def cache(slot: String, df: DataFrame): DataFrame = {
+      drop(slot)
+      cached(slot) = take(Seq(df))
+      df
+    }
+
     /** `df.cache()`, dropped when the loop exits */
-    def cache(df: DataFrame): DataFrame = { caches += df; df.cache() }
+    def cache(df: DataFrame): DataFrame = { anon += 1; cache(s"\u0000$anon", df) }
+
+    /** Free the caches `slot` holds now, before the loop exits */
+    def drop(slot: String): Unit =
+      cached.remove(slot).foreach(_.foreach(_.unpersist(false)))
+
+    /** `df` repartitioned by the `key` columns at the loop width,
+      * cached into `slot` and materialized; then the slot's previous
+      * cache and the [[edges]] cache are freed. A loop's adjacency:
+      * every round's join on `key` reuses the exchange.
+      */
+    def partition(slot: String, df: DataFrame, key: String*): DataFrame =
+      partitions(slot, df, key).head
+
+    /** [[partition]] once per key — a loop that joins its adjacency
+      * on both endpoints caches both orientations in one slot
+      */
+    def partitions(slot: String, df: DataFrame, keys: Seq[String]*): Seq[DataFrame] = {
+      val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val parts = keys.map(k => df.repartition(width, k.map(col): _*))
+      val owned = take(parts)
+      parts.foreach(_.count())
+      drop(slot)
+      drop(Sizing)
+      cached(slot) = owned
+      parts
+    }
 
     /** Run `body(r)` for rounds r = 1, 2, … while `more` holds, at most
       * `max` rounds, with the round's jobs marked `<name>:<r>`
@@ -258,28 +319,51 @@ object Iterate {
       out
     }
 
-    /** [[checkpointWithProbe]] into `slot`: the round's convergence
-      * probe `metric` rides its checkpoint job. `keepPartitioning =
-      * false` is FreshCheckpoint.withObserved's partitioning-carry
-      * opt-out.
+    /** Eager [[FreshOps.freshCheckpoint]] of `df` into `slot` whose
+      * materialization job also evaluates the aggregate `metric` (and
+      * `more`) over the checkpointed rows, via `Dataset.observe`: the
+      * round's convergence/count probe rides the checkpoint job — no
+      * per-round `count()` or `isEmpty` action over the blocks it just
+      * wrote. CollectMetrics passes rows through and keeps the child's
+      * output partitioning, so the checkpoint keeps its clustering
+      * (the broadcast-mode loops' zero-exchange rounds depend on it —
+      * PlanAuditSpec). `keepPartitioning = false` is
+      * FreshCheckpoint.withObserved's partitioning-carry opt-out.
+      *
+      * @return (checkpointed frame, probe row — one column per probe
+      *         aggregate, initial values when the frame is empty)
       */
     def probe(slot: String, df: DataFrame, metric: Column,
-        keepPartitioning: Boolean = true): (DataFrame, Row) = {
-      val (out, row) = observed(df, keepPartitioning, Seq(metric))
+        keepPartitioning: Boolean = true,
+        more: Seq[Column] = Nil): (DataFrame, Row) = {
+      val (out, row) = observed(df, keepPartitioning, metric +: more)
       settle()
       hold(slot, out)
       (out, row)
     }
 
+    /** The one-job convergence compare: `next` (an (i, v) frame)
+      * checkpointed into `slot` with the count of keys whose value
+      * differs from `prev`'s, or that `prev` lacks, as its probe — a
+      * left join from `next`, so `next`'s keys must cover `prev`'s.
+      *
+      * @return ((i, v) over the checkpoint, changed-key count)
+      */
+    def changed(slot: String, next: DataFrame, prev: DataFrame): (DataFrame, Long) = {
+      val (cmp, row) = probe(slot, next
+        .join(prev.select(col("i"), col("v").as("_ov")), Seq("i"), "left")
+        .select(col("i"), col("v"),
+          (col("_ov").isNull || col("v") =!= col("_ov")).as("_chg")),
+        count(when(col("_chg"), 1)).as("chg"))
+      (cmp.select(col("i"), col("v")), row.getLong(0))
+    }
+
     /** Vector loop converging on VALUE STABILITY, with the prev-vs-next
-      * comparison FOLDED into the per-round checkpoint (the FastSV
-      * cmp-frame pattern): each round runs ONE Spark job — the eager
-      * checkpoint of (i, v, _chg) — and the change count rides that
-      * job as its probe, instead of a separate full-outer-join isequal
-      * action on top of the checkpoint job. Requires the step to be
-      * key-monotone (keys(next) ⊇ keys(prev) — true of any
-      * ewise_add-accumulated iteration), so a left join from next sees
-      * every prev key.
+      * comparison FOLDED into the per-round checkpoint ([[changed]]):
+      * each round runs ONE Spark job, instead of a separate
+      * full-outer-join isequal action on top of the checkpoint job.
+      * Requires the step to be key-monotone (keys(next) ⊇ keys(prev) —
+      * true of any ewise_add-accumulated iteration).
       *
       * @return (fixpoint or horizon vector, rounds run) — the rounds
       *         are the early-exit evidence a fixpoint loop's spec pins
@@ -290,13 +374,9 @@ object Iterate {
       var change = true
       val used = rounds(maxIter)(change) { _ =>
         val next = step(f)
-        val (cmp, probeRow) = probe("stable", next.df
-          .join(f.df.select(col("i"), col("v").as("_ov")), Seq("i"), "left")
-          .select(col("i"), col("v"),
-            (col("_ov").isNull || col("v") =!= col("_ov")).as("_chg")),
-          count(when(col("_chg"), 1)).as("chg"))
-        f = new GrbVector(cmp.select(col("i"), col("v")), next.size)
-        change = probeRow.getLong(0) > 0
+        val (cmp, chg) = changed("stable", next.df, f.df)
+        f = new GrbVector(cmp, next.size)
+        change = chg > 0
       }
       (f, used)
     }
@@ -352,39 +432,11 @@ object Iterate {
       val keep = result.fold(Set.empty[Int])(blocks(_).map(_.id).toSet)
       (slots.values.flatten ++ pending.values.flatMap(blocks))
         .filterNot(r => keep(r.id)).foreach(_.unpersist(false))
-      caches.foreach(_.unpersist(false))
+      cached.values.flatten.foreach(_.unpersist(false))
       saved.foreach { case (k, v) => spark.conf.set(k, v) }
       sc.setLocalProperty(RoundKey, callerRound)
     }
   }
-
-  /** Eager [[FreshOps.freshCheckpoint]] whose materialization job ALSO
-    * evaluates the given aggregate `probe` columns over the
-    * checkpointed rows, via `Dataset.observe` (CollectMetrics): the
-    * loop's convergence/count probe rides the checkpoint job instead
-    * of paying its own driver round-trip per round. Before this, every
-    * data-driven loop ran one extra action per round over the
-    * just-materialized blocks — a `count()` (two stages: partial agg +
-    * single-partition exchange) or an `isEmpty` (executeTake, which on
-    * the stable FINAL round scans every partition in sequential
-    * escalating waves). The observe aggregate is computed by the
-    * materialization tasks themselves and read off the executed plan's
-    * accumulators after the job — zero extra jobs, zero extra scans
-    * (guide §2: per-round fixed cost scales with rounds; VERDICT r14
-    * item 1 "hoist the convergence probe into the gather job").
-    *
-    * The CollectMetrics node passes rows through unchanged and
-    * preserves the child's output partitioning, so the checkpointed
-    * frame keeps its clustering (the broadcast-mode loops' zero-
-    * exchange rounds depend on it — spec-pinned in PlanAuditSpec).
-    *
-    * @return (checkpointed frame, probe row — one column per probe
-    *         aggregate, initial aggregate values when the frame is
-    *         empty, e.g. count = 0)
-    */
-  def checkpointWithProbe(df: DataFrame, probe: Column,
-      more: Column*): (DataFrame, Row) =
-    observed(df, keepPartitioning = true, probe +: more)
 
   private val probeSeq = new java.util.concurrent.atomic.AtomicLong()
 

@@ -55,12 +55,6 @@ object KCore {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"kcore adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
-    // one pass to learn nnz (cached so the loop-width repartition below
-    // does not recompute the upstream), then the whole loop runs at a
-    // shuffle width sized for the loop's per-round work, not the
-    // session's heaviest-single-aggregate width (Iterate.Loop.sized)
-    val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
-    val nnz = raw.count()
     // Whole-stage codegen OFF for the loop (round-14, PERF_NOTES
     // §17g): same mechanism as FastSV — many rounds of few-MB
     // exchanges re-generate fused classes per round/rep and pay the
@@ -68,17 +62,18 @@ object KCore {
     // mins, mid window): kcore 8.26->6.42, lpa 8.88->7.15,
     // mis 8.09->5.28 — each below its healthy-window record.
     Iterate.scope(spark, "KCore", codegen = false) { loop =>
-    val width = loop.sized(nnz)
+    // one pass to learn nnz, then the whole loop runs at a shuffle
+    // width sized for the loop's per-round work, not the session's
+    // heaviest-single-aggregate width (Iterate.Loop.sized)
+    val (raw, nnz) = loop.edges(a.df.select(col("i"), col("j"), lit(1L).as("v")))
+    loop.sized(nnz)
     // ZERO-EXCHANGE ROUNDS below the broadcast guard (the LPA §17o
     // pattern): survivor-vector joins broadcast, adjacency cached by
     // i — see coreDegree below. Above the guard the sharded j-cache
     // plan is unchanged.
     val bcast = loop.broadcasts(a.nrows)
-    var A = new GrbMatrix(
-      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
-      a.nrows, a.ncols)
-    A.df.count() // materialize before freeing the sizing pass's cache
-    raw.unpersist(false)
+    val key = if (bcast) "i" else "j"
+    var A = new GrbMatrix(loop.partition("adj", raw, key), a.nrows, a.ncols)
     // broadcast mode (the LPA §17o pattern): survivor vector broadcast
     // into BOTH its joins — mxv's own vector join (broadcastVec, the
     // existing dimension-guarded hint) and the structural-mask semi-
@@ -181,12 +176,7 @@ object KCore {
           .join(loop.hint(s.df.select(col("i").as("sb"))),
             col("j") === col("sb"), "leftsemi")
           .select(col("i"), col("j"), col("v"))
-        val nextA = new GrbMatrix(
-          loop.cache(shrunk.repartition(width, col(if (bcast) "i" else "j"))),
-          a.nrows, a.ncols)
-        nextA.df.count() // materialize before dropping the old basis
-        A.df.unpersist(false)
-        A = nextA
+        A = new GrbMatrix(loop.partition("adj", shrunk, key), a.nrows, a.ncols)
         edgeBasisN = n2
       }
     }

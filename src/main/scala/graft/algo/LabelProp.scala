@@ -43,8 +43,6 @@ object LabelProp {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"lpa adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
-    val raw = a.df.select(col("i"), col("j")).cache()
-    val nnz = raw.count()
     // ZERO-EXCHANGE ROUNDS for label vectors small enough to
     // broadcast: with the label frame broadcast into the vote join,
     // the join no longer demands j-clustering — so the adjacency is
@@ -71,11 +69,10 @@ object LabelProp {
     // exchanges re-generate fused classes per round/rep. ABBA at
     // sf0.1 (3-rep mins, mid window): lpa 8.88->7.15 s.
     Iterate.scope(spark, "LabelProp", codegen = false) { loop =>
-      val width = loop.sized(nnz)
+      val (raw, nnz) = loop.edges(a.df.select(col("i"), col("j")))
+      loop.sized(nnz)
       val bcast = loop.broadcasts(a.nrows)
-      val adj = loop.cache(raw.repartition(width, col(if (bcast) "i" else "j")))
-      adj.count() // materialize before freeing the sizing pass's cache
-      raw.unpersist(false)
+      val adj = loop.partition("adj", raw, if (bcast) "i" else "j")
       val init = new GrbVector(
         adj.select(col("i")).distinct()
           .select(col("i"), col("i").cast("long").as("v")), a.nrows)

@@ -47,9 +47,6 @@ object Mis {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"mis adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
-    val raw = a.df.select(col("i"), col("j")).filter(col("i") =!= col("j"))
-      .cache()
-    val nnz = raw.count()
     // ZERO-EXCHANGE ROUNDS below the broadcast guard (the LPA §17o
     // pattern): with every vertex-sized frame (active set, selection,
     // knocked-out neighbours) BROADCAST into its join, no join demands
@@ -69,11 +66,11 @@ object Mis {
     // mins, mid window): kcore 8.26->6.42, lpa 8.88->7.15,
     // mis 8.09->5.28 — each below its healthy-window record.
     Iterate.scope(spark, "Mis", codegen = false) { loop =>
-    val width = loop.sized(nnz)
+    val (raw, nnz) = loop.edges(
+      a.df.select(col("i"), col("j")).filter(col("i") =!= col("j")))
+    loop.sized(nnz)
     val bcast = loop.broadcasts(a.nrows)
-    val adj = loop.cache(raw.repartition(width, col(if (bcast) "i" else "j")))
-    adj.count() // materialize before freeing the sizing pass's cache
-    raw.unpersist(false)
+    val adj = loop.partition("adj", raw, if (bcast) "i" else "j")
     // the active count rides each checkpoint job as an observed metric
     // (Loop.probe) instead of a per-round count job
     var (act, probe0) = loop.probe("act",

@@ -48,15 +48,13 @@ object Msf {
     */
   def forest(edges: DataFrame, n: Long, maxRounds: Int = 25): DataFrame = {
     val spark = edges.sparkSession
-    val e = edges.select(col("a"), col("b"), col("w"),
-      (shiftleft(col("w"), ShiftW) + shiftleft(col("a"), ShiftA) + col("b"))
-        .as("pk"))
-      .cache()
-    val nnz = e.count()
     // Borůvka rounds × block fan-out — loop-width discipline
     // (Iterate.Loop.sized); the inner CC sizes itself (PregelCC's
     // edge-RDD rule)
     Iterate.scope(spark, "Msf") { loop =>
+    val (e, nnz) = loop.edges(edges.select(col("a"), col("b"), col("w"),
+      (shiftleft(col("w"), ShiftW) + shiftleft(col("a"), ShiftA) + col("b"))
+        .as("pk")))
     loop.sized(nnz)
     var labels = loop.checkpoint("labels",
       e.select(explode(array(col("a"), col("b"))).as("v")).distinct()
@@ -103,7 +101,6 @@ object Msf {
           .select(col("v"), coalesce(col("nl"), col("l")).as("l")))
       }
     }
-    e.unpersist(false)
     picked match {
       case Nil => spark.range(0)
         .select(col("id").as("a"), col("id").as("b"), col("id").as("w"))

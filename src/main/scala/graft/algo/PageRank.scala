@@ -43,13 +43,12 @@ object PageRank {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"pagerank adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
+    Iterate.scope(spark, "PageRank") { loop =>
     // loop-width discipline (Iterate.Loop.sized scaladoc): 10
     // rounds of mxv at the session's aggregate-sized width is mostly
     // block fan-out; size the loop by nnz instead
-    val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
-    val nnz = raw.count()
-    Iterate.scope(spark, "PageRank") { loop =>
-    val width = loop.sized(nnz)
+    val (raw, nnz) = loop.edges(a.df.select(col("i"), col("j"), lit(1L).as("v")))
+    loop.sized(nnz)
     // ZERO-EXCHANGE ROUNDS below the broadcast guard (round-15; the
     // LPA §17o family reaches the value-iteration tier): the rank
     // vector broadcasts into the mxv join, so the join no longer
@@ -63,13 +62,11 @@ object PageRank {
     // two per-round exchanges — the right 100 TB shape, where
     // per-executor rank replication would dominate.
     val bcast = loop.broadcasts(a.nrows)
-    val ones = new GrbMatrix(
-      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
+    val ones = new GrbMatrix(loop.partition("adj", raw, if (bcast) "i" else "j"),
       a.nrows, a.ncols)
     val deg = new GrbVector(loop.cache(
       loop.checkpoint("deg", ones.reduceRowwise(Ops.plusMonoid).df)), a.nrows)
     val nNodes = deg.nvals // 1-row driver action, reused every round
-    raw.unpersist(false) // ones materialized by the deg pass above
     val base = (scale - scale * dampNum / dampDen) / nNodes
     val init = new GrbVector(
       deg.df.select(col("i"), lit(scale / nNodes).as("v")), a.nrows)
@@ -109,21 +106,18 @@ object PageRank {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"ppr adjacency must be square: ${a.nrows}x${a.ncols}")
     val spark = a.df.sparkSession
-    val raw = a.df.select(col("i"), col("j"), lit(1L).as("v")).cache()
-    val nnz = raw.count()
     Iterate.scope(spark, "PersonalizedPageRank") { loop =>
-    val width = loop.sized(nnz)
+    val (raw, nnz) = loop.edges(a.df.select(col("i"), col("j"), lit(1L).as("v")))
+    loop.sized(nnz)
     // broadcast mode mirrors [[ranks]] — and pays off even more here:
     // the PPR vector is SPARSE (round k's support is the k-hop ball),
     // so the per-round broadcast is a fraction of the vertex set
     val bcast = loop.broadcasts(a.nrows)
-    val ones = new GrbMatrix(
-      loop.cache(raw.repartition(width, col(if (bcast) "i" else "j"))),
+    val ones = new GrbMatrix(loop.partition("adj", raw, if (bcast) "i" else "j"),
       a.nrows, a.ncols)
     val deg = new GrbVector(loop.cache(
       loop.checkpoint("deg", ones.reduceRowwise(Ops.plusMonoid).df)), a.nrows)
-    deg.nvals // materializes deg and with it ones
-    raw.unpersist(false)
+    deg.nvals // materializes deg
     val base = scale - scale * dampNum / dampDen
     // one-row frames: the seed's full starting mass and its per-round
     // teleport refill (broadcast-joined by ewiseAdd's planner choice)

@@ -114,15 +114,14 @@ object RandomWalk {
   def walks(a: GrbMatrix, steps: Int = 4): DataFrame = {
     if (a.nrows != a.ncols) GraphblasException.dimensionMismatch(
       s"walk adjacency must be square: ${a.nrows}x${a.ncols}")
-    val edges = a.df.select(col("i").as("v"), col("j").as("nbr")).cache()
-    val nnz = edges.count()
     // steps × block fan-out is the loop's fixed cost — rank build and
     // move-joins run at the loop width (Iterate.Loop.sized)
     Iterate.scope(a.df.sparkSession, "RandomWalk") { loop =>
-    val width = loop.sized(nnz)
+    val (edges, nnz) = loop.edges(a.df.select(col("i").as("v"), col("j").as("nbr")))
+    loop.sized(nnz)
     // degree needs no rank — computed from the raw edge list; used
     // only OUTSIDE the loop (build-time nbr attach + the init frame)
-    val deg = edges.groupBy("v").agg(count(lit(1)).as("deg")).cache()
+    val deg = loop.cache("deg", edges.groupBy("v").agg(count(lit(1)).as("deg")))
     // cached pre-partitioned on the LOOP'S join key (v, idx), with
     // deg(nbr) attached so a walker lands carrying its next draw's
     // modulus (see WALKER-CONCENTRATION in the scaladoc). The attach
@@ -141,7 +140,6 @@ object RandomWalk {
     // 1-row driver action on the cached deg: the common no-mega-hub
     // case takes the single plain join (no extra ranked cache pass)
     val anyHot = !hotDeg.isEmpty
-    var rankedCache: Option[DataFrame] = None
     // LEFT joins with a 0 default: on asymmetric input a neighbor with
     // no out-edges must still be landed on (the walker emits the
     // arrival row, then dies next step when pmod(hash, 0) nulls its
@@ -154,8 +152,7 @@ object RandomWalk {
           Seq("nbr"), "left")
         .withColumn("nbrDeg", coalesce(col("nbrDeg"), lit(0L)))
       else {
-        val ranked = rankedAdjacency(edges).cache()
-        rankedCache = Some(ranked)
+        val ranked = loop.cache("ranked", rankedAdjacency(edges))
         // broadcast-probe the hot set first; only unmatched (cold) rows
         // take the shuffle join, so every shuffle key stays under
         // hotDegThreshold rows — the skew guarantee is unchanged
@@ -165,11 +162,8 @@ object RandomWalk {
             .join(coldDeg, Seq("nbr"), "left")
             .withColumn("nbrDeg", coalesce(col("nbrDeg"), lit(0L))))
       }
-    val indexed = loop.cache(attached
-      .repartition(width, col("v"), col("idx"))) // (v, nbr, idx, nbrDeg)
-    indexed.count()
-    rankedCache.foreach(_.unpersist(false))
-    edges.unpersist(false)
+    val indexed = loop.partition("indexed", attached, "v", "idx") // (v, nbr, idx, nbrDeg)
+    loop.drop("ranked")
     // every step's rows are OUTPUT — nothing is superseded, so each
     // step checkpoints into its own slot and all stay live until the
     // caller drops the result (unlike the fixpoint loops, which free
@@ -177,7 +171,7 @@ object RandomWalk {
     var pos = loop.checkpoint("step0", deg
       .select(col("v").as("start"), lit(0L).as("step"),
         col("v").as("cur"), col("deg").as("curDeg")))
-    deg.unpersist(false)
+    loop.drop("deg")
     val parts = scala.collection.mutable.ListBuffer[DataFrame](pos)
     // Broadcast mode below the guard (round-15; the §17o family): the
     // walker frame (≤ one row per vertex) broadcasts into the move

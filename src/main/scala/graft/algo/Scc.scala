@@ -53,17 +53,14 @@ import org.apache.spark.sql.types.LongType
   */
 object Scc {
   def scc(edges0: DataFrame, maxOuter: Int = 50, maxInner: Int = 10000): DataFrame = {
-    val raw = edges0.select(col("u").cast(LongType).as("u"),
-        col("v").cast(LongType).as("v"))
-      .filter(col("u") =!= col("v")).distinct().cache()
-    val nnz = raw.count()
     // inner rounds × block fan-out is the loop's fixed cost — run the
     // whole refinement at the loop width (Iterate.Loop.sized)
-    Iterate.scope(raw.sparkSession, "Scc") { loop =>
-    val width = loop.sized(nnz)
-    val edges = loop.cache(raw.repartition(width, col("v")))
-    edges.count()
-    raw.unpersist(false)
+    Iterate.scope(edges0.sparkSession, "Scc") { loop =>
+    val (raw, nnz) = loop.edges(edges0.select(col("u").cast(LongType).as("u"),
+        col("v").cast(LongType).as("v"))
+      .filter(col("u") =!= col("v")).distinct())
+    loop.sized(nnz)
+    val edges = loop.partition("edges", raw, "v")
     val nodes = edges.select(col("u").as("n"))
       .unionByName(edges.select(col("v").as("n"))).distinct()
     // state: block key (bf, bb), finalized flag, scc label
@@ -101,14 +98,8 @@ object Scc {
       // direction EVERY inner round. The Hits CSR/CSC trade — two
       // cached repartitions paid once per outer round — caps per-round
       // traffic at the vertex-sized label exchange + agg partials.
-      val shardCaches = if (bcast) Nil else {
-        val aeU = ae.repartition(width, col("u")).cache()
-        val aeV = ae.repartition(width, col("v")).cache()
-        aeU.count(); aeV.count()
-        Seq(aeU, aeV)
-      }
-      val ufBase = if (bcast) ae else shardCaches.head
-      val ubBase = if (bcast) ae else shardCaches(1)
+      val Seq(ufBase, ubBase) =
+        if (bcast) Seq(ae, ae) else loop.partitions("ae", ae, Seq("u"), Seq("v"))
       // inner: synchronous min-label rounds for f (over in-edges) and
       // b (over out-edges) simultaneously, to joint fixpoint
       var fb = loop.checkpoint("fb",
@@ -147,7 +138,7 @@ object Scc {
             .otherwise(when(col("f") === col("b"), col("f"))).as("scc")),
         count(when(!col("done"), 1)).as("remaining"))
       remaining = stProbe.getLong(0)
-      shardCaches.foreach(_.unpersist(false))
+      loop.drop("ae")
       st = nextSt
     }
     st.select(col("n"), col("scc"))

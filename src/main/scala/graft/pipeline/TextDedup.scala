@@ -516,19 +516,21 @@ object TextDedup {
       s"blocks=$blocks must exceed maxHamming=$maxHamming for the pigeonhole")
     val blockBits = simhashBits / blocks
     val comboSize = blocks - maxHamming
-    val combos = (0 until blocks).combinations(comboSize).toSeq
-    val keyed = combos.zipWithIndex.map { case (combo, t) =>
-      // concatenate the subset's blocks into one ≤ 60-bit key
-      val key = combo.zipWithIndex.map { case (blk, pos) =>
-        (shiftright(col("simhash"), blk * blockBits) % (1 << blockBits)) *
-          lit(1L << (pos * blockBits))
-      }.reduce(_ + _)
-      struct(lit(t).as("tbl"), key.as("key"))
-    }
+    // one literal row per table (its blocks' bit offsets), so the key
+    // is ONE comboSize-term expression, not one per table (blocks=10's
+    // 120 keys outgrew Janino's 64 KB method limit)
+    val tables = (0 until blocks).combinations(comboSize).zipWithIndex.map { case (c, t) =>
+      struct(lit(t).as("tbl"), array(c.map(b => lit(b * blockBits)): _*).as("sh"))
+    }.toSeq
+    // concatenate the subset's blocks into one ≤ 60-bit key
+    val key = (0 until comboSize).map { pos =>
+      (call_function("shiftright", col("simhash"), col("tk.sh")(pos)) %
+        (1 << blockBits)) * lit(1L << (pos * blockBits))
+    }.reduce(_ + _)
     val banded = shd.select(col("doc_id"), col("simhash"),
-        explode(array(keyed: _*)).as("tk"))
+        explode(array(tables: _*)).as("tk"))
       .select(col("doc_id"), col("simhash"),
-        col("tk.tbl").as("tbl"), col("tk.key").as("key"))
+        col("tk.tbl").as("tbl"), key.as("key"))
     val l = banded.select(col("tbl"), col("key"), col("doc_id").as("a"), col("simhash").as("ha"))
     val r = banded.select(col("tbl"), col("key"), col("doc_id").as("b"), col("simhash").as("hb"))
     l.join(r, Seq("tbl", "key")).filter(col("a") < col("b"))

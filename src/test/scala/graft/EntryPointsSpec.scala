@@ -10,14 +10,18 @@ import scala.jdk.CollectionConverters._
   */
 class EntryPointsSpec extends SparkSpec {
 
-  /** every match of `literal`'s first group across src/main/scala */
-  private def sourceLiterals(literal: scala.util.matching.Regex): Set[String] = {
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+  /** (file name, text) of every .scala file under `dir` */
+  private def sources(dir: String): List[(String, String)] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
     try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .flatMap(f => literal.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
-      .toSet
+      .map(f => f.getFileName.toString -> java.nio.file.Files.readString(f)).toList
     finally files.close()
   }
+
+  /** every match of `literal`'s first group across src/main/scala */
+  private def sourceLiterals(literal: scala.util.matching.Regex): Set[String] =
+    sources("src/main/scala")
+      .flatMap { case (_, text) => literal.findAllMatchIn(text).map(_.group(1)) }.toSet
 
   test("the engine reads exactly three spark.graft.* confs") {
     // adding a knob is a visible edit here: each key needs a reason
@@ -31,6 +35,21 @@ class EntryPointsSpec extends SparkSpec {
     assert(sourceLiterals("\"(SPARK_[A-Z0-9_]+)".r) == Set("CPUS", "EXTRA_CONF",
       "LOCAL_DIR", "ONLY", "PLAN_DIR", "PLAN_ROOT", "PLAN_TAG", "REPS", "SF_DIR",
       "SHUFFLE_GB", "TABLE_GB").map("SPARK_GRAFT_" + _))
+  }
+
+  test("no vertex loop in algo/ caches or unpersists a frame itself") {
+    // Iterate.Loop owns every loop's caches (edges, partition, cache,
+    // drop; all freed on exit, also when the loop throws); PregelCC's
+    // GraphX engine keeps its own RDD caches
+    val calls = for {
+      (file, text) <- sources("src/main/scala/graft/algo")
+      if file != "Iterate.scala" && file != "PregelCC.scala"
+      (line, n) <- text.linesIterator.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if code.contains(".cache()") || code.contains("unpersist")
+    } yield s"$file:${n + 1}: $code"
+    assert(calls.isEmpty, calls.mkString("\n"))
   }
 
   test("no string literal names a checkout by absolute path") {

@@ -1033,6 +1033,33 @@ class FastSVSpec extends SparkSpec {
     } finally a.df.unpersist()
   }
 
+  test("a loop that throws leaves the session's cache as it found it") {
+    // one edge fails when the loop first reads it — the sizing count
+    // over the edge cache the loop has just taken: the scope must drop
+    // that cache on the failure path
+    // (a range, not a local Seq: the optimizer folds projections over
+    // local rows, which would throw before any cache is taken)
+    val bad = raise_error(lit("planted bad row"))
+    val ids = spark.range(0, 8, 1, 2)
+    val a = new GrbMatrix(ids.select(col("id").as("i"),
+        when(col("id") === 5L, bad).otherwise((col("id") + 1) % 8).as("j"),
+        lit(1L).as("v")), 8L, 8L)
+    val edges = ids.select(col("id").as("a"), (col("id") + 8).as("b"),
+      when(col("id") === 5L, bad).otherwise(col("id")).as("w"))
+    Seq[(String, () => Any)](
+      "LabelProp" -> (() => graft.algo.LabelProp.communities(a)),
+      "KCore" -> (() => graft.algo.KCore.kcore(a, 2L)),
+      "PageRank" -> (() => graft.algo.PageRank.ranks(a)),
+      "Msf" -> (() => graft.algo.Msf.forest(edges, 16L)),
+      "RandomWalk" -> (() => graft.algo.RandomWalk.walks(a))).foreach {
+      case (name, op) =>
+        val before = cached
+        val e = intercept[Exception](op())
+        assert(e.getMessage.contains("planted bad row"), s"$name: ${e.getMessage}")
+        assert(cached == before, s"$name left caches behind")
+    }
+  }
+
   test("walks on asymmetric input: dead-end arrival is emitted, then the walk dies") {
     // directed 0→1 with no out-edges at 1: the walker must land on 1
     // (arrival row at step 1) and then stop — the dead-end neighbor is

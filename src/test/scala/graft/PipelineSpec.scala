@@ -418,8 +418,6 @@ class PipelineSpec extends SparkSpec {
   test("a job that throws leaves the session's cache as it found it") {
     // one row fails mid-job, after the operator has cached its shared
     // intermediates: the scope must drop them on the failure path
-    def cached = (org.apache.spark.sql.graft.CacheEntries(spark),
-      spark.sparkContext.getPersistentRDDs.keySet)
     // (a range, not a local Seq: the optimizer folds projections over
     // local rows, which would throw before any cache is taken)
     val bad = raise_error(lit("planted bad row"))
@@ -610,9 +608,16 @@ class PipelineSpec extends SparkSpec {
     // every blocks setting that satisfies the pigeonhole must produce
     // EXACTLY the truth set — blocks=4 is the legacy single-block
     // banding, blocks=6 the scale default, blocks=10 the next tier up
+    // blocks=10 runs with the codegen fallback off, so a generated
+    // method past Janino's 64 KB limit fails the case instead of
+    // silently running interpreted
+    val fallback = "spark.sql.codegen.fallback"
     for (blocks <- Seq(4, 6, 10)) {
-      val got = TextDedup.simhashNearDuplicates(corpus, blocks = blocks).collect()
+      val prev = spark.conf.get(fallback)
+      if (blocks == 10) spark.conf.set(fallback, "false")
+      val got = try TextDedup.simhashNearDuplicates(corpus, blocks = blocks).collect()
         .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+      finally spark.conf.set(fallback, prev)
       assert(got == truth, s"blocks=$blocks must match brute force")
     }
     // structural candidate volume SHRINKS as blocks grow (bigger keys,

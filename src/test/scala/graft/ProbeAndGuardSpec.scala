@@ -76,8 +76,8 @@ class ProbeAndGuardSpec extends SparkSpec {
       "materialization job and match a direct evaluation") {
     val df = spark.range(100)
       .select(col("id").as("i"), (col("id") % 7).as("v"))
-    val (out, probe) = Iterate.checkpointWithProbe(df,
-      count(when(col("v") === 0, 1)).as("zeros"), max(col("v")).as("mx"))
+    val (out, probe) = Iterate.scope(spark, "t")(_.probe("p", df,
+      count(when(col("v") === 0, 1)).as("zeros"), more = Seq(max(col("v")).as("mx"))))
     assert(probe.getLong(0) == 15L) // 0,7,...,98
     assert(probe.getLong(1) == 6L)
     // the checkpointed frame is the same data, lineage-free
@@ -105,8 +105,8 @@ class ProbeAndGuardSpec extends SparkSpec {
       "values (count 0, max null) and keeps the child's partitioning") {
     val df = spark.range(10)
       .select(col("id").as("i"), col("id").as("v")).filter(lit(false))
-    val (out, probe) = Iterate.checkpointWithProbe(df,
-      count(lit(1)).as("n"), max(col("v")).as("mx"))
+    val (out, probe) = Iterate.scope(spark, "t")(_.probe("p", df,
+      count(lit(1)).as("n"), more = Seq(max(col("v")).as("mx"))))
     assert(probe.getLong(0) == 0L)
     assert(probe.isNullAt(1))
     assert(out.count() == 0L)
@@ -117,7 +117,7 @@ class ProbeAndGuardSpec extends SparkSpec {
     val clustered = spark.range(1000)
       .select((col("id") % 50).as("i"), col("id").as("v"))
       .repartition(4, col("i"))
-    val (ck, _) = Iterate.checkpointWithProbe(clustered, count(lit(1)).as("n"))
+    val (ck, _) = Iterate.scope(spark, "t")(_.probe("p", clustered, count(lit(1)).as("n")))
     val agg = ck.groupBy("i").agg(sum(col("v")))
     val exchanges = agg.queryExecution.executedPlan.toString()
       .linesIterator.count(_.contains("Exchange hashpartitioning"))

@@ -57,6 +57,12 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** the session's cache state: CacheManager entries and the ids of
+    * the persistent RDDs
+    */
+  def cached: (Int, Set[Int]) = (org.apache.spark.sql.graft.CacheEntries(spark),
+    spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
   /** `body`'s value and what it printed to stderr */
   def stderrOf[T](body: => T): (T, String) = {
     val err = new java.io.ByteArrayOutputStream()
