@@ -1650,7 +1650,9 @@ object Queries {
       val e0 = li.select(col("l_orderkey").cast(LongType).as("a"),
         (col("l_partkey") + offset).as("b")).distinct()
       // cached for the same two-consumer reason as q_kcore; the LPA
-      // loop materializes (checkpoints) before returning
+      // result is lineage-free (the driver-held label vector, or the
+      // last checkpoint above the broadcast guard), so the cache can
+      // go once it returns
       val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
         .cache()
       val n = edges.agg(max(col("a"))).collect()(0).getLong(0) + 1L // 1-row driver agg

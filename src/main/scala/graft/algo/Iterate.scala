@@ -1,12 +1,15 @@
 package graft.algo
 
 import graft.core.{Grb, GrbMatrix, GrbVector}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** Iteration harness for algorithm loops (SURVEY §7.1) — the Spark
   * analogue of the reference notebook's persist() checkpointing
@@ -22,7 +25,9 @@ import org.apache.spark.storage.StorageLevel
   * blocks (freed when superseded and on exit), the loop's adjacency
   * caches (the sizing pass's cache and each partitioned adjacency,
   * freed when superseded and on exit — also when the loop throws),
-  * and the per-round job marker. The one-shot pipeline operators that
+  * the broadcasts of state it ships to the executors each round
+  * (destroyed when superseded and on exit, likewise), and the
+  * per-round job marker. The one-shot pipeline operators that
   * cache shared intermediates (`graft.pipeline` dedup and ANN) run in
   * one too, for its caches alone.
   */
@@ -57,9 +62,10 @@ object Iterate {
   val RoundKey = "graft.loop"
 
   /** Run one algorithm loop. `body` gets the [[Loop]] that owns the
-    * loop's session overrides, adjacency caches and checkpoint blocks;
-    * on exit (normal or not) the overrides are restored, the loop's
-    * caches dropped, and every checkpoint block it holds is freed
+    * loop's session overrides, adjacency caches, broadcasts and
+    * checkpoint blocks; on exit (normal or not) the overrides are
+    * restored, the loop's caches dropped, its broadcasts destroyed,
+    * and every checkpoint block it holds is freed
     * EXCEPT those the returned value reads (a DataFrame, GrbVector,
     * GrbMatrix, or a tuple of them).
     *
@@ -67,6 +73,9 @@ object Iterate {
     * counts the edge frame, [[Loop.sized]] sizes the loop by that
     * count, and [[Loop.partition]] caches the adjacency repartitioned
     * at the loop width, materializes it, and drops the sizing cache.
+    * A loop that keeps its vector on the driver takes the cache's rows
+    * with [[Loop.partitionRows]] and ships the vector each round with
+    * [[Loop.ship]].
     *
     * One-shot pipeline operators (dedup, ANN, `Curate`) use the same
     * scope for their caches alone: they register shared intermediates
@@ -135,6 +144,8 @@ object Iterate {
     private val pending = scala.collection.mutable.LinkedHashMap[String, DataFrame]()
     // the caches this loop took, by slot (the checkpoint discipline)
     private val cached = scala.collection.mutable.LinkedHashMap[String, Seq[DataFrame]]()
+    // the broadcasts this loop shipped, by slot
+    private val shipped = scala.collection.mutable.LinkedHashMap[String, Broadcast[_]]()
     private var anon = 0 // slots of the caches taken without one
     private val callerRound = sc.getLocalProperty(RoundKey)
     private var path = List.empty[Int] // enclosing rounds, innermost first
@@ -264,14 +275,54 @@ object Iterate {
       * on both endpoints caches both orientations in one slot
       */
     def partitions(slot: String, df: DataFrame, keys: Seq[String]*): Seq[DataFrame] = {
-      val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val parts = keys.map(k => df.repartition(width, k.map(col): _*))
-      val owned = take(parts)
-      parts.foreach(_.count())
+      own(slot, parts)(parts.foreach(_.count()))
+      parts
+    }
+
+    /** [[partition]] by `key` with each partition's rows sorted by
+      * `key`, for a loop that runs its rounds as RDD jobs over the
+      * cached rows. The materializing job is `first` over each
+      * partition's rows. Returns the cache's rows (its `toRdd`, built
+      * once: every job over it reads the cache) and `first`'s result
+      * per partition.
+      */
+    def partitionRows[T: ClassTag](slot: String, df: DataFrame, key: String)(
+        first: Iterator[InternalRow] => T): (RDD[InternalRow], Array[T]) = {
+      val part = df.repartition(width, col(key)).sortWithinPartitions(key)
+      own(slot, Seq(part)) {
+        val rows = part.queryExecution.toRdd
+        (rows, rows.mapPartitions(it => Iterator(first(it))).collect())
+      }
+    }
+
+    private def width: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+    /** cache `parts` into `slot` and run `materialize`; then free the
+      * slot's previous cache and the [[edges]] cache. The new caches
+      * are the loop's from the start, so a failing materialization
+      * leaves none behind.
+      */
+    private def own[T](slot: String, parts: Seq[DataFrame])(materialize: => T): T = {
+      val next = s"\u0000$slot'"
+      cached(next) = take(parts)
+      val out = materialize
       drop(slot)
       drop(Sizing)
-      cached(slot) = owned
-      parts
+      cached(slot) = cached.remove(next).get
+      out
+    }
+
+    /** `value` broadcast to the executors for the current round,
+      * destroying the broadcast `slot` held: a loop that ships state
+      * every round keeps one copy of it, and [[scope]] destroys the
+      * last on exit.
+      */
+    def ship[T: ClassTag](slot: String, value: T): Broadcast[T] = {
+      shipped.remove(slot).foreach(_.destroy())
+      val b = sc.broadcast(value)
+      shipped(slot) = b
+      b
     }
 
     /** Run `body(r)` for rounds r = 1, 2, … while `more` holds, at most
@@ -327,7 +378,7 @@ object Iterate {
       * wrote. CollectMetrics passes rows through and keeps the child's
       * output partitioning, so the checkpoint keeps its clustering
       * (the broadcast-mode loops' zero-exchange rounds depend on it —
-      * PlanAuditSpec). `keepPartitioning = false` is
+      * ProbeAndGuardSpec). `keepPartitioning = false` is
       * FreshCheckpoint.withObserved's partitioning-carry opt-out.
       *
       * @return (checkpointed frame, probe row — one column per probe
@@ -433,6 +484,7 @@ object Iterate {
       (slots.values.flatten ++ pending.values.flatMap(blocks))
         .filterNot(r => keep(r.id)).foreach(_.unpersist(false))
       cached.values.flatten.foreach(_.unpersist(false))
+      shipped.values.foreach(_.destroy())
       saved.foreach { case (k, v) => spark.conf.set(k, v) }
       sc.setLocalProperty(RoundKey, callerRound)
     }

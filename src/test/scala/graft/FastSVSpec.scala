@@ -615,16 +615,41 @@ class FastSVSpec extends SparkSpec {
   }
 
   test("LPA equi-join mode (the above-guard 100TB path) matches broadcast mode") {
-    // two triangles + a bridge; broadcast mode is the small-n default,
-    // a 1-byte broadcast budget forces the sharded equi-join plan the
-    // above-BroadcastGuard path takes — labels must be identical
-    val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 4L), (4L, 5L),
-      (3L, 5L), (2L, 3L))
-    val sym = edges ++ edges.map { case (a, b) => (b, a) }
-    val a = GrbMatrix.fromValues(spark,
-      sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 6L, 6L)
-    val want = labelsOf(graft.algo.LabelProp.communities(a, 7))
-    assert(sharded(labelsOf(graft.algo.LabelProp.communities(a, 7))) == want)
+    // broadcast mode (the driver-held label vector) is the small-n
+    // default; a 1-byte broadcast budget forces the sharded equi-join
+    // plan the above-BroadcastGuard path takes — labels must be
+    // identical, at every horizon
+    def sym(edges: Seq[(Long, Long)]) = edges ++ edges.map { case (a, b) => (b, a) }
+    val inputs = Seq(
+      // two triangles + a bridge
+      "bridged triangles" -> sym(Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 4L),
+        (4L, 5L), (3L, 5L), (2L, 3L))),
+      // 6 and 7 never appear as i: they hold no label, so their votes
+      // drop; 2's only neighbours are 6 and 7, so 2 drops out of the
+      // vector after round 1
+      "unlabelled neighbours" -> (sym(Seq((0L, 1L), (1L, 3L), (3L, 4L))) ++
+        Seq((0L, 6L), (0L, 7L), (1L, 6L), (2L, 6L), (2L, 7L), (4L, 7L))),
+      // the hub's round-1 vote is a three-way tie (1, 2, 3): smallest wins
+      "three-way tie" -> sym(Seq((0L, 1L), (0L, 2L), (0L, 3L))),
+      // K2: the labels swap every round
+      "2-cycle" -> sym(Seq((0L, 1L))))
+    for ((name, edges) <- inputs; rounds <- Seq(1, 2, 7)) {
+      val a = GrbMatrix.fromValues(spark,
+        edges.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 8L, 8L)
+      val want = labelsOf(graft.algo.LabelProp.communities(a, rounds))
+      assert(sharded(labelsOf(graft.algo.LabelProp.communities(a, rounds))) == want,
+        s"$name, $rounds rounds")
+    }
+  }
+
+  test("LPA leaves no broadcast behind") {
+    // the driver-vector loop ships its labels every round; the loop
+    // destroys each superseded broadcast and the last one on exit
+    val a = matFromEdges(Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L), (3L, 4L)), 5L)
+    val before = broadcasts
+    labelsOf(graft.algo.LabelProp.communities(a, 7))
+    val left = broadcastsLeft(before)
+    assert(left.isEmpty, s"broadcasts left behind: $left")
   }
 
   test("MIS sharded mode (the above-guard 100TB path) matches broadcast mode") {
@@ -1036,7 +1061,8 @@ class FastSVSpec extends SparkSpec {
   test("a loop that throws leaves the session's cache as it found it") {
     // one edge fails when the loop first reads it — the sizing count
     // over the edge cache the loop has just taken: the scope must drop
-    // that cache on the failure path
+    // that cache on the failure path, and destroy what the loop
+    // broadcast
     // (a range, not a local Seq: the optimizer folds projections over
     // local rows, which would throw before any cache is taken)
     val bad = raise_error(lit("planted bad row"))
@@ -1051,12 +1077,20 @@ class FastSVSpec extends SparkSpec {
       "KCore" -> (() => graft.algo.KCore.kcore(a, 2L)),
       "PageRank" -> (() => graft.algo.PageRank.ranks(a)),
       "Msf" -> (() => graft.algo.Msf.forest(edges, 16L)),
-      "RandomWalk" -> (() => graft.algo.RandomWalk.walks(a))).foreach {
+      "RandomWalk" -> (() => graft.algo.RandomWalk.walks(a)),
+      // a round that fails after the loop shipped its state
+      "a shipping loop" -> (() => graft.algo.Iterate.scope(spark, "Ship") { loop =>
+        loop.ship("labels", Array(1L, 2L))
+        a.df.collect()
+      })).foreach {
       case (name, op) =>
         val before = cached
+        val shipped = broadcasts
         val e = intercept[Exception](op())
         assert(e.getMessage.contains("planted bad row"), s"$name: ${e.getMessage}")
         assert(cached == before, s"$name left caches behind")
+        val left = broadcastsLeft(shipped)
+        assert(left.isEmpty, s"$name left broadcasts behind: $left")
     }
   }
 
@@ -1122,5 +1156,55 @@ class FastSVJobCountSpec extends SparkSpec {
     assert(jobs.toDouble / rounds <= 15.0,
       s"FastSV plan surface grew: $jobs jobs over $rounds rounds " +
         s"(${jobs.toDouble / rounds}%.1f per round; pinned at <= 15)")
+  }
+}
+
+/** Per-round job pin for label propagation. Below the broadcast guard
+  * the label vector lives on the driver and a round is ONE Spark job
+  * over the cached adjacency (broadcast, map, collect); a refactor
+  * that brings back a per-round plan, broadcast job or checkpoint
+  * fails here. The sharded equi-join rounds keep their count.
+  */
+class LabelPropJobCountSpec extends SparkSpec {
+  import graft.core._
+  import scala.jdk.CollectionConverters._
+
+  // two 4-cliques joined by a bridge, plus K2 (8-9): the K2 labels
+  // swap every round, so the loop always runs to the horizon
+  private val graph = {
+    val k4a = for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)
+    val k4b = for (i <- 4L to 7L; j <- (i + 1) to 7L) yield (i, j)
+    val edges = k4a ++ k4b ++ Seq((3L, 4L), (8L, 9L))
+    val sym = edges ++ edges.map { case (a, b) => (b, a) }
+    GrbMatrix.fromValues(spark, sym.map { case (i, j) => (i, j, 1L: Any) },
+      GrbType.INT64, 10L, 10L)
+  }
+
+  /** jobs per round r >= 1, read off the LabelProp:<r> job property */
+  private def jobsPerRound(rounds: Int): Map[Int, Int] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val round = "LabelProp:(\\d+)".r
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(graft.algo.Iterate.RoundKey)))
+          .collect { case round(r) if r.toInt > 0 => r.toInt }.foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      graft.algo.LabelProp.communities(graph, rounds).df.collect()
+      org.apache.spark.sql.graft.ListenerQuiesce.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    seen.asScala.toSeq.groupBy(identity).map { case (r, jobs) => r -> jobs.size }
+  }
+
+  test("broadcast-mode LPA runs one Spark job per round") {
+    assert(jobsPerRound(5) == (1 to 5).map(_ -> 1).toMap)
+  }
+
+  test("sharded-mode LPA keeps its per-round job count") {
+    // the equi-join rounds' AQE stage jobs plus the checkpoint job:
+    // 6 a round, 5 in round 2 — the count before LPA's broadcast mode
+    // moved to the driver, which must not touch the sharded loop
+    assert(sharded(jobsPerRound(5)) == Map(1 -> 6, 2 -> 5, 3 -> 6, 4 -> 6, 5 -> 6))
   }
 }

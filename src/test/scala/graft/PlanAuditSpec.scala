@@ -259,39 +259,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.toLowerCase.contains("join"), "the vote step is an adjacency equi-join")
   }
 
-  test("LPA broadcast round over an i-partitioned adjacency plans with zero shuffles") {
-    val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L))
-    val sym = edges ++ edges.map { case (a, b) => (b, a) }
-    val a = GrbMatrix.fromValues(spark,
-      sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, 4L, 4L)
-    // the communities() cache discipline in broadcast mode: adjacency
-    // pre-partitioned on i, labels broadcast into the vote join
-    val adj = a.df.select(col("i"), col("j")).repartition(2, col("i"))
-    // labels as the loop sees them: a lineage-free scan (each round's
-    // frame is a FreshCheckpoint), not a derivation of adj
-    val labels = spark.createDataFrame((0L to 3L).map(i => (i, i)))
-      .toDF("i", "v")
-    val p = plan(graft.algo.LabelProp.round(adj, labels, bcast = true))
-    assert(p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin"),
-      s"labels should broadcast into the vote join:\n$p")
-    // the broadcast-hash join preserves the adjacency's i-partitioning,
-    // and HashPartitioning(i) satisfies both aggregates' distributions
-    // ((i, lab) by the subset rule, then (i)) — so past the one
-    // repartition the round adds NO shuffle: zero per-round exchanges,
-    // the §17 fixed-cost term, are what the broadcast mode buys
-    val shuffles = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
-    assert(shuffles <= 1, s"expected only the adjacency's own repartition:\n$p")
-    assert(p.linesIterator.filter(_.contains("Exchange hashpartitioning"))
-      .forall(_.contains("i#")), s"the only shuffle must be the i-repartition:\n$p")
-    // and the result matches the equi-join plan on the same input
-    val want = graft.algo.LabelProp.round(
-      a.df.select(col("i"), col("j")), labels).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = graft.algo.LabelProp.round(adj, labels, bcast = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-  }
-
   test("graph traversals: BFS round and triangle count stay equi-join shaped") {
     val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L))
     val l = GrbMatrix.fromValues(spark,

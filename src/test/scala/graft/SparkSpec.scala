@@ -63,6 +63,23 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def cached: (Int, Set[Int]) = (org.apache.spark.sql.graft.CacheEntries(spark),
     spark.sparkContext.getPersistentRDDs.keySet.toSet)
 
+  /** the ids of the broadcasts whose value the driver holds */
+  def broadcasts: Set[Long] = org.apache.spark.sql.graft.BroadcastBlocks(spark)
+
+  /** the broadcasts not in `before` that the driver still holds, once
+    * the removals in flight have landed (`Broadcast.destroy` returns
+    * before the blocks go) — waits up to 5 s for none to be left
+    */
+  def broadcastsLeft(before: Set[Long]): Set[Long] = {
+    val until = System.nanoTime() + 5000000000L
+    var left = broadcasts -- before
+    while (left.nonEmpty && System.nanoTime() < until) {
+      Thread.sleep(50)
+      left = broadcasts -- before
+    }
+    left
+  }
+
   /** `body`'s value and what it printed to stderr */
   def stderrOf[T](body: => T): (T, String) = {
     val err = new java.io.ByteArrayOutputStream()
