@@ -2,10 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 
-/** Listener-bus quiescence for metering listeners (KCore's shrink-rule
-  * cost meter): SparkListener events are delivered asynchronously, so a
-  * meter read "right after count() returns" undercounts the round just
-  * finished and leaks its late events into the next round's window.
+/** Listener-bus quiescence for metering listeners ([[StageMeter]], the
+  * specs' job and plan listeners, perfbench): SparkListener events are
+  * delivered asynchronously, so a meter read "right after count()
+  * returns" undercounts the action just finished and leaks its late
+  * events into the next read's window.
   * `LiveListenerBus.waitUntilEmpty` is the JVM-public drain the Spark
   * test harness itself uses, but the `SparkContext.listenerBus`
   * accessor is `private[spark]` — hence this one-line bridge living

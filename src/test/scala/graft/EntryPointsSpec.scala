@@ -18,6 +18,15 @@ class EntryPointsSpec extends SparkSpec {
     finally files.close()
   }
 
+  /** (file name, line number, trimmed text) of every code line of the
+    * .scala files under `dir`; comment lines are skipped */
+  private def codeLines(dir: String): List[(String, Int, String)] = for {
+    (file, text) <- sources(dir)
+    (line, n) <- text.linesIterator.zipWithIndex.toList
+    code = line.trim
+    if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+  } yield (file, n + 1, code)
+
   /** every match of `literal`'s first group across src/main/scala */
   private def sourceLiterals(literal: scala.util.matching.Regex): Set[String] =
     sources("src/main/scala")
@@ -42,13 +51,25 @@ class EntryPointsSpec extends SparkSpec {
     // drop; all freed on exit, also when the loop throws); PregelCC's
     // GraphX engine keeps its own RDD caches
     val calls = for {
-      (file, text) <- sources("src/main/scala/graft/algo")
+      (file, n, code) <- codeLines("src/main/scala/graft/algo")
       if file != "Iterate.scala" && file != "PregelCC.scala"
-      (line, n) <- text.linesIterator.zipWithIndex
-      code = line.trim
-      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
       if code.contains(".cache()") || code.contains("unpersist")
-    } yield s"$file:${n + 1}: $code"
+    } yield s"$file:$n: $code"
+    assert(calls.isEmpty, calls.mkString("\n"))
+  }
+
+  test("no engine code listens on the bus, takes the job group or reads a clock") {
+    // a plan decided from a timer changes with core count and host
+    // window, and a listener or job group taken inside a library call
+    // reaches into the caller's session. The mains and Queries time
+    // and meter from outside these directories.
+    val banned = Seq("addSparkListener", "setJobGroup", "spark.jobGroup.id",
+      "System.nanoTime", "currentTimeMillis")
+    val calls = for {
+      dir <- List("algo", "core", "ops", "pipeline", "io", "streaming")
+      (file, n, code) <- codeLines(s"src/main/scala/graft/$dir")
+      if banned.exists(code.contains)
+    } yield s"$dir/$file:$n: $code"
     assert(calls.isEmpty, calls.mkString("\n"))
   }
 

@@ -412,17 +412,7 @@ class FastSVSpec extends SparkSpec {
         val sym = edges ++ edges.map { case (a, b) => (b, a) }
         val a = GrbMatrix.fromValues(spark,
           sym.map { case (i, j) => (i, j, 1L: Any) }, GrbType.INT64, n, n)
-        // rotate all three shrink modes: 0 forces the adjacency
-        // re-materialization on every 30%-dead event, -1 is the
-        // measured-rule default (never fires on toy graphs — rounds
-        // are pure overhead), positive is the legacy count rule
-        val thresh = (trial % 3) match {
-          case 0 => 0L
-          case 1 => -1L
-          case _ => 10000000L
-        }
-        val got = graft.algo.KCore.kcore(a, k, shrinkThreshold = thresh)
-          .toValues.toMap
+        val got = graft.algo.KCore.kcore(a, k).toValues.toMap
         assert(got == expect, s"trial $trial n=$n k=$k edges=$edges")
       }
     }
@@ -1206,5 +1196,88 @@ class LabelPropJobCountSpec extends SparkSpec {
     // 6 a round, 5 in round 2 — the count before LPA's broadcast mode
     // moved to the driver, which must not touch the sharded loop
     assert(sharded(jobsPerRound(5)) == Map(1 -> 6, 2 -> 5, 3 -> 6, 4 -> 6, 5 -> 6))
+  }
+}
+
+/** Per-round job pin for the k-core peel. The adjacency is cached
+  * once at setup and every round scans it: a round that kills most of
+  * the survivors runs the same jobs as one that kills a single vertex.
+  * The loop runs its jobs under the caller's job group, so the
+  * caller's `cancelJobGroup` reaches them.
+  */
+class KCoreJobCountSpec extends SparkSpec {
+  import graft.core._
+  import scala.jdk.CollectionConverters._
+
+  private def graph(edges: Seq[(Long, Long)], n: Long): GrbMatrix = {
+    val sym = edges ++ edges.map { case (a, b) => (b, a) }
+    GrbMatrix.fromValues(spark, sym.map { case (i, j) => (i, j, 1L: Any) },
+      GrbType.INT64, n, n)
+  }
+
+  private def clique(vs: Seq[Long]): Seq[(Long, Long)] =
+    for (i <- vs; j <- vs if i < j) yield (i, j)
+
+  // 2-core of K4 + a pendant path 3-4-5 + six leaves on 4: round 1
+  // peels 5 and the leaves (7 of 12 die), round 2 peels 4, round 3
+  // is stable
+  private val peel = graph(clique(0L to 3L) ++
+    Seq((3L, 4L), (4L, 5L)) ++ (6L to 11L).map(4L -> _), 12L)
+
+  // 2-core of K8 + a pendant path 7-8-9-10: one vertex a round for
+  // three rounds, round 4 is stable
+  private val slow = graph(clique(0L to 7L) ++
+    Seq((7L, 8L), (8L, 9L), (9L, 10L)), 11L)
+
+  /** (round, job group) of every job in rounds r >= 1, read off the
+    * KCore:<r> job property */
+  private def roundJobs(a: GrbMatrix): Seq[(Int, String)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val round = "KCore:(\\d+)".r
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          Option(p.getProperty(graft.algo.Iterate.RoundKey))
+            .collect { case round(r) if r.toInt > 0 => r.toInt }
+            .foreach(r => seen.add(r -> p.getProperty("spark.jobGroup.id")))
+        }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      graft.algo.KCore.kcore(a, 2L).df.collect()
+      org.apache.spark.sql.graft.ListenerQuiesce.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    seen.asScala.toSeq
+  }
+
+  private def jobsPerRound(a: GrbMatrix): Map[Int, Int] =
+    roundJobs(a).groupBy(_._1).map { case (r, jobs) => r -> jobs.size }
+
+  test("broadcast-mode k-core runs the same jobs every round") {
+    // the survivor vector's two broadcasts (mxv's vector join and the
+    // mask) and the probed checkpoint, also in the round that kills 7
+    // of 12
+    assert(jobsPerRound(peel) == (1 to 3).map(_ -> 3).toMap)
+    assert(jobsPerRound(slow) == (1 to 4).map(_ -> 3).toMap)
+  }
+
+  test("sharded-mode k-core runs the jobs of a one-vertex peel in a 7-of-12 round") {
+    // a sharded round's count of AQE stage jobs varies with the round
+    // index, so each round of `peel` is pinned to the same round of
+    // `slow`, which kills one vertex a round
+    val (big, small) = sharded((jobsPerRound(peel), jobsPerRound(slow)))
+    assert(big.keySet == Set(1, 2, 3))
+    assert(big == small.filter { case (r, _) => big.contains(r) })
+  }
+
+  test("k-core runs its rounds under the caller's job group") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("kcore-caller", "a caller's cancellation scope")
+    val groups = try {
+      val jobs = roundJobs(peel)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "kcore-caller")
+      jobs.map(_._2).toSet
+    } finally sc.clearJobGroup()
+    assert(groups == Set("kcore-caller"))
   }
 }
