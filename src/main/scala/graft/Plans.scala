@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.graft.ListenerQuiesce
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Plan dumper for the optimization rounds' evidence files: builds each
   * selected catalog query Bench-identically (same [[GraftSession]], same
@@ -11,10 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `SPARK_GRAFT_ONLY=a,b,c` selects queries; `SPARK_GRAFT_EXTRA_CONF`
   * (the session's controlled-A/B hook) overlays session confs, so a
   * before/after pair for a conf-gated plan change is two invocations
-  * with the flag flipped — no code checkout needed. Loop queries whose
-  * returned frame reads checkpointed RDDs show the final gather plan;
-  * their per-round shapes are pinned by PlanAuditSpec/FastSVSpec
-  * assertions instead (exchange counts on the round frames).
+  * with the flag flipped — no code checkout needed. A frame that reads
+  * checkpoints (loops, checkpointing operators) shows only the final
+  * gather, so the plans of the actions the query ran while it was built
+  * (checkpoints, driver collects) are also written, one node a line.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -39,20 +45,53 @@ object Plans {
     }
   }
 
-  /** Write each query's formatted plan to `<outDir>/<name>_<tag>.txt`;
-    * returns the names of the queries that threw or whose prepare
-    * failed, sorted (see [[Verify.eachQuery]]).
+  /** Write each query's formatted plan to `<outDir>/<name>_<tag>.txt`
+    * (and its actions' to `<name>.actions_<tag>.txt`); returns the names
+    * of the queries that threw or whose prepare failed, sorted (see
+    * [[Verify.eachQuery]]).
     */
   def dump(spark: SparkSession, sfDir: String, outDir: Path, tag: String,
       queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] =
     Verify.eachQuery(spark, "plans", queries) { (name, fn) =>
       val (prepErr, _) = Bench.prepare(spark, sfDir, name)
-      val plan = fn(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(outDir.resolve(s"${name}_$tag.txt"), plan)
+      val (df, actions) = actionPlans(spark)(fn(spark, sfDir))
+      Files.writeString(outDir.resolve(s"${name}_$tag.txt"),
+        df.queryExecution.explainString(FormattedMode))
+      if (actions.nonEmpty) Files.writeString(
+        outDir.resolve(s"$name.actions_$tag.txt"), actions.mkString("\n"))
       println(s"[plans] $name -> ${name}_$tag.txt")
       // a failed prepare may leave the plan wrong-shape: it is written,
       // and the query counts as failed
       prepErr.foreach(e => throw new IllegalStateException(e))
     }
+
+  /** `body`'s result and the plans of the SQL actions it ran, in order;
+    * the async bus is drained before the listener goes on and comes off */
+  private def actionPlans[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(s"== action ${plans.size + 1}: $funcName ==\n" + asPlanned(qe.executedPlan))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ListenerQuiesce.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerQuiesce.waitUntilEmpty(spark.sparkContext)
+      (out, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** `p` one node a line as planned (an adaptive query's final plan
+    * depends on the order its stages finished: two dumps of one tree
+    * disagreed on stage ids, stage statistics and build sides), with
+    * each cached relation's plan under its scan */
+  private def asPlanned(p: SparkPlan, indent: String = ""): String = p match {
+    case a: AdaptiveSparkPlanExec => asPlanned(a.initialPlan, indent)
+    case _ =>
+      val cached = Some(p).collect { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+      (s"$indent${p.simpleString(1000)}\n" +:
+        (p.children ++ cached).map(asPlanned(_, indent + "  "))).mkString
+  }
 }

@@ -7,7 +7,7 @@ import graft.core._
 import graft.ops.Structure
 import graft.algo.{Bfs, Coloring, FastSV, Hits, HyperAnf, KCore, KTruss, LabelProp, LinkPred, Mis, Msf, PageRank, PregelCC, RandomWalk, Scc, SpCount}
 import graft.io.MatrixMarket
-import graft.pipeline.{TextDedup, TextStats, Similarity, Events, Sampling, Multimodal, Temporal, Sketch, Pii, Curate}
+import graft.pipeline.{CoBucket, TextDedup, TextStats, Similarity, Events, Sampling, Multimodal, Temporal, Sketch, Pii, Curate}
 import graft.streaming.{DocsStream, EventsStream}
 
 /** The driver-verified query catalog: one entry per SURVEY §2 operator
@@ -33,6 +33,21 @@ object Queries {
     s.read.parquet(s"$dir/$t.parquet")
 
   // ---- shared COO builders ----------------------------------------
+  /** the part co-occurrence graph of orders < 2000 (parts co-bucket by
+    * order): upper-triangular edges (i < j, v = 1), both triangles, and
+    * the dimension
+    */
+  private def partCooccurrence(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) = {
+    val li = pq(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
+      .select(col("l_orderkey").as("o"), col("l_partkey").cast(LongType).as("p"))
+      .distinct()
+    val e = CoBucket.pairs(li, "p", Seq("o"))
+      .select(col("a").as("i"), col("b").as("j")).distinct()
+      .withColumn("v", lit(1L))
+    (e, e.unionByName(e.select(col("j").as("i"), col("i").as("j"), col("v"))),
+      li.agg(max(col("p"))).collect()(0).getLong(0) + 1L)
+  }
+
   /** lineitem as a sparse matrix: order × part → total quantity.
     * `cluster` pre-clusters the raw COO on the key the consuming
     * operator will aggregate/join on (GrbMatrix.fromDF clusterBy —
@@ -1321,16 +1336,7 @@ object Queries {
     // dual-accumulator trick and the determinism discipline live
     // there). Scored pairs = wedge-closure pairs at cn ≥ 2, i < j.
     "q_linkpred" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-        .select(col("l_orderkey").as("o"), col("l_partkey").cast(LongType).as("p"))
-        .distinct()
-      val e = li.select(col("o"), col("p").as("a"))
-        .join(li.select(col("o"), col("p").as("b")), Seq("o"))
-        .filter(col("a") < col("b"))
-        .select(col("a").as("i"), col("b").as("j")).distinct()
-        .withColumn("v", lit(1L))
-      val n = li.agg(max(col("p"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val sym = e.unionByName(e.select(col("j").as("i"), col("i").as("j"), col("v")))
+      val (_, sym, n) = partCooccurrence(s, dir)
       LinkPred.scores(GrbMatrix.fromDF(sym, n, n))
     }),
 
@@ -1357,15 +1363,7 @@ object Queries {
     // express). Graph: parts co-occurring in an order, strictly
     // upper-triangular edges so each triangle counts exactly once.
     "q_triangle" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-        .select(col("l_orderkey").as("o"), col("l_partkey").cast(LongType).as("p"))
-        .distinct()
-      val e = li.select(col("o"), col("p").as("a"))
-        .join(li.select(col("o"), col("p").as("b")), Seq("o"))
-        .filter(col("a") < col("b"))
-        .select(col("a").as("i"), col("b").as("j")).distinct()
-        .withColumn("v", lit(1L))
-      val n = li.agg(max(col("p"))).collect()(0).getLong(0) + 1L // 1-row driver agg
+      val (e, _, n) = partCooccurrence(s, dir)
       val L = GrbMatrix.fromDF(e, n, n)
       L.mxm(L, Ops.plusPair, mask = Some(Mask.structural(L.df)))
         .reduceScalar(Ops.plusMonoid).df
@@ -1384,16 +1382,7 @@ object Queries {
     // vector join: the Σdeg² wedge work IS the measure, and the mask
     // caps output at nnz(A).
     "q_clustering" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-        .select(col("l_orderkey").as("o"), col("l_partkey").cast(LongType).as("p"))
-        .distinct()
-      val e = li.select(col("o"), col("p").as("a"))
-        .join(li.select(col("o"), col("p").as("b")), Seq("o"))
-        .filter(col("a") < col("b"))
-        .select(col("a").as("i"), col("b").as("j")).distinct()
-        .withColumn("v", lit(1L))
-      val n = li.agg(max(col("p"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val sym = e.unionByName(e.select(col("j").as("i"), col("i").as("j"), col("v")))
+      val (_, sym, n) = partCooccurrence(s, dir)
       val A = GrbMatrix.fromDF(sym, n, n)
       val C = A.mxm(A, Ops.plusPair, mask = Some(Mask.structural(A.df)))
       val t2 = C.reduceRowwise(Ops.plusMonoid).df.select(col("i"), col("v").as("t2"))
@@ -1410,16 +1399,7 @@ object Queries {
     // on the same co-occurrence graph — one masked plus_pair mxm per
     // round (algo/KTruss.scala)
     "q_ktruss" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-        .select(col("l_orderkey").as("o"), col("l_partkey").cast(LongType).as("p"))
-        .distinct()
-      val e = li.select(col("o"), col("p").as("a"))
-        .join(li.select(col("o"), col("p").as("b")), Seq("o"))
-        .filter(col("a") < col("b"))
-        .select(col("a").as("i"), col("b").as("j")).distinct()
-        .withColumn("v", lit(1L))
-      val n = li.agg(max(col("p"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val sym = e.unionByName(e.select(col("j").as("i"), col("i").as("j"), col("v")))
+      val (_, sym, n) = partCooccurrence(s, dir)
       KTruss.ktruss(GrbMatrix.fromDF(sym, n, n), k = 4L)
     }),
 

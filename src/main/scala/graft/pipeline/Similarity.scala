@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.expressions.Window
 import graft.algo.Iterate
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -128,17 +127,12 @@ object Similarity {
     * candidate join). By default it is derived from the data (one
     * 1-row peek), so only explicit overrides can get it wrong.
     *
-    * `maxBucket` (default -1 = AUTO): unlike the MinHash band space
-    * (md5 — honest buckets are true near-dup clusters, a fixed cap
-    * applies), hyperplane LSH has only 2^rowsPerBand buckets per band,
-    * so bucket occupancy ~n/2^r is STRUCTURAL and a fixed cap would
-    * wrongly empty the index at corpus scale — the scale lever there
-    * is rowsPerBand, not a cap. What a guard must catch is
-    * *collapse*: a dims mismatch or a degenerate embedding column
-    * landing everything in one bucket and turning the self-join n².
-    * AUTO caps a band bucket at max(1000, n/4) — 4× the uniform
-    * occupancy at rowsPerBand=4, a level no healthy hyperplane split
-    * reaches but any collapse does. 0 disables; >0 is an explicit cap.
+    * `maxBucket` (default -1 = AUTO, the [[CoBucket.Auto]] collapse
+    * guard: a band bucket past max(1000, n/4) is dropped from the
+    * self-join). Hyperplane buckets are structural, not boilerplate
+    * (see [[CoBucket]]): the scale lever is rowsPerBand, and the guard
+    * catches only a collapse into one bucket. 0 disables; >0 is an
+    * explicit cap.
     */
   def annPairs(emb: DataFrame, simMilli: Int = 400, bands: Int = 4,
       rowsPerBand: Int = 4, dims: Int = -1,
@@ -152,32 +146,10 @@ object Similarity {
       // one computation of (quantize + bands×rows hyperplane dots); the
       // candidate join shuffles only ids, vectors re-attached afterwards
       val base = s.cache(quantized(emb))
-      // collapse guard (default AUTO — see scaladoc): buckets past the
-      // cap are dropped from candidate generation before the quadratic
-      // self-join. Bucket size is a window count over the SAME
-      // (band, sig) partitioning the candidate join shuffles on — one
-      // pass, no stats side-plan recomputing the hyperplane dots. The
-      // AUTO cap needs the corpus total: a 1-row count aggregate
-      // broadcast onto every row (not a per-band window, which would
-      // buffer a whole band partition — n rows — per task at scale).
-      val bs0 = bandSignaturesFromQuantized(base, bands, rowsPerBand, d)
-        .select("band", "sig", "vec_id")
-      val guarded = if (maxBucket == 0) bs0 else {
-        val withN = bs0.withColumn("_n",
-          count(lit(1)).over(Window.partitionBy("band", "sig")))
-        if (maxBucket > 0) withN.filter(col("_n") <= maxBucket).drop("_n")
-        else withN.crossJoin(broadcast(emb.agg(count(lit(1)).as("_t"))))
-          .filter(col("_n") <= greatest(lit(1000L), col("_t") / 4))
-          .drop("_n", "_t")
-      }
-      // the POST-guard band frame feeds both sides of the candidate
-      // self-join — cache it so the hyperplane dots AND the guard
-      // window run once, not per join side (PERF_NOTES §6: caching
-      // pre-window left the window executing once per consumer)
-      val bs = s.cache(guarded)
-      val cand = bs.select(col("band"), col("sig"), col("vec_id").as("a"))
-        .join(bs.select(col("band"), col("sig"), col("vec_id").as("b")), Seq("band", "sig"))
-        .filter(col("a") < col("b"))
+      val cap = if (maxBucket < 0) CoBucket.Auto(emb) else CoBucket.Cap.fixed(maxBucket)
+      val cand = CoBucket.pairs(
+          bandSignaturesFromQuantized(base, bands, rowsPerBand, d).select("band", "sig", "vec_id"),
+          "vec_id", Seq("band", "sig"), cap, CoBucket.Drop, share = s.cache)
         .select("a", "b").dropDuplicates("a", "b")
       verifiedPairs(base, cand, simMilli).localCheckpoint(true)
     }
@@ -410,10 +382,8 @@ object Similarity {
     */
   private[graft] def ivfCandidates(base: DataFrame, k: Int, probes: Int,
       lloydRounds: Int = 1): DataFrame = {
-    val assigned = nearestCells(base, ivfCentroids(base, k, lloydRounds), probes)
-    assigned.select(col("cid"), col("vec_id").as("a"))
-      .join(assigned.select(col("cid"), col("vec_id").as("b")), Seq("cid"))
-      .filter(col("a") < col("b"))
+    CoBucket.pairs(nearestCells(base, ivfCentroids(base, k, lloydRounds), probes),
+        "vec_id", Seq("cid"))
       .select("a", "b").dropDuplicates("a", "b")
   }
 

@@ -154,23 +154,13 @@ object TextDedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
-  /** Default hot-bucket cap: a MinHash band signature is an md5 over
-    * the band's minhashes (a 128-bit space), so an honest bucket is a
-    * true near-dup cluster — typically a handful of docs, never
-    * thousands. A bucket past this cap is boilerplate (headers,
-    * license blocks, empty docs) whose B(B-1)/2 pair expansion is the
-    * classic 100 TB dedup skew cliff. Over-cap buckets are NOT
-    * dropped: each is linked as a star around its min-doc_id member
-    * (O(B) candidate pairs — see [[lshCandidates]]), so even a
-    * near-identical-but-not-byte-identical cluster past the cap stays
-    * connected; only the quadratic pair enumeration is given up.
-    * Within-cluster pairs not through the hub are still omitted — for
-    * dedup decisions (keep one representative) the star is exactly
-    * enough. Measured on a planted 10% boilerplate cluster at the
-    * 20k-doc tier (BASELINE_SELF.md skew table): uncapped the hot
+  /** Default hot-bucket cap of a MinHash band bucket: the signature is
+    * an md5 (a 128-bit space), so an honest bucket is a handful of true
+    * near-dups and one past the cap is boilerplate, linked as a
+    * [[CoBucket.HubStar]]. Measured on a planted 10% boilerplate cluster
+    * at the 20k-doc tier (BASELINE_SELF.md skew table): uncapped the hot
     * bucket alone contributes ~2M candidate pairs; capped the profile
-    * stays flat and every planted honest near-dup is still recovered
-    * (PipelineSpec).
+    * stays flat and every planted honest near-dup is still recovered.
     */
   val defaultMaxBucket = 1000
 
@@ -194,82 +184,15 @@ object TextDedup {
     candidatesFromBands(
       bandsFromShingles(explodedShingles(docs), bands), maxBucket)
 
-  /** hot-bucket guard (default ON, cap = defaultMaxBucket) + the
-    * candidate self-join. A band bucket with B members expands to
-    * B(B-1)/2 pairs, so one boilerplate cluster turns the equi-join
-    * quadratic. For buckets larger than maxBucket the guard does NOT
-    * go quadratic — but it does not drop the cluster either (round-7
-    * change): every over-cap member is paired with the bucket's
-    * MIN-doc_id representative, linking the cluster in O(B) pairs
-    * instead of B(B-1)/2. Downstream Jaccard verification still
-    * applies, so a near-identical (templated) cluster past the cap
-    * survives into nearDuplicates / dedupClusters via its hub star,
-    * while a hash-collision bucket of unrelated docs is still filtered
-    * pair-by-pair. (Round 6 dropped over-cap buckets entirely, which
-    * silently lost >cap near-identical-but-not-byte-identical
-    * clusters — exact dedup only owns the byte-identical case.)
-    *
-    * The bucket size and representative come from ONE window over the
-    * SAME (band, sig) partitioning the candidate join shuffles on
-    * anyway — zero extra passes over the signature pipeline.
-    * (Expressing the guard as a stats-aggregate + anti-join re-planned
-    * the whole minhash pipeline once more per join side — plan-audited
-    * in round 6.) The window buffers one bucket per task — linear in
-    * bucket size.
+  /** candidate pairs from a bands frame under the hub-star cap; `share`
+    * gets the bucket-annotated bands (at sf0.1 caching the bands before
+    * the window ran it three times, ~3.5 s, PERF_NOTES §6)
     */
-  /** bucket-annotate a bands frame: one window pass adds the bucket
-    * size and min member. The annotated frame feeds THREE consumers
-    * (both join sides + the hub star), so callers cache the annotated
-    * frame, not the raw bands — measured in the Bench harness at
-    * sf0.1, caching pre-window left the window executing three times
-    * and cost ~3.5 s of the guard's ~3.5 s overhead (PERF_NOTES §6).
-    */
-  private def annotateBuckets(bs0: DataFrame): DataFrame = {
-    val w = Window.partitionBy("band", "sig")
-    bs0.withColumn("_n", count(lit(1)).over(w))
-      .withColumn("_min", min(col("doc_id")).over(w))
-  }
-
-  private def candidatesFromBands(bs0: DataFrame,
-      maxBucket: Int): DataFrame =
-    if (maxBucket <= 0) {
-      val l = bs0.select(col("band"), col("sig"), col("doc_id").as("a"))
-      val r = bs0.select(col("band"), col("sig"), col("doc_id").as("b"))
-      l.join(r, Seq("band", "sig")).filter(col("a") < col("b"))
-        .select("a", "b").distinct()
-    } else candidatesFromAnnotated(annotateBuckets(bs0), maxBucket)
-
-  /** candidate pairs from a bucket-annotated bands frame: the
-    * under-cap buckets self-join (quadratic within honest buckets),
-    * the over-cap buckets collapse to their min-id hub star — O(B).
-    *
-    * HUB-STAR CONTRACT (what the pair list does and does not contain
-    * for an over-cap cluster): every member is a candidate WITH THE
-    * HUB (the bucket's min doc_id), so after Jaccard verification the
-    * pair list links the whole templated cluster through its hub —
-    * cluster-level recall is preserved and [[nearDuplicates]] maps
-    * every member to a representative. What is OMITTED is the
-    * member×member pairs that don't involve the hub: a pair whose
-    * similarity qualifies only via a non-hub path appears in
-    * dedupClusters' transitive closure (the hub links both members)
-    * but NOT in nearDuplicates' explicit pair list. For dedup
-    * decisions — keep one representative per cluster — the star is
-    * exactly sufficient; consumers that need the complete pairwise
-    * similarity graph within giant clusters must raise `maxBucket`
-    * and pay the quadratic. PipelineSpec pins this contract on an
-    * over-cap templated cluster.
-    */
-  private def candidatesFromAnnotated(bsA: DataFrame,
-      maxBucket: Int): DataFrame = {
-    val ok = bsA.filter(col("_n") <= maxBucket)
-    val l = ok.select(col("band"), col("sig"), col("doc_id").as("a"))
-    val r = ok.select(col("band"), col("sig"), col("doc_id").as("b"))
-    val joined = l.join(r, Seq("band", "sig")).filter(col("a") < col("b"))
-      .select("a", "b")
-    val hub = bsA.filter(col("_n") > maxBucket && col("doc_id") > col("_min"))
-      .select(col("_min").as("a"), col("doc_id").as("b"))
-    joined.unionByName(hub).distinct()
-  }
+  private def candidatesFromBands(bs0: DataFrame, maxBucket: Int,
+      share: DataFrame => DataFrame = identity): DataFrame =
+    CoBucket.pairs(bs0, "doc_id", Seq("band", "sig"),
+        CoBucket.Cap.fixed(maxBucket), CoBucket.HubStar, share = share)
+      .select("a", "b").distinct()
 
   /** near-duplicate pairs: LSH candidates verified by exact shingle
     * Jaccard >= num/den (integer cross-multiplied — no float compare).
@@ -297,14 +220,7 @@ object TextDedup {
       bands: Int = 4, num: Int = 7, den: Int = 10,
       maxBucket: Int = defaultMaxBucket): DataFrame =
     Iterate.scope(sh.sparkSession, "NearDuplicates") { s =>
-      // the bands frame feeds the guard's bucket stats AND the candidate
-      // join; caching the bucket-ANNOTATED bands (window already
-      // applied) runs the minhash signature agg (the dominant cost) and
-      // the window once for all three consumers — see annotateBuckets
-      val bs0 = bandsFromShingles(sh, bands)
-      val cands =
-        if (maxBucket <= 0) candidatesFromBands(bs0, maxBucket)
-        else candidatesFromAnnotated(s.cache(annotateBuckets(bs0)), maxBucket)
+      val cands = candidatesFromBands(bandsFromShingles(sh, bands), maxBucket, s.cache)
       verifyJaccard(sh, cands, num, den).localCheckpoint(true)
     }
 
@@ -315,12 +231,20 @@ object TextDedup {
     * Output (a, b, inter, uni).
     */
   private def verifyJaccard(sh: DataFrame, cands: DataFrame,
-      num: Int, den: Int): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cands
+      num: Int, den: Int): DataFrame =
+    jaccardAtLeast(sh, cands
       .join(sh.select(col("doc_id").as("a"), col("sh")), Seq("a"))
       .join(sh.select(col("doc_id").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
+      .groupBy("a", "b").agg(count(lit(1)).as("inter")), num, den)
+
+  /** the Jaccard threshold on (a, b, inter) pairs: union by
+    * |A|+|B|−inter from the shingle-set sizes, kept when
+    * inter/union ≥ num/den by integer cross-multiplication.
+    * Output (a, b, inter, uni).
+    */
+  private def jaccardAtLeast(sh: DataFrame, inter: DataFrame,
+      num: Int, den: Int): DataFrame = {
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     inter
       .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
       .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
@@ -333,8 +257,7 @@ object TextDedup {
     * of the dedup family next to [[nearDuplicates]]'s MinHash path.
     * Candidates are pairs sharing ≥1 shingle whose document frequency
     * is within `maxShingleDf` (an inverted-index equi-join on the
-    * shingle — same stop-shingle guard and same one-pass
-    * window-on-the-join-key idiom as [[contamination]]); verification
+    * shingle, under [[contamination]]'s stop-shingle guard); verification
     * is the exact Jaccard on the FULL shingle sets (capped shingles
     * still count toward inter/union — the cap only prunes candidate
     * GENERATION). Output (a, b, inter, uni) like [[nearDuplicates]].
@@ -353,47 +276,15 @@ object TextDedup {
       maxShingleDf: Int = defaultMaxShingleDf): DataFrame =
     Iterate.scope(docs.sparkSession, "JaccardNearDuplicates") { s =>
       val sh = s.cache(explodedShingles(docs))
-      val withDf = sh.withColumn("_df",
-        count(lit(1)).over(Window.partitionBy("sh")))
-      val capped =
-        if (maxShingleDf <= 0) sh
-        else withDf.filter(col("_df") <= maxShingleDf).drop("_df")
-      // the candidate equi-join emits one row per SUB-CAP SHINGLE
-      // CO-OCCURRENCE of a pair — which IS that pair's sub-cap
-      // intersection, enumerated. So inter needs no verify joins back
-      // to the shingle sets: one hash aggregate over the join output
-      // counts the sub-cap part (and replaces the old dropDuplicates —
-      // the groupBy is the dedup), and only the OVER-CAP shingles (a
-      // handful of distinct boilerplate keys; they still count toward
-      // inter/union per the contract above) are re-joined per pair.
-      // Round-13 A/B at sf0.1: the old pair×full-shingle-set verify
-      // built ~29M rows for 1.13M candidates → 25 survivors.
-      val co = capped.select(col("sh"), col("doc_id").as("a"))
-        .join(capped.select(col("sh"), col("doc_id").as("b")), Seq("sh"))
-        .filter(col("a") < col("b"))
-      val interSub = co.groupBy("a", "b").agg(count(lit(1)).as("_isub"))
-      val inter =
-        if (maxShingleDf <= 0)
-          interSub.select(col("a"), col("b"), col("_isub").as("inter"))
-        else {
-          val over = withDf.filter(col("_df") > maxShingleDf)
-            .select(col("doc_id"), col("sh"))
-          val interOver = interSub.select(col("a"), col("b"))
-            .join(over.select(col("doc_id").as("a"), col("sh")), Seq("a"))
-            .join(over.select(col("doc_id").as("b"), col("sh")), Seq("b", "sh"))
-            .groupBy("a", "b").agg(count(lit(1)).as("_iover"))
-          interSub.join(interOver, Seq("a", "b"), "left")
-            .select(col("a"), col("b"),
-              (col("_isub") + coalesce(col("_iover"), lit(0L))).as("inter"))
-        }
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      inter
-        .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
-        .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
-        .select(col("a"), col("b"), col("inter"),
-          (col("na") + col("nb") - col("inter")).as("uni"))
-        .filter(col("inter") * den >= col("uni") * num)
-        .localCheckpoint(true)
+      // a pair's co-bucket rows ARE its shingle intersection (over-cap
+      // shingles re-joined), so one aggregate counts inter with no
+      // verify joins back to the shingle sets (round 13, sf0.1: those
+      // built ~29M rows for 1.13M candidates → 25 survivors); the
+      // sub-cap rows feed the count and the re-join, so they are cached
+      val inter = CoBucket.pairs(sh, "doc_id", Seq("sh"),
+          CoBucket.Cap.fixed(maxShingleDf), CoBucket.Rejoin, share = s.cache)
+        .groupBy("a", "b").agg(count(lit(1)).as("inter"))
+      jaccardAtLeast(sh, inter, num, den).localCheckpoint(true)
     }
 
   /** cross-corpus contamination check (train/test overlap): a DIRECT
@@ -424,17 +315,12 @@ object TextDedup {
 
   /** [[contamination]] over CALLER-MANAGED exploded-shingle frames —
     * the Curate composition hook (one corpus explode shared across
-    * stages; the train/bench frames are filters of it). The stop-
-    * shingle guard is a window count over the SAME sh key the
-    * contamination join shuffles on — one pass, no stats side-plan
-    * re-running the explode.
+    * stages; the train/bench frames are filters of it).
     */
   private[pipeline] def contaminationOnShingles(shTr: DataFrame,
       shB: DataFrame, num: Int = 7, den: Int = 10,
       maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {
-    val shT = if (maxShingleDf <= 0) shTr else
-      shTr.withColumn("_df", count(lit(1)).over(Window.partitionBy("sh")))
-        .filter(col("_df") <= maxShingleDf).drop("_df")
+    val shT = CoBucket.within(shTr, Seq("sh"), CoBucket.Cap.fixed(maxShingleDf), "_df")
     val nb = shB.groupBy("doc_id").agg(count(lit(1)).as("nb"))
     val inter = shB.select(col("doc_id").as("bench_id"), col("sh"))
       .join(shT.select(col("doc_id").as("train_id"), col("sh")), Seq("sh"))
@@ -500,10 +386,8 @@ object TextDedup {
     * blocks=10 → 120 tables of 42-bit keys, O(n) to ~3·10¹⁰ docs);
     * tables multiply the join INPUT linearly while key bits shrink
     * buckets exponentially, so the trade always favors more blocks
-    * once n approaches the current wall. Unlike the MinHash
-    * hot-bucket guard (boilerplate skew), capping these structural
-    * buckets would drop honest near-dups; growing the key space is
-    * the correct mitigation and needs no cap.
+    * once n approaches the current wall. These buckets are structural,
+    * so they run uncapped (see [[CoBucket]]).
     *
     * Input is the (doc_id, simhash) frame; output (a, b, ha, hb)
     * DISTINCT candidate pairs, unverified.
@@ -531,9 +415,8 @@ object TextDedup {
         explode(array(tables: _*)).as("tk"))
       .select(col("doc_id"), col("simhash"),
         col("tk.tbl").as("tbl"), key.as("key"))
-    val l = banded.select(col("tbl"), col("key"), col("doc_id").as("a"), col("simhash").as("ha"))
-    val r = banded.select(col("tbl"), col("key"), col("doc_id").as("b"), col("simhash").as("hb"))
-    l.join(r, Seq("tbl", "key")).filter(col("a") < col("b"))
+    CoBucket.pairs(banded, "doc_id", Seq("tbl", "key"),
+        payload = Map("simhash" -> ("ha", "hb")))
       .select(col("a"), col("b"), col("ha"), col("hb"))
       .dropDuplicates("a", "b")
   }

@@ -58,6 +58,24 @@ class EntryPointsSpec extends SparkSpec {
     assert(calls.isEmpty, calls.mkString("\n"))
   }
 
+  test("one co-bucket recipe: one bucket-size window, one a < b self-join") {
+    // every bucketed candidate self-join goes through CoBucket.pairs and
+    // every bucket cap through its one window, so the hub-star, drop
+    // and rejoin policies and the cap rule are written once
+    val windows = for {
+      (file, n, code) <- codeLines("src/main/scala/graft/pipeline")
+      if """count\(.*\)\.over\(""".r.findFirstIn(code).nonEmpty
+    } yield s"$file:$n: $code"
+    assert(windows.size == 1 && windows.head.contains(".over(Window.partitionBy("),
+      windows.mkString("\n"))
+    val selfJoins = for {
+      (file, n, code) <- codeLines("src/main/scala/graft")
+      if code.contains("""col("a") < col("b")""")
+    } yield s"$file:$n: $code"
+    assert(selfJoins.size == 1 && selfJoins.head.startsWith("CoBucket.scala:"),
+      selfJoins.mkString("\n"))
+  }
+
   test("no engine code listens on the bus, takes the job group or reads a clock") {
     // a plan decided from a timer changes with core count and host
     // window, and a listener or job group taken inside a library call
@@ -100,7 +118,9 @@ class EntryPointsSpec extends SparkSpec {
     val queries = Map[String, (SparkSession, String) => DataFrame](
       "q_ok" -> ((s, _) => s.range(3).toDF()),
       "q_bad" -> ((_, _) => sys.error("boom")),
-      "q_ok2" -> ((s, _) => s.range(2).toDF()))
+      "q_ok2" -> ((s, _) => s.range(2).toDF()),
+      // runs an action while it is built, like a checkpointing operator
+      "q_act" -> ((s, _) => s.range(s.range(7).filter(col("id") % 3 === 0).count()).toDF()))
     val (failed, err) = stderrOf(Verify.dump(spark, "unused", out, queries))
     assert(failed == Seq("q_bad"))
     assert(err.contains("[verify] q_bad failed: boom"), err)
@@ -114,6 +134,12 @@ class EntryPointsSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(plans.resolve("q_ok_t.txt")))
     assert(java.nio.file.Files.exists(plans.resolve("q_ok2_t.txt")))
     assert(!java.nio.file.Files.exists(plans.resolve("q_bad_t.txt")))
+    // the plan of the count q_act ran while it was built sits
+    // beside its final plan; a query that ran no action gets no file
+    val acts = java.nio.file.Files.readString(plans.resolve("q_act.actions_t.txt"))
+    assert(acts.contains("Range (") && acts.contains("Filter ("), acts)
+    assert(acts.contains("% 3) = 0)"), acts)
+    assert(!java.nio.file.Files.exists(plans.resolve("q_ok.actions_t.txt")))
   }
 
   test("stage meter: one read sees the action's jobs, stages, tasks and shuffle") {

@@ -432,6 +432,8 @@ class PipelineSpec extends SparkSpec {
         when(col("vec_id") === 5L, bad).otherwise(col("embedding")))
     Seq[(String, () => Any)](
       "nearDuplicates" -> (() => TextDedup.nearDuplicates(docs)),
+      "jaccardNearDuplicates" -> (() => TextDedup.jaccardNearDuplicates(docs)),
+      "contamination" -> (() => TextDedup.contamination(docs, docs)),
       "annPairs" -> (() => Similarity.annPairs(vecs, dims = 2))).foreach {
       case (name, op) =>
         val before = cached
