@@ -21,6 +21,8 @@ import scala.jdk.CollectionConverters._
   * checkpoints (loops, checkpointing operators) shows only the final
   * gather, so the plans of the actions the query ran while it was built
   * (checkpoints, driver collects) are also written, one node a line.
+  * Each row's oracle SQL is written beside them, so one plan diff shows
+  * the engine's and the oracle's changes together.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -46,7 +48,8 @@ object Plans {
   }
 
   /** Write each query's formatted plan to `<outDir>/<name>_<tag>.txt`
-    * (and its actions' to `<name>.actions_<tag>.txt`); returns the names
+    * (its actions' to `<name>.actions_<tag>.txt`, its oracle SQL, when
+    * the catalog has one, to `<name>.oracle_<tag>.txt`); returns the names
     * of the queries that threw or whose prepare failed, sorted (see
     * [[Verify.eachQuery]]).
     */
@@ -59,6 +62,8 @@ object Plans {
         df.queryExecution.explainString(FormattedMode))
       if (actions.nonEmpty) Files.writeString(
         outDir.resolve(s"$name.actions_$tag.txt"), actions.mkString("\n"))
+      SparkEntry.oracleSql.get(name).foreach(sql =>
+        Files.writeString(outDir.resolve(s"$name.oracle_$tag.txt"), sql))
       println(s"[plans] $name -> ${name}_$tag.txt")
       // a failed prepare may leave the plan wrong-shape: it is written,
       // and the query counts as failed

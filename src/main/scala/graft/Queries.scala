@@ -33,6 +33,101 @@ object Queries {
     s.read.parquet(s"$dir/$t.parquet")
 
   // ---- shared COO builders ----------------------------------------
+  /** One order–part graph scope: the bipartite graph whose edges are the
+    * distinct (order, part) pairs of the lineitem lines with
+    * `l_orderkey < maxOrder` (every line when `None`), part `p` at
+    * vertex `p + partOffset`. The engine ([[orderPart]]) and the oracle
+    * (`sql`) both build from this one value, so a scope's filter or
+    * offset is one edit that the two sides cannot disagree on.
+    *
+    * Valid range: order ids below `partOffset`. Above it an order and a
+    * part share a vertex id, and the two sides of the graph merge there
+    * (on both sides alike, so the oracle still agrees). The bounded
+    * scopes hold orders < 600 under an offset of 100,000. The full
+    * scope's 2^20 = 1,048,576 holds sf0.1 (largest order 149,999) but
+    * not the sf1 replica `tools/make_10x.py` writes, whose orders reach
+    * 1,499,999.
+    */
+  private[graft] final case class OrderPart(maxOrder: Option[Int], partOffset: Long) {
+    /** every part vertex lies above every order vertex */
+    def partsAbove: Boolean = maxOrder.exists(_ <= partOffset)
+
+    /** the oracle's CTEs: `e0(a, b)` (plus `w`, the pair's least line
+      * quantity, when `weighted`) and its mirror union `edges` */
+    def sql(weighted: Boolean = false): String = {
+      val where = maxOrder.fold("")(m => s" WHERE l_orderkey < $m")
+      val ab = s"CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + $partOffset AS BIGINT) AS b"
+      val (e0, w) =
+        if (weighted) (s"SELECT $ab, CAST(MIN(l_quantity) AS BIGINT) AS w FROM lineitem$where GROUP BY 1, 2", ", w")
+        else (s"SELECT DISTINCT $ab FROM lineitem$where", "")
+      s"""e0 AS MATERIALIZED ($e0),
+       edges AS MATERIALIZED (SELECT a, b$w FROM e0 UNION ALL SELECT b, a$w FROM e0)"""
+    }
+  }
+
+  /** orders < 60: q_cc_small's FastSV graph */
+  private val smallScope = OrderPart(Some(60), 100000L)
+  /** orders < 600: the traversal, centrality and coloring rows */
+  private val boundedScope = OrderPart(Some(600), 100000L)
+  /** every order: the peeling, labelling and whole-graph CC rows */
+  private val fullScope = OrderPart(None, 1L << 20)
+
+  /** A scope's graph on the engine: `e0(a, b[, w])` as the oracle's
+    * `e0`, and `edges` its mirror union */
+  private[graft] final class OrderPartGraph(scope: OrderPart, val e0: DataFrame) {
+    lazy val edges: DataFrame = e0.unionByName(e0.select(e0.columns.toSeq.map {
+      case "a" => col("b").as("a"); case "b" => col("a").as("b"); case c => col(c) }: _*))
+
+    /** the vertex count (a 1-row driver agg): the largest part vertex
+      * + 1 when parts lie above orders, else the largest vertex + 1 over
+      * `edges` (which the cached form reads from its cache) */
+    def n: Long =
+      (if (scope.partsAbove) e0.agg(max(col("b"))) else edges.agg(max(col("a"))))
+        .collect()(0).getLong(0) + 1L
+
+    /** the smallest order (the traversal rows' source) and the vertex
+      * count, in one 1-row driver agg; for scopes whose parts lie above
+      * their orders */
+    def sourceAndN: (Long, Long) = {
+      val r = e0.agg(min(col("a")), max(col("b"))).collect()(0)
+      (r.getLong(0), r.getLong(1) + 1L)
+    }
+
+    /** the `k` smallest orders (a k-row driver take) */
+    def firstOrders(k: Int): Seq[Long] = e0.select(col("a")).distinct()
+      .orderBy(col("a").asc).limit(k).collect().map(_.getLong(0)).toSeq
+
+    /** the n × n adjacency of `edges` (of `e0` alone when `directed`):
+      * v = w when weighted, else 1 */
+    def adjacency(n: Long, directed: Boolean = false): GrbMatrix =
+      GrbMatrix.fromDF((if (directed) e0 else edges).select(col("a").as("i"),
+        col("b").as("j"), (if (e0.columns.contains("w")) col("w") else lit(1L)).as("v")), n, n)
+  }
+
+  /** the scope's graph over `dir`'s lineitem; `weighted` keeps each
+    * (order, part) pair's least line quantity as `w` */
+  private[graft] def orderPart(s: SparkSession, dir: String, scope: OrderPart,
+      weighted: Boolean = false): OrderPartGraph = {
+    val li = pq(s, dir, "lineitem")
+    val lines = scope.maxOrder.fold(li)(m => li.filter(col("l_orderkey") < m))
+    val (a, b) = (col("l_orderkey").cast(LongType).as("a"),
+      (col("l_partkey") + scope.partOffset).as("b"))
+    new OrderPartGraph(scope,
+      if (weighted) lines.groupBy(a, b).agg(min(col("l_quantity").cast(LongType)).as("w"))
+      else lines.select(a, b).distinct())
+  }
+
+  /** `body` over the scope's adjacency, with `edges` cached: the n agg
+    * and the algorithm's own sizing pass both read it (uncached, each
+    * ran the distinct pipeline). The cache is freed when `body` returns
+    * or throws, so `body` must materialize what it returns. */
+  private[graft] def cachedOrderPart[T](s: SparkSession, dir: String, scope: OrderPart)(
+      body: GrbMatrix => T): T = {
+    val g = orderPart(s, dir, scope)
+    g.edges.cache()
+    try body(g.adjacency(g.n)) finally g.edges.unpersist(false)
+  }
+
   /** the part co-occurrence graph of orders < 2000 (parts co-bucket by
     * order): upper-triangular edges (i < j, v = 1), both triangles, and
     * the dimension
@@ -47,6 +142,12 @@ object Queries {
     (e, e.unionByName(e.select(col("j").as("i"), col("i").as("j"), col("v"))),
       li.agg(max(col("p"))).collect()(0).getLong(0) + 1L)
   }
+
+  /** the oracle side of [[partCooccurrence]]: `li(o, p)` and its
+    * upper-triangular edges `e(i, j)` */
+  private val partCooccurrenceSql =
+    """li AS (SELECT DISTINCT l_orderkey AS o, CAST(l_partkey AS BIGINT) AS p FROM lineitem WHERE l_orderkey < 2000),
+         e AS MATERIALIZED (SELECT DISTINCT a.p AS i, b.p AS j FROM li a JOIN li b ON a.o = b.o AND a.p < b.p)"""
 
   /** lineitem as a sparse matrix: order × part → total quantity.
     * `cluster` pre-clusters the raw COO on the key the consuming
@@ -254,8 +355,7 @@ object Queries {
       s"""s$r AS MATERIALIZED (SELECT e.a AS n FROM edges e JOIN $p sa ON sa.n = e.a JOIN $p sb ON sb.n = e.b
          GROUP BY e.a HAVING COUNT(*) >= $k)"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 1048576 AS BIGINT) AS b FROM lineitem),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0),
+    s"""WITH ${fullScope.sql()},
        s0 AS MATERIALIZED (SELECT DISTINCT a AS n FROM edges),
        $steps
        SELECT e.a AS i, CAST(COUNT(*) AS BIGINT) AS v
@@ -279,8 +379,7 @@ object Queries {
            SELECT n, lab, c, MAX(c) OVER (PARTITION BY n) AS mc FROM v$k)
            WHERE c = mc GROUP BY 1)"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 1048576 AS BIGINT) AS b FROM lineitem),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${fullScope.sql()},
        l0 AS MATERIALIZED (SELECT DISTINCT a AS n, a AS lab FROM edges),
        $steps
        SELECT n AS i, CAST(lab AS BIGINT) AS v FROM l$rounds"""
@@ -309,8 +408,7 @@ object Queries {
          a$k AS MATERIALIZED (SELECT n FROM $p WHERE n NOT IN (SELECT n FROM sel$k)
            AND n NOT IN (SELECT e.a FROM edges e JOIN sel$k s ON s.n = e.b))"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 1048576 AS BIGINT) AS b FROM lineitem),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${fullScope.sql()},
        pk AS MATERIALIZED (SELECT DISTINCT a AS n, md5(CAST(a AS VARCHAR)) || '-' || CAST(a AS VARCHAR) AS pkey FROM edges),
        a0 AS MATERIALIZED (SELECT n FROM pk),
        m0 AS MATERIALIZED (SELECT n FROM pk WHERE 1 = 0),
@@ -349,8 +447,7 @@ object Queries {
          c$k AS MATERIALIZED (SELECT n, color FROM $c UNION ALL SELECT n, color FROM newc$k),
          a$k AS MATERIALIZED (SELECT n FROM $p WHERE n NOT IN (SELECT n FROM sel$k))"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${boundedScope.sql()},
        a0 AS MATERIALIZED (SELECT DISTINCT a AS n FROM edges),
        c0 AS MATERIALIZED (SELECT CAST(NULL AS BIGINT) AS n, CAST(NULL AS BIGINT) AS color WHERE 1 = 0),
        $steps
@@ -412,8 +509,7 @@ object Queries {
 
   private def ccFixpointSql(rounds: Int): String = {
     val steps = ccStepsSql(rounds)
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 1048576 AS BIGINT) AS b FROM lineitem),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${fullScope.sql()},
        f0 AS MATERIALIZED (SELECT DISTINCT a AS n, a AS l FROM edges),
        $steps
        SELECT l AS v, CAST(COUNT(*) AS BIGINT) AS n_nodes FROM f$rounds GROUP BY 1"""
@@ -430,16 +526,6 @@ object Queries {
     */
   private def minPlusFixpointSql(rounds: Int, weighted: Boolean): String = {
     val hop = if (weighted) "f.l + e.w" else "f.l + 1"
-    val (e0Sql, eCols) =
-      if (weighted)
-        ("""SELECT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b,
-            CAST(MIN(l_quantity) AS BIGINT) AS w FROM lineitem WHERE l_orderkey < 600 GROUP BY 1, 2""",
-          "a, b, w")
-      else
-        ("SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600",
-          "a, b")
-    val mirror = eCols.split(", ").map {
-      case "a" => "b"; case "b" => "a"; case c => c }.mkString(", ")
     val steps = (1 to rounds).map { k =>
       val p = s"f${k - 1}"
       s"""f$k AS MATERIALIZED (SELECT n, MIN(l) AS l FROM (
@@ -447,8 +533,7 @@ object Queries {
             UNION ALL
             SELECT e.b AS n, $hop AS l FROM edges e JOIN $p f ON f.n = e.a) GROUP BY 1)"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED ($e0Sql),
-       edges AS MATERIALIZED (SELECT $eCols FROM e0 UNION ALL SELECT $mirror FROM e0),
+    s"""WITH ${boundedScope.sql(weighted)},
        f0 AS MATERIALIZED (SELECT MIN(a) AS n, CAST(0 AS BIGINT) AS l FROM e0),
        $steps
        SELECT n AS i, CAST(l AS BIGINT) AS v FROM f$rounds"""
@@ -474,8 +559,7 @@ object Queries {
             SELECT n, d, sigma FROM $pv
             UNION ALL SELECT n, CAST($k AS BIGINT) AS d, sigma FROM f$k)"""
     }.mkString(",\n")
-    s"""e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""${boundedScope.sql()},
        f0 AS MATERIALIZED (SELECT MIN(a) AS n, CAST(1 AS BIGINT) AS sigma FROM e0),
        v0 AS MATERIALIZED (SELECT n, CAST(0 AS BIGINT) AS d, sigma FROM f0),
        $steps"""
@@ -499,8 +583,7 @@ object Queries {
       }.mkString(",\n")
       s"$f0,\n$steps"
     }
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${boundedScope.sql()},
        ${chain("fa", "fa0 AS MATERIALIZED (SELECT MIN(a) AS n, CAST(0 AS BIGINT) AS l FROM e0)")},
        far AS MATERIALIZED (SELECT n FROM fa$rounds ORDER BY l DESC, n ASC LIMIT 1),
        ${chain("fb", s"fb0 AS MATERIALIZED (SELECT n, CAST(0 AS BIGINT) AS l FROM far)")}
@@ -518,8 +601,7 @@ object Queries {
             UNION ALL
             SELECT f.s, e.b AS n, f.l + 1 AS l FROM edges e JOIN $p f ON f.n = e.a) GROUP BY 1, 2)"""
     }.mkString(",\n")
-    s"""e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""${boundedScope.sql()},
        s0 AS MATERIALIZED (SELECT DISTINCT a AS s FROM e0 ORDER BY a LIMIT 4),
        f0 AS MATERIALIZED (SELECT s, s AS n, CAST(0 AS BIGINT) AS l FROM s0),
        $steps"""
@@ -551,8 +633,7 @@ object Queries {
          r$k AS MATERIALIZED (SELECT n, CAST(SUM(r) AS BIGINT) AS r FROM (
            SELECT * FROM m$k UNION ALL SELECT n, (SELECT bb FROM bs) AS r FROM s0) GROUP BY 1)"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${boundedScope.sql()},
        deg AS MATERIALIZED (SELECT a AS n, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY 1),
        s0 AS MATERIALIZED (SELECT MIN(a) AS n FROM e0),
        bs AS MATERIALIZED (SELECT CAST(1000000 - (1000000 * 85) // 100 AS BIGINT) AS bb),
@@ -632,7 +713,7 @@ object Queries {
            g${r}f$k AS MATERIALIZED (SELECT u.n AS n, g.l AS l FROM g${r}u$k u JOIN g${r}u$k g ON g.n = u.l)"""
       }.mkString(",\n")
       s"""x$r AS MATERIALIZED (SELECT e.a, e.b, e.w, la.l AS la, lb.l AS lb
-            FROM ew e JOIN $pl la ON la.v = e.a JOIN $pl lb ON lb.v = e.b
+            FROM e0 e JOIN $pl la ON la.v = e.a JOIN $pl lb ON lb.v = e.b
             WHERE la.l <> lb.l),
          s$r AS MATERIALIZED (SELECT DISTINCT pk FROM (
             SELECT c, MIN(pk) AS pk FROM (
@@ -654,12 +735,9 @@ object Queries {
     }.mkString(",\n")
     val union = (1 to outer).map(r => s"SELECT a, b, w FROM se$r")
       .mkString(" UNION ALL ")
-    s"""WITH ew AS MATERIALIZED (SELECT CAST(l_orderkey AS BIGINT) AS a,
-          CAST(l_partkey + 100000 AS BIGINT) AS b,
-          CAST(MIN(l_quantity) AS BIGINT) AS w
-          FROM lineitem WHERE l_orderkey < 600 GROUP BY 1, 2),
+    s"""WITH ${boundedScope.sql(weighted = true)},
        lab0 AS MATERIALIZED (SELECT v, v AS l FROM (
-          SELECT a AS v FROM ew UNION SELECT b AS v FROM ew)),
+          SELECT a AS v FROM e0 UNION SELECT b AS v FROM e0)),
        $rounds
        SELECT a, b, w FROM ($union)"""
   }
@@ -685,8 +763,7 @@ object Queries {
                   FROM r$t GROUP BY 1))"""
     }.mkString(",\n")
     val union = (1 to rounds).map(t => s"SELECT * FROM est$t").mkString(" UNION ALL ")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${boundedScope.sql()},
        h AS (SELECT v, ('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15))::BIGINT AS h
              FROM (SELECT DISTINCT a AS v FROM edges)),
        r0 AS MATERIALIZED (SELECT v, h >> 52 AS bucket,
@@ -720,8 +797,7 @@ object Queries {
               FROM dag JOIN dd${t - 1} p ON p.s = dag.s AND p.n = dag.v GROUP BY 1, 2) x
             ON x.s = w.s AND x.n = w.n)"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${boundedScope.sql()},
        s0 AS MATERIALIZED (SELECT DISTINCT a AS s FROM e0 ORDER BY a LIMIT 4),
        f0 AS MATERIALIZED (SELECT s, s AS n, CAST(1 AS BIGINT) AS sigma FROM s0),
        v0 AS MATERIALIZED (SELECT s, n, CAST(0 AS BIGINT) AS d, sigma FROM f0),
@@ -751,8 +827,7 @@ object Queries {
               AND ax.idx = ('0x' || substr(md5(CAST(w.start AS VARCHAR) || '_' || CAST(w.cur AS VARCHAR) || '_$t'), 1, 8))::BIGINT % d.deg)"""
     }.mkString(",\n")
     val union = (0 to steps).map(t => s"SELECT * FROM w$t").mkString(" UNION ALL ")
-    s"""e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""${boundedScope.sql()},
        adjx AS MATERIALIZED (SELECT a AS v, b AS nbr, CAST(ROW_NUMBER() OVER (PARTITION BY a ORDER BY ('0x' || substr(md5(CAST(b AS VARCHAR)), 1, 8))::BIGINT % ${graft.algo.RandomWalk.rankSalts}, b) - 1 AS BIGINT) AS idx FROM edges),
        deg AS MATERIALIZED (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM adjx GROUP BY 1),
        w0 AS MATERIALIZED (SELECT v AS start, CAST(0 AS BIGINT) AS step, v AS cur FROM deg),
@@ -777,7 +852,7 @@ object Queries {
             FROM e0 e JOIN a$k a ON a.n = e.b GROUP BY 1),
          h$k AS MATERIALIZED (SELECT n, CAST((v * 1000000) // (SELECT MAX(v) FROM h${k}r) AS BIGINT) AS v FROM h${k}r)"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
+    s"""WITH ${boundedScope.sql()},
        h0 AS MATERIALIZED (SELECT DISTINCT a AS n, CAST(1 AS BIGINT) AS v FROM e0),
        $steps
        SELECT COALESCE(h.n, a.n) AS i,
@@ -800,8 +875,7 @@ object Queries {
          r$k AS MATERIALIZED (SELECT e.b AS n, CAST((SELECT b FROM bs) + (85 * SUM(c.cv)) // 100 AS BIGINT) AS r
            FROM edges e JOIN c$k c ON c.n = e.a GROUP BY 1)"""
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 600),
-       edges AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    s"""WITH ${boundedScope.sql()},
        deg AS MATERIALIZED (SELECT a AS n, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY 1),
        nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM deg),
        bs AS MATERIALIZED (SELECT CAST((1000000 - (1000000 * 85) // 100) // c AS BIGINT) AS b FROM nn),
@@ -1074,15 +1148,9 @@ object Queries {
     // FastSV connected components on a bounded bipartite subgraph —
     // oracle = recursive min-label propagation in SQL (§3.4)
     "q_cc_small" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 60)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      val nodes = edges.select(col("a").as("i")).distinct()
-      FastSV.connectedComponents(A, nodes = Some(nodes)).df
+      val g = orderPart(s, dir, smallScope)
+      val nodes = g.edges.select(col("a").as("i")).distinct()
+      FastSV.connectedComponents(g.adjacency(g.n), nodes = Some(nodes)).df
     }),
 
     // BFS levels — the other textbook GraphBLAS traversal (frontier
@@ -1091,15 +1159,9 @@ object Queries {
     // order node; oracle = the same expansion unrolled to a fixed
     // round count in SQL.
     "q_bfs" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val bounds = e0.agg(min(col("a")), max(col("b"))).collect()(0) // 1-row driver agg
-      val (src, n) = (bounds.getLong(0), bounds.getLong(1) + 1L)
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      Bfs.levels(A, src).df
+      val g = orderPart(s, dir, boundedScope)
+      val (src, n) = g.sourceAndN
+      Bfs.levels(g.adjacency(n), src).df
     }),
 
     // shortest-path counting — the plus_times sibling of q_bfs and
@@ -1107,15 +1169,9 @@ object Queries {
     // per reached vertex its distance AND the number of distinct
     // shortest paths from the source, all exact integers
     "q_spcount" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val bounds = e0.agg(min(col("a")), max(col("b"))).collect()(0) // 1-row driver agg
-      val (src, n) = (bounds.getLong(0), bounds.getLong(1) + 1L)
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      SpCount.counts(A, src)
+      val g = orderPart(s, dir, boundedScope)
+      val (src, n) = g.sourceAndN
+      SpCount.counts(g.adjacency(n), src)
     }),
 
     // pseudo-diameter double sweep: BFS from an arbitrary vertex,
@@ -1124,14 +1180,9 @@ object Queries {
     // eccentricity is the standard diameter lower bound, and its
     // level map is the output
     "q_pseudo_diam" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val bounds = e0.agg(min(col("a")), max(col("b"))).collect()(0) // 1-row driver agg
-      val (src, n) = (bounds.getLong(0), bounds.getLong(1) + 1L)
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
+      val g = orderPart(s, dir, boundedScope)
+      val (src, n) = g.sourceAndN
+      val A = g.adjacency(n)
       val far = Bfs.levels(A, src).df
         .orderBy(col("v").desc, col("i").asc).limit(1)
         .collect()(0).getLong(0) // 1-row driver take
@@ -1142,16 +1193,9 @@ object Queries {
     // expand through ONE F·A mxm per round (algo/Bfs
     // .multiSourceLevels), sharing every scan and shuffle
     "q_msbfs" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val srcs = e0.select(col("a")).distinct().orderBy(col("a").asc)
-        .limit(4).collect().map(_.getLong(0)).toSeq // 4-row driver take
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      Bfs.multiSourceLevels(A, srcs)
+      val g = orderPart(s, dir, boundedScope)
+      val srcs = g.firstOrders(4)
+      Bfs.multiSourceLevels(g.adjacency(g.n), srcs)
     }),
 
     // single-source stress centrality — the exact-integer Brandes
@@ -1159,15 +1203,9 @@ object Queries {
     // continuation counts over the BFS dag; stress = σ·D, the number
     // of s-rooted shortest paths with the vertex non-terminal
     "q_stress" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val bounds = e0.agg(min(col("a")), max(col("b"))).collect()(0) // 1-row driver agg
-      val (src, n) = (bounds.getLong(0), bounds.getLong(1) + 1L)
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      SpCount.stress(A, src)
+      val g = orderPart(s, dir, boundedScope)
+      val (src, n) = g.sourceAndN
+      SpCount.stress(g.adjacency(n), src)
     }),
 
     // single-source betweenness dependency — the FULL Brandes backward
@@ -1175,15 +1213,9 @@ object Queries {
     // δ(v) = Σ σ(v)/σ(w)·(1+δ(w)) over the BFS dag, in exact
     // floor-ppm integer arithmetic (per-edge floor, oracle-mirrored)
     "q_betweenness" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val bounds = e0.agg(min(col("a")), max(col("b"))).collect()(0) // 1-row driver agg
-      val (src, n) = (bounds.getLong(0), bounds.getLong(1) + 1L)
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      SpCount.betweenness(A, src)
+      val g = orderPart(s, dir, boundedScope)
+      val (src, n) = g.sourceAndN
+      SpCount.betweenness(g.adjacency(n), src)
     }),
 
     // LANDMARK betweenness (algo/SpCount.landmarkBetweenness): the
@@ -1193,29 +1225,17 @@ object Queries {
     // dependencies summed per vertex. How betweenness is actually
     // computed at corpus scale.
     "q_btw_landmarks" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val srcs = e0.select(col("a")).distinct().orderBy(col("a").asc)
-        .limit(4).collect().map(_.getLong(0)).toSeq // 4-row driver take
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      SpCount.landmarkBetweenness(A, srcs)
+      val g = orderPart(s, dir, boundedScope)
+      val srcs = g.firstOrders(4)
+      SpCount.landmarkBetweenness(g.adjacency(g.n), srcs)
     }),
 
     // HITS hubs-and-authorities (algo/Hits): alternating Aᵀh / Aa
     // products on the DIRECTED order→part graph, max-normalized to
     // exact ppm each round — orders rank as hubs, parts as authorities
     "q_hits" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        e0.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      Hits.scores(A)
+      val g = orderPart(s, dir, boundedScope)
+      Hits.scores(g.adjacency(g.n, directed = true))
     }),
 
     // minimum spanning forest by Borůvka (algo/Msf): per round each
@@ -1223,12 +1243,8 @@ object Queries {
     // packed (w, a, b) total order — distinct keys make the forest
     // unique, so a Kruskal replay and the unrolled oracle agree
     "q_msf" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .groupBy(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b"))
-        .agg(min(col("l_quantity").cast(LongType)).as("w"))
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      Msf.forest(e0, n)
+      val g = orderPart(s, dir, boundedScope, weighted = true)
+      Msf.forest(g.e0, g.n)
     }),
 
     // HyperANF (algo/HyperAnf): the approximate neighbourhood
@@ -1237,14 +1253,8 @@ object Queries {
     // the at-scale distance-distribution read; deterministic HLL
     // discipline makes the approximation itself hash-matchable
     "q_anf" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      HyperAnf.balls(A, rounds = 4)
+      val g = orderPart(s, dir, boundedScope)
+      HyperAnf.balls(g.adjacency(g.n), rounds = 4)
     }),
 
     // deterministic random walks (algo/RandomWalk): the DeepWalk
@@ -1253,27 +1263,15 @@ object Queries {
     // training corpus regenerates byte-identical and the oracle
     // replays every step
     "q_walks" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      RandomWalk.walks(A, steps = 4)
+      val g = orderPart(s, dir, boundedScope)
+      RandomWalk.walks(g.adjacency(g.n), steps = 4)
     }),
 
     // skip-gram training pairs over the walk corpus (window ±2) —
     // the word2vec-objective data the walks exist to produce
     "q_skipgram" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      RandomWalk.skipGrams(RandomWalk.walks(A, steps = 4))
+      val g = orderPart(s, dir, boundedScope)
+      RandomWalk.skipGrams(RandomWalk.walks(g.adjacency(g.n), steps = 4))
     }),
 
     // PageRank in integer fixed-point (algo/PageRank.scala) on the
@@ -1281,14 +1279,8 @@ object Queries {
     // degree-normalized mass diffusion with 0.85 damping, all integer
     // floor arithmetic
     "q_pagerank" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      PageRank.ranks(A).df
+      val g = orderPart(s, dir, boundedScope)
+      PageRank.ranks(g.adjacency(g.n)).df
     }),
 
     // personalized PageRank — the seed-teleport sibling of q_pagerank
@@ -1297,15 +1289,9 @@ object Queries {
     // support = the k-hop ball around the seed — the property that
     // makes PPR tractable on graphs where global PageRank is not)
     "q_ppr" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val bounds = e0.agg(min(col("a")), max(col("b"))).collect()(0) // 1-row driver agg
-      val (seed, n) = (bounds.getLong(0), bounds.getLong(1) + 1L)
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      PageRank.personalized(A, seed).df
+      val g = orderPart(s, dir, boundedScope)
+      val (seed, n) = g.sourceAndN
+      PageRank.personalized(g.adjacency(n), seed).df
     }),
 
     // harmonic centrality from 4 landmark sources — the msbfs
@@ -1315,16 +1301,9 @@ object Queries {
     // form cannot). One msbfs (all 4 traversals share every F·A
     // product) + one hash aggregate on the source key.
     "q_harmonic" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .select(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val srcs = e0.select(col("a")).distinct().orderBy(col("a").asc)
-        .limit(4).collect().map(_.getLong(0)).toSeq // 4-row driver take
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      Bfs.multiSourceLevels(A, srcs)
+      val g = orderPart(s, dir, boundedScope)
+      val srcs = g.firstOrders(4)
+      Bfs.multiSourceLevels(g.adjacency(g.n), srcs)
         .filter(col("d") > 0)
         .groupBy(col("s"))
         .agg(sum(expr("1000000 DIV d")).cast(LongType).as("harmonic"))
@@ -1344,17 +1323,9 @@ object Queries {
     // q_bfs (algo/Bfs.sssp): edge weight = min line quantity, parallel
     // edges pre-combined with min
     "q_sssp" -> ((s, dir) => {
-      val e0 = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-        .groupBy(col("l_orderkey").cast(LongType).as("a"),
-          (col("l_partkey") + 100000L).as("b"))
-        .agg(min(col("l_quantity").cast(LongType)).as("w"))
-      val edges = e0.unionByName(
-        e0.select(col("b").as("a"), col("a").as("b"), col("w")))
-      val bounds = e0.agg(min(col("a")), max(col("b"))).collect()(0) // 1-row driver agg
-      val (src, n) = (bounds.getLong(0), bounds.getLong(1) + 1L)
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), col("w").as("v")), n, n)
-      Bfs.sssp(A, src).df
+      val g = orderPart(s, dir, boundedScope, weighted = true)
+      val (src, n) = g.sourceAndN
+      Bfs.sssp(g.adjacency(n), src).df
     }),
 
     // triangle counting — the canonical masked-mxm composition
@@ -1564,121 +1535,54 @@ object Queries {
       a.resize(n).ewiseMult(b.resize(n), Ops.binary("absdiff")).df
     }),
 
-    // FastSV on the full order-part bipartite graph — component-size
-    // histogram (rows-only check; the BENCH headline for iteration)
     // k-core peel (k=6) on the same orders↔parts bipartite graph:
     // iterative degree pruning through masked plus_pair mxv rounds
-    "q_kcore" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem")
-      val offset = 1L << 20
-      val e0 = li.select(col("l_orderkey").cast(LongType).as("a"),
-        (col("l_partkey") + offset).as("b")).distinct()
-      // cache: the n-derivation agg and the algorithm's own sizing
-      // pass both consume the distinct pipeline — uncached it ran
-      // twice. Safe to release before returning: kcore materializes
-      // (checkpoints) its result before it returns.
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-        .cache()
-      val n = edges.agg(max(col("a"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      val out = KCore.kcore(A, 6L).df
-      edges.unpersist(false)
-      out
-    }),
+    "q_kcore" -> ((s, dir) =>
+      cachedOrderPart(s, dir, fullScope)(A => KCore.kcore(A, 6L).df)),
     // Jones–Plassmann greedy coloring (per-round hash priorities +
     // mex color choice) on the BFS subgraph (l_orderkey < 600 — the
     // traversal-precedent scope: coloring rounds are join-cheap but
     // round-count-bound, so the smaller graph keeps the bench query
     // round-dominated rather than scan-dominated)
     "q_coloring" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem").filter(col("l_orderkey") < 600)
-      val offset = 100000L
-      val e0 = li.select(col("l_orderkey").cast(LongType).as("a"),
-        (col("l_partkey") + offset).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val n = edges.agg(max(col("a"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      Coloring.greedyColor(A).df
+      val g = orderPart(s, dir, boundedScope)
+      Coloring.greedyColor(g.adjacency(g.n)).df
     }),
     // Luby-style maximal independent set (fixed hash priorities, so
     // the result is the unique lexicographically-first MIS by pkey
     // order) on the same orders↔parts bipartite graph
-    "q_mis" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem")
-      val offset = 1L << 20
-      val e0 = li.select(col("l_orderkey").cast(LongType).as("a"),
-        (col("l_partkey") + offset).as("b")).distinct()
-      // cached for the same two-consumer reason as q_kcore; Mis
-      // materializes before returning, so the release is safe
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-        .cache()
-      val n = edges.agg(max(col("a"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      val out = Mis.mis(A).df
-      edges.unpersist(false)
-      out
-    }),
+    "q_mis" -> ((s, dir) =>
+      cachedOrderPart(s, dir, fullScope)(A => Mis.mis(A).df)),
     // synchronous label propagation (fixed 7 rounds, min-label ties)
     // on the same orders↔parts bipartite graph — per-node community
     // label; the deterministic-LPA contract is the integer recurrence
-    "q_lpa" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem")
-      val offset = 1L << 20
-      val e0 = li.select(col("l_orderkey").cast(LongType).as("a"),
-        (col("l_partkey") + offset).as("b")).distinct()
-      // cached for the same two-consumer reason as q_kcore; the LPA
-      // result is lineage-free (the driver-held label vector, or the
-      // last checkpoint above the broadcast guard), so the cache can
-      // go once it returns
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-        .cache()
-      val n = edges.agg(max(col("a"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      val out = LabelProp.communities(A, 7).df
-      edges.unpersist(false)
-      out
-    }),
+    "q_lpa" -> ((s, dir) =>
+      cachedOrderPart(s, dir, fullScope)(A => LabelProp.communities(A, 7).df)),
     // incremental CC maintenance: 90% of the events graph labels as
     // the persisted base; the other 10% of edges arrive as a batch
     // and merge through PregelCC.incremental's label contraction —
     // the result must equal full-graph CC (the oracle), which is the
     // correctness claim of the contraction
     "q_cc_incremental" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem")
-      val offset = 1L << 20
-      val e0 = li.select(col("l_orderkey").cast(LongType).as("a"),
-        (col("l_partkey") + offset).as("b")).distinct()
-      val base0 = e0.filter((col("a") + col("b")) % 10 =!= 0)
-      val new0 = e0.filter((col("a") + col("b")) % 10 === 0)
-      val n = e0.agg(max(col("b"))).collect()(0).getLong(0) + 1L // 1-row driver agg
-      val baseEdges = base0.unionByName(base0.select(col("b").as("a"), col("a").as("b")))
-      val baseLabels = PregelCC.connectedComponents(GrbMatrix.fromDF(
-        baseEdges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n))
-      PregelCC.incremental(baseLabels,
-        new0.select(col("a").as("i"), col("b").as("j"))).df
+      val g = orderPart(s, dir, fullScope)
+      val base = new OrderPartGraph(fullScope, g.e0.filter((col("a") + col("b")) % 10 =!= 0))
+      val baseLabels = PregelCC.connectedComponents(base.adjacency(g.n))
+      PregelCC.incremental(baseLabels, g.e0.filter((col("a") + col("b")) % 10 === 0)
+        .select(col("a").as("i"), col("b").as("j"))).df
         .groupBy(col("v")).agg(count(lit(1)).as("n_nodes"))
     }),
+    // whole-graph CC on the full order-part bipartite graph — the
+    // component-size histogram. Engine choice by bake-off (PERF_NOTES.md
+    // §3 / BASELINE_SELF.md): PregelCC 3.7s vs FastSV 20.1s on this
+    // graph at sf0.1, and 18.7s vs 105.7s at 20M nnz — GraphX's
+    // specialized iterative runtime (partition-stable RDDs, no per-round
+    // query planning) wins for whole-graph CC. FastSV (the reference's
+    // GraphBLAS formulation) stays driver-verified through q_cc_small;
+    // both produce the identical min-vertex-id labeling (FastSVSpec
+    // cross-checks).
     "q_cc_events" -> ((s, dir) => {
-      val li = pq(s, dir, "lineitem")
-      val offset = 1L << 20
-      val e0 = li.select(col("l_orderkey").cast(LongType).as("a"),
-        (col("l_partkey") + offset).as("b")).distinct()
-      val edges = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      val n = edges.agg(max(col("a"))).collect()(0).getLong(0) + 1L
-      val A = GrbMatrix.fromDF(
-        edges.select(col("a").as("i"), col("b").as("j"), lit(1L).as("v")), n, n)
-      // engine choice by bake-off (PERF_NOTES.md §3 / BASELINE_SELF.md):
-      // PregelCC 3.7s vs FastSV 20.1s on this graph at sf0.1, and 18.7s
-      // vs 105.7s at 20M nnz — GraphX's specialized iterative runtime
-      // (partition-stable RDDs, no per-round query planning) wins for
-      // whole-graph CC. FastSV (the reference's GraphBLAS formulation)
-      // stays driver-verified through q_cc_small; both produce the
-      // identical min-vertex-id labeling (FastSVSpec cross-checks).
-      PregelCC.connectedComponents(A).df
+      val g = orderPart(s, dir, fullScope)
+      PregelCC.connectedComponents(g.adjacency(g.n)).df
         .groupBy(col("v")).agg(count(lit(1)).as("n_nodes"))
     }),
     // strongly connected components of the DIRECTED user-handoff
@@ -1766,9 +1670,7 @@ object Queries {
     // the wedge join with both accumulators computed directly — COUNT
     // mirrors the packed high bits, SUM(1e6 // deg z) the low 40
     "q_linkpred" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS o, CAST(l_partkey AS BIGINT) AS p
-                     FROM lineitem WHERE l_orderkey < 2000),
-         e AS MATERIALIZED (SELECT DISTINCT a.p AS i, b.p AS j FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
+      s"""WITH $partCooccurrenceSql,
          sym AS MATERIALIZED (SELECT i, j FROM e UNION ALL SELECT j AS i, i AS j FROM e),
          deg AS MATERIALIZED (SELECT i AS n, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY 1),
          wed AS (SELECT x.i AS i, y.j AS j, x.j AS z FROM sym x JOIN sym y ON y.i = x.j WHERE x.i < y.j),
@@ -1782,9 +1684,7 @@ object Queries {
     // wedge (i,j)-(j,k) closed by edge (i,k); strictly-upper edges
     // make each triangle a single (i<j<k) wedge+closure
     "q_triangle" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS o, CAST(l_partkey AS BIGINT) AS p
-                     FROM lineitem WHERE l_orderkey < 2000),
-         e AS (SELECT DISTINCT a.p AS i, b.p AS j FROM li a JOIN li b ON a.o = b.o AND a.p < b.p)
+      s"""WITH $partCooccurrenceSql
          SELECT CAST(COUNT(*) AS BIGINT) AS v
          FROM e e1 JOIN e e2 ON e2.i = e1.j JOIN e e3 ON e3.i = e1.i AND e3.j = e2.j""",
     // k-truss oracle: 5 unrolled support-prune rounds (fixpoint ≤3 at
@@ -1799,9 +1699,7 @@ object Queries {
               GROUP BY 1, 2),
            sy$t AS MATERIALIZED (SELECT i, j FROM s$t WHERE sup >= 2)"""
       }.mkString(",\n")
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS o, CAST(l_partkey AS BIGINT) AS p
-                     FROM lineitem WHERE l_orderkey < 2000),
-         e AS (SELECT DISTINCT a.p AS i, b.p AS j FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
+      s"""WITH $partCooccurrenceSql,
          sy0 AS MATERIALIZED (SELECT i, j FROM e UNION ALL SELECT j AS i, i AS j FROM e),
          $steps
          SELECT i, j, sup FROM s$rounds WHERE sup >= 2 AND i < j"""
@@ -1810,9 +1708,7 @@ object Queries {
     // symmetric adjacency, degree from the same adjacency; the ppm
     // division mirrors the engine's single-double-division expression
     "q_clustering" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS o, CAST(l_partkey AS BIGINT) AS p
-                     FROM lineitem WHERE l_orderkey < 2000),
-         e AS (SELECT DISTINCT a.p AS i, b.p AS j FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
+      s"""WITH $partCooccurrenceSql,
          adj AS (SELECT i, j FROM e UNION ALL SELECT j AS i, i AS j FROM e),
          tri AS (SELECT n1.i AS v, COUNT(*) AS t
                  FROM adj n1 JOIN adj n2 ON n1.i = n2.i AND n1.j < n2.j
@@ -1907,8 +1803,7 @@ object Queries {
       """SELECT c_custkey AS i, CAST(ROUND(c_acctbal*100) AS BIGINT) AS v FROM customer
          WHERE c_custkey NOT IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')""",
     "q_cc_small" ->
-      """WITH RECURSIVE e0 AS (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS a, CAST(l_partkey + 100000 AS BIGINT) AS b FROM lineitem WHERE l_orderkey < 60),
-         edges AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
+      s"""WITH RECURSIVE ${smallScope.sql()},
          nodes AS (SELECT DISTINCT a AS n FROM edges),
          cc(n, l) AS (SELECT n, n FROM nodes UNION SELECT e.b, c.l FROM cc c JOIN edges e ON e.a = c.n),
          lab AS (SELECT n AS i, CAST(MIN(l) AS BIGINT) AS v FROM cc GROUP BY 1)

@@ -76,6 +76,33 @@ class EntryPointsSpec extends SparkSpec {
       selfJoins.mkString("\n"))
   }
 
+  test("one order–part graph: each scope's builder and CTE text exist once") {
+    // every order–part graph row builds from one OrderPart scope
+    // (Queries.orderPart on the engine, OrderPart.sql in the oracle),
+    // and the part co-occurrence CTE exists once beside its builder
+    def count(text: String) = codeLines("src/main/scala").count(_._3.contains(text))
+    assert(count("""col("l_partkey") +""") == 1)
+    assert(Set(1, 2).contains(count("CAST(l_partkey +")), count("CAST(l_partkey +"))
+    assert(count("FROM lineitem WHERE l_orderkey < 2000") == 1)
+  }
+
+  test("the cached order–part graph leaves the session's cache as it found it") {
+    // the loan form caches the scope's edges for the n agg and the
+    // body, and must free them on the failure path too
+    val dir = java.nio.file.Files.createTempDirectory("graft-orderpart").toString
+    spark.range(0, 40).select(col("id").as("l_orderkey"), (col("id") % 7).as("l_partkey"))
+      .write.parquet(s"$dir/lineitem.parquet")
+    val scope = Queries.OrderPart(None, 100L)
+    val before = cached
+    val nnz = Queries.cachedOrderPart(spark, dir, scope)(a => a.df.count())
+    assert(nnz == 80)
+    assert(cached == before, "the success path left caches behind")
+    val e = intercept[Exception](Queries.cachedOrderPart(spark, dir, scope) { a =>
+      a.df.count(); sys.error("planted failure") })
+    assert(e.getMessage.contains("planted failure"), e.getMessage)
+    assert(cached == before, "the failure path left caches behind")
+  }
+
   test("no engine code listens on the bus, takes the job group or reads a clock") {
     // a plan decided from a timer changes with core count and host
     // window, and a listener or job group taken inside a library call
@@ -120,7 +147,9 @@ class EntryPointsSpec extends SparkSpec {
       "q_bad" -> ((_, _) => sys.error("boom")),
       "q_ok2" -> ((s, _) => s.range(2).toDF()),
       // runs an action while it is built, like a checkpointing operator
-      "q_act" -> ((s, _) => s.range(s.range(7).filter(col("id") % 3 === 0).count()).toDF()))
+      "q_act" -> ((s, _) => s.range(s.range(7).filter(col("id") % 3 === 0).count()).toDF()),
+      // a catalog name: its oracle SQL is dumped beside its plan
+      "q_cc_small" -> ((s, _) => s.range(1).toDF()))
     val (failed, err) = stderrOf(Verify.dump(spark, "unused", out, queries))
     assert(failed == Seq("q_bad"))
     assert(err.contains("[verify] q_bad failed: boom"), err)
@@ -140,6 +169,9 @@ class EntryPointsSpec extends SparkSpec {
     assert(acts.contains("Range (") && acts.contains("Filter ("), acts)
     assert(acts.contains("% 3) = 0)"), acts)
     assert(!java.nio.file.Files.exists(plans.resolve("q_ok.actions_t.txt")))
+    assert(java.nio.file.Files.readString(plans.resolve("q_cc_small.oracle_t.txt")) ==
+      SparkEntry.oracleSql("q_cc_small"))
+    assert(!java.nio.file.Files.exists(plans.resolve("q_ok.oracle_t.txt")))
   }
 
   test("stage meter: one read sees the action's jobs, stages, tasks and shuffle") {

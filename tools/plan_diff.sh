@@ -11,12 +11,17 @@
 # file, and say nothing about the plan, are masked: expression ids
 # (`#<n>`), exchange counters (`plan_id=<n>`), RDD ids of scanned
 # checkpoints (`RDD[<n>]`), the source lines of their call sites
-# (`<File>.scala:<n>`), lambda object names (`$Lambda$<n>/0x…@…`), and
-# three fields of a streaming query's micro-batch plans that a second
-# dump of the same tree changes: UUIDs (its run id, state checkpoint
-# directory and watermark ids), object identities (`<Class>@<hex>`, its
-# sink writer) and a stateful operator's batch timestamp (`Timeout,
-# <epoch ms>`).
+# (`<File>.scala:<n>`), lambda object names (`$Lambda$<n>/0x…@…`),
+# Catalyst's lambda variable counter (`lambda x_<n>`, which counts the
+# lambdas made earlier in the JVM, so a row that threw mid-dump would
+# make every later row look changed), and three fields of a streaming
+# query's micro-batch plans that a second dump of the same tree
+# changes: UUIDs (its run id, state checkpoint directory and watermark
+# ids), object identities (`<Class>@<hex>`, its sink writer) and a
+# stateful operator's batch timestamp (`Timeout, <epoch ms>`).
+# A dump holds each row's final plan, its actions' plans
+# (`<row>.actions_<tag>.txt`) and its oracle SQL (`<row>.oracle_<tag>.txt`),
+# so one pass shows engine-plan and oracle-text changes together.
 # Prints a unified diff per differing query and the names of queries
 # dumped on one side only.
 #
@@ -41,6 +46,7 @@ mask() {  # mask SRC_DIR DEST_DIR
     sed -E -e 's/#[0-9]+/#N/g' -e 's/plan_id=[0-9]+/plan_id=N/g' \
       -e 's/RDD\[[0-9]+\]/RDD[N]/g' -e 's/\.scala:[0-9]+/.scala:N/g' \
       -e 's/Lambda[$0-9]*\/0x[0-9a-f]+@[0-9a-f]+/Lambda/g' \
+      -e 's/(lambda [a-z]+)_[0-9]+/\1_N/g' \
       -e 's/[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}/UUID/g' \
       -e 's/([A-Za-z])@[0-9a-f]+/\1@N/g' \
       -e 's/(Timeout, )[0-9]+/\1N/g' \
